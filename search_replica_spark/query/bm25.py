@@ -38,6 +38,7 @@ from search_replica_spark.index.codec import (
     delta_decode,
     varint_decode,
 )
+from search_replica_spark.query.store import Blocks, BlockStore
 
 
 # below this many blocks (from dict df counts), block-max pruning cannot
@@ -118,7 +119,7 @@ class IndexReader:
         self._doc_len: np.ndarray | None = None
         self._doc_ids: np.ndarray | None = None
         self._seg_df = None
-        self._pinned: pd.DataFrame | None = None
+        self._pinned: BlockStore | None = None
 
     def cache_segments(self, positions: bool = False):
         """Pin the segment store in Spark executor memory (hot-serving mode):
@@ -194,33 +195,25 @@ class IndexReader:
         return {f: pdf[f"dl_{f}"].to_numpy(np.float64) for f in fields}
 
     def pin_driver(self, positions: bool = False):
-        """Serving mode: pull the segment store into driver memory, indexed
-        by term. This is how a query node actually serves a shard (ES holds
-        its segments in RAM/page cache); per-query latency drops from a
-        Spark job (~100 ms) to a hash lookup (~ms). Only sensible when this
+        """Serving mode: pull the segment store into driver memory as a
+        term-sorted columnar ``BlockStore`` (blocks stay compressed). This
+        is how a query node actually serves a shard (ES holds its segments
+        in RAM/page cache); per-query latency drops from a Spark job
+        (~100 ms) to a dict probe and a slice. Only sensible when this
         process owns a shard-sized slice of the index — at 100 TB each query
         node pins its own term-range partition, which is exactly how the
         segment files are laid out (hash(term) → file). ``positions``: also
         pin the npos/pos streams (phrase serving); dls_bin is never pinned
-        (see META_COLS)."""
-        if self._pinned is None:
-            cols = list(self.META_COLS) + (list(self.POS_COLS) if positions else [])
-            seg = self.spark.read.parquet(os.path.join(self.index_dir, "segments"))
-            cols = [c for c in cols if c in seg.columns]
-            seg = seg.select(*cols)
-            if self.shard_range is not None:
-                # pin only the blocks overlapping this shard's doc range —
-                # the per-node memory contract of doc-sharded serving
-                lo, hi = self.shard_range
-                seg = seg.filter(
-                    (F.col("last_doc_idx") >= lo) & (F.col("first_doc_idx") < hi)
-                )
-            pdf = seg.toPandas()
-            self._pinned = pdf.sort_values(["term", "block_id"]).set_index("term", drop=False)
-            if self._seg_df is not None and all(
-                c in self._pinned.columns for c in self._seg_df.columns
+        (see META_COLS). A ``positions=True`` call on a store pinned without
+        them re-pins with them, as ``cache_segments`` upgrades its cache —
+        otherwise every phrase request would run a Spark read."""
+        if self._pinned is None or (positions and not self._pinned.positions):
+            self._pinned = None  # one pinned copy at a time
+            self._pinned = self._block_store(self._segment_scan(positions), positions)
+            if self._seg_df is not None and (
+                positions or "npos_bin" not in self._seg_df.columns
             ):
-                # the pinned frame supersedes the executor-side cache for
+                # the pinned store supersedes the executor-side cache for
                 # every request it can serve — release the JVM storage
                 # memory instead of carrying a dead cache for the rest of
                 # a long-lived serving process (guide §5: unpersist when
@@ -230,36 +223,43 @@ class IndexReader:
                 self._seg_df = None
         return self
 
-    def fetch_blocks(self, terms: list[str], positions: bool = False) -> pd.DataFrame:
-        """Segment rows for the query terms — `term IN` pushed to parquet
-        (or served from the cached/pinned segment store). Only the scorer
-        columns are transferred (META_COLS; + position streams on demand)."""
-        if self._pinned is not None and (not positions or "npos_bin" in self._pinned.columns):
-            hit = [t for t in set(terms) if t in self._pinned.index]
-            if not hit:
-                return self._pinned.iloc[0:0].reset_index(drop=True)
-            return self._pinned.loc[hit].reset_index(drop=True).sort_values(["term", "block_id"])
+    def fetch_blocks(self, terms: list[str], positions: bool = False) -> Blocks:
+        """Segment rows for the query terms, term then block ordered: a
+        slice of the pinned store, or a store built from one `term IN`
+        scan pushed to parquet (or to the cached segment frame). Only the
+        scorer columns are transferred (META_COLS; + position streams on
+        demand). ``len()`` of the result is its block count."""
+        if self._pinned is not None and (not positions or self._pinned.positions):
+            return self._pinned.select(terms)
+        scan = self._segment_scan(positions, terms)
+        return self._block_store(scan, positions).select(terms)
+
+    def _segment_scan(self, positions: bool, terms: list[str] | None = None):
+        """The segment rows a store is built from: every block (pinning)
+        or the blocks of ``terms``."""
         seg = self._seg_df
-        if seg is None or (positions and "npos_bin" not in seg.columns):
+        if terms is None or seg is None or (positions and "npos_bin" not in seg.columns):
             # cache built without position streams → serve a positional
             # request straight from parquet rather than silently degrading
             seg = self.spark.read.parquet(os.path.join(self.index_dir, "segments"))
-        return (
-            self._blocks_query(seg, terms, positions)
-            .toPandas()
-            .sort_values(["term", "block_id"])
-        )
+        return self._blocks_query(seg, terms, positions)
 
-    def _blocks_query(self, seg, terms: list[str], positions: bool):
+    def _block_store(self, scan, positions: bool) -> BlockStore:
+        table = scan.toArrow().sort_by([("term", "ascending"), ("block_id", "ascending")])
+        return BlockStore(table, positions)
+
+    def _blocks_query(self, seg, terms: list[str] | None, positions: bool):
         """The (unexecuted) shard-scoped segment scan — shared by
-        fetch_blocks and the plan audit (see _docs_query)."""
+        fetch_blocks, pin_driver and the plan audit (see _docs_query).
+        ``terms=None`` scans every term."""
         cols = list(self.META_COLS) + (list(self.POS_COLS) if positions else [])
         cols = [c for c in cols if c in seg.columns]
-        q = seg.filter(F.col("term").isin(list(set(terms))))
+        q = seg if terms is None else seg.filter(F.col("term").isin(list(set(terms))))
         if self.shard_range is not None:
             # block-range pruning: only blocks overlapping [lo, hi) are
             # read (min/max row-group stats on first/last_doc_idx prune the
-            # term-sorted, docID-ordered segment files)
+            # term-sorted, docID-ordered segment files) — for a pinned
+            # shard, the per-node memory contract of doc-sharded serving
             lo, hi = self.shard_range
             q = q.filter(
                 (F.col("last_doc_idx") >= lo) & (F.col("first_doc_idx") < hi)
@@ -297,23 +297,20 @@ class IndexReader:
             q = q.filter(extra_filter)
         return q
 
-    def fetch_postings(self, terms: list[str]) -> dict[str, tuple[np.ndarray, np.ndarray, "pd.DataFrame"]]:
-        """term → (doc_idx, tf, block_group) decoded, concatenated,
-        docID-sorted. The third element is the term's RAW block-metadata
-        DataFrame (n, max_score, per-block columns) — callers needing the
-        float block-max array take ``g["max_score"].to_numpy()``; it is NOT
-        a numeric array itself. An optional per-block ``doc_off`` column
-        (generational indexes: each generation's local doc_idx space starts
-        at its slot base) is added to the decoded ids. Decode is one
-        vectorized pass over ALL of a term's blocks (decode_doc_blocks) —
-        never a per-block Python loop."""
-        blk = self.fetch_blocks(terms)
+    def fetch_postings(self, terms: list[str]) -> dict[str, tuple[np.ndarray, np.ndarray, Blocks]]:
+        """term → (doc_idx, tf, blocks) decoded, concatenated, docID-sorted.
+        The third element is the term's slice of the block store
+        (``blocks["n"]``, ``blocks["max_score"]``, ... are NumPy arrays;
+        ``len(blocks)`` is its block count). An optional per-block
+        ``doc_off`` column (generational indexes: each generation's local
+        doc_idx space starts at its slot base) is added to the decoded ids.
+        Decode is one vectorized pass over ALL of a term's blocks
+        (decode_doc_blocks) — never a per-block Python loop."""
         out = {}
-        for term, g in blk.groupby("term", sort=True):
-            offs = g["doc_off"].to_numpy(np.int64) if "doc_off" in g else None
-            counts = g["n"].to_numpy(np.int64)
-            docs = decode_doc_blocks(list(g["docs_bin"]), counts, offs)
-            tfs = varint_decode(b"".join(g["tfs_bin"])).astype(np.int64)
+        for term, g in self.fetch_blocks(terms).by_term():
+            offs = g["doc_off"] if "doc_off" in g else None
+            docs = decode_doc_blocks(g["docs_bin"], g["n"], offs)
+            tfs = varint_decode(g.joined("tfs_bin")).astype(np.int64)
             if self.shard_range is not None:
                 # shard-LOCAL index space: edge blocks straddling the
                 # boundary were decoded whole, so mask to [lo, hi) and
@@ -679,6 +676,40 @@ def _select_topk(scores: np.ndarray, docids: np.ndarray, k: int) -> list[tuple[i
     return [(int(cd[i]), float(cs[i])) for i in order[:kk]]
 
 
+def _bm25(r, weight: float, tfs: np.ndarray, dl: np.ndarray, avg_dl: float) -> np.ndarray:
+    """Per-posting BM25 contribution: weight · tf / (tf + k1(1 - b + b·dl/avgdl))."""
+    tf = tfs.astype(np.float64)
+    return weight * (tf / (tf + r.k1 * (1.0 - r.b + r.b * dl / avg_dl)))
+
+
+def _accumulate(
+    parts: list[tuple[np.ndarray, np.ndarray, bool]], need: int = 0, live=None
+) -> tuple[np.ndarray, np.ndarray]:
+    """The BM25 accumulate kernel: ``parts`` holds one (slots,
+    contributions, counted) triple per scoring term, in sorted-term order.
+    Returns the (slots, score sums) of the docs matched by at least
+    ``need`` counted terms and live, slot-ascending.
+
+    Accumulates over TOUCHED docs only (O(total postings), never
+    O(n_docs) — a corpus-sized accumulator per query is the wrong ambition
+    at 10^12 docs). Contributions concatenate in part order and np.add.at
+    applies them sequentially, so per-doc float summation order — and
+    therefore every bit of the result — is identical to the classic
+    full-array formulation."""
+    if not parts:
+        return np.empty(0, np.int64), np.empty(0, np.float64)
+    uniq, inv = np.unique(np.concatenate([p[0] for p in parts]), return_inverse=True)
+    sums = np.zeros(uniq.size, dtype=np.float64)
+    np.add.at(sums, inv, np.concatenate([p[1] for p in parts]))
+    matched = np.ones(uniq.size, dtype=bool)
+    if need:
+        counted = np.concatenate([np.full(p[0].size, p[2]) for p in parts])
+        matched = np.bincount(inv, weights=counted, minlength=uniq.size) >= need
+    if live is not None:
+        matched &= live[uniq]
+    return uniq[matched], sums[matched]
+
+
 # ---------------------------------------------------------------------------
 # Strategy 2: NumPy term-at-a-time (low-latency exhaustive)
 # ---------------------------------------------------------------------------
@@ -702,47 +733,24 @@ class TermAtATimeScorer:
         ``terms``: pre-analyzed terms, bypassing tokenization — the entry
         point for FIELDED queries ("lang:go"-style qualified terms from
         analysis.fields.field_query_terms), whose ':' the standard analyzer
-        would split."""
+        would split. ``k=None``: every match, as (doc_ids, scores) arrays
+        in slot order, for callers that page or combine the full set."""
         r = self.r
         terms = sorted(set(terms)) if terms is not None else sorted(set(tokenize_text(query)))
-        if not terms:
-            return []
         doc_len, doc_ids = r.doc_arrays()
-        postings = r.fetch_postings(terms)
-        if mode == "and" and len(postings) < len(terms):
-            return []  # a query term is absent from the corpus
-        # accumulate over TOUCHED docs only (O(total postings), never
-        # O(n_docs) — a corpus-sized accumulator per query is the wrong
-        # ambition at 10^12 docs). Contributions concatenate in sorted-term
-        # order and np.add.at applies them sequentially, so per-doc float
-        # summation order — and therefore every bit of the result — is
-        # identical to the classic full-array formulation.
-        doc_parts, score_parts = [], []
-        for term in terms:
-            if term not in postings:
-                continue
-            docs, tfs, _ = postings[term]
-            idf = r.idf(len(docs))
-            dl = doc_len[docs]
-            tf = tfs.astype(np.float64)
-            doc_parts.append(docs)
-            score_parts.append(idf * (tf / (tf + r.k1 * (1.0 - r.b + r.b * dl / r.avg_dl))))
-        if not doc_parts:
-            return []
-        all_docs = np.concatenate(doc_parts)
-        all_scores = np.concatenate(score_parts)
-        uniq, inv = np.unique(all_docs, return_inverse=True)
-        sums = np.zeros(uniq.size, dtype=np.float64)
-        np.add.at(sums, inv, all_scores)
-        nmatch = np.bincount(inv, minlength=uniq.size)
-        need = len(terms) if mode == "and" else 1
-        matched = nmatch >= need
-        if live is not None:
-            matched &= live[uniq]
-        idxs = uniq[matched]
-        if idxs.size == 0:
-            return []
-        return _select_topk(sums[matched], doc_ids[idxs], k)
+        postings = r.fetch_postings(terms) if terms else {}
+        parts = []
+        if mode != "and" or len(postings) == len(terms):  # else a term is absent
+            for term in terms:
+                if term in postings:
+                    docs, tfs, _ = postings[term]
+                    parts.append(
+                        (docs, _bm25(r, r.idf(len(docs)), tfs, doc_len[docs], r.avg_dl), True)
+                    )
+        slots, scores = _accumulate(parts, len(terms) if mode == "and" else 1, live)
+        if k is None:
+            return doc_ids[slots], scores
+        return _select_topk(scores, doc_ids[slots], k)
 
 
 def phrase_topk(
@@ -1232,14 +1240,13 @@ def _fetch_positional(r, terms: list[str]):
     blk = r.fetch_blocks(terms, positions=True)
     if len(blk) == 0:
         return None
-    if "npos_bin" not in blk or blk["npos_bin"].map(len).sum() == 0:
+    if "npos_bin" not in blk or len(blk.joined("npos_bin")) == 0:
         _raise_no_positions()
     per_term: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-    for term, g in blk.groupby("term", sort=True):
-        g = g.sort_values("block_id")
-        offs = g["doc_off"].to_numpy(np.int64) if "doc_off" in g else None
-        docs = decode_doc_blocks(list(g["docs_bin"]), g["n"].to_numpy(np.int64), offs)
-        counts, flat = decode_position_flat(b"".join(g["npos_bin"]), b"".join(g["pos_bin"]))
+    for term, g in blk.by_term():
+        offs = g["doc_off"] if "doc_off" in g else None
+        docs = decode_doc_blocks(g["docs_bin"], g["n"], offs)
+        counts, flat = decode_position_flat(g.joined("npos_bin"), g.joined("pos_bin"))
         per_term[term] = (docs, counts, flat)
     return per_term
 
@@ -1276,47 +1283,32 @@ def bool_topk(
     """ES bool query: ``must`` terms are all required, ``must_not`` terms
     exclude, and the score is the SUM of the BM25 contributions of every
     matched must/should term (must_not never contributes) — exactly
-    Elasticsearch's bool scoring for term clauses."""
+    Elasticsearch's bool scoring for term clauses. ``k=None``: every
+    match, as (doc_ids, scores) arrays in slot order (the /_search path,
+    which pages and counts the full match set itself)."""
     r = reader
     must = sorted({t for q in (must or []) for t in tokenize_text(q)})
     should = sorted({t for q in (should or []) for t in tokenize_text(q)})
     must_not = sorted({t for q in (must_not or []) for t in tokenize_text(q)})
     scoring = sorted(set(must) | set(should))
-    if not scoring:
-        return []
     doc_len, doc_ids = r.doc_arrays()
-    postings = r.fetch_postings(sorted(set(scoring) | set(must_not)))
-    if any(t not in postings for t in must):
-        return []  # a required term is absent from the corpus
-    doc_parts, score_parts, must_parts = [], [], []
-    for term in scoring:
-        if term not in postings:
-            continue
-        docs, tfs, _ = postings[term]
-        idf = r.idf(len(docs))
-        dl = doc_len[docs]
-        tf = tfs.astype(np.float64)
-        doc_parts.append(docs)
-        score_parts.append(idf * (tf / (tf + r.k1 * (1.0 - r.b + r.b * dl / r.avg_dl))))
-        must_parts.append(np.full(docs.shape, term in must, dtype=np.int64))
-    if not doc_parts:
-        return []  # no must terms and every should term absent from the corpus
-    all_docs = np.concatenate(doc_parts)
-    uniq, inv = np.unique(all_docs, return_inverse=True)
-    sums = np.zeros(uniq.size, dtype=np.float64)
-    np.add.at(sums, inv, np.concatenate(score_parts))
-    nmust = np.zeros(uniq.size, dtype=np.int64)
-    np.add.at(nmust, inv, np.concatenate(must_parts))
-    matched = nmust >= len(must)
+    postings = r.fetch_postings(sorted(set(scoring) | set(must_not))) if scoring else {}
+    parts = []
+    if all(t in postings for t in must):  # else a required term is absent
+        for term in scoring:
+            if term in postings:
+                docs, tfs, _ = postings[term]
+                parts.append(
+                    (docs, _bm25(r, r.idf(len(docs)), tfs, doc_len[docs], r.avg_dl), term in must)
+                )
+    slots, scores = _accumulate(parts, len(must), live)
     for term in must_not:
         if term in postings:
-            matched &= ~np.isin(uniq, postings[term][0], assume_unique=True)
-    if live is not None:
-        matched &= live[uniq]
-    idxs = uniq[matched]
-    if idxs.size == 0:
-        return []
-    return _select_topk(sums[matched], doc_ids[idxs], k)
+            keep = ~np.isin(slots, postings[term][0], assume_unique=True)
+            slots, scores = slots[keep], scores[keep]
+    if k is None:
+        return doc_ids[slots], scores
+    return _select_topk(scores, doc_ids[slots], k)
 
 
 def prefix_match(
@@ -1671,7 +1663,7 @@ def sharded_topk(
     need = len(terms) if mode == "and" else 1
     for si in range(n_shards):
         lo, hi = int(bounds[si]), int(bounds[si + 1])
-        doc_parts, score_parts = [], []
+        parts = []
         for term in terms:
             if term not in postings:
                 continue
@@ -1680,25 +1672,9 @@ def sharded_topk(
             if not m.any():
                 continue
             d = docs[m]
-            tf = tfs[m].astype(np.float64)
-            dl = doc_len[d]
-            doc_parts.append(d)
-            score_parts.append(
-                idfs[term] * (tf / (tf + r.k1 * (1.0 - r.b + r.b * dl / r.avg_dl)))
-            )
-        if not doc_parts:
-            continue
-        all_docs = np.concatenate(doc_parts)
-        all_scores = np.concatenate(score_parts)
-        uniq, inv = np.unique(all_docs, return_inverse=True)
-        sums = np.zeros(uniq.size, dtype=np.float64)
-        np.add.at(sums, inv, all_scores)
-        matched = np.bincount(inv, minlength=uniq.size) >= need
-        if live is not None:
-            matched &= live[uniq]
-        idxs = uniq[matched]
-        if idxs.size:
-            merged.extend(_select_topk(sums[matched], doc_ids[idxs], k))
+            parts.append((d, _bm25(r, idfs[term], tfs[m], doc_len[d], r.avg_dl), True))
+        slots, scores = _accumulate(parts, need, live)
+        merged.extend(_select_topk(scores, doc_ids[slots], k))
     merged.sort(key=lambda t: (-t[1], t[0]))
     return merged[:k]
 
@@ -1806,8 +1782,7 @@ def serve_topk(
         if doc_len.size == 0:
             return []
         postings = r.fetch_postings(terms)
-        live = getattr(r, "_live", None)
-        doc_parts, score_parts = [], []
+        parts = []
         for term in terms:
             if term not in postings:
                 continue
@@ -1815,25 +1790,9 @@ def serve_topk(
             if docs.size == 0:
                 continue
             idf = r.idf(dfs.get(term, 0))
-            dl = doc_len[docs]
-            tf = tfs.astype(np.float64)
-            doc_parts.append(docs)
-            score_parts.append(
-                idf * (tf / (tf + r.k1 * (1.0 - r.b + r.b * dl / r.avg_dl)))
-            )
-        local: list[tuple[int, float]] = []
-        if doc_parts:
-            all_docs = np.concatenate(doc_parts)
-            all_scores = np.concatenate(score_parts)
-            uniq, inv = np.unique(all_docs, return_inverse=True)
-            sums = np.zeros(uniq.size, dtype=np.float64)
-            np.add.at(sums, inv, all_scores)
-            matched = np.bincount(inv, minlength=uniq.size) >= need
-            if live is not None:
-                matched &= live[uniq]
-            idxs = uniq[matched]
-            if idxs.size:
-                local = _select_topk(sums[matched], doc_ids[idxs], k)
+            parts.append((docs, _bm25(r, idf, tfs, doc_len[docs], r.avg_dl), True))
+        slots, scores = _accumulate(parts, need, getattr(r, "_live", None))
+        local = _select_topk(scores, doc_ids[slots], k)
         # release this shard's arrays once scored: in production each shard
         # is a different NODE; a single-process coordinator (tests, small
         # deployments) must not accumulate every slice into the O(corpus)
@@ -1876,19 +1835,17 @@ class _TermCursor:
 
     INF = np.iinfo(np.int64).max
 
-    def __init__(self, term, g: pd.DataFrame, idf):
+    def __init__(self, term, g: Blocks, idf):
         self.term = term
-        self.blk_first = g["first_doc_idx"].to_numpy(np.int64)
-        self.blk_last = g["last_doc_idx"].to_numpy(np.int64)
-        self.blk_max = g["max_score"].to_numpy(np.float64)
-        self.blk_n = g["n"].to_numpy(np.int64)
-        self.docs_bins = list(g["docs_bin"])
-        self.tfs_bins = list(g["tfs_bin"])
+        self.blk_first = g["first_doc_idx"]
+        self.blk_last = g["last_doc_idx"]
+        self.blk_max = g["max_score"]
+        self.blk_n = g["n"]
+        self.docs_bins = g["docs_bin"]
+        self.tfs_bins = g["tfs_bin"]
         # generational indexes remap each block's local doc_idx space by its
         # generation's slot base (blk_first/blk_last arrive pre-remapped)
-        self.doc_offs = (
-            g["doc_off"].to_numpy(np.int64) if "doc_off" in g else np.zeros(len(g), np.int64)
-        )
+        self.doc_offs = g["doc_off"] if "doc_off" in g else np.zeros(len(g), np.int64)
         self.idf = idf
         self.max_score = float(self.blk_max.max())
         self.n = int(self.blk_n.sum())
@@ -1993,8 +1950,7 @@ def wand_topk(
     if len(blk) == 0:
         return []
     cursors: list[_TermCursor] = []
-    for term, g in blk.groupby("term", sort=True):
-        g = g.sort_values("block_id")
+    for term, g in blk.by_term():
         df_t = int(g["n"].sum())
         cursors.append(_TermCursor(term, g, r.idf(df_t)))
     if len(cursors) == 1:
@@ -2483,7 +2439,7 @@ def fielded_norms_topk(
         raise ValueError(f"fields not in the index mapping: {sorted(missing)}")
     fdl = reader.field_dl_arrays(sorted(need))
     postings = reader.fetch_postings(terms)
-    doc_parts, score_parts = [], []
+    parts = []
     for term in terms:
         if term not in postings:
             continue
@@ -2493,29 +2449,10 @@ def fielded_norms_topk(
         docs, tfs, _g = postings[term]
         df = len(docs)
         idf = math.log(1.0 + (n_f - df + 0.5) / (df + 0.5))
-        dl = fdl[fld][docs]
-        tf = tfs.astype(np.float64)
         boost = float(boosts.get(fld, 1.0)) if boosts else 1.0
-        doc_parts.append(docs)
-        score_parts.append(
-            boost
-            * idf
-            * (tf / (tf + reader.k1 * (1.0 - reader.b + reader.b * dl / avg_f)))
-        )
-    if not doc_parts:
-        return []
-    all_docs = np.concatenate(doc_parts)
-    all_scores = np.concatenate(score_parts)
-    uniq, inv = np.unique(all_docs, return_inverse=True)
-    sums = np.zeros(uniq.size, dtype=np.float64)
-    np.add.at(sums, inv, all_scores)
-    matched = np.ones(uniq.size, dtype=bool)
-    if live is not None:
-        matched &= live[uniq]
-    idxs = uniq[matched]
-    if idxs.size == 0:
-        return []
-    return _select_topk(sums[matched], doc_ids[idxs], k)
+        parts.append((docs, _bm25(reader, boost * idf, tfs, fdl[fld][docs], avg_f), True))
+    slots, scores = _accumulate(parts, 0, live)
+    return _select_topk(scores, doc_ids[slots], k)
 
 
 def rescore_topk(
@@ -2802,24 +2739,10 @@ def terms_set_topk(
     postings = r.fetch_postings(want)
     if len(postings) == 0:
         return []
-    doc_parts, score_parts = [], []
+    parts = []
     for term in sorted(postings):
         docs, tfs, _ = postings[term]
-        idf = r.idf(len(docs))
-        dl = doc_len[docs]
-        tf = tfs.astype(np.float64)
-        doc_parts.append(docs)
-        score_parts.append(idf * (tf / (tf + r.k1 * (1.0 - r.b + r.b * dl / r.avg_dl))))
-    all_docs = np.concatenate(doc_parts)
-    uniq, inv = np.unique(all_docs, return_inverse=True)
-    sums = np.zeros(uniq.size, np.float64)
-    np.add.at(sums, inv, np.concatenate(score_parts))
-    nmatch = np.zeros(uniq.size, np.int64)
-    np.add.at(nmatch, inv, np.ones(all_docs.size, np.int64))  # postings are distinct per term
-    matched = nmatch >= int(min_match)
-    if live is not None:
-        matched &= live[uniq]
-    idxs = uniq[matched]
-    if idxs.size == 0:
-        return []
-    return _select_topk(sums[matched], doc_ids[idxs], k)
+        parts.append((docs, _bm25(r, r.idf(len(docs)), tfs, doc_len[docs], r.avg_dl), True))
+    # postings are distinct per term, so a doc's count is its distinct matches
+    slots, scores = _accumulate(parts, int(min_match), live)
+    return _select_topk(scores, doc_ids[slots], k)

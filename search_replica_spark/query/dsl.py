@@ -61,12 +61,13 @@ JOIN_PARENT_FIELD = "join_parent"
 _LEAF_CONST = 1.0  # ES constant-score filter-context leaves
 
 #: kinds whose primitive top-k IS the final answer (ranked on the same
-#: score-desc/id-asc key execute_dsl sorts by) — safe to k-limit at the
+#: score-desc/id-asc key execute_dsl selects by) — safe to k-limit at the
 #: TOP level only. Compositional kinds (bool, dis_max, multi_match,
 #: match_bool_prefix, function_score, ...) must see full maps: a doc
-#: outside one leg's top-k can still win after combination.
+#: outside one leg's top-k can still win after combination. ``match`` is
+#: not here: its arrays come back unsorted and are selected once.
 _LEAF_TOPK_KINDS = frozenset(
-    {"match", "match_phrase", "match_all", "simple_query_string",
+    {"match_phrase", "match_all", "simple_query_string",
      "more_like_this", "span_near", "terms_set"}
 )
 
@@ -96,9 +97,8 @@ def execute_dsl(reader, query: dict, k: int = 10, live=None, inner_hits=None):
         and next(iter(query)) in _LEAF_TOPK_KINDS
         else None
     )
-    scores = _score_map(reader, query, live, inner_hits, leaf_k)
-    ranked = sorted(scores.items(), key=lambda t: (-t[1], t[0]))
-    return ranked[:k]
+    ids, scores = _score(reader, query, live, inner_hits, leaf_k)
+    return Q._select_topk(scores, ids, k)
 
 
 def _single(d: dict, kind: str):
@@ -120,6 +120,17 @@ def _members(ids) -> dict[int, float]:
     return {int(d): _LEAF_CONST for d in ids}
 
 
+def _as_map(ids: np.ndarray, scores: np.ndarray) -> dict[int, float]:
+    return dict(zip(ids.tolist(), scores.tolist()))
+
+
+def _arrays(m: dict[int, float]) -> tuple[np.ndarray, np.ndarray]:
+    return (
+        np.fromiter(m.keys(), dtype=np.int64, count=len(m)),
+        np.fromiter(m.values(), dtype=np.float64, count=len(m)),
+    )
+
+
 def _spec(body, key: str = "query"):
     """ES leaf bodies come in short form ({field: "text"}) and long form
     ({field: {"query": "text", ...options}}); normalize to (text, opts)."""
@@ -134,7 +145,37 @@ def _fielded(reader) -> bool:
     return bool(get()) if get is not None else False
 
 
+def _score(reader, q, live, ih=None, leaf_k=None) -> tuple[np.ndarray, np.ndarray]:
+    """A DSL query's matches as (doc_id, score) arrays. A ``match`` leaf's
+    arrays come straight from the scorer; every other kind is scored as a
+    map by ``_score_map`` and converted here."""
+    kind, body = _single(q, "a DSL query")
+    if kind == "match":
+        return _match(reader, body, live)
+    return _arrays(_score_map(reader, q, live, ih, leaf_k))
+
+
+def _match(reader, body, live) -> tuple[np.ndarray, np.ndarray]:
+    """ES match: every match as (doc_id, score) arrays."""
+    field, spec = _single(body, "match")
+    text, opts = _spec(spec)
+    mode = "and" if str(opts.get("operator", "or")).lower() == "and" else "or"
+    if _fielded(reader):
+        # fielded build: analyze the value into the field's term space
+        # (field:term), per-field BM25 — ES's per-mapping analysis
+        from search_replica_spark.analysis.fields import field_query_terms
+
+        qterms = field_query_terms(field, str(text))
+        return Q.TermAtATimeScorer(reader).score(terms=qterms, k=None, mode=mode, live=live)
+    _text_field(field, "match")
+    if mode == "and":
+        return Q.bool_topk(reader, must=[text], k=None, live=live)
+    return Q.bool_topk(reader, should=[text], k=None, live=live)
+
+
 def _score_map(reader, q, live, ih=None, leaf_k=None) -> dict[int, float]:
+    """A DSL query's matches as a doc_id → score map: the form the
+    compositional kinds combine."""
     kind, body = _single(q, "a DSL query")
     # full-result k for composition; ``leaf_k`` is only ever non-None when
     # the caller verified this call IS a top-level _LEAF_TOPK_KINDS leaf
@@ -144,22 +185,7 @@ def _score_map(reader, q, live, ih=None, leaf_k=None) -> dict[int, float]:
         return {d: s for d, s in Q.match_all(reader, k=n, live=live)}
 
     if kind == "match":
-        field, spec = _single(body, kind)
-        text, opts = _spec(spec)
-        mode = "and" if str(opts.get("operator", "or")).lower() == "and" else "or"
-        if _fielded(reader):
-            # fielded build: analyze the value into the field's term space
-            # (field:term), per-field BM25 — ES's per-mapping analysis
-            from search_replica_spark.analysis.fields import field_query_terms
-
-            qterms = field_query_terms(field, str(text))
-            return dict(
-                Q.TermAtATimeScorer(reader).score(terms=qterms, k=n, mode=mode, live=live)
-            )
-        _text_field(field, kind)
-        if mode == "and":
-            return dict(Q.bool_topk(reader, must=[text], k=n, live=live))
-        return dict(Q.bool_topk(reader, should=[text], k=n, live=live))
+        return _as_map(*_match(reader, body, live))
 
     if kind == "match_phrase":
         field, spec = _single(body, kind)
@@ -967,7 +993,7 @@ def execute_request(reader, body: dict, live=None) -> dict:
     # query, the union is scored additively (query score + boost·cosine)
     query = body.get("query") or ({"match_all": {}} if knn is None else None)
     ih: dict = {}
-    scores = _score_map(reader, query, live, ih) if query is not None else {}
+    ids, scores = _score(reader, query, live, ih) if query is not None else _arrays({})
     if knn is not None:
         from search_replica_spark.query.knn import knn_query
 
@@ -977,14 +1003,17 @@ def execute_request(reader, body: dict, live=None) -> dict:
             num_candidates=int(knn.get("num_candidates", 10 * kk)),
         )
         boost = float(knn.get("boost", 1.0))
+        merged = _as_map(ids, scores)
         for d, s in khits:
-            scores[d] = scores.get(d, 0.0) + boost * s
+            merged[d] = merged.get(d, 0.0) + boost * s
+        ids, scores = _arrays(merged)
 
     min_score = body.get("min_score")
     if min_score is not None:
-        scores = {d: s for d, s in scores.items() if s >= float(min_score)}
+        keep = scores >= float(min_score)
+        ids, scores = ids[keep], scores[keep]
 
-    total = len(scores)
+    total = int(ids.size)
     offset = int(body.get("from", 0))
     size = int(body.get("size", 10))
 
@@ -1000,19 +1029,16 @@ def execute_request(reader, body: dict, live=None) -> dict:
     after = body.get("search_after")
     sort_vals: dict[int, object] = {}
     if key == "_doc":
-        items = sorted(scores.items())
-        if after is not None:
-            cd = int(after[-1])
-            items = [t for t in items if t[0] > cd]
-        page = items[offset : offset + size]
+        keep = ids > int(after[-1]) if after is not None else slice(None)
+        d, s = ids[keep], scores[keep]
+        o = np.argsort(d)[offset : offset + size]
+        page = list(zip(d[o].tolist(), s[o].tolist()))
     elif key == "_score":
-        items = sorted(scores.items(), key=lambda t: (-t[1], t[0]))
+        keep = slice(None)
         if after is not None:
             cs, cd = float(after[0]), int(after[-1])
-            items = [
-                t for t in items if t[1] < cs or (t[1] == cs and t[0] > cd)
-            ]
-        page = items[offset : offset + size]
+            keep = (scores < cs) | ((scores == cs) & (ids > cd))
+        page = Q._select_topk(scores[keep], ids[keep], offset + size)[offset:]
     else:
         # stored-field sort: ONE distributed orderBy + limit over the
         # matched docs (ties break on the id, ES-style) — the plan that
@@ -1025,7 +1051,7 @@ def execute_request(reader, body: dict, live=None) -> dict:
             )
         from pyspark.sql import functions as F
 
-        mdf = _matched_docs_df(reader, list(scores))
+        mdf = _matched_docs_df(reader, ids.tolist())
         col = F.col(key).asc() if order == "asc" else F.col(key).desc()
         rows = (
             mdf.select("_rid", key)
@@ -1033,7 +1059,8 @@ def execute_request(reader, body: dict, live=None) -> dict:
             .limit(offset + size)
             .collect()
         )
-        page = [(int(r["_rid"]), scores[int(r["_rid"])]) for r in rows[offset:]]
+        smap = _as_map(ids, scores)
+        page = [(int(r["_rid"]), smap[int(r["_rid"])]) for r in rows[offset:]]
         sort_vals = {int(r["_rid"]): r[key] for r in rows[offset:]}
 
     hits = []
@@ -1072,7 +1099,7 @@ def execute_request(reader, body: dict, live=None) -> dict:
     resp: dict = {"hits": {"total": {"value": total, "relation": "eq"}, "hits": hits}}
     aggs = body.get("aggs") or body.get("aggregations")
     if aggs:
-        resp["aggregations"] = _run_aggs(reader, aggs, list(scores))
+        resp["aggregations"] = _run_aggs(reader, aggs, ids.tolist())
     return resp
 
 

@@ -49,6 +49,7 @@ import os
 import shutil
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import functions as F
 
 from search_replica_spark.analysis import tokenize_text
@@ -56,6 +57,7 @@ from search_replica_spark.config import IndexConfig
 from search_replica_spark.errors import SchemaMismatch, with_retries
 from search_replica_spark.index.build import build_index, with_doc_ids
 from search_replica_spark.query.bm25 import IndexReader, TermAtATimeScorer, wand_topk
+from search_replica_spark.query.store import BlockStore
 
 GENS_FILE = "generations.json"
 CHANGE_COL = "_change_type"  # insert | update | update_partial | delete
@@ -1430,49 +1432,23 @@ class MultiGenReader(IndexReader):
         return LiveDocs(self.n_docs, dead_arr)
 
     # --- batched segment access across generations ---
-    def _remap_blocks(self, pdf):
-        """Remap a multi-gen block frame (with a ``gen`` column) onto global
-        slots: shift block ranges by the gen base, renumber block_id into
-        one per-term sequence, rescale max_score to a global upper bound."""
-        import pandas as pd
+    # IndexReader's pin/fetch run unchanged over the hooks below. They are
+    # bound here as well so that each reader class owns its entry points:
+    # perfbench/spans.py wraps them per class, and a call through a
+    # subclass override would be traced twice.
+    pin_driver = IndexReader.pin_driver
+    fetch_blocks = IndexReader.fetch_blocks
 
-        if pdf.empty:
-            pdf = pdf.assign(doc_off=pd.Series(dtype="int64"))
-            return pdf
-        pdf = pdf.sort_values(["term", "gen", "block_id"]).reset_index(drop=True)
-        pdf["doc_off"] = pdf["gen"].map(self.bases).astype("int64")
-        pdf["first_doc_idx"] = pdf["first_doc_idx"] + pdf["doc_off"]
-        pdf["last_doc_idx"] = pdf["last_doc_idx"] + pdf["doc_off"]
-        # local df per (term, gen) = sum of block n; global df = sum over gens
-        grp = pdf.groupby(["term", "gen"], sort=False)["n"].transform("sum")
-        df_glob = pdf.groupby("term", sort=False)["n"].transform("sum")
-        n_g = pdf["gen"].map(lambda g: self._gen_stats[g][0])
-        avg_g = pdf["gen"].map(lambda g: self._gen_stats[g][1])
-        idf_g = np.log(1.0 + (n_g - grp + 0.5) / (grp + 0.5))
-        idf_glob = np.log(1.0 + (self.n_docs - df_glob + 0.5) / (df_glob + 0.5))
-        stretch = np.maximum(1.0, self.avg_dl / np.where(avg_g > 0, avg_g, self.avg_dl))
-        # 1+1e-12: keep the bound an upper bound under float rounding
-        pdf["max_score"] = pdf["max_score"] / idf_g * idf_glob * stretch * (1.0 + 1e-12)
-        pdf["block_id"] = pdf.groupby("term", sort=False).cumcount()
-        return pdf.drop(columns=["gen"])
-
-    def _gen_cols(self, seg, positions: bool):
-        cols = list(self.META_COLS) + (list(self.POS_COLS) if positions else [])
-        return [c for c in cols if c in seg.columns]
-
-    def fetch_blocks(self, terms, positions: bool = False):
-        if self._pinned is not None and (
-            not positions or "npos_bin" in self._pinned.columns
-        ):
-            hit = [t for t in set(terms) if t in self._pinned.index]
-            if not hit:
-                return self._pinned.iloc[0:0].reset_index(drop=True)
-            return self._pinned.loc[hit].reset_index(drop=True).sort_values(["term", "block_id"])
-        tset = list(set(terms))
+    def _segment_scan(self, positions: bool, terms: list[str] | None = None):
+        """ONE union scan over every live generation's segments (with a
+        ``gen`` column), `term IN` pushed down per generation path when
+        ``terms`` is given; None when no generation overlaps this shard. A
+        shard-scoped reader reads only blocks overlapping its slot range —
+        the per-node memory contract of doc-sharded serving."""
         parts = []
         for g in self.live_gens:
             seg = self.spark.read.parquet(os.path.join(g["dir"], "segments"))
-            q = seg.filter(F.col("term").isin(tset))
+            q = seg if terms is None else seg.filter(F.col("term").isin(list(set(terms))))
             rng = self._gen_slot_filter(g)
             if rng is not None:
                 glo, ghi = rng
@@ -1482,57 +1458,59 @@ class MultiGenReader(IndexReader):
                 q = q.filter(
                     (F.col("last_doc_idx") >= glo) & (F.col("first_doc_idx") < ghi)
                 )
+            cols = list(self.META_COLS) + (list(self.POS_COLS) if positions else [])
             parts.append(
-                q.select(*self._gen_cols(seg, positions))
+                q.select(*[c for c in cols if c in seg.columns])
                 .withColumn("gen", F.lit(g["gen"]))
             )
         if not parts:
-            import pandas as pd
-
-            return self._remap_blocks(
-                pd.DataFrame(columns=[*self.META_COLS, "gen"])
-            )
+            return None
         uni = parts[0]
         for p in parts[1:]:
             uni = uni.unionByName(p)
-        return self._remap_blocks(uni.toPandas())
+        return uni
 
-    def pin_driver(self, positions: bool = False):
-        """Serving mode over ALL generations: one union read pins every
-        generation's segments, remapped, term-indexed (see IndexReader).
-        A shard-scoped reader pins only blocks overlapping its slot range
-        — the per-node memory contract of doc-sharded serving."""
-        if self._pinned is None:
-            parts = []
-            for g in self.live_gens:
-                seg = self.spark.read.parquet(os.path.join(g["dir"], "segments"))
-                q = seg
-                rng = self._gen_slot_filter(g)
-                if rng is not None:
-                    glo, ghi = rng
-                    if glo >= ghi:
-                        continue
-                    q = q.filter(
-                        (F.col("last_doc_idx") >= glo)
-                        & (F.col("first_doc_idx") < ghi)
-                    )
-                parts.append(
-                    q.select(*self._gen_cols(seg, positions))
-                    .withColumn("gen", F.lit(g["gen"]))
-                )
-            if not parts:
-                import pandas as pd
+    def _block_store(self, scan, positions: bool) -> BlockStore:
+        if scan is None:
+            return BlockStore(pa.table({"term": pa.array([], pa.string())}), positions)
+        table = scan.toArrow().sort_by(
+            [("term", "ascending"), ("gen", "ascending"), ("block_id", "ascending")]
+        )
+        store = BlockStore(table, positions)
+        self._remap_blocks(store)
+        return store
 
-                pdf = self._remap_blocks(
-                    pd.DataFrame(columns=[*self.META_COLS, "gen"])
-                )
-            else:
-                uni = parts[0]
-                for p in parts[1:]:
-                    uni = uni.unionByName(p)
-                pdf = self._remap_blocks(uni.toPandas())
-            self._pinned = pdf.sort_values(["term", "block_id"]).set_index("term", drop=False)
-        return self
+    def _remap_blocks(self, store: BlockStore) -> None:
+        """Remap a (term, gen, block)-sorted multi-gen store onto global
+        slots, once, in place: shift block ranges by the gen base (kept as
+        ``doc_off`` for the decode), renumber block_id into one per-term
+        sequence, rescale max_score to a global upper bound."""
+        c = store.cols
+        gen = c.pop("gen", None)
+        if gen is None or gen.size == 0:
+            return
+        gids = np.array(sorted(self._gen_stats), dtype=np.int64)
+        at = np.searchsorted(gids, gen)
+        doc_off = np.array([self.bases[g] for g in gids.tolist()], np.int64)[at]
+        n_g = np.array([self._gen_stats[g][0] for g in gids.tolist()], np.int64)[at]
+        avg_g = np.array([self._gen_stats[g][1] for g in gids.tolist()], np.float64)[at]
+        n = c["n"]
+        lens = store.term_ends - store.term_starts
+        term_of = np.repeat(np.arange(lens.size), lens)
+        # local df per (term, gen) = sum of block n; global df = sum over gens
+        run = np.flatnonzero((np.diff(term_of) != 0) | (np.diff(gen) != 0)) + 1
+        run = np.concatenate(([0], run))
+        grp = np.repeat(np.add.reduceat(n, run), np.diff(np.append(run, n.size)))
+        df_glob = np.repeat(np.add.reduceat(n, store.term_starts), lens)
+        idf_g = np.log(1.0 + (n_g - grp + 0.5) / (grp + 0.5))
+        idf_glob = np.log(1.0 + (self.n_docs - df_glob + 0.5) / (df_glob + 0.5))
+        stretch = np.maximum(1.0, self.avg_dl / np.where(avg_g > 0, avg_g, self.avg_dl))
+        c["doc_off"] = doc_off
+        c["first_doc_idx"] = c["first_doc_idx"] + doc_off
+        c["last_doc_idx"] = c["last_doc_idx"] + doc_off
+        # 1+1e-12: keep the bound an upper bound under float rounding
+        c["max_score"] = c["max_score"] / idf_g * idf_glob * stretch * (1.0 + 1e-12)
+        c["block_id"] = np.arange(n.size, dtype=np.int64) - np.repeat(store.term_starts, lens)
 
     def expand_prefix(self, prefix: str, max_expansions: int | None = 50,
                       extra_filter=None):

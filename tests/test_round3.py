@@ -187,9 +187,8 @@ def _phrase_naive(reader, phrase, k=10, slop=0):
     blk = r.fetch_blocks(uniq, positions=True)
     doc_len, doc_ids = r.doc_arrays()
     per_term = {}
-    for term, g in blk.groupby("term", sort=True):
-        g = g.sort_values("block_id")
-        offs = g["doc_off"].to_numpy(np.int64) if "doc_off" in g else np.zeros(len(g), np.int64)
+    for term, g in blk.by_term():
+        offs = g["doc_off"] if "doc_off" in g else np.zeros(len(g), np.int64)
         docs = np.concatenate(
             [delta_decode(bb) + o for bb, o in zip(g["docs_bin"], offs)]
         ).astype(np.int64)
