@@ -7,8 +7,9 @@ the codec: docID **deltas** + LEB128 varints, fixed-size blocks with
 per-block max-score metadata for block-max WAND (BASELINE.json#north_star).
 
 All encode/decode paths are vectorized over NumPy arrays — no per-element
-Python loops over postings (loops below are over the ≤10 byte positions of
-a varint, not over values).
+Python loops over postings. The encoder loops over the ≤10 byte positions
+of a varint; ``varint_decode`` makes a fixed number of NumPy calls whatever
+the byte lengths.
 """
 
 from __future__ import annotations
@@ -18,6 +19,7 @@ import numpy as np
 BLOCK_SIZE = 128  # docs per block (Lucene uses 128-doc blocks for the same reason)
 
 _THRESHOLDS = [1 << (7 * k) for k in range(1, 10)]  # 2^7 .. 2^63
+_SHIFTS = np.arange(0, 70, 7, dtype=np.uint64)  # bit shift of byte k of a varint
 
 
 def varint_encode(values: np.ndarray) -> bytes:
@@ -48,23 +50,32 @@ def varint_encode(values: np.ndarray) -> bytes:
 
 
 def varint_decode(buf: bytes) -> np.ndarray:
-    """Decode LEB128 bytes back to a uint64 array (vectorized)."""
+    """Decode LEB128 bytes back to a uint64 array (vectorized).
+
+    A fixed number of NumPy calls, no loop over byte positions: a byte's
+    position within its varint is its index minus its varint's start, its
+    7 payload bits are shifted by 7 × that position, and one
+    ``add.reduceat`` at the starts sums them (the shifted fields do not
+    overlap, so the sum is exact up to 2^64 - 1). Raises ``ValueError`` on
+    a truncated buffer (the last byte has the continuation bit set) and on
+    a varint longer than 10 bytes."""
     b = np.frombuffer(buf, dtype=np.uint8)
     if b.size == 0:
         return np.empty(0, dtype=np.uint64)
-    is_end = (b & 0x80) == 0
-    ends = np.nonzero(is_end)[0]
+    if b[-1] >= 0x80:
+        raise ValueError("truncated varint: the last byte has the continuation bit set")
+    ends = np.flatnonzero(b < 0x80)
     starts = np.empty_like(ends)
     starts[0] = 0
     starts[1:] = ends[:-1] + 1
-    lengths = ends - starts + 1
-    values = np.zeros(ends.shape, dtype=np.uint64)
-    max_len = int(lengths.max())
-    for k in range(max_len):
-        mask = lengths > k
-        chunk = b[starts[mask] + k].astype(np.uint64)
-        values[mask] |= (chunk & np.uint64(0x7F)) << np.uint64(7 * k)
-    return values
+    pos = np.arange(b.size, dtype=np.intp)
+    pos -= np.repeat(starts, ends - starts + 1)
+    parts = (b & 0x7F).astype(np.uint64)
+    try:
+        parts <<= _SHIFTS[pos]
+    except IndexError:
+        raise ValueError("varint longer than 10 bytes") from None
+    return np.add.reduceat(parts, starts)
 
 
 def delta_encode(sorted_ids: np.ndarray) -> bytes:

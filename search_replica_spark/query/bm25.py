@@ -120,6 +120,7 @@ class IndexReader:
         self._doc_ids: np.ndarray | None = None
         self._seg_df = None
         self._pinned: BlockStore | None = None
+        self._dict_df: dict[str, int] | None = None
 
     def cache_segments(self, positions: bool = False):
         """Pin the segment store in Spark executor memory (hot-serving mode):
@@ -221,6 +222,8 @@ class IndexReader:
                 # later job in this session)
                 self._seg_df.unpersist()
                 self._seg_df = None
+        if self.shard_range is not None:
+            self._dictionary_dfs()  # so a pinned shard request runs no Spark job
         return self
 
     def fetch_blocks(self, terms: list[str], positions: bool = False) -> Blocks:
@@ -304,22 +307,56 @@ class IndexReader:
         ``len(blocks)`` is its block count). An optional per-block
         ``doc_off`` column (generational indexes: each generation's local
         doc_idx space starts at its slot base) is added to the decoded ids.
-        Decode is one vectorized pass over ALL of a term's blocks
-        (decode_doc_blocks) — never a per-block Python loop."""
+        Decode is one vectorized pass over every block of every term (one
+        decode_doc_blocks and one varint_decode per request), split into
+        per-term views at each term's last posting — never a per-term or
+        per-block decode."""
+        return self.decode_postings(self.fetch_blocks(terms))
+
+    def decode_postings(self, blk: Blocks) -> dict[str, tuple[np.ndarray, np.ndarray, Blocks]]:
+        """fetch_postings over already fetched blocks."""
+        if len(blk) == 0:
+            return {}
+        n = blk["n"]
+        docs = decode_doc_blocks(blk["docs_bin"], n, blk["doc_off"] if "doc_off" in blk else None)
+        tfs = varint_decode(blk.joined("tfs_bin")).astype(np.int64)
+        post_ends = np.cumsum(n).tolist()  # postings up to each block's end
         out = {}
-        for term, g in self.fetch_blocks(terms).by_term():
-            offs = g["doc_off"] if "doc_off" in g else None
-            docs = decode_doc_blocks(g["docs_bin"], g["n"], offs)
-            tfs = varint_decode(g.joined("tfs_bin")).astype(np.int64)
+        start = row = 0
+        for term, g in blk.by_term():
+            row += len(g)
+            end = post_ends[row - 1]
+            d, tf = docs[start:end], tfs[start:end]
+            start = end
             if self.shard_range is not None:
                 # shard-LOCAL index space: edge blocks straddling the
                 # boundary were decoded whole, so mask to [lo, hi) and
                 # rebase — doc_arrays()[idx] then lines up slot-for-slot
                 lo, hi = self.shard_range
-                m = (docs >= lo) & (docs < hi)
-                docs, tfs = docs[m] - lo, tfs[m]
-            out[term] = (docs, tfs, g)
+                m = (d >= lo) & (d < hi)
+                d, tf = d[m] - lo, tf[m]
+            out[term] = (d, tf, g)
         return out
+
+    def term_df(self, term: str, held: int) -> int:
+        """The document frequency to score ``term`` with, given ``held``,
+        the number of its postings this reader holds. An unsharded reader
+        holds every posting, so that is the df. A shard reader holds only
+        its slot range: it takes the dictionary df (the dfs phase of
+        dfs_query_then_fetch), so its scores equal the full reader's.
+        The scorers take a term's df from here."""
+        if self.shard_range is None:
+            return held
+        return self._dictionary_dfs().get(term, 0)
+
+    def term_idf(self, term: str, held: int) -> float:
+        return self.idf(self.term_df(term, held))
+
+    def _dictionary_dfs(self) -> dict[str, int]:
+        """term → dictionary df of the whole index, read once per reader."""
+        if self._dict_df is None:
+            self._dict_df = _global_dfs(self, None)
+        return self._dict_df
 
 
 # ---------------------------------------------------------------------------
@@ -692,15 +729,14 @@ def _accumulate(
 
     Accumulates over TOUCHED docs only (O(total postings), never
     O(n_docs) — a corpus-sized accumulator per query is the wrong ambition
-    at 10^12 docs). Contributions concatenate in part order and np.add.at
-    applies them sequentially, so per-doc float summation order — and
-    therefore every bit of the result — is identical to the classic
-    full-array formulation."""
+    at 10^12 docs). Contributions concatenate in part order and
+    ``bincount`` adds them into each doc's sum in input order, from 0.0,
+    so per-doc float summation order — and therefore every bit of the
+    result — is identical to the classic full-array formulation."""
     if not parts:
         return np.empty(0, np.int64), np.empty(0, np.float64)
     uniq, inv = np.unique(np.concatenate([p[0] for p in parts]), return_inverse=True)
-    sums = np.zeros(uniq.size, dtype=np.float64)
-    np.add.at(sums, inv, np.concatenate([p[1] for p in parts]))
+    sums = np.bincount(inv, weights=np.concatenate([p[1] for p in parts]), minlength=uniq.size)
     matched = np.ones(uniq.size, dtype=bool)
     if need:
         counted = np.concatenate([np.full(p[0].size, p[2]) for p in parts])
@@ -744,9 +780,8 @@ class TermAtATimeScorer:
             for term in terms:
                 if term in postings:
                     docs, tfs, _ = postings[term]
-                    parts.append(
-                        (docs, _bm25(r, r.idf(len(docs)), tfs, doc_len[docs], r.avg_dl), True)
-                    )
+                    idf = r.term_idf(term, len(docs))
+                    parts.append((docs, _bm25(r, idf, tfs, doc_len[docs], r.avg_dl), True))
         slots, scores = _accumulate(parts, len(terms) if mode == "and" else 1, live)
         if k is None:
             return doc_ids[slots], scores
@@ -802,7 +837,7 @@ def phrase_topk(
         cand = cand[live[cand]]
     if cand.size == 0:
         return []
-    idf_sum = sum(r.idf(len(per_term[t][0])) for t in qterms)
+    idf_sum = sum(r.term_idf(t, len(per_term[t][0])) for t in qterms)
 
     # --- vectorized candidate scoring (no per-doc Python) ---
     # Each term's candidate positions are gathered into ONE flat array in
@@ -1000,7 +1035,7 @@ def span_first_topk(
     idxs = docs[mask]
     if idxs.size == 0:
         return []
-    idf = r.idf(len(docs))
+    idf = r.term_idf(t, len(docs))
     tf = tf_early[mask].astype(np.float64)
     dl = reader.doc_arrays()[0][idxs]
     scores = idf * tf / (tf + r.k1 * (1.0 - r.b + r.b * dl / r.avg_dl))
@@ -1036,7 +1071,7 @@ def span_not_topk(
         return []
     docs_i, counts_i, flat_i = per_term[ti]
     doc_len, doc_ids = r.doc_arrays()
-    idf = r.idf(len(docs_i))
+    idf = r.term_idf(ti, len(docs_i))
     if te not in per_term:
         surviving = counts_i.copy()  # nothing to exclude anywhere
         docs = docs_i
@@ -1298,9 +1333,8 @@ def bool_topk(
         for term in scoring:
             if term in postings:
                 docs, tfs, _ = postings[term]
-                parts.append(
-                    (docs, _bm25(r, r.idf(len(docs)), tfs, doc_len[docs], r.avg_dl), term in must)
-                )
+                idf = r.term_idf(term, len(docs))
+                parts.append((docs, _bm25(r, idf, tfs, doc_len[docs], r.avg_dl), term in must))
     slots, scores = _accumulate(parts, len(must), live)
     for term in must_not:
         if term in postings:
@@ -1657,7 +1691,7 @@ def sharded_topk(
     if mode == "and" and len(postings) < len(terms):
         return []
     # dfs phase: global df per term (full posting lengths)
-    idfs = {t: r.idf(len(p[0])) for t, p in postings.items()}
+    idfs = {t: r.term_idf(t, len(p[0])) for t, p in postings.items()}
     bounds = np.linspace(0, r.n_docs, n_shards + 1).astype(np.int64)
     merged: list[tuple[int, float]] = []
     need = len(terms) if mode == "and" else 1
@@ -1723,11 +1757,12 @@ def make_serving_readers(
     return [make((int(bounds[i]), int(bounds[i + 1]))) for i in range(n_shards)]
 
 
-def _global_dfs(reader, terms: list[str]) -> dict[str, int]:
+def _global_dfs(reader, terms: list[str] | None) -> dict[str, int]:
     """dfs phase of dfs_query_then_fetch: GLOBAL document frequencies from
     the term dictionary (summed across generations), independent of any
     shard's local view — so every shard scores with the same idf the
-    unsharded scorer derives from its full posting lengths."""
+    unsharded scorer derives from its full posting lengths. ``terms=None``
+    reads every term."""
     dirs = (
         [g["dir"] for g in reader.live_gens]
         if hasattr(reader, "live_gens")
@@ -1735,14 +1770,12 @@ def _global_dfs(reader, terms: list[str]) -> dict[str, int]:
     )
     out: dict[str, int] = {}
     for d in dirs:
-        rows = (
-            reader.spark.read.parquet(os.path.join(d, "dict"))
-            .filter(F.col("term").isin(terms))
-            .select("term", "df")
-            .collect()
-        )
-        for r in rows:
-            out[r["term"]] = out.get(r["term"], 0) + int(r["df"])
+        q = reader.spark.read.parquet(os.path.join(d, "dict"))
+        if terms is not None:
+            q = q.filter(F.col("term").isin(terms))
+        t = q.select("term", "df").toArrow()
+        for term, df in zip(t["term"].to_pylist(), t["df"].to_pylist()):
+            out[term] = out.get(term, 0) + int(df)
     return out
 
 
@@ -1949,16 +1982,13 @@ def wand_topk(
     blk = r.fetch_blocks(terms)
     if len(blk) == 0:
         return []
-    cursors: list[_TermCursor] = []
-    for term, g in blk.by_term():
-        df_t = int(g["n"].sum())
-        cursors.append(_TermCursor(term, g, r.idf(df_t)))
+    cursors = [_TermCursor(t, g, r.term_idf(t, int(g["n"].sum()))) for t, g in blk.by_term()]
     if len(cursors) == 1:
         # single-cursor WAND degenerates to a full walk — score vectorized
         # instead (identical results, no per-posting Python)
         c = cursors[0]
-        docs = decode_doc_blocks(c.docs_bins, c.blk_n, c.doc_offs)
-        tf = varint_decode(b"".join(c.tfs_bins)).astype(np.float64)
+        docs, tf, _g = r.decode_postings(blk)[c.term]
+        tf = tf.astype(np.float64)
         if live is not None:
             keep = live[docs]
             docs, tf = docs[keep], tf[keep]
@@ -1974,10 +2004,15 @@ def wand_topk(
     heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap of top-k
     theta = 0.0
     INF = np.iinfo(np.int64).max
+    # cursors walk global slots; a shard reader's doc arrays and liveDocs
+    # are shard-local, so it scores only slots in [lo, hi), at slot - lo
+    lo, hi = r.shard_range if r.shard_range is not None else (0, INF)
+    for c in cursors:
+        c.advance_to(lo)
 
     def score_doc(didx: int) -> float:
         s = 0.0
-        dl = doc_len[didx]
+        dl = doc_len[didx - lo]
         for c in cursors:  # cursors are in sorted-term order → deterministic sum
             if c.cur_doc() == didx:
                 tf = c.cur_tf()
@@ -1985,7 +2020,7 @@ def wand_topk(
         return s
 
     while True:
-        act = [c for c in cursors if c.cur_doc() != INF]
+        act = [c for c in cursors if c.cur_doc() < hi]
         if not act:
             break
         act.sort(key=lambda c: c.cur_doc())
@@ -2023,9 +2058,9 @@ def wand_topk(
             for c in act:
                 if c.cur_doc() < pivot_doc:
                     c.advance_to(pivot_doc)
-            if live is None or live[pivot_doc]:
+            if live is None or live[pivot_doc - lo]:
                 s = score_doc(pivot_doc)
-                entry = (s, -int(doc_ids[pivot_doc]))
+                entry = (s, -int(doc_ids[pivot_doc - lo]))
                 if len(heap) < k:
                     heapq.heappush(heap, entry)
                 elif entry > heap[0]:
@@ -2330,7 +2365,7 @@ def explain_score(
     dl = float(doc_len[slot])
     out = []
     for term, (docs, tfs, _g) in sorted(reader.fetch_postings(terms).items()):
-        df = int(len(docs))
+        df = reader.term_df(term, len(docs))
         pos = np.nonzero(docs == slot)[0]
         if pos.size == 0:
             continue  # term not in this doc
@@ -2551,8 +2586,9 @@ def more_like_this_topk(
     bool/should TATA query, dropping ``exclude`` (the like-document
     itself, ES's default) from the hits.
 
-    df for selection comes from each candidate term's posting length —
-    identical to the dictionary df (postings carry one entry per doc) and,
+    df for selection comes from each candidate term's posting length
+    (``term_df``) — identical to the dictionary df (postings carry one
+    entry per doc; a shard reader takes the dictionary df) and,
     on generational indexes, to Lucene's stats-count-tombstones-until-
     merge semantics — so selection costs ONE pushed-down multi-term fetch,
     no dictionary scan."""
@@ -2566,7 +2602,7 @@ def more_like_this_topk(
         return []
     postings = r.fetch_postings(sorted(tf))
     scored = sorted(
-        ((tf[t] * r.idf(len(postings[t][0])), t) for t in tf if t in postings),
+        ((tf[t] * r.term_idf(t, len(postings[t][0])), t) for t in tf if t in postings),
         key=lambda x: (-x[0], x[1]),
     )
     terms = [t for _s, t in scored[:max_query_terms]]
@@ -2742,7 +2778,8 @@ def terms_set_topk(
     parts = []
     for term in sorted(postings):
         docs, tfs, _ = postings[term]
-        parts.append((docs, _bm25(r, r.idf(len(docs)), tfs, doc_len[docs], r.avg_dl), True))
+        idf = r.term_idf(term, len(docs))
+        parts.append((docs, _bm25(r, idf, tfs, doc_len[docs], r.avg_dl), True))
     # postings are distinct per term, so a doc's count is its distinct matches
     slots, scores = _accumulate(parts, int(min_match), live)
     return _select_topk(scores, doc_ids[slots], k)

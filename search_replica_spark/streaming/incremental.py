@@ -1308,6 +1308,7 @@ class MultiGenReader(IndexReader):
         self._seg_df = None
         self._pinned = None
         self._live_cache: LiveDocs | None = None
+        self._dict_df: dict[str, int] | None = None
 
     def _gen_slot_filter(self, g):
         """Per-generation doc_idx predicate for this shard (slot = doc_idx
@@ -1497,11 +1498,20 @@ class MultiGenReader(IndexReader):
         n = c["n"]
         lens = store.term_ends - store.term_starts
         term_of = np.repeat(np.arange(lens.size), lens)
-        # local df per (term, gen) = sum of block n; global df = sum over gens
-        run = np.flatnonzero((np.diff(term_of) != 0) | (np.diff(gen) != 0)) + 1
-        run = np.concatenate(([0], run))
-        grp = np.repeat(np.add.reduceat(n, run), np.diff(np.append(run, n.size)))
-        df_glob = np.repeat(np.add.reduceat(n, store.term_starts), lens)
+        if self.shard_range is None:
+            # local df per (term, gen) = sum of block n; global df = sum over gens
+            run = np.flatnonzero((np.diff(term_of) != 0) | (np.diff(gen) != 0)) + 1
+            run = np.concatenate(([0], run))
+            grp = np.repeat(np.add.reduceat(n, run), np.diff(np.append(run, n.size)))
+            df_glob = np.repeat(np.add.reduceat(n, store.term_starts), lens)
+        else:
+            # a shard holds only some of a term's blocks, so their n sums
+            # undercount both dfs: the scorers' global df comes from the
+            # dictionary, and a gen's df is at most min(global df, n_g) —
+            # idf falls as df grows, so the rescaled bound stays an upper bound
+            dict_df = self._dictionary_dfs()
+            df_glob = np.repeat(np.array([dict_df.get(t, 0) for t in store.index], np.int64), lens)
+            grp = np.minimum(df_glob, n_g)
         idf_g = np.log(1.0 + (n_g - grp + 0.5) / (grp + 0.5))
         idf_glob = np.log(1.0 + (self.n_docs - df_glob + 0.5) / (df_glob + 0.5))
         stretch = np.maximum(1.0, self.avg_dl / np.where(avg_g > 0, avg_g, self.avg_dl))
