@@ -3,8 +3,8 @@
 Headline numbers (BASELINE.md targets):
   - index-build throughput (files/sec) over the synthetic code corpus at the
     scale matching $SPARK_GRAFT_SF_DIR
-  - BM25 query p50 latency over the 50-query reference set (TATA + WAND,
-    hot segment cache)
+  - BM25 query p50 latency over the 50-query reference set (TATA, hot
+    segment cache, then pinned; the distributed plan)
   - representative operator queries at the sf dir (dedup, ANN, BM25-as-SQL,
     inline denorm)
 
@@ -54,7 +54,7 @@ def main():
     from search_replica_spark.corpus import SF_FILES, corpus_parquet, reference_queries
     from search_replica_spark.index.build import build_index
     from search_replica_spark.operators import all_registered
-    from search_replica_spark.query.bm25 import IndexReader, TermAtATimeScorer, wand_topk
+    from search_replica_spark.query.bm25 import IndexReader, TermAtATimeScorer
     from search_replica_spark.session import get_spark
 
     spark = get_spark("bench", cores=cpus, shuffle_partitions=cpus)
@@ -93,66 +93,36 @@ def main():
     reader.doc_arrays()
     scorer = TermAtATimeScorer(reader)
     qset = reference_queries()
-    lat_tata, lat_wand = [], []
+    lat_tata = []
     for qtext, k in zip(qset["query_text"], qset["k"]):
         t = time.time()
         scorer.score(qtext, int(k))
         lat_tata.append(time.time() - t)
-        t = time.time()
-        wand_topk(reader, qtext, int(k))
-        lat_wand.append(time.time() - t)
     lat_tata.sort()
-    lat_wand.sort()
-    p50_tata = lat_tata[len(lat_tata) // 2]
-    p50_wand = lat_wand[len(lat_wand) // 2]
-    queries["bm25_p50_tata"] = round(p50_tata, 4)
-    queries["bm25_p50_wand"] = round(p50_wand, 4)
+    queries["bm25_p50_tata"] = round(lat_tata[len(lat_tata) // 2], 4)
 
-    # distributed strategies (full Spark job per query — the 100 TB serving
-    # shape): unpruned vs block-max pruned over 10 reference queries
-    from search_replica_spark.query.bm25 import bm25_topk_spark, bm25_topk_spark_pruned
+    # the distributed plan (full Spark job per query — the 100 TB serving
+    # shape) over 10 reference queries
+    from search_replica_spark.query.bm25 import bm25_topk_spark
 
-    # bm25_p50_spark_pruned = the SHIPPING pruned entry point (its
-    # cost-based switch routes sub-PRUNE_MIN_DOCS corpora to the
-    # single-job plan, so at bench scale it should track the unpruned
-    # number); *_forced = the pruning machinery itself (min_docs=0:
-    # theta pass + threshold broadcast), tracked so a regression in the
-    # actual pruning plan stays visible at bench scale
-    lat_dist, lat_pruned, lat_forced = [], [], []
+    lat_dist = []
     for qtext, k in list(zip(qset["query_text"], qset["k"]))[:10]:
         t = time.time()
         bm25_topk_spark(spark, idx_dir, qtext, int(k)).collect()
         lat_dist.append(time.time() - t)
-        t = time.time()
-        bm25_topk_spark_pruned(spark, idx_dir, qtext, int(k)).collect()
-        lat_pruned.append(time.time() - t)
-        t = time.time()
-        bm25_topk_spark_pruned(spark, idx_dir, qtext, int(k), min_docs=0).collect()
-        lat_forced.append(time.time() - t)
     lat_dist.sort()
-    lat_pruned.sort()
-    lat_forced.sort()
     queries["bm25_p50_spark_dist"] = round(lat_dist[len(lat_dist) // 2], 4)
-    queries["bm25_p50_spark_pruned"] = round(lat_pruned[len(lat_pruned) // 2], 4)
-    queries["bm25_p50_spark_pruned_forced"] = round(
-        lat_forced[len(lat_forced) // 2], 4
-    )
 
     # serving mode: segments pinned in driver memory (how a query node
     # holds its shard) — per-query cost without the Spark-job round trip
     reader.pin_driver()
-    lat_pin_t, lat_pin_w = [], []
+    lat_pin_t = []
     for qtext, k in zip(qset["query_text"], qset["k"]):
         t = time.time()
         scorer.score(qtext, int(k))
         lat_pin_t.append(time.time() - t)
-        t = time.time()
-        wand_topk(reader, qtext, int(k))
-        lat_pin_w.append(time.time() - t)
     lat_pin_t.sort()
-    lat_pin_w.sort()
     queries["bm25_p50_tata_pinned"] = round(lat_pin_t[len(lat_pin_t) // 2], 4)
-    queries["bm25_p50_wand_pinned"] = round(lat_pin_w[len(lat_pin_w) // 2], 4)
 
     # ES Query-DSL shim (r5): the same reference queries as /_search JSON
     # through execute_dsl — must track bm25_p50_tata_pinned (the walker
@@ -218,20 +188,13 @@ def main():
         )
     mg = MultiGenReader(spark, mg_dir)
     mg.pin_driver()
-    lat_mg_t, lat_mg_w = [], []
+    lat_mg_t = []
     for qtext, k in zip(qset["query_text"], qset["k"]):
         t = time.time()
         mg.score(qtext, int(k))
         lat_mg_t.append(time.time() - t)
-        t = time.time()
-        mg.wand(qtext, int(k))
-        lat_mg_w.append(time.time() - t)
     lat_mg_t.sort()
-    lat_mg_w.sort()
-    p50_mg_t = lat_mg_t[len(lat_mg_t) // 2]
-    p50_mg_w = lat_mg_w[len(lat_mg_w) // 2]
-    queries["bm25_p50_tata_multigen_pinned"] = round(p50_mg_t, 4)
-    queries["bm25_p50_wand_multigen_pinned"] = round(p50_mg_w, 4)
+    queries["bm25_p50_tata_multigen_pinned"] = round(lat_mg_t[len(lat_mg_t) // 2], 4)
     shutil.rmtree(mg_dir, ignore_errors=True)
 
     # --- 2c. streamed inline maintenance at scale (r5 flagship): quarter-
@@ -309,13 +272,10 @@ def main():
             "build_sec": round(build_sec, 3),
             "postings_emitted": stats["postings_emitted"],
             "bytes_compressed": stats["bytes_compressed"],
-            "bm25_p50_tata_sec": round(p50_tata, 4),
-            "bm25_p50_wand_sec": round(p50_wand, 4),
+            "bm25_p50_tata_sec": queries["bm25_p50_tata"],
             "multigen_vs_single_p50_tata": round(
-                p50_mg_t / max(queries["bm25_p50_tata_pinned"], 1e-9), 3
-            ),
-            "multigen_vs_single_p50_wand": round(
-                p50_mg_w / max(queries["bm25_p50_wand_pinned"], 1e-9), 3
+                queries["bm25_p50_tata_multigen_pinned"]
+                / max(queries["bm25_p50_tata_pinned"], 1e-9), 3
             ),
         },
     }

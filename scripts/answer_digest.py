@@ -7,9 +7,9 @@ Builds two small indexes from the seeded synthetic corpus
 positions, and a generational one of three generations (two batches, then
 one that updates two docs and tombstones a third). It then answers a fixed
 matrix over plain, shard and generational readers, pinned and not:
-``execute_request`` bodies, term-at-a-time ``or``/``and``, ``bool_topk``,
-block-max WAND and ``phrase_topk``, plus the index-level ``sharded_topk``
-and ``serve_topk``.
+``execute_request`` bodies, term-at-a-time ``or``/``and``, ``bool_topk``
+and ``phrase_topk`` (exact and ``slop=1``), plus the index-level
+``serve_topk`` (``or``/``and``) over three shards.
 
 Each answer prints as one line, ``group | case | hits``, with every hit as
 ``doc_id:score`` and the score in float hex, so the line changes when any
@@ -60,6 +60,8 @@ def bodies() -> list[tuple[str, dict]]:
             "should": [{"match": {"content": "apache"}}],
             "must_not": [{"match": {"content": "return"}}]}}, "size": 20}),
         ("match_phrase", {"query": {"match_phrase": {"content": "apache license"}}}),
+        ("match_phrase slop=1", {"query": {"match_phrase": {
+            "content": {"query": "license apache", "slop": 1}}}, "size": 20}),
     ]
 
 
@@ -79,7 +81,6 @@ def reader_cases(r) -> list[tuple[str, object]]:
         TermAtATimeScorer,
         bool_topk,
         phrase_topk,
-        wand_topk,
     )
     from search_replica_spark.query.dsl import execute_request
 
@@ -90,13 +91,13 @@ def reader_cases(r) -> list[tuple[str, object]]:
             (f"tata or {q!r}", lambda q=q: TermAtATimeScorer(r).score(q, 10, live=live)),
             (f"tata and {q!r}",
              lambda q=q: TermAtATimeScorer(r).score(q, 10, mode="and", live=live)),
-            (f"wand {q!r}", lambda q=q: wand_topk(r, q, 10, live=live)),
             (f"bool {q!r}", lambda q=q: bool_topk(
                 r, must=q.split()[:1], should=q.split()[1:], must_not=["zzqqabsentqq"],
                 k=10, live=live)),
             (f"bool must_not {q!r}",
              lambda q=q: bool_topk(r, should=[q], must_not=["return"], k=10, live=live)),
             (f"phrase {q!r}", lambda q=q: phrase_topk(r, q, 10, live=live)),
+            (f"phrase slop=1 {q!r}", lambda q=q: phrase_topk(r, q, 10, slop=1, live=live)),
         ]
 
     def request(body):
@@ -143,7 +144,7 @@ def main() -> int:
     args = ap.parse_args()
     sys.path.insert(0, os.path.abspath(args.root))
 
-    from search_replica_spark.query.bm25 import IndexReader, serve_topk, sharded_topk
+    from search_replica_spark.query.bm25 import IndexReader, serve_topk
     from search_replica_spark.session import get_spark
     from search_replica_spark.streaming.incremental import MultiGenReader
 
@@ -174,8 +175,9 @@ def main() -> int:
                 for name, idx in (("plain", plain), ("multigen", mg)):
                     lines.append(("sharded", f"serve_topk {name} {q!r} | " + answer(
                         lambda: serve_topk(spark, idx, q, 10, min_docs=0, target_docs=n // 3))))
-                lines.append(("sharded", f"sharded_topk plain {q!r} | " + answer(
-                    lambda: sharded_topk(IndexReader(spark, plain), q, 10, n_shards=3))))
+                    lines.append(("sharded", f"serve_topk and {name} {q!r} | " + answer(
+                        lambda: serve_topk(spark, idx, q, 10, mode="and", min_docs=0,
+                                           target_docs=n // 3))))
     finally:
         spark.stop()
 

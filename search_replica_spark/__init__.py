@@ -12,7 +12,8 @@ Architecture is Spark-first, not a port:
   - analysis         code-aware tokenizer (vectorized pandas, Arrow UDF)
   - index            posting-list build: tokenize → local postings →
                      shuffle-merge by term hash → varint/block segments
-  - query            BM25 scoring: distributed exhaustive + block-max WAND
+  - query            BM25 scoring: one in-driver NumPy scorer (/_search,
+                     doc-sharded serving) + one distributed Spark plan
   - operators        row→doc transform, dedup family, ANN, text stats
   - oracle           pure-Python reference engine (plays the role ES plays
                      for the reference's consistency test)

@@ -45,7 +45,7 @@ def main(argv: list[str] | None = None) -> int:
     q.add_argument("--index", required=True)
     q.add_argument("--q", required=True)
     q.add_argument("-k", type=int, default=10)
-    q.add_argument("--strategy", choices=["tata", "wand", "spark"], default="tata")
+    q.add_argument("--strategy", choices=["tata", "spark"], default="tata")
     q.add_argument(
         "--dsl", action="store_true",
         help="treat --q as an ES Query-DSL request JSON (the body a "
@@ -397,7 +397,7 @@ def main(argv: list[str] | None = None) -> int:
         from search_replica_spark.query.bm25 import (
             IndexReader,
             bm25_topk_spark,
-            wand_topk,
+            serve_topk,
         )
 
         import os
@@ -438,33 +438,18 @@ def main(argv: list[str] | None = None) -> int:
             print(json.dumps(out))
             return 0
 
-        if os.path.exists(os.path.join(args.index, "generations.json")):
-            # generational index: same three strategies over the generations
-            from search_replica_spark.streaming.incremental import (
-                MultiGenReader,
-                bm25_topk_spark_multigen,
-            )
+        if args.strategy == "tata":
+            # default serving path: cost-switched doc-sharded scoring —
+            # above SHARD_MIN_DOCS no node holds O(corpus) doc arrays
+            hits = serve_topk(spark, args.index, args.q, args.k)
+        elif os.path.exists(os.path.join(args.index, "generations.json")):
+            from search_replica_spark.streaming.incremental import bm25_topk_spark_multigen
 
-            if args.strategy == "spark":
-                rows = bm25_topk_spark_multigen(spark, args.index, args.q, args.k).collect()
-                hits = [(r["doc_id"], r["score"]) for r in rows]
-            elif args.strategy == "wand":
-                hits = MultiGenReader(spark, args.index).wand(args.q, args.k)
-            else:
-                # default serving path: cost-switched doc-sharded scoring —
-                # above SHARD_MIN_DOCS no node holds O(corpus) doc arrays
-                from search_replica_spark.query.bm25 import serve_topk
-
-                hits = serve_topk(spark, args.index, args.q, args.k)
-        elif args.strategy == "spark":
+            rows = bm25_topk_spark_multigen(spark, args.index, args.q, args.k).collect()
+            hits = [(r["doc_id"], r["score"]) for r in rows]
+        else:
             rows = bm25_topk_spark(spark, args.index, args.q, args.k).collect()
             hits = [(r["doc_id"], r["score"]) for r in rows]
-        elif args.strategy == "wand":
-            hits = wand_topk(IndexReader(spark, args.index), args.q, args.k)
-        else:
-            from search_replica_spark.query.bm25 import serve_topk
-
-            hits = serve_topk(spark, args.index, args.q, args.k)
         print(json.dumps([{"doc_id": d, "score": s} for d, s in hits]))
     elif args.cmd == "compact":
         from search_replica_spark.sources.code_table import read_corpus

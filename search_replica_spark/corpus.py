@@ -171,9 +171,8 @@ SF_FILES = {
     "0.01": 20_000,
     "0.1": 200_000,
     "0.2": 400_000,
-    # 2M docs (~9 GB text): the largest measured scale point — used by
-    # scripts/bench_sf1.py, whose r5 run showed block-max pruning still
-    # losing here and drove PRUNE_MIN_DOCS to 20M (see query/bm25.py)
+    # 2M docs (~9 GB text): the largest measured scale point
+    # (BENCH_SF1.json)
     "1.0": 2_000_000,
 }
 

@@ -4,7 +4,7 @@ The reference ships uncompressed NDJSON to Elasticsearch and lets Lucene do
 posting compression (reference: search/bulk.go buffers raw JSON bytes,
 search/client.go:77-139 POSTs them). Our engine owns the index, so we own
 the codec: docID **deltas** + LEB128 varints, fixed-size blocks with
-per-block max-score metadata for block-max WAND (BASELINE.json#north_star).
+per-block doc-range and max-score metadata.
 
 All encode/decode paths are vectorized over NumPy arrays — no per-element
 Python loops over postings. The encoder loops over the ≤10 byte positions

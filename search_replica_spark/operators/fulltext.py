@@ -578,17 +578,6 @@ def ft_bm25_indexed_top10(spark, sf_dir):
     return spark.createDataFrame(rows, "doc_id long, score double")
 
 
-# B5c: block-max WAND path, same oracle — proves the pruning is lossless.
-@register("ft_bm25_wand_top10", _bm25_sql(10))
-def ft_bm25_wand_top10(spark, sf_dir):
-    from search_replica_spark.query.bm25 import wand_topk
-
-    idx = _index_dir_for(spark, sf_dir)
-    hits = wand_topk(_OrigIdReader(spark, idx), " ".join(BM25_QUERY_TERMS), 10)
-    rows = [(d, round(s, 6)) for d, s in hits]
-    return spark.createDataFrame(rows, "doc_id long, score double")
-
-
 # C3/P-mapping: per-field analysis (ES mapping parity — keyword vs text,
 # demo/mapping.json:22-29). Pure operator form: (doc_id, field, term, tf)
 # over three mapped fields; keyword fields are the exact value, untokenized.
@@ -719,32 +708,6 @@ def ft_bm25_multigen_top10(spark, sf_dir):
     # the docs scan (never collect the docs table) and re-rank on the
     # source id (oracle order)
     docs = spark.read.parquet(os.path.join(idx, "gen=0", "docs")).select("doc_id", "path")
-    mapped = docs.join(F.broadcast(top), "doc_id").select(
-        F.split("path", "_").getItem(1).cast("long").alias("doc_id"), "score"
-    )
-    return (
-        mapped.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(10)
-        .select("doc_id", F.round("score", 6).alias("score"))
-    )
-
-
-# B5k: the DISTRIBUTED plan with BLOCK-MAX PRUNING (two-pass theta +
-# per-term metadata threshold — query/bm25.py:bm25_topk_spark_pruned).
-# Must match the same exhaustive SQL oracle: proves the pruning is lossless
-# at the driver gate, not just in pytest.
-@register("ft_bm25_pruned_top10", _bm25_sql(10))
-def ft_bm25_pruned_top10(spark, sf_dir):
-    # min_docs=0: this entry validates the PRUNING machinery against the
-    # oracle; the cost switch would otherwise route small corpora to the
-    # (already separately checked) unpruned plan.
-    from search_replica_spark.query.bm25 import bm25_topk_spark_pruned
-
-    idx = _index_dir_for(spark, sf_dir)
-    top = bm25_topk_spark_pruned(
-        spark, idx, " ".join(BM25_QUERY_TERMS), 40, min_docs=0
-    )
-    docs = spark.read.parquet(os.path.join(idx, "docs")).select("doc_id", "path")
     mapped = docs.join(F.broadcast(top), "doc_id").select(
         F.split("path", "_").getItem(1).cast("long").alias("doc_id"), "score"
     )

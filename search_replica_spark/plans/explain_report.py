@@ -82,11 +82,6 @@ CHECKS = {
         "avoid": ["CartesianProduct"],
         "why": "has_parent = semi-join against the filtered parent side (inverse of has_child)",
     },
-    "bm25_pruned_main_pass": {
-        "want": ["PushedFilters: [In(term", "BroadcastHashJoin"],
-        "avoid": ["CartesianProduct", "SortMergeJoin"],
-        "why": "block-max pruned scorer: the main pass scans segment METADATA with term pushdown, broadcast-joins the tiny per-term threshold table, and only surviving blocks' payloads reach the Arrow decode",
-    },
     "p17_partial_update_merge": {
         "want": ["SortAggregate"],
         "avoid": ["BroadcastNestedLoopJoin", "CartesianProduct", "Window"],
@@ -219,11 +214,6 @@ def main():
     plans["bm25_distributed"] = plan_of(bm25_topk_spark(spark, idx, "spark join window", 10))
     plans["b6b_has_parent_semijoin"] = plan_of(reg["b6b_has_parent_semijoin"][0](spark, sf_dir))
 
-    from search_replica_spark.query.bm25 import bm25_topk_spark_pruned
-
-    plans["bm25_pruned_main_pass"] = plan_of(
-        bm25_topk_spark_pruned(spark, idx, "spark join window", 10, min_docs=0)
-    )
     plans["p17_partial_update_merge"] = plan_of(
         reg["p17_partial_update_merge"][0](spark, sf_dir)
     )

@@ -1,9 +1,8 @@
 """Driver-side columnar block store: the pinned segment store of a reader.
 
 A segment row is one posting block of one term. The store keeps them
-term-sorted, as NumPy columns (``n``, ``block_id``, ``first_doc_idx``,
-``last_doc_idx``, ``max_score`` and, for generational readers,
-``doc_off``) plus one contiguous buffer with an offsets array per binary
+term-sorted, as NumPy columns (``n``, ``block_id`` and, for generational
+readers, ``doc_off``) plus one contiguous buffer with an offsets array per binary
 stream (``docs_bin``, ``tfs_bin``, and ``npos_bin``/``pos_bin`` when
 positions are pinned). Blocks stay compressed. A term maps to its row
 range, so a lookup is a dict probe and a slice: no per-row Python objects

@@ -56,7 +56,7 @@ from search_replica_spark.analysis import tokenize_text
 from search_replica_spark.config import IndexConfig
 from search_replica_spark.errors import SchemaMismatch, with_retries
 from search_replica_spark.index.build import build_index, with_doc_ids
-from search_replica_spark.query.bm25 import IndexReader, TermAtATimeScorer, wand_topk
+from search_replica_spark.query.bm25 import IndexReader, TermAtATimeScorer
 from search_replica_spark.query.store import BlockStore
 
 GENS_FILE = "generations.json"
@@ -1219,7 +1219,7 @@ class LiveDocs:
     docs a dense ``np.ones(n_docs)`` is GBs of memory that scales with the
     corpus; this scales with churn. Supports exactly the mask operations
     the scorers use: fancy-index with an int slot array (vectorized
-    searchsorted membership), scalar index (WAND's pivot check), ``sum()``
+    searchsorted membership), scalar index, ``sum()``
     (live count), and ``astype(bool)`` for the rare dense-mask consumer."""
 
     __slots__ = ("n", "dead")
@@ -1267,13 +1267,7 @@ class MultiGenReader(IndexReader):
     ALL generations (union read with `term IN` pushdown per generation
     path), remapping each generation's local doc_idx space onto disjoint
     global slots. Because the interface matches IndexReader, the same
-    TermAtATimeScorer and block-max WAND run unchanged over N generations.
-
-    Block-max rescaling: stored per-block max_score was computed with the
-    generation-LOCAL idf and avg_dl. The remap converts it to a valid
-    GLOBAL upper bound: ms * (idf_glob/idf_g) * max(1, avg_glob/avg_g) —
-    the last factor bounds the growth of tf/(tf + k1(1-b+b*dl/avgdl)) when
-    avgdl increases, so WAND pruning stays lossless (rank-identity tested).
+    TermAtATimeScorer runs unchanged over N generations.
     """
 
     def __init__(self, spark, index_dir: str, k1: float = 1.2, b: float = 0.75,
@@ -1294,11 +1288,6 @@ class MultiGenReader(IndexReader):
         for g in self.live_gens:
             self.bases[g["gen"]] = acc
             acc += g["n_docs"]
-        # per-gen local stats for block-max rescale
-        self._gen_stats = {
-            g["gen"]: (g["n_docs"], (g["total_tokens"] / g["n_docs"]) if g["n_docs"] else 0.0)
-            for g in self.live_gens
-        }
         # doc-sharded serving over the merged SLOT space (gen-concatenated
         # doc_idx): this reader holds only slots in [lo, hi) — same
         # contract as IndexReader.shard_range; global stats stay global.
@@ -1483,44 +1472,19 @@ class MultiGenReader(IndexReader):
 
     def _remap_blocks(self, store: BlockStore) -> None:
         """Remap a (term, gen, block)-sorted multi-gen store onto global
-        slots, once, in place: shift block ranges by the gen base (kept as
-        ``doc_off`` for the decode), renumber block_id into one per-term
-        sequence, rescale max_score to a global upper bound."""
+        slots, once, in place: each block's gen base becomes ``doc_off``
+        (added to its decoded doc_idx), and block_id is renumbered into one
+        per-term sequence."""
         c = store.cols
         gen = c.pop("gen", None)
         if gen is None or gen.size == 0:
             return
-        gids = np.array(sorted(self._gen_stats), dtype=np.int64)
-        at = np.searchsorted(gids, gen)
-        doc_off = np.array([self.bases[g] for g in gids.tolist()], np.int64)[at]
-        n_g = np.array([self._gen_stats[g][0] for g in gids.tolist()], np.int64)[at]
-        avg_g = np.array([self._gen_stats[g][1] for g in gids.tolist()], np.float64)[at]
-        n = c["n"]
+        gids = np.array(sorted(self.bases), dtype=np.int64)
+        c["doc_off"] = np.array([self.bases[g] for g in gids.tolist()], np.int64)[
+            np.searchsorted(gids, gen)
+        ]
         lens = store.term_ends - store.term_starts
-        term_of = np.repeat(np.arange(lens.size), lens)
-        if self.shard_range is None:
-            # local df per (term, gen) = sum of block n; global df = sum over gens
-            run = np.flatnonzero((np.diff(term_of) != 0) | (np.diff(gen) != 0)) + 1
-            run = np.concatenate(([0], run))
-            grp = np.repeat(np.add.reduceat(n, run), np.diff(np.append(run, n.size)))
-            df_glob = np.repeat(np.add.reduceat(n, store.term_starts), lens)
-        else:
-            # a shard holds only some of a term's blocks, so their n sums
-            # undercount both dfs: the scorers' global df comes from the
-            # dictionary, and a gen's df is at most min(global df, n_g) —
-            # idf falls as df grows, so the rescaled bound stays an upper bound
-            dict_df = self._dictionary_dfs()
-            df_glob = np.repeat(np.array([dict_df.get(t, 0) for t in store.index], np.int64), lens)
-            grp = np.minimum(df_glob, n_g)
-        idf_g = np.log(1.0 + (n_g - grp + 0.5) / (grp + 0.5))
-        idf_glob = np.log(1.0 + (self.n_docs - df_glob + 0.5) / (df_glob + 0.5))
-        stretch = np.maximum(1.0, self.avg_dl / np.where(avg_g > 0, avg_g, self.avg_dl))
-        c["doc_off"] = doc_off
-        c["first_doc_idx"] = c["first_doc_idx"] + doc_off
-        c["last_doc_idx"] = c["last_doc_idx"] + doc_off
-        # 1+1e-12: keep the bound an upper bound under float rounding
-        c["max_score"] = c["max_score"] / idf_g * idf_glob * stretch * (1.0 + 1e-12)
-        c["block_id"] = np.arange(n.size, dtype=np.int64) - np.repeat(store.term_starts, lens)
+        c["block_id"] = np.arange(gen.size, dtype=np.int64) - np.repeat(store.term_starts, lens)
 
     def expand_prefix(self, prefix: str, max_expansions: int | None = 50,
                       extra_filter=None):
@@ -1596,9 +1560,6 @@ class MultiGenReader(IndexReader):
     # --- query API (same scorers as a single-generation index) ---
     def score(self, query: str, k: int = 10, mode: str = "or"):
         return TermAtATimeScorer(self).score(query, k, mode=mode, live=self._live)
-
-    def wand(self, query: str, k: int = 10, stats: dict | None = None):
-        return wand_topk(self, query, k, stats=stats, live=self._live)
 
     def __len__(self):  # docs currently visible
         return int(self._live.sum())

@@ -13,7 +13,6 @@ from search_replica_spark.query.bm25 import (
     IndexReader,
     TermAtATimeScorer,
     bm25_topk_spark,
-    wand_topk,
 )
 
 TOL = 1e-9
@@ -73,16 +72,6 @@ def test_rank_identity_tata(spark, small_index, small_oracle, queries):
         assert_rank_identical(got, want)
 
 
-def test_rank_identity_wand(spark, small_index, small_oracle, queries):
-    """Block-max WAND == oracle on all 50 reference queries."""
-    idx_dir, _ = small_index
-    reader = IndexReader(spark, idx_dir)
-    for qid, qtext, k in zip(queries["query_id"], queries["query_text"], queries["k"]):
-        got = wand_topk(reader, qtext, int(k))
-        want = small_oracle.score(qtext, int(k))
-        assert_rank_identical(got, want)
-
-
 def test_rank_identity_spark_distributed(spark, small_index, small_oracle, queries):
     """Distributed DataFrame scorer == oracle on a subset (slower per query)."""
     idx_dir, _ = small_index
@@ -97,7 +86,6 @@ def test_empty_and_absent_queries(spark, small_index):
     idx_dir, _ = small_index
     reader = IndexReader(spark, idx_dir)
     assert TermAtATimeScorer(reader).score("zzzzqqq", 10) == []
-    assert wand_topk(reader, "zzzzqqq", 10) == []
     assert TermAtATimeScorer(reader).score("", 10) == []
     assert bm25_topk_spark(spark, idx_dir, "zzzzqqq", 10).count() == 0
 
@@ -141,7 +129,6 @@ def test_pinned_reader_identical(spark, small_index, small_oracle, queries):
         got = scorer.score(qtext, int(k))
         want = small_oracle.score(qtext, int(k))
         assert_rank_identical(got, want)
-        assert wand_topk(reader, qtext, int(k)) is not None
 
 
 def test_and_mode_rank_identity(spark, small_index, small_oracle):
@@ -190,45 +177,6 @@ def test_edge_corpora(spark, tmp_path):
         assert [(d, round(s, 9)) for d, s in got] == [(d, round(s, 9)) for d, s in want]
 
 
-def test_wand_lazy_decode_stats(spark, small_index, small_oracle):
-    """Lazy WAND decodes at most all blocks, and stays rank-identical."""
-    idx_dir, _ = small_index
-    reader = IndexReader(spark, idx_dir)
-    for q, k in [("license apache the def return", 1), ("license", 5)]:
-        st = {}
-        got = wand_topk(reader, q, k, stats=st)
-        want = small_oracle.score(q, k)
-        assert_rank_identical(got, want)
-        assert 0 < st["blocks_decoded"] <= st["blocks_total"]
-
-
-def test_wand_pruning_fires_on_selective_query(spark, tmp_path):
-    """VERDICT r1 #6: with a Zipfian term mix (a handful of docs carrying a
-    rare marker vs the 80%-df license boilerplate), a selective query must
-    let block-max WAND skip most of the hot term's blocks COMPRESSED:
-    blocks_decoded / blocks_total < 0.5, with rank-identity preserved."""
-    from search_replica_spark.config import IndexConfig
-    from search_replica_spark.corpus import generate_corpus
-    from search_replica_spark.index.build import build_index
-
-    c = generate_corpus(1500)
-    rare = c.index.to_numpy() % 300 == 0  # 5 docs get the marker term
-    c.loc[rare, "content"] = c.loc[rare, "content"] + "\nzzmarkerzz special"
-    out = str(tmp_path / "zipf")
-    build_index(spark, spark.createDataFrame(c), out,
-                IndexConfig(shuffle_partitions=4, block_size=64))
-    rd = IndexReader(spark, out)
-
-    q = "zzmarkerzz license apache software distributed"
-    stats = {}
-    got = wand_topk(rd, q, 3, stats=stats)
-    want = TermAtATimeScorer(rd).score(q, 3)
-    assert_rank_identical(got, want)
-    assert stats["blocks_total"] > 20
-    ratio = stats["blocks_decoded"] / stats["blocks_total"]
-    assert ratio < 0.5, f"pruning too weak: decoded {ratio:.0%} of blocks"
-
-
 def test_store_doclens_off_falls_back_to_docs_join(spark, tmp_path):
     """IndexConfig(store_doclens=False): segments carry no dls_bin and the
     distributed scorer falls back to the docs join — rank-identical."""
@@ -253,22 +201,6 @@ def test_store_doclens_off_falls_back_to_docs_join(spark, tmp_path):
         f"SELECT sum(octet_length(dls_bin)) FROM read_parquet('{lean}/segments/*.parquet')"
     ).fetchone()[0]
     assert int(sz) == 0
-
-
-def test_sharded_serving_rank_identity(spark, small_index, queries):
-    """ES-style doc-sharded serving (global dfs, local top-k, merge) must be
-    rank-identical to unsharded TATA for every reference query and shard
-    count — only k-sized hit lists ever cross 'nodes'."""
-    from search_replica_spark.query.bm25 import sharded_topk
-
-    idx_dir, _ = small_index
-    rd = IndexReader(spark, idx_dir)
-    scorer = TermAtATimeScorer(rd)
-    for qtext, k in zip(queries["query_text"], queries["k"]):
-        want = scorer.score(qtext, int(k))
-        for n in (1, 3, 7):
-            got = sharded_topk(rd, qtext, int(k), n_shards=n)
-            assert canon(got) == canon(want), (qtext, n)
 
 
 def test_phrase_query_matches_python_reference(spark, tmp_path):

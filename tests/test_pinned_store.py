@@ -3,10 +3,7 @@
 to the pandas formulation it replaced, a positional re-pin serves phrase
 requests without Spark, the one-decode-per-request kernel (single decode,
 ``bincount`` accumulate) is bit-identical to its per-term reference, and
-shard readers score with the global df."""
-
-import collections
-import itertools
+shard readers score with the global df, positional queries included."""
 
 import numpy as np
 import pandas as pd
@@ -23,8 +20,7 @@ from search_replica_spark.query.bm25 import (
     _bm25,
     bool_topk,
     explain_score,
-    tokenize_text,
-    wand_topk,
+    phrase_topk,
 )
 from search_replica_spark.query.dsl import execute_request
 from search_replica_spark.streaming.incremental import MultiGenReader, add_generation
@@ -128,35 +124,25 @@ def test_pinned_and_unpinned_serving_identical(spark, plain_index, multigen_inde
 
 def _remap_blocks_pandas(reader, pdf):
     """The pandas remap the NumPy one replaced, kept as the reference:
-    shift block ranges by the gen base, renumber block_id per term,
-    rescale max_score to a global upper bound."""
+    each block's gen base as doc_off, block_id renumbered per term."""
     pdf = pdf.sort_values(["term", "gen", "block_id"]).reset_index(drop=True)
     pdf["doc_off"] = pdf["gen"].map(reader.bases).astype("int64")
-    pdf["first_doc_idx"] = pdf["first_doc_idx"] + pdf["doc_off"]
-    pdf["last_doc_idx"] = pdf["last_doc_idx"] + pdf["doc_off"]
-    grp = pdf.groupby(["term", "gen"], sort=False)["n"].transform("sum")
-    df_glob = pdf.groupby("term", sort=False)["n"].transform("sum")
-    n_g = pdf["gen"].map(lambda g: reader._gen_stats[g][0])
-    avg_g = pdf["gen"].map(lambda g: reader._gen_stats[g][1])
-    idf_g = np.log(1.0 + (n_g - grp + 0.5) / (grp + 0.5))
-    idf_glob = np.log(1.0 + (reader.n_docs - df_glob + 0.5) / (df_glob + 0.5))
-    stretch = np.maximum(1.0, reader.avg_dl / np.where(avg_g > 0, avg_g, reader.avg_dl))
-    pdf["max_score"] = pdf["max_score"] / idf_g * idf_glob * stretch * (1.0 + 1e-12)
     pdf["block_id"] = pdf.groupby("term", sort=False).cumcount()
     return pdf.drop(columns=["gen"]).sort_values(["term", "block_id"])
 
 
 def test_multigen_remap_bit_identical_to_pandas(spark, multigen_index):
-    """WAND's losslessness rests on the remapped doc_off, block ranges and
-    rescaled max_score: the NumPy remap must reproduce the pandas one bit
-    for bit."""
+    """The decode adds each block's doc_off to its doc_idx: the NumPy remap
+    must reproduce the pandas one bit for bit in every column the store
+    holds."""
     mg = MultiGenReader(spark, multigen_index).pin_driver()
     want = _remap_blocks_pandas(mg, mg._segment_scan(False).toPandas())
     got = mg._pinned
     assert got.rows == len(want) > 0
     order = [t for t, _s in sorted(got.index.items(), key=lambda kv: kv[1])]
     assert order == list(dict.fromkeys(want["term"]))
-    for col in ("doc_off", "first_doc_idx", "last_doc_idx", "max_score", "block_id", "n"):
+    assert sorted(got.cols) == ["block_id", "doc_off", "n"]
+    for col in got.cols:
         ref = want[col].to_numpy(got.cols[col].dtype)
         assert got.cols[col].tobytes() == ref.tobytes(), col
     docs = [bytes(b) for b in got.select(order)["docs_bin"]]
@@ -331,26 +317,6 @@ def test_shard_reader_scores_with_global_df(spark, plain_index, multigen_index):
                     assert sc == pytest.approx(want[d], rel=1e-9), (q, d)
 
 
-def test_wand_on_shard_reader_equals_tata(spark, plain_index, multigen_index):
-    """Block-max WAND on a shard reader (plain and generational, pinned
-    and not) returns the shard reader's own term-at-a-time top-k."""
-    n = IndexReader(spark, plain_index).n_docs
-    shard = (n // 3, 2 * n // 3)
-    readers = [
-        IndexReader(spark, plain_index, shard_range=shard),
-        IndexReader(spark, plain_index, shard_range=shard).pin_driver(),
-        MultiGenReader(spark, multigen_index, shard_range=shard).pin_driver(),
-    ]
-    for r in readers:
-        live = getattr(r, "_live", None)
-        for q, k in (("license", 5), ("license apache", 10), ("def return the", 3),
-                     ("license zzqqabsentqq", 10)):
-            got = wand_topk(r, q, k, live=live)
-            want = TermAtATimeScorer(r).score(q, k, live=live)
-            assert got and [d for d, _s in got] == [d for d, _s in want], q
-            assert [s for _d, s in got] == pytest.approx([s for _d, s in want], rel=1e-9)
-
-
 def test_explain_on_shard_reader_sums_to_its_score(spark, plain_index, multigen_index):
     """explain_score on a shard reader reports the global df and idf, the
     same breakdown as the full reader, and its contributions sum to the
@@ -397,18 +363,35 @@ def test_pinned_shard_reader_serves_match_without_spark(spark, plain_index, mult
         assert resps == [execute_request(full, body) for body in bodies]
 
 
-def test_wand_on_generational_shard_readers_is_lossless(spark, corpus, multigen_index):
-    """On a generational shard reader the block-max bounds are rescaled
-    with the dictionary df, so WAND never skips a block it should score:
-    its top-k equals TATA's over many term pairs and shard ranges."""
-    counts = collections.Counter(t for c in corpus["content"] for t in set(tokenize_text(c)))
-    top = [t for t, _n in counts.most_common(12)]
-    queries = [" ".join(p) for p in itertools.combinations(top, 2)]
-    n = MultiGenReader(spark, multigen_index).n_docs
-    for shard in ((0, n // 3), (n // 3, 2 * n // 3), (n // 6, 5 * n // 6), (2 * n // 3, n)):
-        r = MultiGenReader(spark, multigen_index, shard_range=shard).pin_driver()
-        for q in queries:
-            for k in (1, 3):
-                got = wand_topk(r, q, k, live=r._live)
-                want = TermAtATimeScorer(r).score(q, k, live=r._live)
-                assert [d for d, _s in got] == [d for d, _s in want], (shard, q, k)
+def test_shard_reader_serves_positional_queries(spark, plain_index, multigen_index):
+    """phrase_topk and a match_phrase body on a shard reader, plain and
+    generational, return the full reader's hits restricted to the shard's
+    live slots, with the same scores: positional postings are masked to
+    the shard and rebased like the others, and keep only their own
+    positions."""
+    n = IndexReader(spark, plain_index).n_docs
+    shard = (n // 3, 2 * n // 3)
+    pairs = [
+        (IndexReader(spark, plain_index), IndexReader(spark, plain_index, shard_range=shard)),
+        (IndexReader(spark, plain_index).pin_driver(positions=True),
+         IndexReader(spark, plain_index, shard_range=shard).pin_driver(positions=True)),
+        (MultiGenReader(spark, multigen_index),
+         MultiGenReader(spark, multigen_index, shard_range=shard).pin_driver(positions=True)),
+    ]
+    for full, part in pairs:
+        ids, live = part.doc_arrays()[1], getattr(part, "_live", None)
+        in_shard = ids if live is None else ids[live.astype(bool)]  # live slots only
+        for phrase, slop in (("apache license", 0), ("distributed an", 1), ("license you", 0)):
+            answers = [
+                (phrase_topk(r, phrase, n, slop=slop),
+                 _answer(r, {"query": {"match_phrase": {"content": {"query": phrase, "slop": slop}}},
+                             "size": n})[0])
+                for r in (full, part)
+            ]
+            for f_hits, p_hits in zip(*answers):
+                want = {d: sc for d, sc in f_hits if d in set(in_shard.tolist())}
+                assert want and len(want) < len(f_hits), (phrase, slop)
+                got = dict(p_hits)
+                assert got.keys() == want.keys(), (phrase, slop)
+                for d, sc in got.items():
+                    assert sc == pytest.approx(want[d], rel=1e-9), (phrase, d)

@@ -311,74 +311,6 @@ def test_legacy_stats_without_store_doclens_key(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# distributed block-max pruning
-# ---------------------------------------------------------------------------
-
-
-@pytest.fixture(scope="module")
-def skewed_tf_index(spark, tmp_path_factory):
-    """Corpus with heavy tf skew: a few docs repeat the query terms many
-    times, most mention them once — so most blocks carry low max_score and
-    are prunable once theta is established."""
-    rows = []
-    for i in range(6000):
-        hot = i % 389 == 0  # ~15 hot docs spread across the doc_idx space
-        body = ("needle haystack " * 40) if hot else "needle haystack "
-        rows.append(("r0", f"s/{i}.py", body + f"w{i % 11} pad{i % 301} tail"))
-    out = str(tmp_path_factory.mktemp("sidx"))
-    build_index(
-        spark,
-        spark.createDataFrame(_mk_docs(rows)),
-        out,
-        IndexConfig(shuffle_partitions=4, hot_df_threshold=1 << 30, block_size=64),
-    )
-    return out
-
-
-def test_pruned_bm25_rank_identity_and_skips_blocks(spark, skewed_tf_index):
-    from search_replica_spark.query.bm25 import bm25_topk_spark, bm25_topk_spark_pruned
-
-    idx = skewed_tf_index
-    for q in ("needle", "needle haystack", "needle w3"):
-        ps = {}
-        got = [
-            (r.doc_id, round(r.score, 9))
-            for r in bm25_topk_spark_pruned(spark, idx, q, 10, prune_stats=ps, min_docs=0).collect()
-        ]
-        want = [
-            (r.doc_id, round(r.score, 9))
-            for r in bm25_topk_spark(spark, idx, q, 10).collect()
-        ]
-        assert got == want, q
-        assert ps["blocks_total"] > 0
-        if q == "needle":
-            # selective single-term query over the skewed corpus: the vast
-            # majority of block payloads must never be decoded
-            frac = ps["blocks_decoded"] / ps["blocks_total"]
-            assert frac < 0.5, f"only pruned to {frac:.2f}"
-
-
-def test_pruned_bm25_no_doclens_falls_back(spark, tmp_path):
-    from search_replica_spark.query.bm25 import bm25_topk_spark, bm25_topk_spark_pruned
-
-    rows = [("r0", f"f/{i}.py", f"fallback w{i % 5} body") for i in range(40)]
-    idx = str(tmp_path / "nodl")
-    import dataclasses
-
-    build_index(
-        spark,
-        spark.createDataFrame(_mk_docs(rows)),
-        idx,
-        dataclasses.replace(CFG, store_doclens=False),
-    )
-    got = [(r.doc_id, round(r.score, 9))
-           for r in bm25_topk_spark_pruned(spark, idx, "fallback w3", 5, min_docs=0).collect()]
-    want = [(r.doc_id, round(r.score, 9))
-            for r in bm25_topk_spark(spark, idx, "fallback w3", 5).collect()]
-    assert got == want
-
-
-# ---------------------------------------------------------------------------
 # K9 runtime metrics for the replication loop
 # ---------------------------------------------------------------------------
 

@@ -341,22 +341,6 @@ def test_inline_upsert_missing_disabled_noops(spark, tmp_path):
     assert "p77" not in _inline_state(spark, idx)
 
 
-def test_prune_stats_populated_on_fallback(spark, small_corpus, tmp_path):
-    """ADVICE r4: callers reading prune_stats must see the counters even
-    when the cost switch routes to the unpruned plan."""
-    from search_replica_spark.index.build import build_index
-    from search_replica_spark.query.bm25 import bm25_topk_spark_pruned
-
-    idx = str(tmp_path / "idx")
-    sdf = spark.createDataFrame(small_corpus)
-    build_index(spark, sdf, idx, IndexConfig(shuffle_partitions=4))
-    ps: dict = {}
-    bm25_topk_spark_pruned(spark, idx, "versub delrel", 5, prune_stats=ps).collect()
-    assert ps["fallback"] == "min_docs"
-    assert ps["blocks_total"] == ps["blocks_decoded"] > 0
-    assert ps["theta"] == 0.0
-
-
 def test_snapshot_excludes_nested_checkpoints(tmp_path):
     """ADVICE r4: _checkpoint dirs nested below the index top level must
     not be hardlinked into snapshots."""
@@ -407,10 +391,11 @@ def test_sharded_serving_bit_equal_on_reference_queries(spark, small_index):
     scorer = TermAtATimeScorer(IndexReader(spark, idx_dir))
     qs = reference_queries()
     for qtext, k in zip(qs["query_text"], qs["k"]):
-        want = scorer.score(qtext, int(k))
-        got = serve_topk(spark, idx_dir, qtext, int(k), min_docs=0,
-                         target_docs=target)
-        assert got == want, qtext  # bit-equal, not just rank-equal
+        for mode in ("or", "and"):
+            want = scorer.score(qtext, int(k), mode=mode)
+            got = serve_topk(spark, idx_dir, qtext, int(k), mode=mode, min_docs=0,
+                             target_docs=target)
+            assert got == want, (qtext, mode)  # bit-equal, not just rank-equal
     # per-node memory contract: every shard's arrays are O(n/shards)
     readers = make_serving_readers(spark, idx_dir, min_docs=0,
                                    target_docs=target)
@@ -444,6 +429,65 @@ def test_sharded_serving_multigen_with_deletes(spark, small_corpus, tmp_path):
         want = full.score(q, 10, live=mg._live)
         got = serve_topk(spark, idx, q, 10, min_docs=0, target_docs=100)
         assert got == want, q
+
+
+def _jobs_run_by(sc, fn):
+    """(fn's result, the Spark jobs it ran from any thread): job ids are
+    sequential, so count the ids between two marker jobs. A job group
+    alone would miss the jobs of serve_topk's shard threads."""
+    def marker():
+        gid = f"marker-{time.monotonic_ns()}"
+        sc.setJobGroup(gid, gid)
+        try:
+            sc.parallelize([0], 1).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return max(sc.statusTracker().getJobIdsForGroup(gid))
+
+    start = marker()
+    out = fn()
+    return out, marker() - start - 1
+
+
+def test_sharded_serve_topk_reads_the_dictionary_once(spark, small_index, small_corpus, tmp_path):
+    """A sharded serve_topk reads the query terms' dictionary dfs once and
+    hands them to every shard reader: beyond that read, each shard runs
+    only the jobs of its doc arrays, liveDocs and segment scan, on a plain
+    and on a generational index."""
+    from search_replica_spark.query.bm25 import (
+        _global_dfs,
+        make_serving_readers,
+        serve_topk,
+        tokenize_text,
+    )
+    from search_replica_spark.streaming.incremental import add_generation
+
+    mg = str(tmp_path / "mg")
+    cfg = IndexConfig(shuffle_partitions=4)
+    sdf = spark.createDataFrame(small_corpus)
+    add_generation(spark, sdf.limit(400), mg, cfg)
+    add_generation(spark, sdf.limit(300), mg, cfg)
+    sc = spark.sparkContext
+    q = "license apache"
+    terms = sorted(set(tokenize_text(q)))
+    for idx, target in ((small_index[0], 150), (mg, 200)):
+        def reads():
+            readers = make_serving_readers(spark, idx, min_docs=0, target_docs=target)
+            _global_dfs(readers[0], terms)
+            for r in readers:
+                r.doc_arrays()
+                getattr(r, "_live", None)
+                r._segment_scan(False, terms).toArrow()
+            return len(readers)
+
+        for mode in ("or", "and"):
+            serve_topk(spark, idx, q, 10, mode=mode, min_docs=0, target_docs=target)
+            hits, served = _jobs_run_by(
+                sc, lambda: serve_topk(spark, idx, q, 10, mode=mode, min_docs=0,
+                                       target_docs=target))
+            n_shards, needed = _jobs_run_by(sc, reads)
+            assert len(hits) == 10 and n_shards > 2
+            assert 0 < served <= needed, (idx, mode, served, needed)
 
 
 def test_exact_checker_rejects_unconvertible_floats(monkeypatch):
@@ -550,7 +594,6 @@ def test_no_dense_livedocs_in_query_entry_points(spark, small_corpus, tmp_path, 
         exists_match,
         match_all,
         prefix_match,
-        wand_topk,
     )
     from search_replica_spark.streaming.incremental import (
         LiveDocs,
@@ -578,7 +621,6 @@ def test_no_dense_livedocs_in_query_entry_points(spark, small_corpus, tmp_path, 
     assert exists_match(rd, "content") is not None
     prefix_match(rd, "ver")
     TermAtATimeScorer(rd).score("versub", 5)
-    wand_topk(rd, "versub", 5)
 
 
 def test_livedocs_drop_dead_equals_dense_mask():
