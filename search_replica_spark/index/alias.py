@@ -6,10 +6,11 @@ build ``products_v2`` next to the live ``products_v1``, then atomically
 repoint the ``products`` alias so every reader flips to the new index in
 one step and never observes a half-built one. Here the alias registry is
 one JSON file in the directory that holds the indexes; a swap is
-write-temp + ``os.replace`` (atomic on POSIX — readers see the old or the
-new mapping, never a torn file), and resolution is an O(1) lookup that
-the CLI applies before opening any index path, so ``query --index
-/data/products`` keeps working across rebuilds.
+``write_durable`` (write-temp, fsync, ``os.replace``, fsync the
+directory: readers see the old or the new mapping, never a torn file),
+and resolution is an O(1) lookup that the CLI applies before opening any
+index path, so ``query --index /data/products`` keeps working across
+rebuilds.
 
 No Spark involvement at all: like ``metrics``/``serve`` this is pure file
 metadata — cheap enough for a cron'd rebuild-and-swap loop.
@@ -20,8 +21,9 @@ from __future__ import annotations
 import fcntl
 import json
 import os
-import tempfile
 from contextlib import contextmanager
+
+from search_replica_spark.index.manifest import write_durable
 
 REGISTRY = "aliases.json"
 
@@ -55,15 +57,7 @@ def aliases(base_dir: str) -> dict[str, str]:
 
 
 def _write(base_dir: str, reg: dict[str, str]) -> None:
-    fd, tmp = tempfile.mkstemp(dir=base_dir, prefix=".aliases_")
-    try:
-        with os.fdopen(fd, "w") as f:
-            json.dump(reg, f, indent=1, sort_keys=True)
-        os.replace(tmp, _registry_path(base_dir))  # atomic commit
-    except BaseException:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
-        raise
+    write_durable(_registry_path(base_dir), json.dumps(reg, indent=1, sort_keys=True))
 
 
 def _looks_like_index(path: str) -> bool:

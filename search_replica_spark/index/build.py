@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 from search_replica_spark.analysis.tokenizer import tokenize_flat
 from search_replica_spark.config import IndexConfig
 from search_replica_spark.index.codec import encode_postings_blocks
-from search_replica_spark.index.manifest import Manifest, input_fingerprint
+from search_replica_spark.index.manifest import Manifest, input_fingerprint, write_durable
 
 SEGMENT_SCHEMA = (
     "term string, block_id int, n int, first_doc_idx long, last_doc_idx long, "
@@ -890,10 +890,7 @@ def _stage_finalize(spark: SparkSession, out: str, cfg: IndexConfig, core: dict,
         "block_size": cfg.block_size,
         "build_sec": round(time.time() - t0, 3),
     }
-    tmp = os.path.join(out, "stats.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(stats, f, indent=2)
-    os.replace(tmp, os.path.join(out, "stats.json"))
+    write_durable(os.path.join(out, "stats.json"), json.dumps(stats, indent=2))
     # drop the stage intermediate (resume keeps it only until finalize)
     shutil.rmtree(os.path.join(out, "postings"), ignore_errors=True)
     return stats

@@ -22,6 +22,31 @@ import os
 import time
 
 
+def write_durable(path: str, text: str) -> None:
+    """Commit ``text`` as the new content of ``path``: write a temp file
+    beside it, fsync it, rename it over ``path`` (atomic on POSIX, so a
+    reader sees the old file or the new one), then fsync the directory so
+    the rename itself is on disk. A crash or an exception before the
+    rename leaves the old file as it was; once the call returns, the new
+    content survives power loss."""
+    tmp = path + ".tmp"
+    try:
+        with open(tmp, "w") as f:
+            f.write(text)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, path)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+        raise
+    fd = os.open(os.path.dirname(os.path.abspath(path)), os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
 class Manifest:
     FILE = "manifest.json"
 
@@ -35,10 +60,7 @@ class Manifest:
 
     def save(self) -> None:
         os.makedirs(self.out_dir, exist_ok=True)
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(self.data, f, indent=2)
-        os.replace(tmp, self.path)  # atomic commit, like the LSN ack
+        write_durable(self.path, json.dumps(self.data, indent=2))  # like the LSN ack
 
     # --- input identity ---
     def bind_input(self, fingerprint: str) -> None:

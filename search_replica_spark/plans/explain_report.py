@@ -57,11 +57,6 @@ CHECKS = {
         "avoid": ["BroadcastNestedLoopJoin", "CartesianProduct"],
         "why": "prefix filtering (df-ranked window, prefix tokens only) sits BELOW the self-join, so hot tokens cannot explode the join",
     },
-    "shard_docs_slice": {
-        "want": ["GreaterThanOrEqual(doc_idx", "LessThan(doc_idx"],
-        "avoid": [],
-        "why": "shard-scoped serving (r5): a shard reader's doc-array load pushes its slot range into the docs parquet scan — each node transfers O(corpus/shards), never the corpus",
-    },
     "shard_block_range_prune": {
         "want": ["In(term", "last_doc_idx", "first_doc_idx"],
         "avoid": ["CartesianProduct"],
@@ -246,13 +241,12 @@ def main():
     plans["b8b_routing_partition_pruning"] = plan_of(
         reg["b8b_routing_partition_pruning"][0](spark, sf_dir)
     )
-    # r5: shard-scoped serving reader plans — captured from the READER'S
-    # OWN query builders (_docs_query/_blocks_query), so a pushdown
-    # regression in IndexReader fails this audit, not a hand-rebuilt twin
+    # r5: shard-scoped unpinned posting fetch — captured from the READER'S
+    # OWN query builder (_blocks_query), so a pushdown regression in
+    # IndexReader fails this audit, not a hand-rebuilt twin
     from search_replica_spark.query.bm25 import IndexReader
 
     shard_rd = IndexReader(spark, idx, shard_range=(100, 600))
-    plans["shard_docs_slice"] = plan_of(shard_rd._docs_query())
     plans["shard_block_range_prune"] = plan_of(
         shard_rd._blocks_query(
             spark.read.parquet(os.path.join(idx, "segments")),

@@ -28,6 +28,7 @@ import os
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -37,7 +38,7 @@ from search_replica_spark.index.codec import (
     decode_position_flat,
     varint_decode,
 )
-from search_replica_spark.query.store import Blocks, BlockStore
+from search_replica_spark.query.store import Blocks, BlockStore, read_table
 
 
 def prefix_range_cond(prefix: str):
@@ -130,26 +131,34 @@ class IndexReader:
             self._seg_df.count()  # materialize
         return self._seg_df
 
-    # --- doc store (doc_idx-ordered arrays, loaded once) ---
-    def _docs_query(self):
-        """The (unexecuted) shard-scoped docs scan — doc_arrays() collects
-        it; the plan audit explains it, so a pushdown regression in THIS
-        builder fails the audit rather than a hand-rebuilt lookalike."""
-        q = self.spark.read.parquet(
-            os.path.join(self.index_dir, "docs")
-        ).select("doc_idx", "doc_id", "doc_len")
-        if self.shard_range is not None:
-            lo, hi = self.shard_range
-            # pushed to the parquet scan: a shard node transfers and
-            # holds only its own O(hi-lo) slice, never the corpus
-            q = q.filter((F.col("doc_idx") >= lo) & (F.col("doc_idx") < hi))
-        return q
+    # --- doc store (slot-ordered arrays, loaded once) ---
+    def _gens(self) -> list[tuple[str, int, int, tuple[int, int] | None]]:
+        """(directory, generation, slot base, doc_idx range) of each
+        generation this reader holds slots of: slot = doc_idx + base, and
+        the range is None when the reader holds the whole generation. A
+        plain index is one generation at base 0."""
+        return [(self.index_dir, 0, 0, self.shard_range)]
+
+    def _doc_columns(self, cols: list[str]) -> dict[str, np.ndarray]:
+        """``cols`` of the docs table for the slots this reader holds, in
+        slot order, read from the docs parquet in the driver (no Spark
+        job). A shard reader reads only the row groups whose doc_idx
+        statistics overlap its range: O(hi - lo), never the corpus."""
+        slots, vals = [np.empty(0, np.int64)], {c: [np.empty(0, np.int64)] for c in cols}
+        for d, _gen, base, rng in self._gens():
+            flt = () if rng is None else (("doc_idx", ">=", rng[0]), ("doc_idx", "<", rng[1]))
+            t = read_table(os.path.join(d, "docs"), ["doc_idx", *cols], flt)
+            slots.append(t["doc_idx"].to_numpy() + base)
+            for c in cols:
+                vals[c].append(t[c].to_numpy())
+        order = np.argsort(np.concatenate(slots), kind="stable")
+        return {c: np.concatenate(v)[order] for c, v in vals.items()}
 
     def doc_arrays(self) -> tuple[np.ndarray, np.ndarray]:
         if self._doc_len is None:
-            pdf = self._docs_query().toPandas().sort_values("doc_idx")
-            self._doc_len = pdf["doc_len"].to_numpy(np.float64)
-            self._doc_ids = pdf["doc_id"].to_numpy(np.int64)
+            c = self._doc_columns(["doc_id", "doc_len"])
+            self._doc_len = c["doc_len"].astype(np.float64)
+            self._doc_ids = c["doc_id"].astype(np.int64)
         return self._doc_len, self._doc_ids
 
     def idf(self, df: int) -> float:
@@ -162,32 +171,29 @@ class IndexReader:
         return self.stats.get("field_stats")
 
     def field_dl_arrays(self, fields: list[str]) -> dict[str, np.ndarray]:
-        """Per-slot per-field doc lengths (doc_idx order), one
-        column-pruned docs read."""
-        pdf = (
-            self.spark.read.parquet(os.path.join(self.index_dir, "docs"))
-            .select("doc_idx", *[f"dl_{f}" for f in fields])
-            .toPandas()
-            .sort_values("doc_idx")
-        )
-        return {f: pdf[f"dl_{f}"].to_numpy(np.float64) for f in fields}
+        """Per-slot per-field doc lengths, slot for slot with doc_arrays():
+        a shard reader holds its own slots only."""
+        c = self._doc_columns([f"dl_{f}" for f in fields])
+        return {f: c[f"dl_{f}"].astype(np.float64) for f in fields}
 
     def pin_driver(self, positions: bool = False):
         """Serving mode: pull the segment store into driver memory as a
-        term-sorted columnar ``BlockStore`` (blocks stay compressed). This
-        is how a query node actually serves a shard (ES holds its segments
-        in RAM/page cache); per-query latency drops from a Spark job
-        (~100 ms) to a dict probe and a slice. Only sensible when this
-        process owns a shard-sized slice of the index — at 100 TB each query
-        node pins its own term-range partition, which is exactly how the
-        segment files are laid out (hash(term) → file). ``positions``: also
-        pin the npos/pos streams (phrase serving); dls_bin is never pinned
-        (see META_COLS). A ``positions=True`` call on a store pinned without
+        term-sorted columnar ``BlockStore`` (blocks stay compressed), read
+        from the segment parquet in the driver with no Spark job (a shard
+        reader reads only the row groups whose first/last_doc_idx
+        statistics overlap its range). This is how a query node actually
+        serves a shard (ES holds its segments in RAM/page cache); a request
+        is then a dict probe and a slice, never a Spark job. Only sensible
+        when this process owns a shard-sized slice of the index — at 100 TB
+        each query node pins its own term-range partition, which is exactly
+        how the segment files are laid out (hash(term) → file).
+        ``positions``: also pin the npos/pos streams (phrase serving);
+        dls_bin is never pinned (see META_COLS). A ``positions=True`` call on a store pinned without
         them re-pins with them, as ``cache_segments`` upgrades its cache —
         otherwise every phrase request would run a Spark read."""
         if self._pinned is None or (positions and not self._pinned.positions):
             self._pinned = None  # one pinned copy at a time
-            self._pinned = self._block_store(self._segment_scan(positions), positions)
+            self._pinned = self._store(self._pin_table(positions), positions)
             if self._seg_df is not None and (
                 positions or "npos_bin" not in self._seg_df.columns
             ):
@@ -215,8 +221,8 @@ class IndexReader:
         return self._block_store(scan, positions).select(terms)
 
     def _segment_scan(self, positions: bool, terms: list[str] | None = None):
-        """The segment rows a store is built from: every block (pinning)
-        or the blocks of ``terms``."""
+        """The Spark scan an unpinned request's store is built from: the
+        blocks of ``terms`` (every block when None)."""
         seg = self._seg_df
         if terms is None or seg is None or (positions and "npos_bin" not in seg.columns):
             # cache built without position streams → serve a positional
@@ -224,14 +230,30 @@ class IndexReader:
             seg = self.spark.read.parquet(os.path.join(self.index_dir, "segments"))
         return self._blocks_query(seg, terms, positions)
 
+    def _pin_table(self, positions: bool) -> pa.Table:
+        """Every block this reader holds, read in the driver (no Spark job)."""
+        (d, _gen, _base, rng), = self._gens()
+        return self._read_segments(d, rng, positions)
+
+    def _read_segments(self, d: str, rng, positions: bool) -> pa.Table:
+        """The scorer columns of one generation's blocks that overlap
+        doc_idx range ``rng`` (all blocks when None), row groups pruned
+        on their first/last_doc_idx statistics."""
+        cols = list(self.META_COLS) + (list(self.POS_COLS) if positions else [])
+        flt = () if rng is None else (("last_doc_idx", ">=", rng[0]), ("first_doc_idx", "<", rng[1]))
+        return read_table(os.path.join(d, "segments"), cols, flt)
+
     def _block_store(self, scan, positions: bool) -> BlockStore:
-        table = scan.toArrow().sort_by([("term", "ascending"), ("block_id", "ascending")])
+        return self._store(scan.toArrow(), positions)
+
+    def _store(self, table: pa.Table, positions: bool) -> BlockStore:
+        table = table.sort_by([("term", "ascending"), ("block_id", "ascending")])
         return BlockStore(table, positions)
 
     def _blocks_query(self, seg, terms: list[str] | None, positions: bool):
-        """The (unexecuted) shard-scoped segment scan — shared by
-        fetch_blocks, pin_driver and the plan audit (see _docs_query).
-        ``terms=None`` scans every term."""
+        """The (unexecuted) shard-scoped segment scan of an unpinned
+        request, which the plan audit explains too. ``terms=None`` scans
+        every term."""
         cols = list(self.META_COLS) + (list(self.POS_COLS) if positions else [])
         cols = [c for c in cols if c in seg.columns]
         q = seg if terms is None else seg.filter(F.col("term").isin(list(set(terms))))
@@ -1441,7 +1463,9 @@ def make_serving_readers(
     MultiGenReader), else ``ceil(n_docs / target_docs)`` shard-scoped
     readers over disjoint slot ranges. Constructing a reader is metadata-
     only (stats.json / generations.json) — doc arrays stay lazy, so the
-    probe used for the cost switch is free."""
+    probe used for the cost switch is free; a reader's doc arrays and
+    pinned store are later read from the index parquet in the driver,
+    with no Spark job."""
     from search_replica_spark.streaming.incremental import (
         MultiGenReader,
         _load_gens,
@@ -1468,19 +1492,19 @@ def _global_dfs(reader, terms: list[str] | None) -> dict[str, int]:
     """dfs phase of dfs_query_then_fetch: GLOBAL document frequencies from
     the term dictionary (summed across generations), independent of any
     shard's local view — so every shard scores with the same idf the
-    unsharded scorer derives from its full posting lengths. ``terms=None``
+    unsharded scorer derives from its full posting lengths. Read in the
+    driver with no Spark job; a term lookup reads only the row groups
+    whose term statistics can hold one of ``terms``. ``terms=None``
     reads every term."""
     dirs = (
         [g["dir"] for g in reader.live_gens]
         if hasattr(reader, "live_gens")
         else [reader.index_dir]
     )
+    flt = () if terms is None else (("term", "in", sorted(set(terms))),)
     out: dict[str, int] = {}
     for d in dirs:
-        q = reader.spark.read.parquet(os.path.join(d, "dict"))
-        if terms is not None:
-            q = q.filter(F.col("term").isin(terms))
-        t = q.select("term", "df").toArrow()
+        t = read_table(os.path.join(d, "dict"), ["term", "df"], flt)
         for term, df in zip(t["term"].to_pylist(), t["df"].to_pylist()):
             out[term] = out.get(term, 0) + int(df)
     return out
@@ -1912,9 +1936,12 @@ def fielded_norms_topk(
     Requires a build whose docs/ carries dl_<field> columns and whose
     stats.json carries field_stats (field_analyzers builds do, round 4+).
     Works over generational indexes too: MultiGenReader overrides
-    ``field_stats``/``field_dl_arrays`` to merge per-generation stats and
-    union the per-generation dl columns onto global slots. Accumulation
-    mirrors TATA: sorted-term order, np.add.at, same tie-exact top-k.
+    ``field_stats`` to merge per-generation stats, and ``field_dl_arrays``
+    reads the per-generation dl columns onto global slots. On a shard
+    reader the dl columns hold the shard's slots and idf uses the
+    dictionary df (``term_df``), so scores equal the full reader's.
+    Accumulation mirrors TATA: sorted-term order, ``_accumulate``, same
+    tie-exact top-k.
 
     ``boosts``: per-field score multipliers — ES ``fields: ["title^2",
     "body"]`` syntax / the BM25F field-weight model. Missing fields boost
@@ -1946,7 +1973,7 @@ def fielded_norms_topk(
         st = field_stats[fld]
         n_f, avg_f = int(st["n"]), float(st["avg_dl"])
         docs, tfs, _g = postings[term]
-        df = len(docs)
+        df = reader.term_df(term, len(docs))
         idf = math.log(1.0 + (n_f - df + 0.5) / (df + 0.5))
         boost = float(boosts.get(fld, 1.0)) if boosts else 1.0
         parts.append((docs, _bm25(reader, boost * idf, tfs, fdl[fld][docs], avg_f), True))

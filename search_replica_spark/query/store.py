@@ -8,17 +8,88 @@ positions are pinned). Blocks stay compressed. A term maps to its row
 range, so a lookup is a dict probe and a slice: no per-row Python objects
 and no DataFrame on the request path.
 
-The store is built from ``DataFrame.toArrow()``: after the sort, the Arrow
-binary columns' offsets and data buffers are used as they are.
+A pinned store is built from the segment parquet read in the driver
+(``read_table``, no Spark job); an unpinned request builds one from a
+Spark scan's ``toArrow()``. Either way, after the sort, the Arrow binary
+columns' offsets and data buffers are used as they are.
 """
 
 from __future__ import annotations
 
+import functools
+import os
+
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.parquet as pq
 
 STREAMS = ("docs_bin", "tfs_bin", "npos_bin", "pos_bin")
+
+
+def read_table(table_dir: str, columns, filters=()) -> pa.Table:
+    """``columns`` of the parquet table at ``table_dir``, read in the
+    driver with no Spark job: one ``ParquetFile`` per part file, in name
+    order; names starting with ``_`` or ``.`` are skipped, as Spark's file
+    listing skips them. A column a file lacks is left out, so an index
+    written before the column existed still opens.
+
+    ``filters`` is a conjunction of ``(column, op, value)`` conditions,
+    ``op`` one of ``>=``, ``<`` and ``in``. A row group whose min/max
+    statistics rule a condition out is never read; the rows of the others
+    are masked exactly, and the filter columns are then dropped.
+
+    Not ``pq.read_table(..., filters=...)``: that goes through
+    ``pyarrow.dataset``, whose scan left the serving driver's peak RSS
+    14–24 MB above this helper's on the benchmark workloads, past the
+    benchmark's 10% bound."""
+    parts, schema = [], None
+    for name in sorted(os.listdir(table_dir)):
+        if name.startswith(("_", ".")):
+            continue
+        pf = pq.ParquetFile(os.path.join(table_dir, name))
+        cols = [c for c in columns if c in pf.schema_arrow.names]
+        schema = pa.schema([pf.schema_arrow.field(c) for c in cols])
+        meta = pf.metadata
+        groups = [i for i in range(meta.num_row_groups)
+                  if _may_match(meta.row_group(i), filters)]
+        if not groups:
+            continue
+        fcols = [c for c in dict.fromkeys(c for c, _op, _v in filters) if c not in cols]
+        t = pf.read_row_groups(groups, columns=cols + fcols, use_threads=False)
+        if filters:
+            t = t.filter(functools.reduce(pc.and_, (_OPS[op](t[c], v) for c, op, v in filters)))
+        parts.append(t.select(cols).replace_schema_metadata())
+    if schema is None:
+        raise FileNotFoundError(f"no parquet part files in {table_dir}")
+    return pa.concat_tables(parts) if parts else schema.empty_table()
+
+
+_OPS = {
+    ">=": pc.greater_equal,
+    "<": pc.less,
+    "in": lambda col, v: pc.is_in(col, value_set=pa.array(list(v), type=col.type)),
+}
+
+
+def _may_match(rg, filters) -> bool:
+    """False when row group ``rg``'s min/max statistics show that no row
+    meets every condition of ``filters``. A filter column is found by its
+    leaf path, not its field position: a nested column before it (stored
+    _source's ``inlined`` array) has several leaves. A row group without
+    statistics for the column is kept."""
+    leaves = {rg.column(j).path_in_schema: j for j in range(rg.num_columns)}
+    for col, op, v in filters:
+        st = rg.column(leaves[col]).statistics
+        if st is None or not st.has_min_max:
+            continue
+        if (
+            (op == ">=" and st.max < v)
+            or (op == "<" and st.min >= v)
+            or (op == "in" and not any(st.min <= x <= st.max for x in v))
+        ):
+            return False
+    return True
 
 
 def _stream(col: pa.ChunkedArray) -> tuple[np.ndarray, memoryview]:

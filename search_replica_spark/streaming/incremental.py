@@ -56,6 +56,7 @@ from search_replica_spark.analysis import tokenize_text
 from search_replica_spark.config import IndexConfig
 from search_replica_spark.errors import SchemaMismatch, with_retries
 from search_replica_spark.index.build import build_index, with_doc_ids
+from search_replica_spark.index.manifest import write_durable
 from search_replica_spark.query.bm25 import IndexReader, TermAtATimeScorer
 from search_replica_spark.query.store import BlockStore
 
@@ -135,10 +136,7 @@ def _load_gens(index_dir: str) -> list[dict]:
 
 def _save_gens(index_dir: str, gens: list[dict]) -> None:
     os.makedirs(index_dir, exist_ok=True)
-    tmp = os.path.join(index_dir, GENS_FILE + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(gens, f, indent=2)
-    os.replace(tmp, os.path.join(index_dir, GENS_FILE))
+    write_durable(os.path.join(index_dir, GENS_FILE), json.dumps(gens, indent=2))
 
 
 def _adopt_plain_index(index_dir: str) -> list[dict]:
@@ -956,10 +954,7 @@ def write_metrics(index_dir: str, extra: dict | None = None) -> dict:
     if (extra or {}).get("last_batch_replayed"):
         batch_docs = 0
     m["docs_ingested_total"] = int(prev.get("docs_ingested_total", 0)) + batch_docs
-    tmp = os.path.join(index_dir, METRICS_FILE + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(m, f, indent=2)
-    os.replace(tmp, os.path.join(index_dir, METRICS_FILE))
+    write_durable(p, json.dumps(m, indent=2))
     return m
 
 
@@ -1263,11 +1258,14 @@ class LiveDocs:
 class MultiGenReader(IndexReader):
     """IndexReader-compatible facade over a generational index: merged
     stats, last-wins + tombstone liveness (Lucene liveDocs), and BATCHED
-    segment access — one Spark job fetches the query terms' blocks across
-    ALL generations (union read with `term IN` pushdown per generation
-    path), remapping each generation's local doc_idx space onto disjoint
-    global slots. Because the interface matches IndexReader, the same
-    TermAtATimeScorer runs unchanged over N generations.
+    segment access, each generation's local doc_idx space remapped onto
+    disjoint global slots (slot = doc_idx + the generation's base). Doc
+    arrays and the pinned store are read from every generation's parquet
+    in the driver with no Spark job; an unpinned request fetches the query
+    terms' blocks across ALL generations in one Spark job (union read with
+    `term IN` pushdown per generation path). Because the interface matches
+    IndexReader, the same TermAtATimeScorer runs unchanged over N
+    generations.
     """
 
     def __init__(self, spark, index_dir: str, k1: float = 1.2, b: float = 0.75,
@@ -1299,14 +1297,21 @@ class MultiGenReader(IndexReader):
         self._live_cache: LiveDocs | None = None
         self._dict_df: dict[str, int] | None = None
 
-    def _gen_slot_filter(self, g):
-        """Per-generation doc_idx predicate for this shard (slot = doc_idx
-        + gen base), or None when the whole generation is in range."""
-        if self.shard_range is None:
-            return None
-        lo, hi = self.shard_range
-        base = self.bases[g["gen"]]
-        return max(0, lo - base), min(int(g["n_docs"]), hi - base)
+    def _gens(self):
+        """IndexReader._gens over the live generations: a shard reader
+        keeps each generation's doc_idx range inside [lo, hi) and skips
+        the generations entirely outside it."""
+        out = []
+        for g in self.live_gens:
+            base = self.bases[g["gen"]]
+            rng = None
+            if self.shard_range is not None:
+                lo, hi = self.shard_range
+                rng = max(0, lo - base), min(int(g["n_docs"]), hi - base)
+                if rng[0] >= rng[1]:
+                    continue
+            out.append((g["dir"], g["gen"], base, rng))
+        return out
 
     @property
     def _live(self) -> LiveDocs:
@@ -1324,38 +1329,9 @@ class MultiGenReader(IndexReader):
             self._live_cache = full
         return self._live_cache
 
-    # --- merged doc store (ONE Spark action over all generations) ---
-    def doc_arrays(self):
-        if self._doc_len is None:
-            parts = []
-            for g in self.live_gens:
-                df = (
-                    self.spark.read.parquet(os.path.join(g["dir"], "docs"))
-                    .select("doc_idx", "doc_id", "doc_len")
-                    .withColumn("gen", F.lit(g["gen"]))
-                )
-                rng = self._gen_slot_filter(g)
-                if rng is not None:
-                    glo, ghi = rng
-                    if glo >= ghi:
-                        continue  # generation entirely outside this shard
-                    df = df.filter(
-                        (F.col("doc_idx") >= glo) & (F.col("doc_idx") < ghi)
-                    )
-                parts.append(df)
-            if not parts:
-                self._doc_len = np.empty(0, np.float64)
-                self._doc_ids = np.empty(0, np.int64)
-                return self._doc_len, self._doc_ids
-            uni = parts[0]
-            for p in parts[1:]:
-                uni = uni.unionByName(p)
-            pdf = uni.toPandas()
-            pdf["slot"] = pdf["doc_idx"] + pdf["gen"].map(self.bases)
-            pdf = pdf.sort_values("slot")
-            self._doc_len = pdf["doc_len"].to_numpy(np.float64)
-            self._doc_ids = pdf["doc_id"].to_numpy(np.int64)
-        return self._doc_len, self._doc_ids
+    # --- merged doc store: each generation's docs read in the driver,
+    # concatenated onto global slots (IndexReader._doc_columns) ---
+    doc_arrays = IndexReader.doc_arrays
 
     def _liveness(self) -> LiveDocs:
         """Sparse liveDocs: a slot is dead if its doc_id re-appears in a
@@ -1436,22 +1412,18 @@ class MultiGenReader(IndexReader):
         shard-scoped reader reads only blocks overlapping its slot range —
         the per-node memory contract of doc-sharded serving."""
         parts = []
-        for g in self.live_gens:
-            seg = self.spark.read.parquet(os.path.join(g["dir"], "segments"))
+        for d, gen, _base, rng in self._gens():
+            seg = self.spark.read.parquet(os.path.join(d, "segments"))
             q = seg if terms is None else seg.filter(F.col("term").isin(list(set(terms))))
-            rng = self._gen_slot_filter(g)
             if rng is not None:
-                glo, ghi = rng
-                if glo >= ghi:
-                    continue
                 # block-range pruning per generation (gen-local doc_idx)
                 q = q.filter(
-                    (F.col("last_doc_idx") >= glo) & (F.col("first_doc_idx") < ghi)
+                    (F.col("last_doc_idx") >= rng[0]) & (F.col("first_doc_idx") < rng[1])
                 )
             cols = list(self.META_COLS) + (list(self.POS_COLS) if positions else [])
             parts.append(
                 q.select(*[c for c in cols if c in seg.columns])
-                .withColumn("gen", F.lit(g["gen"]))
+                .withColumn("gen", F.lit(gen))
             )
         if not parts:
             return None
@@ -1460,10 +1432,23 @@ class MultiGenReader(IndexReader):
             uni = uni.unionByName(p)
         return uni
 
+    def _pin_table(self, positions: bool) -> pa.Table | None:
+        """Every block this reader holds, each generation's read in the
+        driver (no Spark job) with a ``gen`` column; None when no
+        generation overlaps this shard."""
+        parts = []
+        for d, gen, _base, rng in self._gens():
+            t = self._read_segments(d, rng, positions)
+            parts.append(t.append_column("gen", pa.array(np.full(t.num_rows, gen, np.int32))))
+        return pa.concat_tables(parts) if parts else None
+
     def _block_store(self, scan, positions: bool) -> BlockStore:
-        if scan is None:
+        return self._store(None if scan is None else scan.toArrow(), positions)
+
+    def _store(self, table: pa.Table | None, positions: bool) -> BlockStore:
+        if table is None:
             return BlockStore(pa.table({"term": pa.array([], pa.string())}), positions)
-        table = scan.toArrow().sort_by(
+        table = table.sort_by(
             [("term", "ascending"), ("gen", "ascending"), ("block_id", "ascending")]
         )
         store = BlockStore(table, positions)
@@ -1538,24 +1523,6 @@ class MultiGenReader(IndexReader):
             fld: {"n": int(n), "avg_dl": (s / n) if n else 0.0}
             for fld, (n, s) in acc.items()
         }
-
-    def field_dl_arrays(self, fields: list[str]):
-        """Per-slot per-field doc lengths across ALL generations: one
-        union read of the dl_<field> columns, ordered onto global slots
-        (same layout rule as doc_arrays)."""
-        cols = [f"dl_{f}" for f in fields]
-        parts = [
-            self.spark.read.parquet(os.path.join(g["dir"], "docs"))
-            .select(
-                (F.col("doc_idx") + F.lit(self.bases[g["gen"]])).alias("slot"), *cols
-            )
-            for g in self.live_gens
-        ]
-        uni = parts[0]
-        for p in parts[1:]:
-            uni = uni.unionByName(p)
-        pdf = uni.toPandas().sort_values("slot")
-        return {f: pdf[f"dl_{f}"].to_numpy(np.float64) for f in fields}
 
     # --- query API (same scorers as a single-generation index) ---
     def score(self, query: str, k: int = 10, mode: str = "or"):

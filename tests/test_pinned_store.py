@@ -395,3 +395,235 @@ def test_shard_reader_serves_positional_queries(spark, plain_index, multigen_ind
                 assert got.keys() == want.keys(), (phrase, slop)
                 for d, sc in got.items():
                     assert sc == pytest.approx(want[d], rel=1e-9), (phrase, d)
+
+
+# --- reader set-up read in the driver -------------------------------------
+
+
+def _doc_arrays_spark(spark, r):
+    """The Spark collect doc_arrays() replaced, kept as the reference: each
+    generation's docs in the reader's slot range, toPandas, slot order."""
+    gens = getattr(r, "live_gens", None) or [{"gen": 0, "dir": r.index_dir}]
+    bases = getattr(r, "bases", {0: 0})
+    lo, hi = r.shard_range or (0, 1 << 62)
+    parts = []
+    for g in gens:
+        pdf = spark.read.parquet(f"{g['dir']}/docs").select("doc_idx", "doc_id", "doc_len").toPandas()
+        pdf["slot"] = pdf["doc_idx"] + bases[g["gen"]]
+        parts.append(pdf[(pdf["slot"] >= lo) & (pdf["slot"] < hi)])
+    pdf = pd.concat(parts).sort_values("slot")
+    return pdf["doc_len"].to_numpy(np.float64), pdf["doc_id"].to_numpy(np.int64)
+
+
+def _assert_same_store(got, want):
+    assert got.positions == want.positions
+    assert got.rows == want.rows
+    assert got.index == want.index
+    assert got.term_starts.tobytes() == want.term_starts.tobytes()
+    assert got.term_ends.tobytes() == want.term_ends.tobytes()
+    assert sorted(got.cols) == sorted(want.cols)
+    for name, ref in want.cols.items():
+        assert got.cols[name].dtype == ref.dtype and got.cols[name].tobytes() == ref.tobytes(), name
+    assert sorted(got.streams) == sorted(want.streams)
+    for name, (offs, data) in want.streams.items():
+        g_offs, g_data = got.streams[name]
+        assert g_offs.tobytes() == offs.tobytes(), name
+        assert bytes(g_data[g_offs[0]:g_offs[-1]]) == bytes(data[offs[0]:offs[-1]]), name
+
+
+def _set_up_readers(spark, plain_index, multigen_index):
+    """(label, reader factory) for plain, shard, generational and
+    generational shard readers; the generational shards split the slot
+    space so that one holds a single generation and one spans two."""
+    n = IndexReader(spark, plain_index).n_docs
+    slots = sum(g["n_docs"] for g in MultiGenReader(spark, multigen_index).live_gens)
+    makers = [
+        ("plain", lambda: IndexReader(spark, plain_index)),
+        ("shard", lambda: IndexReader(spark, plain_index, shard_range=(n // 3, 2 * n // 3))),
+        ("multigen", lambda: MultiGenReader(spark, multigen_index)),
+    ]
+    for lo, hi in ((0, 100), (100, 200), (200, slots)):
+        makers.append((f"multigen shard {lo}-{hi}",
+                       lambda lo=lo, hi=hi: MultiGenReader(spark, multigen_index, shard_range=(lo, hi))))
+    return makers
+
+
+def test_driver_read_set_up_equals_spark_reference(spark, plain_index, multigen_index):
+    """The doc arrays and the pinned store read from parquet in the driver
+    are bit-identical to the Spark-built ones (the toPandas docs collect,
+    and the store built from the Spark segment scan), with and without
+    position streams, on every reader kind."""
+    for label, make in _set_up_readers(spark, plain_index, multigen_index):
+        r = make()
+        dl, ids = r.doc_arrays()
+        want_dl, want_ids = _doc_arrays_spark(spark, r)
+        assert dl.dtype == want_dl.dtype and dl.tobytes() == want_dl.tobytes(), label
+        assert ids.dtype == want_ids.dtype and ids.tobytes() == want_ids.tobytes(), label
+        if r.shard_range is not None:
+            assert ids.size == r.shard_range[1] - r.shard_range[0], label
+        for positions in (False, True):
+            got = make().pin_driver(positions=positions)._pinned
+            want = r._block_store(r._segment_scan(positions), positions)
+            assert got.rows > 0, label
+            _assert_same_store(got, want)
+        # the position upgrade of a plain pin reads the same store
+        up = make().pin_driver().pin_driver(positions=True)._pinned
+        _assert_same_store(up, r._block_store(r._segment_scan(True), True))
+
+
+def test_driver_read_position_less_index_asked_for_positions(spark, small_index):
+    """An index built without positions, pinned with positions=True, pins
+    the same store as the Spark scan (its position streams are empty), and
+    a phrase query on it still raises the no-positions error."""
+    idx, _stats = small_index
+    r = IndexReader(spark, idx).pin_driver(positions=True)
+    want = r._block_store(r._segment_scan(True), True)
+    _assert_same_store(r._pinned, want)
+    with pytest.raises(ValueError, match="positional index"):
+        phrase_topk(r, "apache license", 5)
+
+
+def test_reader_set_up_runs_no_spark_job(spark, plain_index, corpus, tmp_path):
+    """doc_arrays() + pin_driver() on a plain, a shard and a
+    single-generation MultiGenReader start no Spark job."""
+    one_gen = str(tmp_path / "one_gen")
+    add_generation(spark, spark.createDataFrame(corpus.iloc[:100]), one_gen, CFG)
+    n = IndexReader(spark, plain_index).n_docs
+    sc = spark.sparkContext
+    for i, make in enumerate((
+        lambda: IndexReader(spark, plain_index),
+        lambda: IndexReader(spark, plain_index, shard_range=(n // 3, 2 * n // 3)),
+        lambda: MultiGenReader(spark, one_gen),
+    )):
+        gid = f"set-up-{i}"
+        sc.setJobGroup(gid, gid)
+        try:
+            r = make()
+            r.doc_arrays()
+            r.pin_driver()
+            r.pin_driver(positions=True)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(gid)) == [], i
+        assert r._pinned.rows > 0 and r.doc_arrays()[0].size > 0
+
+
+def test_shard_doc_read_skips_row_groups_outside_the_range(spark, plain_index, monkeypatch):
+    """A shard reader's doc read returns exactly hi - lo rows and reads only
+    the row groups whose doc_idx statistics overlap its range."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    docs = os.path.join(plain_index, "docs")
+    n = IndexReader(spark, plain_index).n_docs
+    lo, hi = 0, n // 6
+    overlapping, every = set(), set()
+    for name in sorted(os.listdir(docs)):
+        if name.startswith(("_", ".")):
+            continue
+        pf = pq.ParquetFile(os.path.join(docs, name))
+        meta = pf.metadata
+        for i in range(meta.num_row_groups):
+            rg = meta.row_group(i)
+            col, = (j for j in range(rg.num_columns) if rg.column(j).path_in_schema == "doc_idx")
+            st = rg.column(col).statistics
+            every.add((name, i))
+            if st.max >= lo and st.min < hi:
+                overlapping.add((name, i))
+    assert overlapping and overlapping < every  # the range must leave some out
+
+    read = set()
+
+    class Spy(pq.ParquetFile):
+        def __init__(self, source, *args, **kwargs):
+            super().__init__(source, *args, **kwargs)
+            self.source = source
+
+        def read_row_groups(self, groups, *args, **kwargs):
+            if os.path.dirname(self.source) == docs:
+                read.update((os.path.basename(self.source), g) for g in groups)
+            return super().read_row_groups(groups, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "ParquetFile", Spy)
+    dl, ids = IndexReader(spark, plain_index, shard_range=(lo, hi)).doc_arrays()
+    assert dl.size == ids.size == hi - lo
+    assert read == overlapping
+
+
+def test_fielded_norms_on_shard_readers_equal_full_reader(spark, tmp_path):
+    """fielded_norms_topk on a shard reader, plain and generational, gives
+    the full reader's hits restricted to the shard's live slots, with the
+    same scores: the per-field lengths are read for the shard's own slots
+    and the idf uses the dictionary df, not the shard's posting count."""
+    from search_replica_spark.query.bm25 import fielded_norms_topk
+
+    words = ["alpha", "beta", "gamma", "delta"]
+    docs = pd.DataFrame({
+        "repo": ["r0"] * 60,
+        "path": [f"f/{i}.go" for i in range(60)],
+        "commit": ["0" * 40] * 60,
+        "lang": [("go", "py", "rs")[i % 3] for i in range(60)],
+        "content": [" ".join([words[i % 4]] * (1 + i % 5) + [words[(i // 4) % 4]] * (i % 3))
+                    for i in range(60)],
+    })
+    cfg = IndexConfig(shuffle_partitions=4, hot_df_threshold=200,
+                      field_analyzers=(("content", "text"), ("lang", "keyword")))
+    plain = str(tmp_path / "fielded")
+    build_index(spark, spark.createDataFrame(docs), plain, cfg)
+    gens = str(tmp_path / "fielded_gens")
+    add_generation(spark, spark.createDataFrame(docs.iloc[:35]), gens, cfg)
+    upd = docs.iloc[[21, 24, 27]].copy()
+    upd["content"] = "alpha alpha omega"
+    upd["_change_type"] = "update"
+    dele = docs.iloc[[30]].copy()
+    dele["_change_type"] = "delete"
+    add_generation(spark, spark.createDataFrame(pd.concat([docs.iloc[35:], upd, dele])), gens)
+    terms = ["content:alpha", "lang:go"]
+    for full, part in (
+        (IndexReader(spark, plain), IndexReader(spark, plain, shard_range=(20, 40))),
+        (MultiGenReader(spark, gens), MultiGenReader(spark, gens, shard_range=(20, 40))),
+        (MultiGenReader(spark, gens), MultiGenReader(spark, gens, shard_range=(30, 50)).pin_driver()),
+    ):
+        ids, live = part.doc_arrays()[1], getattr(part, "_live", None)
+        in_shard = set((ids if live is None else ids[live.astype(bool)]).tolist())
+        want = {d: sc for d, sc in fielded_norms_topk(full, terms, 100) if d in in_shard}
+        got = dict(fielded_norms_topk(part, terms, 100))
+        assert want and got.keys() == want.keys()
+        for d, sc in got.items():
+            assert sc == pytest.approx(want[d], rel=1e-9), d
+
+
+def test_shard_set_up_with_a_nested_stored_column(spark, corpus, tmp_path):
+    """A store_source index keeps its input columns in the docs table ahead
+    of doc_idx; a nested one (an ``inlined`` array of structs) has several
+    parquet leaves, so doc_idx's statistics are not at its field position.
+    Shard readers still read exactly their slots and the Spark-built store."""
+    from pyspark.sql import functions as F
+
+    cfg = IndexConfig(
+        shuffle_partitions=4, hot_df_threshold=200, store_source=True,
+        input_columns=("repo", "path", "commit", "lang", "content", "inlined"),
+    )
+    df = spark.createDataFrame(corpus).withColumn(
+        "inlined",
+        F.array(F.struct(F.length("content").cast("long").alias("ck"),
+                         F.col("lang").alias("value"))),
+    )
+    idx = str(tmp_path / "nested")
+    build_index(spark, df, idx, cfg)
+    gens = str(tmp_path / "nested_gens")
+    add_generation(spark, df.limit(150), gens, cfg)
+    n = IndexReader(spark, idx).n_docs
+    for make in (
+        lambda: IndexReader(spark, idx, shard_range=(n // 3, 2 * n // 3)),
+        lambda: IndexReader(spark, idx, shard_range=(0, n // 5)),
+        lambda: MultiGenReader(spark, gens, shard_range=(40, 110)),
+    ):
+        r = make()
+        dl, ids = r.doc_arrays()
+        want_dl, want_ids = _doc_arrays_spark(spark, r)
+        assert ids.size == r.shard_range[1] - r.shard_range[0]
+        assert dl.tobytes() == want_dl.tobytes() and ids.tobytes() == want_ids.tobytes()
+        r.pin_driver()
+        _assert_same_store(r._pinned, r._block_store(r._segment_scan(False), False))
