@@ -71,7 +71,7 @@ def main():
     shutil.rmtree("/dev/shm/warm_idx", ignore_errors=True)
     build_index(
         spark, corpus.limit(8192), "/dev/shm/warm_idx",
-        IndexConfig(shuffle_partitions=cpus, hot_df_threshold=50_000),
+        IndexConfig(shuffle_partitions=cpus),
     )
     shutil.rmtree("/dev/shm/warm_idx", ignore_errors=True)
 
@@ -79,7 +79,7 @@ def main():
         load_before = [float(x) for x in f.read().split()[:3]]
     t0 = time.time()
     stats = build_index(
-        spark, corpus, idx_dir, IndexConfig(shuffle_partitions=cpus, hot_df_threshold=50_000)
+        spark, corpus, idx_dir, IndexConfig(shuffle_partitions=cpus)
     )
     build_sec = time.time() - t0
     with open("/proc/loadavg") as f:
@@ -89,7 +89,6 @@ def main():
 
     # --- 2. BM25 query latency (p50 over the 50-query reference set) ---
     reader = IndexReader(spark, idx_dir)
-    reader.cache_segments()
     reader.doc_arrays()
     scorer = TermAtATimeScorer(reader)
     qset = reference_queries()
@@ -113,7 +112,7 @@ def main():
     lat_dist.sort()
     queries["bm25_p50_spark_dist"] = round(lat_dist[len(lat_dist) // 2], 4)
 
-    # serving mode: segments pinned in driver memory (how a query node
+    # serving mode: postings pinned in driver memory (how a query node
     # holds its shard) — per-query cost without the Spark-job round trip
     reader.pin_driver()
     lat_pin_t = []
@@ -181,7 +180,7 @@ def main():
 
     mg_dir = f"/dev/shm/bench_mgidx_{corpus_sf}_{cpus}"
     shutil.rmtree(mg_dir, ignore_errors=True)
-    mg_cfg = IndexConfig(shuffle_partitions=cpus, hot_df_threshold=50_000)
+    mg_cfg = IndexConfig(shuffle_partitions=cpus)
     for i in range(4):  # deterministic 4-way split by path hash
         add_generation(
             spark, corpus.filter(F.crc32(F.col("path")) % 4 == i), mg_dir, mg_cfg
@@ -206,7 +205,7 @@ def main():
     inl_dir = f"/dev/shm/bench_inl_{corpus_sf}_{cpus}"
     shutil.rmtree(inl_dir, ignore_errors=True)
     inl_cfg = IndexConfig(
-        shuffle_partitions=cpus, hot_df_threshold=50_000, store_source=True,
+        shuffle_partitions=cpus, store_source=True,
         input_columns=("repo", "path", "commit", "lang", "content", "inlined"),
     )
     parents = corpus.filter(F.crc32(F.col("path")) % 4 == 1).withColumn(

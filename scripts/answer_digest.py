@@ -118,7 +118,7 @@ def build(spark, n_docs: int, tmp: str) -> tuple[str, str]:
     from search_replica_spark.streaming.incremental import add_generation
 
     cfg = IndexConfig(
-        shuffle_partitions=4, hot_df_threshold=200, salt_range_docs=256, store_positions=True
+        shuffle_partitions=4, store_positions=True
     )
     corpus = generate_corpus(n_docs)
     plain = os.path.join(tmp, "plain")

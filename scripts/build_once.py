@@ -36,13 +36,13 @@ def main():
         spark,
         corpus.limit(8192),
         "/dev/shm/warm_idx",
-        IndexConfig(shuffle_partitions=cpus, hot_df_threshold=50_000),
+        IndexConfig(shuffle_partitions=cpus),
     )
     shutil.rmtree("/dev/shm/warm_idx", ignore_errors=True)
 
     t0 = time.time()
     stats = build_index(
-        spark, corpus, out, IndexConfig(shuffle_partitions=cpus, hot_df_threshold=50_000)
+        spark, corpus, out, IndexConfig(shuffle_partitions=cpus)
     )
     sec = time.time() - t0
     n = SF_FILES[corpus_sf]

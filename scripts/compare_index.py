@@ -1,7 +1,8 @@
-"""Bit-exact logical comparison of two index dirs (old vs new build code).
+"""Exact logical comparison of two format-2 index dirs (old vs new build code).
 
-Compares: stats.json (minus build_sec), dict (term, df [, gmax]),
-docs (all columns), segments (all columns, sorted by term/block_id).
+Compares: stats.json (minus build_sec), dict (term, term_id, df, start),
+docs (all columns), postings (term_id, doc_idx, tf[, positions], sorted by
+term_id then doc_idx — the order a reader concatenates them in).
 
 Usage: python scripts/compare_index.py OLD_DIR NEW_DIR
 """
@@ -12,9 +13,14 @@ import json
 import os
 import sys
 
-import pandas as pd
+import numpy as np
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def _cells(col):
+    """List cells (positions) as tuples, so that they compare by value."""
+    return col.map(lambda v: tuple(v) if isinstance(v, np.ndarray) else v)
 
 
 def main():
@@ -50,7 +56,8 @@ def main():
             ok = False
             return
         for c in a.columns:
-            eq = (a[c] == b[c]) | (a[c].isna() & b[c].isna())
+            ca, cb = _cells(a[c]), _cells(b[c])
+            eq = (ca == cb) | (a[c].isna() & b[c].isna())
             if not eq.all():
                 bad = (~eq).idxmax()
                 print(f"{sub}: DIFF col {c} at row {bad}: {a[c][bad]!r} vs {b[c][bad]!r} "
@@ -60,7 +67,7 @@ def main():
 
     cmp("dict", ["term"])
     cmp("docs", ["doc_idx"])
-    cmp("segments", ["term", "block_id"])
+    cmp("postings", ["term_id", "doc_idx"])
     print("RESULT:", "IDENTICAL" if ok else "DIFFERS")
     sys.exit(0 if ok else 1)
 

@@ -35,7 +35,7 @@ def main():
     spark = get_spark("profile_build", cores=CPUS, shuffle_partitions=CPUS)
     src = corpus_parquet(SF)
     corpus = spark.read.parquet(src)
-    cfg = IndexConfig(shuffle_partitions=CPUS, hot_df_threshold=50_000)
+    cfg = IndexConfig(shuffle_partitions=CPUS)
     out = f"/dev/shm/profile_idx_{SF}_{CPUS}"
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out, exist_ok=True)

@@ -34,14 +34,14 @@ def main():
 
     # warmup
     build_index(spark, corpus.limit(8192), "/dev/shm/pi_warm",
-                IndexConfig(shuffle_partitions=CPUS, hot_df_threshold=50_000))
+                IndexConfig(shuffle_partitions=CPUS))
     shutil.rmtree("/dev/shm/pi_warm", ignore_errors=True)
 
     # --- 2c: inline apply (bench.py shape verbatim) ---
     inl_dir = "/dev/shm/pi_inl"
     shutil.rmtree(inl_dir, ignore_errors=True)
     inl_cfg = IndexConfig(
-        shuffle_partitions=CPUS, hot_df_threshold=50_000, store_source=True,
+        shuffle_partitions=CPUS, store_source=True,
         input_columns=("repo", "path", "commit", "lang", "content", "inlined"),
     )
     parents = corpus.filter(F.crc32(F.col("path")) % 4 == 1).withColumn(
@@ -69,7 +69,7 @@ def main():
     if not os.path.exists(os.path.join(idx_dir, "stats.json")):
         shutil.rmtree(idx_dir, ignore_errors=True)
         build_index(spark, corpus, idx_dir,
-                    IndexConfig(shuffle_partitions=CPUS, hot_df_threshold=50_000))
+                    IndexConfig(shuffle_partitions=CPUS))
     with open(os.path.join(idx_dir, "stats.json")) as f:
         n_docs = json.load(f)["n_docs"]
     qset = reference_queries()

@@ -18,13 +18,6 @@ from search_replica_spark import B, K1
 class IndexConfig:
     k1: float = K1
     b: float = B
-    block_size: int = 128
-    # terms with df above this get salted into doc_idx ranges at build time
-    # (skew handling, SURVEY.md §7 hard-part 2). Each salt range covers
-    # `salt_range_docs` consecutive doc_idx values, so blocks stay globally
-    # docID-sorted without a post-merge.
-    hot_df_threshold: int = 100_000
-    salt_range_docs: int = 65_536
     shuffle_partitions: int = 32
     # columns of the input contract (BASELINE.json#input_hint)
     input_columns: tuple[str, ...] = ("repo", "path", "commit", "lang", "content")
@@ -54,14 +47,6 @@ class IndexConfig:
     # identity should be the full 256-bit hash as two longs; doc_idx already
     # carries all internal identity, so only this guard would change.
     dedup_input: bool = False
-    # carry per-posting doc_len varints (dls_bin) inside segment blocks —
-    # Lucene-impact-style. Costs segment bytes (measured: dls_bin ≈ 58% of
-    # on-disk segment size on the synthetic corpus) but removes the ONLY
-    # remaining join/scan of the docs table from distributed BM25: at 10^12
-    # docs that join re-reads the whole doc store per query. Turn off for
-    # storage-constrained, query-light deployments — bm25_topk_spark then
-    # falls back to the docs join (rank-identical; tested).
-    store_doclens: bool = True
     # per-field analysis (ES mapping parity, demo/mapping.json:22-29):
     # ((field, "text"|"keyword"), ...). When set, every term is qualified as
     # "field:term" (Lucene per-field term space) — "text" runs the standard
@@ -71,11 +56,11 @@ class IndexConfig:
     # — a deliberate simplification of ES's per-field norms; scoring stays
     # self-consistent and oracle-twinnable). Requires the jvm tokenizer.
     field_analyzers: tuple[tuple[str, str], ...] | None = None
-    # store token POSITIONS per posting (npos_bin/pos_bin block streams) —
-    # enables phrase queries (Lucene PhraseQuery semantics). Off by default:
-    # positions cost ~1 varint per token OCCURRENCE (vs per posting for
-    # doclens), the classic Lucene omitTermFreqAndPositions trade. Requires
-    # the jvm tokenizer (posexplode supplies positions).
+    # store token POSITIONS per posting (a list<int32> column of postings/,
+    # tf long) — enables phrase queries (Lucene PhraseQuery semantics). Off
+    # by default: positions cost one value per token OCCURRENCE, the classic
+    # Lucene omitTermFreqAndPositions trade. Requires the jvm tokenizer
+    # (posexplode supplies positions).
     store_positions: bool = False
     # persist the full source row (every input column, content included) in
     # the per-index docs/ store — Lucene stored-fields/_source parity. Off by

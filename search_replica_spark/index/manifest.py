@@ -10,9 +10,8 @@ different input restarts from scratch. Within a stage, per-partition
 recovery is Spark task retry (spark.task.maxFailures) — idempotent because
 stage outputs are overwrite-mode parquet.
 
-Per-partition lineage (north_star: docs_tokenized, postings_emitted,
-bytes_compressed per partition) is recorded in ``out_dir/lineage/`` as a
-parquet table keyed by (stage, partition_id).
+Per-file lineage (postings, terms and bytes of each postings part file)
+is recorded in ``out_dir/lineage/`` as a parquet table.
 """
 
 from __future__ import annotations
@@ -20,6 +19,37 @@ from __future__ import annotations
 import json
 import os
 import time
+
+# stats.json "format": 2 is the postings layout (term_id, doc_idx, tf rows
+# plus a dictionary of term, term_id, df, start). An index without the key
+# predates it and is refused rather than read through a second path.
+INDEX_FORMAT = 2
+
+
+def read_stats(index_dir: str) -> dict:
+    """The stats.json of the index at ``index_dir``; raises ``ValueError``
+    unless it is in ``INDEX_FORMAT``."""
+    with open(os.path.join(index_dir, "stats.json")) as f:
+        stats = json.load(f)
+    if stats.get("format") != INDEX_FORMAT:
+        raise ValueError(
+            f"{index_dir} is in index format {stats.get('format', 1)}; this engine "
+            f"reads format {INDEX_FORMAT} only. Rebuild it: `build` it again from "
+            "the corpus, `compact` a generational index from its snapshot, or "
+            "`reindex` it from its stored _source."
+        )
+    return stats
+
+
+def part_files(table_dir: str) -> list[str]:
+    """The parquet part files of the table at ``table_dir`` in name order,
+    skipping names that start with ``_`` or ``.`` as Spark's file listing
+    does. Build and readers concatenate a table's rows in this order."""
+    return [
+        os.path.join(table_dir, name)
+        for name in sorted(os.listdir(table_dir))
+        if not name.startswith(("_", "."))
+    ]
 
 
 def write_durable(path: str, text: str) -> None:

@@ -3,7 +3,7 @@
 ``documents.text`` is strictly lowercase ``[a-z0-9 ]`` single-spaced, so the
 engine's tokenizer degenerates to whitespace split there — which makes every
 entry SQL-expressible in DuckDB (``unnest(string_split(text, ' '))``). The
-index-backed entries build a REAL index (segments + dict + docs) via
+index-backed entries build a REAL index (postings + dict + docs) via
 ``build_index`` and compare its contents/results against SQL recomputation:
 the driver-run analogue of our rank-identity pytest gate.
 """
@@ -44,13 +44,13 @@ def _index_dir_for(spark, sf_dir) -> str:
 
     tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:10]
     # v3: + stored _source (content rides in docs/ for highlight/GET entries)
-    out = f"/tmp/ssr_harness_idx_{tag}_v3"
+    out = f"/tmp/ssr_harness_idx_{tag}_v4"
     if not os.path.exists(os.path.join(out, "stats.json")):
         build_index(
             spark,
             _corpus_from_documents(spark, sf_dir),
             out,
-            IndexConfig(shuffle_partitions=8, hot_df_threshold=1 << 30, store_source=True),
+            IndexConfig(shuffle_partitions=8, store_source=True),
         )
     return out
 
@@ -85,37 +85,22 @@ def ft_index_dict(spark, sf_dir):
     return spark.read.parquet(os.path.join(idx, "dict")).select("term", "df")
 
 
-# B2 invariant: postings in the built segments decode back to exactly the
-# (term, doc, tf) multiset of the source text — checked via per-term
-# posting-count = sum of block `n`s, compared to SQL df.
+# B2 invariant: the built postings table holds exactly the (term, doc, tf)
+# multiset of the source text — checked as per-term posting count and tf
+# sum, compared to SQL.
 @register(
     "ft_segment_postings",
     f"""SELECT term, count(DISTINCT doc_id) AS postings, count(*) AS total_tf
         FROM ({_TOK}) GROUP BY term""",
 )
 def ft_segment_postings(spark, sf_dir):
-    import numpy as np
-    import pandas as pd
-
-    from search_replica_spark.index.codec import varint_decode
-
     idx = _index_dir_for(spark, sf_dir)
-    seg = spark.read.parquet(os.path.join(idx, "segments"))
-
-    def decode(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            tf_sums = [int(varint_decode(bb).sum()) for bb in pdf["tfs_bin"]]
-            yield pd.DataFrame(
-                {"term": pdf["term"], "n": pdf["n"], "tf_sum": np.array(tf_sums, dtype=np.int64)}
-            )
-
-    per_block = seg.select("term", "n", "tfs_bin").mapInPandas(
-        decode, schema="term string, n int, tf_sum long"
-    )
-    return per_block.groupBy("term").agg(
-        F.sum("n").alias("postings"), F.sum("tf_sum").alias("total_tf")
+    terms = spark.read.parquet(os.path.join(idx, "dict")).select("term", "term_id")
+    return (
+        spark.read.parquet(os.path.join(idx, "postings"))
+        .join(terms, "term_id")
+        .groupBy("term")
+        .agg(F.count("*").alias("postings"), F.sum("tf").alias("total_tf"))
     )
 
 
@@ -299,13 +284,13 @@ def _positional_index_dir_for(spark, sf_dir) -> str:
     from search_replica_spark.index.build import build_index
 
     tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:10]
-    out = f"/tmp/ssr_harness_pidx_{tag}_v2"
+    out = f"/tmp/ssr_harness_pidx_{tag}_v3"
     if not os.path.exists(os.path.join(out, "stats.json")):
         build_index(
             spark,
             _corpus_from_documents(spark, sf_dir),
             out,
-            IndexConfig(shuffle_partitions=8, hot_df_threshold=1 << 30,
+            IndexConfig(shuffle_partitions=8,
                         store_positions=True),
         )
     return out
@@ -629,7 +614,7 @@ def _fielded_index_dir_for(spark, sf_dir) -> str:
     from search_replica_spark.index.build import build_index
 
     tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:10]
-    out = f"/tmp/ssr_harness_fidx_{tag}_v2"  # v2: dl_<field> columns + field_stats
+    out = f"/tmp/ssr_harness_fidx_{tag}_v3"  # v3: format-2 postings
     if not os.path.exists(os.path.join(out, "stats.json")):
         build_index(
             spark,
@@ -637,7 +622,6 @@ def _fielded_index_dir_for(spark, sf_dir) -> str:
             out,
             IndexConfig(
                 shuffle_partitions=8,
-                hot_df_threshold=1 << 30,
                 field_analyzers=(("content", "text"), ("lang", "keyword")),
             ),
         )
@@ -968,7 +952,7 @@ def _mapped_index_dir_for(spark, sf_dir) -> str:
     from search_replica_spark.index.build import build_index
 
     tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:10]
-    out = f"/tmp/ssr_harness_midx_{tag}_v1"
+    out = f"/tmp/ssr_harness_midx_{tag}_v2"
     if not os.path.exists(os.path.join(out, "stats.json")):
         d = load(spark, sf_dir, "documents")
         corpus = d.select(
@@ -985,7 +969,6 @@ def _mapped_index_dir_for(spark, sf_dir) -> str:
             out,
             IndexConfig(
                 shuffle_partitions=8,
-                hot_df_threshold=1 << 30,
                 input_columns=("repo", "path", "commit", "lang", "content", "source"),
                 field_analyzers=(("content", "text"), ("source", "keyword:4")),
             ),
@@ -1178,13 +1161,12 @@ def _fielded_multigen_index_dir_for(spark, sf_dir) -> str:
     from search_replica_spark.streaming.incremental import add_generation
 
     tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:10]
-    out = f"/tmp/ssr_harness_fmgidx_{tag}_v1"
+    out = f"/tmp/ssr_harness_fmgidx_{tag}_v2"
     if not os.path.exists(os.path.join(out, "generations.json")):
         corpus = _corpus_from_documents(spark, sf_dir)
         half = F.col("path").substr(-1, 1).cast("int") % 2  # doc_id parity
         cfg = IndexConfig(
             shuffle_partitions=8,
-            hot_df_threshold=1 << 30,
             field_analyzers=(("content", "text"), ("lang", "keyword")),
         )
         add_generation(spark, corpus.filter(half == 0), out, cfg)
@@ -2027,7 +2009,7 @@ def _pc_index_dir_for(spark, sf_dir) -> str:
     from search_replica_spark.index.build import build_index
 
     tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:10]
-    out = f"/tmp/ssr_harness_pcidx_{tag}_v1"
+    out = f"/tmp/ssr_harness_pcidx_{tag}_v2"
     if not os.path.exists(os.path.join(out, "stats.json")):
         c = load(spark, sf_dir, "customer").select(
             F.lit("pc").alias("repo"),

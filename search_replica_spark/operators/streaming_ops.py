@@ -78,8 +78,8 @@ def cdc_index_dir(spark, sf_dir) -> str:
     from search_replica_spark.streaming.incremental import _load_gens, add_generation
 
     tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:10]
-    idx = f"/tmp/ssr_harness_cdc_{tag}_v2"
-    cfg = IndexConfig(shuffle_partitions=8, hot_df_threshold=1 << 30)
+    idx = f"/tmp/ssr_harness_cdc_{tag}_v3"
+    cfg = IndexConfig(shuffle_partitions=8)
     if len(_load_gens(idx)) != 2:
         shutil.rmtree(idx, ignore_errors=True)
         corpus = _corpus_from_documents(spark, sf_dir)
@@ -130,8 +130,8 @@ def pud_index_dir(spark, sf_dir) -> str:
     from search_replica_spark.streaming.incremental import _load_gens, add_generation
 
     tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:10]
-    idx = f"/tmp/ssr_harness_pud_{tag}_v1"
-    cfg = IndexConfig(shuffle_partitions=8, hot_df_threshold=1 << 30, store_source=True)
+    idx = f"/tmp/ssr_harness_pud_{tag}_v2"
+    cfg = IndexConfig(shuffle_partitions=8, store_source=True)
     if len(_load_gens(idx)) != 2:
         shutil.rmtree(idx, ignore_errors=True)
         corpus = _corpus_from_documents(spark, sf_dir)
@@ -171,9 +171,9 @@ def inl_index_dir(spark, sf_dir) -> str:
     )
 
     tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:10]
-    idx = f"/tmp/ssr_harness_inl_{tag}_v1"
+    idx = f"/tmp/ssr_harness_inl_{tag}_v2"
     cfg = IndexConfig(
-        shuffle_partitions=8, hot_df_threshold=1 << 30, store_source=True,
+        shuffle_partitions=8, store_source=True,
         input_columns=("repo", "path", "commit", "lang", "content", "inlined"),
     )
     if len(_load_gens(idx)) != 3:
@@ -262,9 +262,9 @@ def inl_map_index_dir(spark, sf_dir) -> str:
     )
 
     tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:10]
-    idx = f"/tmp/ssr_harness_inlmap_{tag}_v1"
+    idx = f"/tmp/ssr_harness_inlmap_{tag}_v2"
     cfg = IndexConfig(
-        shuffle_partitions=8, hot_df_threshold=1 << 30, store_source=True,
+        shuffle_partitions=8, store_source=True,
         input_columns=("repo", "path", "commit", "lang", "content", "inlined"),
     )
     if len(_load_gens(idx)) != 3:

@@ -22,10 +22,10 @@ def plan_of(df) -> str:
 
 
 CHECKS = {
-    "query_segment_fetch": {
-        "want": ["PushedFilters: [In(term"],
+    "query_postings_fetch": {
+        "want": ["PushedFilters: [In(term_id"],
         "avoid": ["CartesianProduct"],
-        "why": "query-time posting fetch must reach the parquet scan as a term IN filter (row-group pruning on the term-sorted segments)",
+        "why": "query-time posting fetch must reach the parquet scan as a term_id IN filter (row-group pruning on the term_id-sorted postings)",
     },
     "p2_projection_pruning": {
         "want": ["PushedFilters: [IsNotNull(l_shipdate), LessThan(l_shipdate"],
@@ -38,14 +38,9 @@ CHECKS = {
         "why": "has_child = semi-join, child-side status filter pushed below the join",
     },
     "bm25_distributed": {
-        "want": ["PushedFilters: [In(term", "BroadcastHashJoin"],
+        "want": ["PushedFilters: [In(term_id", "BroadcastHashJoin"],
         "avoid": ["CartesianProduct", "SortMergeJoin"],
-        "why": "distributed scorer: term pushdown + broadcast idf; doc_len rides in the segments (dls_bin) so NO shuffle join against the docs table remains",
-    },
-    "build_salt_hot_join": {
-        "want": ["BroadcastHashJoin"],
-        "avoid": [],
-        "why": "hot-term df table joins broadcast, never shuffles the postings twice",
+        "why": "distributed scorer: term_id pushdown, broadcast idf and broadcast docs(doc_idx, doc_len), so NO shuffle join remains",
     },
     "dedup_embedding_lsh": {
         "want": [],
@@ -57,10 +52,10 @@ CHECKS = {
         "avoid": ["BroadcastNestedLoopJoin", "CartesianProduct"],
         "why": "prefix filtering (df-ranked window, prefix tokens only) sits BELOW the self-join, so hot tokens cannot explode the join",
     },
-    "shard_block_range_prune": {
-        "want": ["In(term", "last_doc_idx", "first_doc_idx"],
+    "shard_postings_range_prune": {
+        "want": ["In(term_id", "GreaterThanOrEqual(doc_idx", "LessThan(doc_idx"],
         "avoid": ["CartesianProduct"],
-        "why": "shard-scoped posting fetch: term IN + block-range overlap both reach the segment scan, so min/max row-group stats on the docID-ordered blocks prune everything outside the shard",
+        "why": "shard-scoped posting fetch: term_id IN + the doc_idx range both reach the postings scan",
     },
     "inline_resolve": {
         "want": ["BroadcastHashJoin"],
@@ -199,8 +194,8 @@ def main():
     idx = _index_dir_for(spark, sf_dir)
 
     plans = {}
-    seg = spark.read.parquet(os.path.join(idx, "segments"))
-    plans["query_segment_fetch"] = plan_of(seg.filter(F.col("term").isin(["spark", "join"])))
+    post = spark.read.parquet(os.path.join(idx, "postings"))
+    plans["query_postings_fetch"] = plan_of(post.filter(F.col("term_id").isin([1, 2])))
     plans["p2_projection_pruning"] = plan_of(reg["p2_projection_pruning"][0](spark, sf_dir))
     plans["b6_has_child_semijoin"] = plan_of(reg["b6_has_child_semijoin"][0](spark, sf_dir))
 
@@ -242,17 +237,13 @@ def main():
         reg["b8b_routing_partition_pruning"][0](spark, sf_dir)
     )
     # r5: shard-scoped unpinned posting fetch — captured from the READER'S
-    # OWN query builder (_blocks_query), so a pushdown regression in
+    # OWN query builder (_postings_scan), so a pushdown regression in
     # IndexReader fails this audit, not a hand-rebuilt twin
     from search_replica_spark.query.bm25 import IndexReader
 
     shard_rd = IndexReader(spark, idx, shard_range=(100, 600))
-    plans["shard_block_range_prune"] = plan_of(
-        shard_rd._blocks_query(
-            spark.read.parquet(os.path.join(idx, "segments")),
-            ["spark", "join"],
-            positions=False,
-        )
+    plans["shard_postings_range_prune"] = plan_of(
+        shard_rd._postings_scan(False, ["spark", "join"])[0]
     )
 
     # r5: streamed inline resolution (dry-run plan, nothing committed)
@@ -327,17 +318,6 @@ def main():
     plans["dedup_embedding_lsh"] = plan_of(reg["dedup_embedding_lsh"][0](spark, sf_dir))
     plans["dedup_ngram_jaccard"] = plan_of(reg["dedup_ngram_jaccard"][0](spark, sf_dir))
     plans["dedup_simhash_hamming"] = plan_of(reg["dedup_simhash_hamming"][0](spark, sf_dir))
-
-    # the salted hot-term join inside the build (stage plan, not executed)
-    postings = spark.read.parquet(os.path.join(idx, "docs")).limit(0)  # placeholder src
-    dic = spark.read.parquet(os.path.join(idx, "dict"))
-    hot = dic.filter(F.col("df") > 2).withColumnRenamed("df", "df_hot")
-    fake_postings = spark.read.parquet(os.path.join(idx, "dict")).select(
-        "term", F.lit(1).alias("tf")
-    )
-    plans["build_salt_hot_join"] = plan_of(
-        fake_postings.join(F.broadcast(hot), "term", "left")
-    )
 
     print("# PLANS — physical plan quality evidence\n")
     print(f"Captured on sf_dir={sf_dir}. Auto-generated by plans/explain_report.py.\n")

@@ -1,4 +1,4 @@
-"""BM25 top-k query execution over the segment store.
+"""BM25 top-k query execution over the postings store.
 
 Implements the search semantics the reference delegates to Elasticsearch
 (reference: demo/README.md:18-42 queries a live ES; demo/mapping.json
@@ -6,13 +6,15 @@ configures it). One top-k computation, in two execution forms that return
 the same ranking:
 
   - ``TermAtATimeScorer`` / ``bool_topk`` — the in-driver NumPy scorer over
-    fetched postings: one decode per request, a ``bincount`` accumulate
-    over the touched docs and an array top-k. ``/_search``, the CDC path
-    and doc-sharded serving (``serve_topk``) all score here.
-  - ``bm25_topk_spark`` — the fully distributed DataFrame plan: pushdown
-    ``term IN (...)`` to the segment parquet, Arrow-decode blocks, sum per
-    doc, TakeOrdered top-k. The scan touches only the query terms' row
-    groups (segments are range-partitioned + sorted by term).
+    fetched postings (slices of flat int32 columns, no decode), a
+    ``bincount`` accumulate over the touched docs and an array top-k.
+    ``/_search``, the CDC path and doc-sharded serving (``serve_topk``) all
+    score here.
+  - ``bm25_topk_spark`` — the fully distributed plan, plain Spark SQL:
+    ``term_id IN (...)`` pushed to the postings parquet (sorted by term_id,
+    so only the query terms' row groups are read), joined to a broadcast
+    idf table and to docs(doc_idx, doc_len), summed per doc, TakeOrdered
+    top-k.
 
 Scores are float64 with idf from Python ``math.log``, summing per-doc
 contributions in sorted-term order where we control the order, so scores
@@ -21,24 +23,28 @@ are bit-comparable with the oracle.
 
 from __future__ import annotations
 
+import functools
 import heapq
-import json
 import math
 import os
 
 import numpy as np
-import pandas as pd
-import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from search_replica_spark.analysis import tokenize_text
-from search_replica_spark.index.codec import (
-    decode_doc_blocks,
-    decode_position_flat,
-    varint_decode,
+from search_replica_spark.index.manifest import read_stats
+from search_replica_spark.query.store import (
+    PostingStore,
+    Postings,
+    read_postings,
+    read_table,
 )
-from search_replica_spark.query.store import Blocks, BlockStore, read_table
+
+# The block codec's decode entry points, kept bound as names that run no
+# code: format-2 postings need no decode (ROADMAP 8(b)).
+decode_doc_blocks = varint_decode = None
 
 
 def prefix_range_cond(prefix: str):
@@ -63,73 +69,29 @@ def prefix_range_cond(prefix: str):
 
 
 class IndexReader:
-    """Driver-side handle on an index directory (stats + lazy postings fetch)."""
-
-    # columns the scorers need: the term, block order, posting count and
-    # the doc/tf streams. dls_bin is deliberately NOT here — doc_len for
-    # driver-side scoring comes from doc_arrays(), so fetching the
-    # (+58%-of-segment-bytes) dls_bin stream would be pure read tax on the
-    # query path. Only the distributed bm25_topk_spark* plans read dls_bin,
-    # straight from parquet with column pruning. The stored per-block
-    # first/last_doc_idx and max_score stay on disk: a shard scan filters
-    # on the doc range in parquet, and no driver scorer reads them.
-    META_COLS = ("term", "block_id", "n", "docs_bin", "tfs_bin")
-    POS_COLS = ("npos_bin", "pos_bin")
+    """Driver-side handle on an index directory (stats + postings fetch)."""
 
     def __init__(self, spark: SparkSession, index_dir: str,
                  shard_range: tuple[int, int] | None = None):
         self.spark = spark
         self.index_dir = index_dir
-        with open(os.path.join(index_dir, "stats.json")) as f:
-            self.stats = json.load(f)
+        self.stats = read_stats(index_dir)
         self.n_docs = self.stats["n_docs"]
         self.avg_dl = self.stats["avg_dl"]
         self.k1 = self.stats["k1"]
         self.b = self.stats["b"]
+        self.positions_stored = bool(self.stats.get("store_positions", False))
         # doc-sharded serving (ES shard semantics): this reader owns ONLY
-        # the doc_idx slots in [lo, hi) — its doc arrays are O(hi-lo), its
-        # segment reads are block-range-pruned to the overlap, and
-        # fetch_postings returns SHARD-LOCAL indices (global - lo).
-        # Corpus-level stats (n_docs, avg_dl, idf) stay GLOBAL — the dfs
-        # phase of dfs_query_then_fetch — so per-doc scores are identical
-        # to unsharded scoring.
+        # the doc_idx slots in [lo, hi) — its doc arrays and postings are
+        # O(hi-lo), and fetch_postings returns SHARD-LOCAL indices
+        # (global - lo). Corpus-level stats (n_docs, avg_dl, idf) stay
+        # GLOBAL — the dfs phase of dfs_query_then_fetch — so per-doc
+        # scores are identical to unsharded scoring.
         self.shard_range = shard_range
         self._doc_len: np.ndarray | None = None
         self._doc_ids: np.ndarray | None = None
-        self._seg_df = None
-        self._pinned: BlockStore | None = None
+        self._pinned: PostingStore | None = None
         self._dict_df: dict[str, int] | None = None
-
-    def cache_segments(self, positions: bool = False):
-        """Pin the segment store in Spark executor memory (hot-serving mode):
-        repeated queries then pushdown-filter the cached columnar batches
-        instead of re-reading parquet. Only the scorer columns are cached —
-        dls_bin (58% of segment bytes) never enters executor memory here.
-
-        A ``positions=True`` call after an earlier position-less cache
-        upgrades it (unpersist + re-cache with POS_COLS) instead of silently
-        serving the narrower frame — otherwise every phrase query would fall
-        back to a fresh parquet read and hot-serving mode would quietly lose
-        its benefit. Only upgrades when the index actually stored positions."""
-        if (
-            self._seg_df is not None
-            and positions
-            and "npos_bin" not in self._seg_df.columns
-            and self.stats.get("store_positions", False)
-        ):
-            self._seg_df.unpersist()
-            self._seg_df = None
-        if self._seg_df is None:
-            seg = self.spark.read.parquet(os.path.join(self.index_dir, "segments"))
-            cols = list(self.META_COLS) + (list(self.POS_COLS) if positions else [])
-            # ~8 cached partitions is the local-mode latency sweet spot:
-            # enough scan parallelism per query, minimal per-task scheduling
-            # overhead (measured 24→8 parts: p50 134→116 ms)
-            self._seg_df = (
-                seg.select(*[c for c in cols if c in seg.columns]).coalesce(8).cache()
-            )
-            self._seg_df.count()  # materialize
-        return self._seg_df
 
     # --- doc store (slot-ordered arrays, loaded once) ---
     def _gens(self) -> list[tuple[str, int, int, tuple[int, int] | None]]:
@@ -138,6 +100,10 @@ class IndexReader:
         the range is None when the reader holds the whole generation. A
         plain index is one generation at base 0."""
         return [(self.index_dir, 0, 0, self.shard_range)]
+
+    def _slot_offset(self, base: int) -> int:
+        """What turns a generation's doc_idx into this reader's slot."""
+        return base - (self.shard_range[0] if self.shard_range is not None else 0)
 
     def _doc_columns(self, cols: list[str]) -> dict[str, np.ndarray]:
         """``cols`` of the docs table for the slots this reader holds, in
@@ -177,96 +143,87 @@ class IndexReader:
         return {f: c[f"dl_{f}"].astype(np.float64) for f in fields}
 
     def pin_driver(self, positions: bool = False):
-        """Serving mode: pull the segment store into driver memory as a
-        term-sorted columnar ``BlockStore`` (blocks stay compressed), read
-        from the segment parquet in the driver with no Spark job (a shard
-        reader reads only the row groups whose first/last_doc_idx
-        statistics overlap its range). This is how a query node actually
-        serves a shard (ES holds its segments in RAM/page cache); a request
-        is then a dict probe and a slice, never a Spark job. Only sensible
-        when this process owns a shard-sized slice of the index — at 100 TB
-        each query node pins its own term-range partition, which is exactly
-        how the segment files are laid out (hash(term) → file).
-        ``positions``: also pin the npos/pos streams (phrase serving);
-        dls_bin is never pinned (see META_COLS). A ``positions=True`` call on a store pinned without
-        them re-pins with them, as ``cache_segments`` upgrades its cache —
-        otherwise every phrase request would run a Spark read."""
+        """Serving mode: read the postings this reader holds into driver
+        memory as a ``PostingStore`` — per generation, doc slots and tfs as
+        flat int32 arrays and a term → row range map — from the postings
+        parquet in the driver with no Spark job (``store.read_postings``).
+        A request is then a dict probe and a slice, never a Spark job or a
+        decode. This is how a query node serves a shard (ES holds its
+        segments in RAM/page cache). ``positions``: also pin the flat token
+        positions (phrase serving). A ``positions=True`` call on a store
+        pinned without them re-pins with them — otherwise every phrase
+        request would run a Spark read."""
+        positions = positions and self.positions_stored
         if self._pinned is None or (positions and not self._pinned.positions):
             self._pinned = None  # one pinned copy at a time
-            self._pinned = self._store(self._pin_table(positions), positions)
-            if self._seg_df is not None and (
-                positions or "npos_bin" not in self._seg_df.columns
-            ):
-                # the pinned store supersedes the executor-side cache for
-                # every request it can serve — release the JVM storage
-                # memory instead of carrying a dead cache for the rest of
-                # a long-lived serving process (guide §5: unpersist when
-                # done; the cache competes with execution memory of every
-                # later job in this session)
-                self._seg_df.unpersist()
-                self._seg_df = None
+            self._pinned = PostingStore(
+                [read_postings(d, self._slot_offset(base), rng, positions)
+                 for d, _gen, base, rng in self._gens()],
+                positions,
+            )
         if self.shard_range is not None:
             self._dictionary_dfs()  # so a pinned shard request runs no Spark job
         return self
 
-    def fetch_blocks(self, terms: list[str], positions: bool = False) -> Blocks:
-        """Segment rows for the query terms, term then block ordered: a
-        slice of the pinned store, or a store built from one `term IN`
-        scan pushed to parquet (or to the cached segment frame). Only the
-        scorer columns are transferred (META_COLS; + position streams on
-        demand). ``len()`` of the result is its block count."""
+    def fetch_blocks(self, terms: list[str], positions: bool = False) -> dict[str, tuple]:
+        """The postings of ``terms`` in this reader's slot space: term →
+        (slots, tfs), or (slots, tfs, flat positions) with ``positions``,
+        for the terms present, in term order (``PostingStore.select``).
+        Served from the pinned store, or from a store built from one Spark
+        scan of the query terms' rows. ``len()`` of the result is the
+        number of terms found."""
         if self._pinned is not None and (not positions or self._pinned.positions):
-            return self._pinned.select(terms)
-        scan = self._segment_scan(positions, terms)
-        return self._block_store(scan, positions).select(terms)
+            return self._pinned.select(terms, positions)
+        return self._scan_store(positions, terms).select(terms, positions)
 
-    def _segment_scan(self, positions: bool, terms: list[str] | None = None):
-        """The Spark scan an unpinned request's store is built from: the
-        blocks of ``terms`` (every block when None)."""
-        seg = self._seg_df
-        if terms is None or seg is None or (positions and "npos_bin" not in seg.columns):
-            # cache built without position streams → serve a positional
-            # request straight from parquet rather than silently degrading
-            seg = self.spark.read.parquet(os.path.join(self.index_dir, "segments"))
-        return self._blocks_query(seg, terms, positions)
+    def fetch_postings(self, terms: list[str]) -> dict[str, tuple[np.ndarray, np.ndarray]]:
+        """term → (slots, tfs), slot-ascending (see ``fetch_blocks``)."""
+        return self.fetch_blocks(terms)
 
-    def _pin_table(self, positions: bool) -> pa.Table:
-        """Every block this reader holds, read in the driver (no Spark job)."""
-        (d, _gen, _base, rng), = self._gens()
-        return self._read_segments(d, rng, positions)
+    def _postings_scan(self, positions: bool, terms: list[str] | None = None):
+        """The Spark scan an unpinned request's store is built from: one
+        union over this reader's generations of the postings rows of
+        ``terms`` (every row when None) — ``term_id IN (...)`` with the
+        ids from a driver-side read of each generation's dictionary — and,
+        on a shard reader, doc_idx in the generation's range; a ``g``
+        column numbers the generation. Returns (DataFrame or None, and per
+        generation its term_id → term map and slot offset)."""
+        positions = positions and self.positions_stored
+        parts, gens = [], []
+        for d, _gen, base, rng in self._gens():
+            flt = () if terms is None else (("term", "in", sorted(set(terms))),)
+            dic = read_table(os.path.join(d, "dict"), ["term", "term_id"], flt)
+            ids = dic["term_id"].to_pylist()
+            q = self.spark.read.parquet(os.path.join(d, "postings"))
+            cols = ["term_id", "doc_idx", "tf"] + (["positions"] if positions else [])
+            if terms is not None:
+                q = q.filter(F.col("term_id").isin(ids) if ids else F.lit(False))
+            if rng is not None:
+                q = q.filter((F.col("doc_idx") >= rng[0]) & (F.col("doc_idx") < rng[1]))
+            parts.append(q.select(*cols, F.lit(len(gens)).alias("g")))
+            gens.append((dict(zip(ids, dic["term"].to_pylist())), self._slot_offset(base)))
+        if not parts:
+            return None, gens
+        return functools.reduce(DataFrame.unionByName, parts), gens
 
-    def _read_segments(self, d: str, rng, positions: bool) -> pa.Table:
-        """The scorer columns of one generation's blocks that overlap
-        doc_idx range ``rng`` (all blocks when None), row groups pruned
-        on their first/last_doc_idx statistics."""
-        cols = list(self.META_COLS) + (list(self.POS_COLS) if positions else [])
-        flt = () if rng is None else (("last_doc_idx", ">=", rng[0]), ("first_doc_idx", "<", rng[1]))
-        return read_table(os.path.join(d, "segments"), cols, flt)
-
-    def _block_store(self, scan, positions: bool) -> BlockStore:
-        return self._store(scan.toArrow(), positions)
-
-    def _store(self, table: pa.Table, positions: bool) -> BlockStore:
-        table = table.sort_by([("term", "ascending"), ("block_id", "ascending")])
-        return BlockStore(table, positions)
-
-    def _blocks_query(self, seg, terms: list[str] | None, positions: bool):
-        """The (unexecuted) shard-scoped segment scan of an unpinned
-        request, which the plan audit explains too. ``terms=None`` scans
-        every term."""
-        cols = list(self.META_COLS) + (list(self.POS_COLS) if positions else [])
-        cols = [c for c in cols if c in seg.columns]
-        q = seg if terms is None else seg.filter(F.col("term").isin(list(set(terms))))
-        if self.shard_range is not None:
-            # block-range pruning: only blocks overlapping [lo, hi) are
-            # read (min/max row-group stats on first/last_doc_idx prune the
-            # term-sorted, docID-ordered segment files) — for a pinned
-            # shard, the per-node memory contract of doc-sharded serving
-            lo, hi = self.shard_range
-            q = q.filter(
-                (F.col("last_doc_idx") >= lo) & (F.col("first_doc_idx") < hi)
-            )
-        return q.select(*cols)
+    def _scan_store(self, positions: bool, terms: list[str] | None = None) -> PostingStore:
+        """A ``PostingStore`` of the rows ``_postings_scan`` collects."""
+        positions = positions and self.positions_stored
+        scan, gens = self._postings_scan(positions, terms)
+        if scan is None:
+            return PostingStore([], positions)
+        t = scan.toArrow().sort_by([("g", "ascending"), ("term_id", "ascending"),
+                                    ("doc_idx", "ascending")])
+        g = t["g"].to_numpy()
+        cuts = np.searchsorted(g, np.arange(len(gens) + 1))
+        parts = []
+        for i, (terms_by_id, offset) in enumerate(gens):
+            s = t.slice(cuts[i], cuts[i + 1] - cuts[i])
+            pos = pc.list_flatten(s["positions"]).to_numpy() if positions else None
+            parts.append(Postings.from_rows(
+                terms_by_id, s["term_id"].to_numpy(), s["doc_idx"].to_numpy(),
+                s["tf"].to_numpy(), pos, offset))
+        return PostingStore(parts, positions)
 
     def expand_prefix(
         self, prefix: str, max_expansions: int | None = 50, extra_filter=None
@@ -299,53 +256,6 @@ class IndexReader:
             q = q.filter(extra_filter)
         return q
 
-    def fetch_postings(self, terms: list[str]) -> dict[str, tuple[np.ndarray, np.ndarray, Blocks]]:
-        """term → (doc_idx, tf, blocks) decoded, concatenated, docID-sorted.
-        The third element is the term's slice of the block store
-        (``blocks["n"]``, ``blocks["block_id"]``, ... are NumPy arrays;
-        ``len(blocks)`` is its block count). An optional per-block
-        ``doc_off`` column (generational indexes: each generation's local
-        doc_idx space starts at its slot base) is added to the decoded ids.
-        Decode is one vectorized pass over every block of every term (one
-        decode_doc_blocks and one varint_decode per request), split into
-        per-term views at each term's last posting — never a per-term or
-        per-block decode."""
-        return self.decode_postings(self.fetch_blocks(terms))
-
-    def decode_postings(self, blk: Blocks) -> dict[str, tuple[np.ndarray, np.ndarray, Blocks]]:
-        """fetch_postings over already fetched blocks."""
-        if len(blk) == 0:
-            return {}
-        n = blk["n"]
-        docs = decode_doc_blocks(blk["docs_bin"], n, blk["doc_off"] if "doc_off" in blk else None)
-        tfs = varint_decode(blk.joined("tfs_bin")).astype(np.int64)
-        post_ends = np.cumsum(n).tolist()  # postings up to each block's end
-        out = {}
-        start = row = 0
-        for term, g in blk.by_term():
-            row += len(g)
-            end = post_ends[row - 1]
-            d, tf, _ = self.to_shard(docs[start:end], tfs[start:end])
-            start = end
-            out[term] = (d, tf, g)
-        return out
-
-    def to_shard(self, docs: np.ndarray, per_posting: np.ndarray, flat: np.ndarray | None = None):
-        """Decoded postings in this reader's index space. A shard reader
-        keeps the postings in its slot range [lo, hi), rebased to
-        shard-local slots, so doc_arrays()[idx] lines up slot for slot
-        (blocks straddling a shard edge are decoded whole). ``per_posting``
-        (tfs, or position counts) is masked with ``docs``; ``flat`` (the
-        positions, ``per_posting[i]`` of them for posting i) keeps only the
-        kept postings' values. An unsharded reader returns its input as is."""
-        if self.shard_range is None:
-            return docs, per_posting, flat
-        lo, hi = self.shard_range
-        m = (docs >= lo) & (docs < hi)
-        if flat is not None:
-            flat = flat[np.repeat(m, per_posting)]
-        return docs[m] - lo, per_posting[m], flat
-
     def term_df(self, term: str, held: int) -> int:
         """The document frequency to score ``term`` with, given ``held``,
         the number of its postings this reader holds. An unsharded reader
@@ -367,110 +277,82 @@ class IndexReader:
         return self._dict_df
 
 
+# a docs(doc_idx, doc_len) side up to this size is broadcast into the
+# distributed plans' postings join; past it Spark picks the join
+BROADCAST_DOCS_MAX = 5_000_000
+
+
+def _bm25_slots(spark: SparkSession, gens: list[tuple[str, int]], terms: list[str],
+                n_docs: int, avg_dl: float, k1: float, b: float, mode: str) -> DataFrame:
+    """Distributed BM25 over the generations ``gens`` ((directory, slot
+    base)): DataFrame(slot, score) of the matching slots. Plain Spark SQL:
+    each generation's postings under ``term_id IN (...)`` (ids and dfs from
+    a driver-side dictionary read; the dfs summed over generations give
+    the idf, with Python's ``math.log`` like the in-driver scorer), joined
+    to a broadcast (term_id, idf) table and to the generation's
+    docs(doc_idx, doc_len)."""
+    dicts = [read_table(os.path.join(d, "dict"), ["term", "term_id", "df"],
+                        (("term", "in", terms),)) for d, _base in gens]
+    df: dict[str, int] = {}
+    for dic in dicts:
+        for t, n in zip(dic["term"].to_pylist(), dic["df"].to_pylist()):
+            df[t] = df.get(t, 0) + int(n)
+    idf = {t: math.log(1.0 + (n_docs - n + 0.5) / (n + 0.5)) for t, n in df.items()}
+    parts = []
+    for (d, base), dic in zip(gens, dicts):
+        if dic.num_rows == 0:
+            continue
+        ids = dic["term_id"].to_pylist()
+        idf_tbl = spark.createDataFrame(
+            [(int(i), idf[t]) for i, t in zip(ids, dic["term"].to_pylist())],
+            "term_id int, idf double",
+        )
+        docs = spark.read.parquet(os.path.join(d, "docs")).select(
+            F.col("doc_idx").cast("int"), "doc_len")
+        if n_docs <= BROADCAST_DOCS_MAX:
+            docs = F.broadcast(docs)
+        posts = (
+            spark.read.parquet(os.path.join(d, "postings"))
+            .filter(F.col("term_id").isin(ids))
+            .join(F.broadcast(idf_tbl), "term_id")
+            .join(docs, "doc_idx")
+        )
+        parts.append(posts.select(
+            (F.col("doc_idx") + F.lit(base)).cast("long").alias("slot"),
+            (F.col("idf") * F.col("tf") / (F.col("tf") + F.lit(k1) * (
+                F.lit(1.0 - b) + F.lit(b) * F.col("doc_len") / F.lit(avg_dl)))).alias("score"),
+        ))
+    if not parts:
+        return spark.createDataFrame([], "slot long, score double")
+    agg = functools.reduce(DataFrame.unionByName, parts).groupBy("slot").agg(
+        F.sum("score").alias("score"), F.count("*").alias("_nm"))
+    if mode == "and":
+        # posting rows are unique per (term, doc), so the row count per slot
+        # IS the matched-term count; a term absent from the corpus caps it
+        # below len(terms) → empty result, matching ES operator:and
+        agg = agg.filter(F.col("_nm") == len(terms))
+    return agg.drop("_nm")
+
+
 def bm25_topk_spark(
     spark: SparkSession, index_dir: str, query: str, k: int = 10, mode: str = "or"
 ) -> DataFrame:
     """Distributed BM25 top-k: returns DataFrame(doc_id, score) ordered.
     mode="and" = ES operator:and (all analyzed terms must match)."""
-    with open(os.path.join(index_dir, "stats.json")) as f:
-        stats = json.load(f)
-    n_docs, avg_dl, k1, b = stats["n_docs"], stats["avg_dl"], stats["k1"], stats["b"]
+    stats = read_stats(index_dir)
     terms = sorted(set(tokenize_text(query)))
     if not terms:
         return spark.createDataFrame([], "doc_id long, score double")
-
-    seg = spark.read.parquet(os.path.join(index_dir, "segments")).filter(
-        F.col("term").isin(terms)
-    )
-    # df per term from the dictionary (pushdown on term), broadcast-joined.
-    dic = (
-        spark.read.parquet(os.path.join(index_dir, "dict"))
-        .filter(F.col("term").isin(terms))
-        .withColumn(
-            "idf",
-            F.log(F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-        )
-    )
-
-    def decode(batches):
-        # one vectorized decode per Arrow batch (decode_doc_blocks +
-        # joined varint streams) — no per-block pandas objects
-        for pdf in batches:
-            if pdf.empty:
-                yield pd.DataFrame({"term": pd.Series(dtype="object"),
-                                    "doc_idx": pd.Series(dtype="int64"),
-                                    "tf": pd.Series(dtype="int64"),
-                                    "doc_len": pd.Series(dtype="int64")})
-                continue
-            counts = pdf["n"].to_numpy(np.int64)
-            yield pd.DataFrame({
-                "term": np.repeat(pdf["term"].to_numpy(object), counts),
-                "doc_idx": decode_doc_blocks(list(pdf["docs_bin"]), counts),
-                "tf": varint_decode(b"".join(pdf["tfs_bin"])).astype(np.int64),
-                "doc_len": varint_decode(b"".join(pdf["dls_bin"])).astype(np.int64),
-            })
-
-    # doc_len rides inside the segment blocks (Lucene-norms-style), so the
-    # hot path needs NO join against the docs table — at 10^12 docs that
-    # join was the one shuffle this plan had left. doc_idx is assigned in
-    # doc_id order (assign_dense_doc_idx), so the (score desc, doc_idx asc)
-    # tie-break below is identical to tie-breaking on doc_id.
-    # (store_doclens=False indexes fall back to the docs join below.
-    # A stats.json that predates the dls_bin layout has no key at all —
-    # and no dls_bin column — so the missing key must default to False.)
-    has_dls = stats.get("store_doclens", False)
-    if has_dls:
-        posts = seg.select("term", "n", "docs_bin", "tfs_bin", "dls_bin").mapInPandas(
-            decode, schema="term string, doc_idx long, tf long, doc_len long"
-        )
-    else:
-        def decode_nodl(batches):
-            for pdf in batches:
-                if pdf.empty:
-                    yield pd.DataFrame({"term": pd.Series(dtype="object"),
-                                        "doc_idx": pd.Series(dtype="int64"),
-                                        "tf": pd.Series(dtype="int64")})
-                    continue
-                counts = pdf["n"].to_numpy(np.int64)
-                yield pd.DataFrame({
-                    "term": np.repeat(pdf["term"].to_numpy(object), counts),
-                    "doc_idx": decode_doc_blocks(list(pdf["docs_bin"]), counts),
-                    "tf": varint_decode(b"".join(pdf["tfs_bin"])).astype(np.int64),
-                })
-
-        raw = seg.select("term", "n", "docs_bin", "tfs_bin").mapInPandas(
-            decode_nodl, schema="term string, doc_idx long, tf long"
-        )
-        dl_tbl = spark.read.parquet(os.path.join(index_dir, "docs")).select(
-            "doc_idx", "doc_len"
-        )
-        posts = raw.join(dl_tbl, "doc_idx")
-    scored = posts.join(F.broadcast(dic.select("term", "idf")), "term").withColumn(
-        "score",
-        F.col("idf")
-        * F.col("tf")
-        / (
-            F.col("tf")
-            + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("doc_len") / F.lit(avg_dl))
-        ),
-    )
-    agg = scored.groupBy("doc_idx").agg(
-        F.sum("score").alias("score"), F.count("*").alias("_nm")
-    )
-    if mode == "and":
-        # posting rows are unique per (term, doc), so the row count per doc
-        # IS the matched-term count; a term absent from the corpus caps it
-        # below len(terms) → empty result, matching ES operator:and
-        agg = agg.filter(F.col("_nm") == len(terms))
-    topk = (
-        agg.drop("_nm")
-        .orderBy(F.col("score").desc(), F.col("doc_idx").asc())
-        .limit(k)
-    )
-    # doc_id lookup for k rows only: broadcast the top-k side into the scan
-    docs = spark.read.parquet(os.path.join(index_dir, "docs")).select("doc_idx", "doc_id")
+    agg = _bm25_slots(spark, [(index_dir, 0)], terms, stats["n_docs"], stats["avg_dl"],
+                      stats["k1"], stats["b"], mode)
+    # doc_idx is assigned in doc_id order (assign_dense_doc_idx), so the
+    # (score desc, doc_idx asc) tie-break is identical to tie-breaking on
+    # doc_id; the doc_id lookup joins the top k rows only
+    topk = agg.orderBy(F.col("score").desc(), F.col("slot").asc()).limit(k)
+    docs = spark.read.parquet(os.path.join(index_dir, "docs")).select(
+        F.col("doc_idx").cast("long").alias("slot"), "doc_id")
     return (
-        docs.join(F.broadcast(topk), "doc_idx")
+        docs.join(F.broadcast(topk), "slot")
         .select("doc_id", "score")
         .orderBy(F.col("score").desc(), F.col("doc_id").asc())
     )
@@ -554,7 +436,7 @@ class TermAtATimeScorer:
         if mode != "and" or len(postings) == len(terms):  # else a term is absent
             for term in terms:
                 if term in postings:
-                    docs, tfs, _ = postings[term]
+                    docs, tfs = postings[term]
                     idf = r.term_idf(term, len(docs))
                     parts.append((docs, _bm25(r, idf, tfs, doc_len[docs], r.avg_dl), True))
         slots, scores = _accumulate(parts, len(terms) if mode == "and" else 1, live)
@@ -1042,25 +924,14 @@ def _raise_no_positions():
 
 
 def _fetch_positional(r, terms: list[str]):
-    """Shared positional fetch+decode (phrase_topk / match_phrase_prefix):
-    term → (docs, per-posting position counts, ONE flat absolute-position
-    array) — per-block varint streams concatenate losslessly, so each term
-    costs one decode, never one array object per posting. On a shard
-    reader only the shard's postings and their positions are kept, in
-    shard-local slots (``IndexReader.to_shard``). Returns None when no term
-    matched; raises when the index stores no positions."""
-    blk = r.fetch_blocks(terms, positions=True)
-    if len(blk) == 0:
-        return None
-    if "npos_bin" not in blk or len(blk.joined("npos_bin")) == 0:
+    """Shared positional fetch (phrase_topk / match_phrase_prefix): term →
+    (slots, per-posting position counts, ONE flat position array) — the
+    tfs are the counts, so a term costs slices, never one array object per
+    posting. Returns None when no term matched; raises when the index
+    stores no positions."""
+    if not r.positions_stored:
         _raise_no_positions()
-    per_term: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-    for term, g in blk.by_term():
-        offs = g["doc_off"] if "doc_off" in g else None
-        docs = decode_doc_blocks(g["docs_bin"], g["n"], offs)
-        counts, flat = decode_position_flat(g.joined("npos_bin"), g.joined("pos_bin"))
-        per_term[term] = r.to_shard(docs, counts, flat)
-    return per_term
+    return r.fetch_blocks(terms, positions=True) or None
 
 
 def _gather_cand_positions(per_term, term: str, cand: np.ndarray):
@@ -1109,7 +980,7 @@ def bool_topk(
     if all(t in postings for t in must):  # else a required term is absent
         for term in scoring:
             if term in postings:
-                docs, tfs, _ = postings[term]
+                docs, tfs = postings[term]
                 idf = r.term_idf(term, len(docs))
                 parts.append((docs, _bm25(r, idf, tfs, doc_len[docs], r.avg_dl), term in must))
     slots, scores = _accumulate(parts, len(must), live)
@@ -1522,8 +1393,8 @@ def serve_topk(
     """DEFAULT serving entry point, cost-switched so that per-node memory
     stays bounded: below ``min_docs`` it is exactly
     ``TermAtATimeScorer(reader).score`` on one reader; above, each
-    shard-scoped reader loads only its own slot range (block-range-pruned
-    segment reads, O(n/shards) doc arrays, shard-local liveDocs), scores it
+    shard-scoped reader loads only its own slot range (row-group-masked
+    postings reads, O(n/shards) doc arrays, shard-local liveDocs), scores it
     with ``TermAtATimeScorer`` and returns a local top-k, and the
     coordinator merges the lists by (score desc, doc_id asc) — ES's
     dfs_query_then_fetch. Bit-equal to the unsharded scorer: idf comes from
@@ -1852,7 +1723,7 @@ def explain_score(
     slot = int(slots[-1])
     dl = float(doc_len[slot])
     out = []
-    for term, (docs, tfs, _g) in sorted(reader.fetch_postings(terms).items()):
+    for term, (docs, tfs) in sorted(reader.fetch_postings(terms).items()):
         df = reader.term_df(term, len(docs))
         pos = np.nonzero(docs == slot)[0]
         if pos.size == 0:
@@ -1972,7 +1843,7 @@ def fielded_norms_topk(
         fld = term.split(":", 1)[0]
         st = field_stats[fld]
         n_f, avg_f = int(st["n"]), float(st["avg_dl"])
-        docs, tfs, _g = postings[term]
+        docs, tfs = postings[term]
         df = reader.term_df(term, len(docs))
         idf = math.log(1.0 + (n_f - df + 0.5) / (df + 0.5))
         boost = float(boosts.get(fld, 1.0)) if boosts else 1.0
@@ -2268,7 +2139,7 @@ def terms_set_topk(
         return []
     parts = []
     for term in sorted(postings):
-        docs, tfs, _ = postings[term]
+        docs, tfs = postings[term]
         idf = r.term_idf(term, len(docs))
         parts.append((docs, _bm25(r, idf, tfs, doc_len[docs], r.avg_dl), True))
     # postings are distinct per term, so a doc's count is its distinct matches

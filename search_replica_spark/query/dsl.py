@@ -609,7 +609,7 @@ def _score_map(reader, q, live, ih=None, leaf_k=None) -> dict[int, float]:
             [f"{JOIN_PARENT_FIELD}:{p}" for p in sorted(matched)]
         )
         out: dict[int, float] = {}
-        for t, (slots, _tf, _g) in post.items():
+        for t, (slots, _tf) in post.items():
             if live is not None:
                 slots = slots[live[slots]]
             pscore = matched[int(t.split(":", 1)[1])]
@@ -718,7 +718,7 @@ def _has_child_map(reader, body: dict, live, ih=None) -> dict[int, float]:
     terms = reader.expand_prefix(f"{JOIN_PARENT_FIELD}:", max_expansions=None)
     post = reader.fetch_postings(terms)
     out: dict[int, float] = {}
-    for t, (slots, _tf, _g) in post.items():
+    for t, (slots, _tf) in post.items():
         if live is not None:
             slots = slots[live[slots]]
         hits = [

@@ -1,17 +1,18 @@
-"""Driver-side columnar block store: the pinned segment store of a reader.
+"""Driver-side posting store: the pinned postings of a reader.
 
-A segment row is one posting block of one term. The store keeps them
-term-sorted, as NumPy columns (``n``, ``block_id`` and, for generational
-readers, ``doc_off``) plus one contiguous buffer with an offsets array per binary
-stream (``docs_bin``, ``tfs_bin``, and ``npos_bin``/``pos_bin`` when
-positions are pinned). Blocks stay compressed. A term maps to its row
-range, so a lookup is a dict probe and a slice: no per-row Python objects
-and no DataFrame on the request path.
+Format-2 postings are plain columns, ``term_id, doc_idx, tf`` (and
+``positions``), one row per posting, sorted by (term_id, doc_idx); the
+dictionary gives each term its row range ``[start, start + df)``. A
+``PostingStore`` holds one ``Postings`` part per generation: the doc slots
+and tfs as flat int32 arrays, the flat token positions when they are
+pinned, and a term → row range map. A term's postings are its slice of
+each part, concatenated in part (generation) order, so a lookup is a dict
+probe and a slice: no decode, no per-row Python objects and no DataFrame
+on the request path.
 
-A pinned store is built from the segment parquet read in the driver
-(``read_table``, no Spark job); an unpinned request builds one from a
-Spark scan's ``toArrow()``. Either way, after the sort, the Arrow binary
-columns' offsets and data buffers are used as they are.
+A pinned part is read from the postings parquet in the driver with no
+Spark job (``read_postings``); an unpinned request builds its parts from a
+Spark scan's ``toArrow()`` (``Postings.from_rows``).
 """
 
 from __future__ import annotations
@@ -24,15 +25,13 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
-STREAMS = ("docs_bin", "tfs_bin", "npos_bin", "pos_bin")
+from search_replica_spark.index.manifest import part_files
 
 
 def read_table(table_dir: str, columns, filters=()) -> pa.Table:
     """``columns`` of the parquet table at ``table_dir``, read in the
     driver with no Spark job: one ``ParquetFile`` per part file, in name
-    order; names starting with ``_`` or ``.`` are skipped, as Spark's file
-    listing skips them. A column a file lacks is left out, so an index
-    written before the column existed still opens.
+    order (``part_files``). A column a file lacks is left out.
 
     ``filters`` is a conjunction of ``(column, op, value)`` conditions,
     ``op`` one of ``>=``, ``<`` and ``in``. A row group whose min/max
@@ -44,10 +43,8 @@ def read_table(table_dir: str, columns, filters=()) -> pa.Table:
     14–24 MB above this helper's on the benchmark workloads, past the
     benchmark's 10% bound."""
     parts, schema = [], None
-    for name in sorted(os.listdir(table_dir)):
-        if name.startswith(("_", ".")):
-            continue
-        pf = pq.ParquetFile(os.path.join(table_dir, name))
+    for path in part_files(table_dir):
+        pf = pq.ParquetFile(path)
         cols = [c for c in columns if c in pf.schema_arrow.names]
         schema = pa.schema([pf.schema_arrow.field(c) for c in cols])
         meta = pf.metadata
@@ -58,7 +55,7 @@ def read_table(table_dir: str, columns, filters=()) -> pa.Table:
         fcols = [c for c in dict.fromkeys(c for c, _op, _v in filters) if c not in cols]
         t = pf.read_row_groups(groups, columns=cols + fcols, use_threads=False)
         if filters:
-            t = t.filter(functools.reduce(pc.and_, (_OPS[op](t[c], v) for c, op, v in filters)))
+            t = t.filter(_mask(t, filters))
         parts.append(t.select(cols).replace_schema_metadata())
     if schema is None:
         raise FileNotFoundError(f"no parquet part files in {table_dir}")
@@ -70,6 +67,10 @@ _OPS = {
     "<": pc.less,
     "in": lambda col, v: pc.is_in(col, value_set=pa.array(list(v), type=col.type)),
 }
+
+
+def _mask(t: pa.Table, filters):
+    return functools.reduce(pc.and_, (_OPS[op](t[c], v) for c, op, v in filters))
 
 
 def _may_match(rg, filters) -> bool:
@@ -92,96 +93,140 @@ def _may_match(rg, filters) -> bool:
     return True
 
 
-def _stream(col: pa.ChunkedArray) -> tuple[np.ndarray, memoryview]:
-    """(offsets int64[rows + 1], data) of a single-chunk binary column."""
-    if col.num_chunks == 0:
-        return np.zeros(1, np.int64), memoryview(b"")
-    arr = col.chunk(0)
-    _validity, offsets, data = arr.buffers()
-    width = 8 if pa.types.is_large_binary(arr.type) else 4
-    offs = np.frombuffer(
-        offsets, dtype=np.int64 if width == 8 else np.int32,
-        count=len(arr) + 1, offset=arr.offset * width,
-    ).astype(np.int64)
-    return offs, memoryview(data) if data is not None else memoryview(b"")
+class Postings:
+    """One generation's postings in a reader's slot space: ``docs`` and
+    ``tfs`` int32 arrays, ``pos`` the flat positions (None when not
+    pinned; posting i owns ``tfs[i]`` of them), and each term's row range
+    ``[starts[i], ends[i])``, i = ``index[term]``."""
+
+    __slots__ = ("index", "starts", "ends", "docs", "tfs", "pos", "pos_offs")
+
+    def __init__(self, terms, starts: np.ndarray, ends: np.ndarray, docs: np.ndarray,
+                 tfs: np.ndarray, pos: np.ndarray | None):
+        self.index = dict(zip(terms, range(len(starts))))
+        self.starts, self.ends = starts.tolist(), ends.tolist()
+        self.docs, self.tfs, self.pos = docs, tfs, pos
+        self.pos_offs = None
+        if pos is not None:
+            self.pos_offs = np.zeros(tfs.size + 1, np.int64)
+            np.cumsum(tfs, out=self.pos_offs[1:])
+
+    def span(self, term: str) -> tuple[int, int] | None:
+        i = self.index.get(term)
+        return None if i is None else (self.starts[i], self.ends[i])
+
+    @classmethod
+    def from_rows(cls, terms_by_id, tid: np.ndarray, docs: np.ndarray,
+                  tfs: np.ndarray, pos: np.ndarray | None, offset: int) -> Postings:
+        """A part from rows sorted by (term_id, doc_idx): ``terms_by_id``
+        maps a term_id to its term, ``offset`` turns doc_idx into slots."""
+        firsts, ends = term_runs(tid)
+        docs = docs.astype(np.int32, copy=False)
+        return cls([terms_by_id[i] for i in tid[firsts].tolist()], firsts, ends,
+                   docs + np.int32(offset) if offset else docs,
+                   tfs.astype(np.int32, copy=False), pos)
 
 
-class BlockStore:
-    """Term-sorted block columns, compressed streams and a term → row map.
+def term_runs(tid: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(first row, end row) of each run of equal values in ``tid``."""
+    if not tid.size:
+        return np.empty(0, np.int64), np.empty(0, np.int64)
+    firsts = np.flatnonzero(np.r_[True, tid[1:] != tid[:-1]])
+    return firsts, np.append(firsts[1:], tid.size)
 
-    ``table`` must be sorted by term, then by block order within a term.
-    ``positions`` records whether the position streams were asked for, so
-    a later request for them can tell that the store must be rebuilt.
-    Columns other than ``term`` and the streams become int64/float64
-    arrays in ``cols``, which a reader may rewrite before serving (see
-    ``MultiGenReader``)."""
 
-    def __init__(self, table: pa.Table, positions: bool):
-        table = table.combine_chunks()
+def read_postings(index_dir: str, offset: int, rng: tuple[int, int] | None,
+                  positions: bool) -> Postings:
+    """One generation's postings read in the driver (no Spark job), as
+    slots ``doc_idx + offset``. With ``rng`` only the rows whose doc_idx
+    lies in ``[lo, hi)`` are kept: each row group is masked as it is read
+    (row groups whose doc_idx statistics miss the range are skipped), so
+    resident memory is O(the range's share) plus one row group; the term
+    ranges are then recomputed from the kept rows. Without it, doc_idx and
+    tf go row group by row group into preallocated int32 arrays, and each
+    term's range is ``[start, start + df)`` from the dictionary."""
+    files = [pq.ParquetFile(p) for p in part_files(os.path.join(index_dir, "postings"))]
+    cols = ["doc_idx", "tf"] + (["positions"] if positions else [])
+    if rng is None:
+        d = read_table(os.path.join(index_dir, "dict"), ["term", "df", "start"])
+        total = sum(pf.metadata.num_rows for pf in files)
+        docs, tfs, pos, at = np.empty(total, np.int32), np.empty(total, np.int32), [], 0
+        for pf in files:
+            for i in range(pf.num_row_groups):
+                t = pf.read_row_group(i, columns=cols, use_threads=False)
+                n = t.num_rows
+                docs[at:at + n] = t.column("doc_idx").to_numpy()
+                tfs[at:at + n] = t.column("tf").to_numpy()
+                if positions:
+                    pos.append(pc.list_flatten(t.column("positions")).to_numpy())
+                at += n
+        if offset:
+            docs += np.int32(offset)
+        starts = d["start"].to_numpy()
+        return Postings(_strings(d["term"]), starts, starts + d["df"].to_numpy(),
+                        docs, tfs, _cat(pos) if positions else None)
+    lo, hi = rng
+    flt = (("doc_idx", ">=", lo), ("doc_idx", "<", hi))
+    kept: dict[str, list] = {c: [] for c in ["term_id", *cols]}
+    for pf in files:
+        for i in range(pf.num_row_groups):
+            if not _may_match(pf.metadata.row_group(i), flt):
+                continue
+            t = pf.read_row_group(i, columns=["term_id", *cols], use_threads=False)
+            t = t.filter(_mask(t, flt))
+            for c in kept:
+                col = t.column(c)
+                kept[c].append(pc.list_flatten(col).to_numpy() if c == "positions"
+                               else col.to_numpy())
+    d = read_table(os.path.join(index_dir, "dict"), ["term", "term_id"]).sort_by("term_id")
+    terms_by_id = _strings(d["term"])  # term_id is the term's rank: 0..n-1
+    return Postings.from_rows(
+        terms_by_id, _cat(kept["term_id"]), _cat(kept["doc_idx"]), _cat(kept["tf"]),
+        _cat(kept["positions"]) if positions else None, offset,
+    )
+
+
+class PostingStore:
+    """The postings a reader serves from: one ``Postings`` part per
+    generation, in generation (slot) order. ``positions`` records whether
+    the positions were asked for, so a later request for them can tell
+    that the store must be rebuilt."""
+
+    def __init__(self, parts: list[Postings], positions: bool):
+        self.parts = parts
         self.positions = positions
-        self.rows = table.num_rows
-        terms = table.column("term")
-        if self.rows:
-            runs = pc.run_end_encode(terms.chunk(0))
-            ends = runs.run_ends.to_numpy().astype(np.int64)
-            names = runs.values.to_pylist()
-        else:
-            ends, names = np.empty(0, np.int64), []
-        self.term_starts = np.concatenate(([0], ends))[:-1].astype(np.int64)
-        self.term_ends = ends
-        self.index = dict(zip(names, zip(self.term_starts.tolist(), ends.tolist())))
-        self.cols: dict[str, np.ndarray] = {}
-        self.streams: dict[str, tuple[np.ndarray, memoryview]] = {}
-        for name in table.column_names:
-            col = table.column(name)
-            if name in STREAMS:
-                self.streams[name] = _stream(col)
-            elif name != "term":
-                dtype = np.float64 if pa.types.is_floating(col.type) else np.int64
-                self.cols[name] = col.to_numpy().astype(dtype, copy=False)
 
-    def select(self, terms) -> Blocks:
-        """The rows of ``terms`` present in the store, in term order."""
-        spans = sorted((t, *self.index[t]) for t in set(terms) if t in self.index)
-        return Blocks(self, spans)
+    @property
+    def rows(self) -> int:
+        return sum(p.docs.size for p in self.parts)
+
+    def select(self, terms, positions: bool = False) -> dict[str, tuple]:
+        """term → (slots, tfs), or (slots, tfs, flat positions) with
+        ``positions``, for the terms present, in term order. A term held by
+        one part is a zero-copy slice of it; otherwise its slices are
+        concatenated in part order, which keeps its slots ascending."""
+        out = {}
+        for t in sorted(set(terms)):
+            hits = [(p, *span) for p in self.parts if (span := p.span(t)) is not None]
+            if not hits:
+                continue
+            docs = _cat([p.docs[s:e] for p, s, e in hits])
+            tfs = _cat([p.tfs[s:e] for p, s, e in hits])
+            if positions:
+                flat = _cat([p.pos[p.pos_offs[s]:p.pos_offs[e]] for p, s, e in hits])
+                out[t] = (docs, tfs, flat)
+            else:
+                out[t] = (docs, tfs)
+        return out
 
 
-class Blocks:
-    """A slice of a ``BlockStore``: the row ranges of some terms.
+def _strings(col: pa.ChunkedArray) -> np.ndarray:
+    """A string column as an object array (an order of magnitude faster
+    than ``to_pylist()``, which dominated a pin's time)."""
+    return col.to_numpy(zero_copy_only=False)
 
-    ``len()`` is the block count. ``blk[col]`` is a NumPy column for a
-    numeric column and the list of per-block buffers for a stream;
-    ``by_term()`` yields each term's contiguous slice."""
 
-    def __init__(self, store: BlockStore, spans: list[tuple[str, int, int]]):
-        self.store = store
-        self.spans = spans
-
-    def __len__(self) -> int:
-        return sum(hi - lo for _t, lo, hi in self.spans)
-
-    def __contains__(self, col: str) -> bool:
-        return col in self.store.cols or col in self.store.streams
-
-    def __getitem__(self, col: str):
-        if col in self.store.streams:
-            offs, data = self.store.streams[col]
-            return [
-                data[a:b]
-                for _t, lo, hi in self.spans
-                for a, b in zip(offs[lo:hi].tolist(), offs[lo + 1 : hi + 1].tolist())
-            ]
-        arr = self.store.cols[col]
-        parts = [arr[lo:hi] for _t, lo, hi in self.spans]
-        return parts[0] if len(parts) == 1 else np.concatenate([arr[:0], *parts])
-
-    def joined(self, col: str) -> bytes | memoryview:
-        """One stream's bytes over every row, in row order (a term's
-        blocks are contiguous, so one span is a zero-copy view)."""
-        offs, data = self.store.streams[col]
-        parts = [data[offs[lo] : offs[hi]] for _t, lo, hi in self.spans]
-        return parts[0] if len(parts) == 1 else b"".join(parts)
-
-    def by_term(self):
-        for span in self.spans:
-            yield span[0], Blocks(self.store, [span])
+def _cat(arrays: list[np.ndarray]) -> np.ndarray:
+    if not arrays:
+        return np.empty(0, np.int32)
+    return arrays[0] if len(arrays) == 1 else np.concatenate(arrays)

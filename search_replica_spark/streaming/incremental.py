@@ -44,40 +44,50 @@ changes.
 
 from __future__ import annotations
 
+import fcntl
+import functools
 import json
 import os
+import re
 import shutil
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import functions as F
 
 from search_replica_spark.analysis import tokenize_text
 from search_replica_spark.config import IndexConfig
 from search_replica_spark.errors import SchemaMismatch, with_retries
 from search_replica_spark.index.build import build_index, with_doc_ids
-from search_replica_spark.index.manifest import write_durable
-from search_replica_spark.query.bm25 import IndexReader, TermAtATimeScorer
-from search_replica_spark.query.store import BlockStore
+from search_replica_spark.index.manifest import read_stats, write_durable
+from search_replica_spark.query.bm25 import IndexReader, TermAtATimeScorer, _bm25_slots
 
 GENS_FILE = "generations.json"
 CHANGE_COL = "_change_type"  # insert | update | update_partial | delete
 # (Iceberg CDC dialect + ES's partial-update bulk op, table.go:143-151)
 
-# Per-index commit lock: generational commits are a read-modify-write of
-# generations.json plus a build into the next gen=N directory, so two
-# writers interleaving (e.g. index_stream and inline_stream foreachBatch
-# THREADS of one driver, each with its own batchId cadence) would both
-# compute the same gen_id and clobber each other's output + commit-log
-# entry. Structured Streaming runs every foreachBatch in the SAME driver
-# process, so a per-index re-entrant thread lock serializes them; a
-# SECOND driver writing the same index concurrently is outside the
-# engine's contract (same as Lucene's single-IndexWriter rule) and needs
-# external coordination.
+# Per-index writer lock, at two levels. Generational commits are a
+# read-modify-write of generations.json plus a build into the next gen=N
+# directory, so two writers interleaving would compute the same gen_id and
+# clobber each other's output and commit-log entry.
+#   - In one driver (index_stream and inline_stream foreachBatch THREADS,
+#     each with its own batchId cadence) a per-index re-entrant thread lock
+#     serializes them.
+#   - Across processes, the outermost write entry point takes an exclusive
+#     ``fcntl.flock`` on ``index_dir/.write.lock`` (Lucene's write.lock) and
+#     a second driver fails at once with ``IndexLocked``. Nested entry
+#     points (apply_inline_updates → add_generation) reuse the held file:
+#     flock locks belong to an open file description, so a second open()
+#     in the same process would conflict with the first.
 import threading as _threading
 
+LOCK_FILE = ".write.lock"
 _INDEX_LOCKS: dict[str, _threading.RLock] = {}
 _INDEX_LOCKS_GUARD = _threading.Lock()
+_HELD_FLOCKS: dict[str, list[int]] = {}  # index → [fd, depth], under its RLock
+
+
+class IndexLocked(RuntimeError):
+    """Another process holds the index's writer lock."""
 
 
 def _index_write_lock(index_dir: str) -> _threading.RLock:
@@ -88,10 +98,36 @@ def _index_write_lock(index_dir: str) -> _threading.RLock:
         return _INDEX_LOCKS[key]
 
 
+def _acquire_flock(key: str) -> None:
+    held = _HELD_FLOCKS.get(key)
+    if held is not None:
+        held[1] += 1
+        return
+    os.makedirs(key, exist_ok=True)
+    fd = os.open(os.path.join(key, LOCK_FILE), os.O_RDWR | os.O_CREAT, 0o644)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+    except BlockingIOError:
+        os.close(fd)
+        raise IndexLocked(
+            f"{key} is being written by another process (it holds {LOCK_FILE}); "
+            "an index takes one writer at a time"
+        ) from None
+    _HELD_FLOCKS[key] = [fd, 1]
+
+
+def _release_flock(key: str) -> None:
+    held = _HELD_FLOCKS[key]
+    held[1] -= 1
+    if held[1] == 0:
+        del _HELD_FLOCKS[key]
+        os.close(held[0])  # closing the descriptor releases the flock
+
+
 def _locked_writer(index_dir_pos: int):
-    """Serialize a whole write entry point on the per-index RLock (the
-    lock is re-entrant, so apply_inline_updates → add_generation nests)."""
-    import functools
+    """Serialize a whole write entry point on the per-index RLock and the
+    inter-process writer lock (both re-entrant within a thread, so
+    apply_inline_updates → add_generation nests)."""
 
     def deco(fn):
         @functools.wraps(fn)
@@ -99,8 +135,13 @@ def _locked_writer(index_dir_pos: int):
             index_dir = kwargs.get("index_dir")
             if index_dir is None and len(args) > index_dir_pos:
                 index_dir = args[index_dir_pos]
-            with _index_write_lock(str(index_dir)):
-                return fn(*args, **kwargs)
+            key = os.path.abspath(str(index_dir))
+            with _index_write_lock(key):
+                _acquire_flock(key)
+                try:
+                    return fn(*args, **kwargs)
+                finally:
+                    _release_flock(key)
 
         return wrapper
 
@@ -139,6 +180,35 @@ def _save_gens(index_dir: str, gens: list[dict]) -> None:
     write_durable(os.path.join(index_dir, GENS_FILE), json.dumps(gens, indent=2))
 
 
+def _rewrite_dir(index_dir: str, gens: list[dict]) -> str:
+    """The directory a rewrite of the whole index (merge_generations,
+    compact) builds its one generation in: ``gen=0.<k>``, a name no
+    committed generation uses and add_generation never builds into (it
+    writes ``gen=<n>``). Leftovers of a crashed rewrite, which the commit
+    log does not name, are removed first."""
+    committed = {os.path.abspath(g["dir"]) for g in gens if g["dir"]}
+    ks = [0]
+    for name in os.listdir(index_dir) if os.path.isdir(index_dir) else ():
+        m = re.fullmatch(r"gen=0\.(\d+)", name)
+        path = os.path.join(index_dir, name)
+        if m and os.path.abspath(path) in committed:
+            ks.append(int(m.group(1)))
+        elif m:
+            shutil.rmtree(path, ignore_errors=True)
+    return os.path.join(index_dir, f"gen=0.{max(ks) + 1}")
+
+
+def _commit_rewrite(index_dir: str, old: list[dict], entry: dict) -> None:
+    """Commit ``entry`` as the index's only generation, then delete the
+    old generations' directories: a crash before the commit leaves the old
+    index as it was, and one after it leaves only directories the commit
+    log no longer names."""
+    _save_gens(index_dir, [entry])
+    for g in old:
+        if g["dir"] and os.path.abspath(g["dir"]) != os.path.abspath(entry["dir"]):
+            shutil.rmtree(g["dir"], ignore_errors=True)
+
+
 def _adopt_plain_index(index_dir: str) -> list[dict]:
     """Turn a plain ``build_index`` output into generation 0 IN PLACE (move
     its files under gen=0/, write generations.json). Called by
@@ -173,7 +243,7 @@ def _adopt_plain_index(index_dir: str) -> list[dict]:
     gen_dir = os.path.join(index_dir, "gen=0")
     os.makedirs(gen_dir, exist_ok=True)
     for name in os.listdir(index_dir):
-        if name in ("gen=0", GENS_FILE, "stats.json") or name.endswith(".tmp"):
+        if name in ("gen=0", GENS_FILE, "stats.json", LOCK_FILE) or name.endswith(".tmp"):
             continue
         dst = os.path.join(gen_dir, name)
         if not os.path.exists(dst):
@@ -188,14 +258,21 @@ def _adopt_plain_index(index_dir: str) -> list[dict]:
     return gens
 
 
+def _gen_stats(index_dir: str, g: dict) -> dict:
+    """A live generation's stats.json, format-checked (``read_stats``);
+    the top-level copy while an adoption's move into gen=0 is pending."""
+    d = g["dir"] if os.path.exists(os.path.join(g["dir"], "stats.json")) else index_dir
+    return read_stats(d)
+
+
 def derive_index_cfg(index_dir: str, base: IndexConfig | None = None) -> IndexConfig:
     """An IndexConfig whose BUILD FLAGS match the index's existing
     generations — ES semantics: index settings are fixed at creation, every
     later batch conforms. merge_generations derives the same way; a
     generation built with different positions/source/analyzer settings
-    corrupts the index (schema-mismatched segment unions, unqualified terms
-    that stop matching fielded queries). Tuning knobs (shuffle width, salt
-    thresholds) stay from ``base``. Returns ``base`` unchanged for an empty
+    corrupts the index (schema-mismatched postings unions, unqualified terms
+    that stop matching fielded queries). Tuning knobs (shuffle width) stay
+    from ``base``. Returns ``base`` unchanged for an empty
     index."""
     import dataclasses
 
@@ -219,12 +296,10 @@ def derive_index_cfg(index_dir: str, base: IndexConfig | None = None) -> IndexCo
         cfg,
         input_columns=tuple(ic) if ic else cfg.input_columns,
         store_positions=bool(st.get("store_positions", False)),
-        store_doclens=bool(st.get("store_doclens", True)),
         store_source=bool(st.get("store_source", False)),
         field_analyzers=tuple(tuple(x) for x in fa) if fa else None,
         k1=float(st.get("k1", cfg.k1)),
         b=float(st.get("b", cfg.b)),
-        block_size=int(st.get("block_size", cfg.block_size)),
     )
 
 
@@ -260,7 +335,7 @@ def source_view(spark, index_dir: str):
     With ``IndexConfig(store_source=True)`` builds, the view carries every
     input column (content included) — the stored-fields half of Lucene that
     partial updates and fetch-by-id resolve against. Scale shape: one
-    shuffle on doc_id over the docs stores (tiny vs segments) plus a
+    shuffle on doc_id over the docs stores (tiny vs postings) plus a
     broadcast of the tombstone set.
     """
     gens = _load_gens(index_dir)
@@ -759,6 +834,12 @@ def add_generation(
     a no-op (exactly-once generation content over at-least-once delivery).
     """
     cfg = cfg or IndexConfig()
+    # a new generation must not join an index of an older format
+    committed = [g for g in _load_gens(index_dir) if g["dir"]]
+    for g in committed:
+        _gen_stats(index_dir, g)
+    if not committed and os.path.exists(os.path.join(index_dir, "stats.json")):
+        read_stats(index_dir)
     # a plain build_index output at index_dir becomes generation 0
     # (otherwise this batch would orphan it — see _adopt_plain_index);
     # called unconditionally so a crashed adoption is completed too
@@ -768,7 +849,7 @@ def add_generation(
     # are fixed at creation. Without this, a plain insert batch with the
     # caller's/default cfg against a fielded or positional index would
     # index unqualified terms (field:term queries silently stop matching
-    # new docs) or diverge segment schemas across generations.
+    # new docs) or diverge postings schemas across generations.
     cfg = derive_index_cfg(index_dir, cfg)
     if epoch_id is not None:
         # Spark batchIds are monotonic per stream, so any epoch at or below
@@ -809,7 +890,7 @@ def add_generation(
     shutil.rmtree(gen_dir, ignore_errors=True)  # partial output from a crash
     if batch_df.isEmpty():
         stats = {"n_docs": 0, "total_tokens": 0}
-        gen_dir = None  # delete-only generation: tombstones, no segments
+        gen_dir = None  # delete-only generation: tombstones, no postings
     else:
         # transient sink failures retry with backoff; schema errors escalate
         # (K6 taxonomy — reference search/errors.go:9-47)
@@ -1194,16 +1275,15 @@ def compact(spark, corpus_df, index_dir: str, cfg: IndexConfig | None = None) ->
     """Merge all generations into one by rebuilding from the current table
     snapshot (reference analogue: full reindex from a consistent snapshot,
     postgres/reindex.go + replication.go:100-112). Tombstones and
-    superseded versions vanish — the snapshot is the truth."""
+    superseded versions vanish — the snapshot is the truth. The old
+    generations stay readable until the new one is committed."""
     cfg = cfg or IndexConfig()
-    for g in _load_gens(index_dir):
-        if g["dir"]:
-            shutil.rmtree(g["dir"], ignore_errors=True)
-    gen_dir = os.path.join(index_dir, "gen=0")
+    gens = _load_gens(index_dir)
+    gen_dir = _rewrite_dir(index_dir, gens)
     stats = build_index(spark, corpus_df, gen_dir, cfg)
-    _save_gens(index_dir, [{"gen": 0, "dir": gen_dir, "n_docs": stats["n_docs"],
-                            "total_tokens": stats["total_tokens"],
-                            "epoch_id": None, "deleted_ids": []}])
+    _commit_rewrite(index_dir, gens, {"gen": 0, "dir": gen_dir, "n_docs": stats["n_docs"],
+                                      "total_tokens": stats["total_tokens"],
+                                      "epoch_id": None, "deleted_ids": []})
     return stats
 
 
@@ -1257,15 +1337,17 @@ class LiveDocs:
 
 class MultiGenReader(IndexReader):
     """IndexReader-compatible facade over a generational index: merged
-    stats, last-wins + tombstone liveness (Lucene liveDocs), and BATCHED
-    segment access, each generation's local doc_idx space remapped onto
+    stats, last-wins + tombstone liveness (Lucene liveDocs), and postings
+    of every generation, each generation's local doc_idx space mapped onto
     disjoint global slots (slot = doc_idx + the generation's base). Doc
     arrays and the pinned store are read from every generation's parquet
-    in the driver with no Spark job; an unpinned request fetches the query
-    terms' blocks across ALL generations in one Spark job (union read with
-    `term IN` pushdown per generation path). Because the interface matches
-    IndexReader, the same TermAtATimeScorer runs unchanged over N
-    generations.
+    in the driver with no Spark job: the store keeps one immutable array
+    pair per generation, with the slot base added at pin time, and a
+    term's postings are its per-generation slices concatenated in
+    generation (slot) order. An unpinned request fetches the query terms'
+    rows across ALL generations in one Spark job (a union of per-generation
+    `term_id IN` scans). Because the interface matches IndexReader, the
+    same TermAtATimeScorer runs unchanged over N generations.
     """
 
     def __init__(self, spark, index_dir: str, k1: float = 1.2, b: float = 0.75,
@@ -1276,6 +1358,9 @@ class MultiGenReader(IndexReader):
         if not self.gens:
             raise FileNotFoundError(f"no generations at {index_dir}")
         self.live_gens = [g for g in self.gens if g["dir"]]
+        self.positions_stored = any(
+            _gen_stats(index_dir, g).get("store_positions", False) for g in self.live_gens
+        )
         self.k1, self.b = k1, b
         self.n_docs = int(sum(g["n_docs"] for g in self.gens))
         total_tokens = sum(g["total_tokens"] for g in self.gens)
@@ -1292,7 +1377,6 @@ class MultiGenReader(IndexReader):
         self.shard_range = shard_range
         self._doc_len = None
         self._doc_ids = None
-        self._seg_df = None
         self._pinned = None
         self._live_cache: LiveDocs | None = None
         self._dict_df: dict[str, int] | None = None
@@ -1397,79 +1481,13 @@ class MultiGenReader(IndexReader):
         dead_arr = [int(r["slot"]) for r in dead.distinct().collect()]
         return LiveDocs(self.n_docs, dead_arr)
 
-    # --- batched segment access across generations ---
-    # IndexReader's pin/fetch run unchanged over the hooks below. They are
-    # bound here as well so that each reader class owns its entry points:
+    # --- postings across generations ---
+    # IndexReader's pin/fetch run unchanged over _gens(). They are bound
+    # here as well so that each reader class owns its entry points:
     # perfbench/spans.py wraps them per class, and a call through a
     # subclass override would be traced twice.
     pin_driver = IndexReader.pin_driver
     fetch_blocks = IndexReader.fetch_blocks
-
-    def _segment_scan(self, positions: bool, terms: list[str] | None = None):
-        """ONE union scan over every live generation's segments (with a
-        ``gen`` column), `term IN` pushed down per generation path when
-        ``terms`` is given; None when no generation overlaps this shard. A
-        shard-scoped reader reads only blocks overlapping its slot range —
-        the per-node memory contract of doc-sharded serving."""
-        parts = []
-        for d, gen, _base, rng in self._gens():
-            seg = self.spark.read.parquet(os.path.join(d, "segments"))
-            q = seg if terms is None else seg.filter(F.col("term").isin(list(set(terms))))
-            if rng is not None:
-                # block-range pruning per generation (gen-local doc_idx)
-                q = q.filter(
-                    (F.col("last_doc_idx") >= rng[0]) & (F.col("first_doc_idx") < rng[1])
-                )
-            cols = list(self.META_COLS) + (list(self.POS_COLS) if positions else [])
-            parts.append(
-                q.select(*[c for c in cols if c in seg.columns])
-                .withColumn("gen", F.lit(gen))
-            )
-        if not parts:
-            return None
-        uni = parts[0]
-        for p in parts[1:]:
-            uni = uni.unionByName(p)
-        return uni
-
-    def _pin_table(self, positions: bool) -> pa.Table | None:
-        """Every block this reader holds, each generation's read in the
-        driver (no Spark job) with a ``gen`` column; None when no
-        generation overlaps this shard."""
-        parts = []
-        for d, gen, _base, rng in self._gens():
-            t = self._read_segments(d, rng, positions)
-            parts.append(t.append_column("gen", pa.array(np.full(t.num_rows, gen, np.int32))))
-        return pa.concat_tables(parts) if parts else None
-
-    def _block_store(self, scan, positions: bool) -> BlockStore:
-        return self._store(None if scan is None else scan.toArrow(), positions)
-
-    def _store(self, table: pa.Table | None, positions: bool) -> BlockStore:
-        if table is None:
-            return BlockStore(pa.table({"term": pa.array([], pa.string())}), positions)
-        table = table.sort_by(
-            [("term", "ascending"), ("gen", "ascending"), ("block_id", "ascending")]
-        )
-        store = BlockStore(table, positions)
-        self._remap_blocks(store)
-        return store
-
-    def _remap_blocks(self, store: BlockStore) -> None:
-        """Remap a (term, gen, block)-sorted multi-gen store onto global
-        slots, once, in place: each block's gen base becomes ``doc_off``
-        (added to its decoded doc_idx), and block_id is renumbered into one
-        per-term sequence."""
-        c = store.cols
-        gen = c.pop("gen", None)
-        if gen is None or gen.size == 0:
-            return
-        gids = np.array(sorted(self.bases), dtype=np.int64)
-        c["doc_off"] = np.array([self.bases[g] for g in gids.tolist()], np.int64)[
-            np.searchsorted(gids, gen)
-        ]
-        lens = store.term_ends - store.term_starts
-        c["block_id"] = np.arange(gen.size, dtype=np.int64) - np.repeat(store.term_starts, lens)
 
     def expand_prefix(self, prefix: str, max_expansions: int | None = 50,
                       extra_filter=None):
@@ -1538,23 +1556,20 @@ def merge_generations(spark, index_dir: str, cfg: IndexConfig | None = None) -> 
     touching the source table. ``compact()`` re-reads and re-tokenizes the
     snapshot (the reference's only option — a full reindex,
     postgres/reindex.go); a merge instead rebuilds purely from index data:
-    decode every generation's postings (term, local doc_idx, tf, doc_len),
-    resolve liveness (last-wins + tombstones), reassign dense doc_idx over
-    the LIVE docs, and re-run the standard segment/finalize build stages on
-    the result. Statistics (N, avgdl, df, block maxima) come out computed
+    read every generation's postings (term, slot, tf[, positions]), resolve
+    liveness (last-wins + tombstones), reassign dense doc_idx over the LIVE
+    docs, and re-run the standard postings/finalize build stages on the
+    result. Statistics (N, avgdl, df) come out computed
     over live docs only — exactly what a Lucene merge does to purge
     tombstones. Fully distributed: the only driver state is O(P) offsets.
     """
     import time as _time
-
-    import pandas as pd
 
     from search_replica_spark.index.build import (
         _stage_finalize,
         _stage_segments,
         assign_dense_doc_idx,
     )
-    from search_replica_spark.index.codec import delta_decode, varint_decode
 
     t0 = _time.time()
     # derive EVERY build flag from the index itself (field_analyzers
@@ -1565,7 +1580,7 @@ def merge_generations(spark, index_dir: str, cfg: IndexConfig | None = None) -> 
     gens = _load_gens(index_dir)
     live_gens = [g for g in gens if g["dir"]]
     if not live_gens:
-        raise FileNotFoundError(f"no segment generations at {index_dir}")
+        raise FileNotFoundError(f"no generations with documents at {index_dir}")
 
     # a merge must preserve what the generations actually stored, regardless
     # of the cfg handed in: a positional index silently losing its positions
@@ -1576,8 +1591,7 @@ def merge_generations(spark, index_dir: str, cfg: IndexConfig | None = None) -> 
 
     gen_pos, gen_src = set(), set()
     for g in live_gens:
-        with open(os.path.join(g["dir"], "stats.json")) as f:
-            gst = json.load(f)
+        gst = _gen_stats(index_dir, g)
         gen_pos.add(bool(gst.get("store_positions", False)))
         gen_src.add(bool(gst.get("store_source", False)))
     if len(gen_pos) > 1:
@@ -1636,8 +1650,7 @@ def merge_generations(spark, index_dir: str, cfg: IndexConfig | None = None) -> 
     if live.isEmpty():
         raise ValueError("merge would produce an empty index (everything deleted)")
 
-    out = os.path.join(index_dir, "gen=__merging")
-    shutil.rmtree(out, ignore_errors=True)
+    out = _rewrite_dir(index_dir, gens)
     # the dense assign's output is already range-partitioned and sorted in
     # doc_idx order — write_to persists it directly (no second shuffle) and
     # releases the internal cache
@@ -1646,45 +1659,24 @@ def merge_generations(spark, index_dir: str, cfg: IndexConfig | None = None) -> 
         write_to=os.path.join(out, "docs"),
     )
 
-    pos_cols = ["npos_bin", "pos_bin"] if has_positions else []
-    seg = union_all(
+    # every generation's postings, read with their slot base directly and
+    # their term strings joined back from the generation's dictionary, form
+    # the standard stage intermediate over the live docs
+    pos_cols = ["positions"] if has_positions else []
+    posts = union_all(
         [
-            spark.read.parquet(os.path.join(g["dir"], "segments"))
-            .select("term", "docs_bin", "tfs_bin", *pos_cols,
-                    F.lit(bases[g["gen"]]).alias("doc_off"))
+            spark.read.parquet(os.path.join(g["dir"], "postings"))
+            .join(spark.read.parquet(os.path.join(g["dir"], "dict"))
+                  .select("term", "term_id"), "term_id")
+            .select("term", (F.col("doc_idx") + F.lit(bases[g["gen"]])).alias("slot"),
+                    "tf", *pos_cols)
             for g in live_gens
         ]
     )
-
-    def decode(batches):
-        from search_replica_spark.index.codec import decode_position_lists
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            parts = []
-            for row in pdf.itertuples(index=False):
-                blk = pd.DataFrame({
-                    "term": row.term,
-                    "slot": delta_decode(row.docs_bin).astype("int64") + int(row.doc_off),
-                    "tf": varint_decode(row.tfs_bin).astype("int64"),
-                })
-                if has_positions:
-                    # re-emit per-posting absolute positions so the standard
-                    # segment stage re-encodes them over the merged doc space
-                    blk["positions"] = decode_position_lists(row.npos_bin, row.pos_bin)
-                parts.append(blk)
-            yield pd.concat(parts, ignore_index=True)
-
-    post_schema = "term string, slot long, tf long" + (
-        ", positions array<long>" if has_positions else ""
+    merged = posts.join(live.select("slot", "doc_id"), "slot").select(
+        "doc_id", "term", "tf", *pos_cols
     )
-    posts = seg.mapInPandas(decode, schema=post_schema)
-    live_map = live.select("slot", "doc_id")
-    merged = posts.join(live_map, "slot").select(
-        "doc_id", "term", "tf", *(["positions"] if has_positions else [])
-    )
-    merged.write.mode("overwrite").parquet(os.path.join(out, "postings"))
+    merged.write.mode("overwrite").parquet(os.path.join(out, "_tokens"))
 
     core = _stage_segments(spark, out, cfg)
     stats = _stage_finalize(spark, out, cfg, core, t0)
@@ -1694,36 +1686,27 @@ def merge_generations(spark, index_dir: str, cfg: IndexConfig | None = None) -> 
     # PER SOURCE STREAM — index_stream ("main") and inline_stream
     # ("inline") have independent batchId counters (see add_generation)
     max_eps = _fold_epochs(gens)
-    for g in live_gens:
-        shutil.rmtree(g["dir"], ignore_errors=True)
-    final_dir = os.path.join(index_dir, "gen=0")
-    shutil.rmtree(final_dir, ignore_errors=True)
-    os.rename(out, final_dir)
-    _save_gens(index_dir, [{"gen": 0, "dir": final_dir, "n_docs": stats["n_docs"],
-                            "total_tokens": stats["total_tokens"],
-                            "epoch_id": None, "deleted_ids": [],
-                            "max_epoch": max_eps.get("main"),
-                            **({"max_epochs": max_eps} if max_eps else {})}])
+    _commit_rewrite(index_dir, gens, {
+        "gen": 0, "dir": out, "n_docs": stats["n_docs"],
+        "total_tokens": stats["total_tokens"], "epoch_id": None, "deleted_ids": [],
+        "max_epoch": max_eps.get("main"), **({"max_epochs": max_eps} if max_eps else {}),
+    })
     return stats
 
 
 def bm25_topk_spark_multigen(spark, index_dir: str, query: str, k: int = 10,
                              mode: str = "or"):
-    """Fully DISTRIBUTED BM25 over a generational index — the third strategy
-    (bm25_topk_spark) extended across generations. Everything is DataFrame
-    ops: per-generation term-IN-pruned segment scans union'd, Arrow decode
-    with per-generation slot offsets, merged-df idf broadcast, and LIVENESS
-    as a distributed anti-join (a slot is dead if its doc_id re-appears in a
-    later generation, or a strictly-later tombstone covers it) — no driver
-    array of corpus size anywhere, unlike MultiGenReader's pinned-shard
-    arrays. The liveness join is the one cost a generational index cannot
-    avoid (Lucene pays it as per-segment liveDocs bitmaps); AQE broadcasts
-    the matched-slot side for selective queries, and compaction bounds it.
+    """Fully DISTRIBUTED BM25 over a generational index — bm25_topk_spark's
+    plan (``_bm25_slots``: per-generation ``term_id IN`` postings scans
+    with their slot bases, the merged-df idf broadcast, the docs' doc_len
+    joined) unioned across generations, and LIVENESS as a distributed
+    anti-join (a slot is dead if its doc_id re-appears in a later
+    generation, or a strictly-later tombstone covers it) — no driver array
+    of corpus size anywhere, unlike MultiGenReader's pinned-shard arrays.
+    The liveness join is the one cost a generational index cannot avoid
+    (Lucene pays it as per-segment liveDocs bitmaps); AQE broadcasts the
+    matched-slot side for selective queries, and compaction bounds it.
     """
-    import pandas as pd
-
-    from search_replica_spark.index.codec import delta_decode, varint_decode
-
     gens = _load_gens(index_dir)
     if not gens:
         raise FileNotFoundError(f"no generations at {index_dir}")
@@ -1735,74 +1718,20 @@ def bm25_topk_spark_multigen(spark, index_dir: str, query: str, k: int = 10,
     for g in live_gens:
         bases[g["gen"]] = acc
         acc += g["n_docs"]
-    with open(os.path.join(live_gens[0]["dir"], "stats.json")) as f:
-        gstats = json.load(f)
-    k1, b = gstats["k1"], gstats["b"]
     terms = sorted(set(tokenize_text(query)))
     if not terms or not live_gens:
         return spark.createDataFrame([], "doc_id long, score double")
+    gstats = _gen_stats(index_dir, live_gens[0])
+    for g in live_gens[1:]:
+        _gen_stats(index_dir, g)
+    agg = _bm25_slots(spark, [(g["dir"], bases[g["gen"]]) for g in live_gens], terms,
+                      n_docs, avg_dl, gstats["k1"], gstats["b"], mode)
 
     def union_all(dfs):
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d)
         return out
-
-    seg = union_all(
-        [
-            spark.read.parquet(os.path.join(g["dir"], "segments"))
-            .filter(F.col("term").isin(terms))
-            .select(
-                "term", "n", "docs_bin", "tfs_bin", "dls_bin",
-                F.lit(bases[g["gen"]]).alias("doc_off"),
-            )
-            for g in live_gens
-        ]
-    )
-    dic = (
-        union_all(
-            [
-                spark.read.parquet(os.path.join(g["dir"], "dict"))
-                .filter(F.col("term").isin(terms))
-                for g in live_gens
-            ]
-        )
-        .groupBy("term")
-        .agg(F.sum("df").alias("df"))
-        .withColumn(
-            "idf",
-            F.log(F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-        )
-    )
-
-    def decode(batches):
-        from search_replica_spark.index.codec import decode_doc_blocks
-
-        # one vectorized pass per Arrow batch; per-block doc_off (each
-        # generation's slot base) rides through decode_doc_blocks
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            counts = pdf["n"].to_numpy("int64")
-            yield pd.DataFrame({
-                "term": np.repeat(pdf["term"].to_numpy(object), counts),
-                "slot": decode_doc_blocks(
-                    list(pdf["docs_bin"]), counts, pdf["doc_off"].to_numpy("int64")
-                ),
-                "tf": varint_decode(b"".join(pdf["tfs_bin"])).astype("int64"),
-                "doc_len": varint_decode(b"".join(pdf["dls_bin"])).astype("int64"),
-            })
-
-    posts = seg.mapInPandas(decode, schema="term string, slot long, tf long, doc_len long")
-    scored = posts.join(F.broadcast(dic.select("term", "idf")), "term").withColumn(
-        "score",
-        F.col("idf") * F.col("tf")
-        / (F.col("tf") + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("doc_len") / F.lit(avg_dl))),
-    )
-    agg = scored.groupBy("slot").agg(F.sum("score").alias("score"), F.count("*").alias("_nm"))
-    if mode == "and":
-        agg = agg.filter(F.col("_nm") == len(terms))
-    agg = agg.drop("_nm")
 
     # distributed liveness: slot -> (doc_id, gen); latest gen per doc wins,
     # strictly-later tombstones kill older slots

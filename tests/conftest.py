@@ -30,7 +30,7 @@ def small_index(spark, small_corpus, tmp_path_factory):
 
     out = str(tmp_path_factory.mktemp("idx"))
     sdf = spark.createDataFrame(small_corpus)
-    cfg = IndexConfig(shuffle_partitions=8, hot_df_threshold=200, salt_range_docs=256)
+    cfg = IndexConfig(shuffle_partitions=8)
     stats = build_index(spark, sdf, out, cfg)
     return out, stats
 

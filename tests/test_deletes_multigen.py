@@ -26,7 +26,7 @@ from search_replica_spark.streaming.incremental import (
     index_stream,
 )
 
-CFG = IndexConfig(shuffle_partitions=4, hot_df_threshold=200, salt_range_docs=256)
+CFG = IndexConfig(shuffle_partitions=4)
 
 
 @pytest.fixture(scope="module")

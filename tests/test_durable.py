@@ -76,7 +76,7 @@ def test_build_commits_stats_json_durably(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(build, "write_durable", spy)
     out = str(tmp_path / "idx")
     stats = build.build_index(spark, spark.createDataFrame(generate_corpus(40)), out,
-                              IndexConfig(shuffle_partitions=2, hot_df_threshold=200))
+                              IndexConfig(shuffle_partitions=2))
     assert written.count("stats.json") == 1
     with open(os.path.join(out, "stats.json")) as f:
         assert json.load(f)["n_docs"] == stats["n_docs"] == 40

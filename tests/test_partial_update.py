@@ -17,7 +17,7 @@ from search_replica_spark.streaming.incremental import (
 )
 
 CFG = IndexConfig(
-    shuffle_partitions=4, hot_df_threshold=200, salt_range_docs=256, store_source=True
+    shuffle_partitions=4, store_source=True
 )
 
 
@@ -113,7 +113,7 @@ def test_seq_orders_partials_within_batch(spark, corpus, tmp_path):
 
 def test_partial_requires_store_source(spark, corpus, tmp_path):
     idx = str(tmp_path / "idx")
-    cfg = IndexConfig(shuffle_partitions=4, hot_df_threshold=200)
+    cfg = IndexConfig(shuffle_partitions=4)
     add_generation(spark, spark.createDataFrame(corpus.iloc[:10]), idx, cfg)
     upd = _partial(corpus.iloc[[0]], lang="zz")
     with pytest.raises(ValueError, match="store_source"):
@@ -277,7 +277,7 @@ def test_derive_index_cfg_pins_build_flags(spark, corpus, tmp_path):
     from search_replica_spark.streaming.incremental import derive_index_cfg
 
     pcfg = IndexConfig(
-        shuffle_partitions=4, hot_df_threshold=200,
+        shuffle_partitions=4,
         store_positions=True, store_source=True,
     )
     idx = str(tmp_path / "pidx")
@@ -293,7 +293,7 @@ def test_partial_batch_derives_flags_from_index(spark, corpus, tmp_path):
     idx = str(tmp_path / "didx")
     add_generation(spark, spark.createDataFrame(corpus.iloc[:10]), idx, CFG)
     upd = _partial(corpus.iloc[[1]], lang="dv")
-    bare = IndexConfig(shuffle_partitions=4, hot_df_threshold=200)  # no store_source
+    bare = IndexConfig(shuffle_partitions=4)  # no store_source
     st = add_generation(spark, spark.createDataFrame(upd), idx, bare)
     assert st["n_docs"] == 1
     cur = source_view(spark, idx).toPandas().set_index("path")
@@ -326,7 +326,7 @@ def test_adoption_resumes_after_partial_crash(spark, corpus, tmp_path):
     gens = _adopt_plain_index(idx)
     assert len(gens) == 1
     g = os.path.join(idx, "gen=0")
-    for piece in ("docs", "segments", "dict", "stats.json"):
+    for piece in ("docs", "postings", "dict", "stats.json"):
         assert os.path.exists(os.path.join(g, piece)), piece
     assert not os.path.exists(os.path.join(idx, "stats.json"))
     cur = source_view(spark, idx).toPandas()

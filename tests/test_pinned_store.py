@@ -1,18 +1,21 @@
-"""The columnar pinned block store: pinned and unpinned readers answer
-``/_search`` bodies identically, the generational remap is bit-identical
-to the pandas formulation it replaced, a positional re-pin serves phrase
-requests without Spark, the one-decode-per-request kernel (single decode,
-``bincount`` accumulate) is bit-identical to its per-term reference, and
-shard readers score with the global df, positional queries included."""
+"""The pinned posting store: pinned and unpinned readers answer
+``/_search`` bodies identically, a generational store holds each
+generation's postings at its slot base exactly as a pandas read of the
+parquet gives them, a positional re-pin serves phrase requests without
+Spark, fetched postings equal a per-term pandas reference and the
+``bincount`` accumulate is bit-identical to its ``np.add.at`` reference,
+and shard readers score with the global df, positional queries included."""
+
+import os
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 
 from search_replica_spark.config import IndexConfig
 from search_replica_spark.corpus import generate_corpus
 from search_replica_spark.index.build import build_index
-from search_replica_spark.index.codec import decode_doc_blocks, varint_decode
 from search_replica_spark.query.bm25 import (
     IndexReader,
     TermAtATimeScorer,
@@ -26,7 +29,7 @@ from search_replica_spark.query.dsl import execute_request
 from search_replica_spark.streaming.incremental import MultiGenReader, add_generation
 
 CFG = IndexConfig(
-    shuffle_partitions=4, hot_df_threshold=200, salt_range_docs=256, store_positions=True
+    shuffle_partitions=4, store_positions=True
 )
 
 
@@ -122,31 +125,32 @@ def test_pinned_and_unpinned_serving_identical(spark, plain_index, multigen_inde
     _assert_same_answers(mg, MultiGenReader(spark, multigen_index).pin_driver(), bodies)
 
 
-def _remap_blocks_pandas(reader, pdf):
-    """The pandas remap the NumPy one replaced, kept as the reference:
-    each block's gen base as doc_off, block_id renumbered per term."""
-    pdf = pdf.sort_values(["term", "gen", "block_id"]).reset_index(drop=True)
-    pdf["doc_off"] = pdf["gen"].map(reader.bases).astype("int64")
-    pdf["block_id"] = pdf.groupby("term", sort=False).cumcount()
-    return pdf.drop(columns=["gen"]).sort_values(["term", "block_id"])
+def _postings_pandas(reader, gen_dir, positions=False):
+    """One generation's postings rows and its dictionary, read with pandas
+    straight from the parquet files (the reference for the stores)."""
+    rows = pq.read_table(os.path.join(gen_dir, "postings")).to_pandas()
+    dic = pq.read_table(os.path.join(gen_dir, "dict")).to_pandas()
+    return rows.sort_values(["term_id", "doc_idx"]).reset_index(drop=True), dic
 
 
 def test_multigen_remap_bit_identical_to_pandas(spark, multigen_index):
-    """The decode adds each block's doc_off to its doc_idx: the NumPy remap
-    must reproduce the pandas one bit for bit in every column the store
-    holds."""
-    mg = MultiGenReader(spark, multigen_index).pin_driver()
-    want = _remap_blocks_pandas(mg, mg._segment_scan(False).toPandas())
-    got = mg._pinned
-    assert got.rows == len(want) > 0
-    order = [t for t, _s in sorted(got.index.items(), key=lambda kv: kv[1])]
-    assert order == list(dict.fromkeys(want["term"]))
-    assert sorted(got.cols) == ["block_id", "doc_off", "n"]
-    for col in got.cols:
-        ref = want[col].to_numpy(got.cols[col].dtype)
-        assert got.cols[col].tobytes() == ref.tobytes(), col
-    docs = [bytes(b) for b in got.select(order)["docs_bin"]]
-    assert docs == list(want["docs_bin"])
+    """The pinned generational store keeps one part per generation whose
+    slots are the generation's doc_idx plus its slot base and whose term
+    ranges are the dictionary's [start, start + df), bit for bit against
+    a pandas read of each generation's parquet."""
+    mg = MultiGenReader(spark, multigen_index).pin_driver(positions=True)
+    store = mg._pinned
+    assert len(store.parts) == len(mg.live_gens) == 3
+    for part, g in zip(store.parts, mg.live_gens):
+        rows, dic = _postings_pandas(mg, g["dir"])
+        want = (rows["doc_idx"] + mg.bases[g["gen"]]).to_numpy(np.int32)
+        assert part.docs.dtype == np.int32 and part.docs.tobytes() == want.tobytes()
+        assert part.tfs.tobytes() == rows["tf"].to_numpy(np.int32).tobytes()
+        flat = np.concatenate([np.asarray(p, np.int32) for p in rows["positions"]])
+        assert part.pos.tobytes() == flat.tobytes()
+        assert {t: part.span(t) for t in part.index} == {
+            t: (s, s + n) for t, s, n in zip(dic["term"], dic["start"], dic["df"])
+        }
 
 
 def test_positions_repin_serves_phrases_without_spark(spark, plain_index):
@@ -172,7 +176,7 @@ def test_positions_repin_serves_phrases_without_spark(spark, plain_index):
     assert resp == want
 
 
-# --- one decode per request ---------------------------------------------
+# --- fetch and accumulate ---------------------------------------------
 
 TERM_SETS = [
     ["license"],
@@ -198,18 +202,22 @@ def _readers(spark, plain_index, multigen_index):
 
 
 def _fetch_postings_per_term(reader, terms):
-    """The per-term decode fetch_postings replaced, kept as the reference:
-    one decode_doc_blocks and one varint_decode per term."""
+    """A per-term pandas reference for fetch_postings: each generation's
+    rows of the term read from parquet, kept to the reader's doc_idx range,
+    shifted to its slots, concatenated in generation order."""
     out = {}
-    for term, g in reader.fetch_blocks(terms).by_term():
-        offs = g["doc_off"] if "doc_off" in g else None
-        docs = decode_doc_blocks(g["docs_bin"], g["n"], offs)
-        tfs = varint_decode(g.joined("tfs_bin")).astype(np.int64)
-        if reader.shard_range is not None:
-            lo, hi = reader.shard_range
-            m = (docs >= lo) & (docs < hi)
-            docs, tfs = docs[m] - lo, tfs[m]
-        out[term] = (docs, tfs, len(g))
+    for term in sorted(set(terms)):
+        docs, tfs = [], []
+        for d, _gen, base, rng in reader._gens():
+            rows, dic = _postings_pandas(reader, d)
+            ids = dic.loc[dic["term"] == term, "term_id"].tolist()
+            g = rows[rows["term_id"].isin(ids)]
+            if rng is not None:
+                g = g[(g["doc_idx"] >= rng[0]) & (g["doc_idx"] < rng[1])]
+            docs.append(g["doc_idx"].to_numpy(np.int64) + reader._slot_offset(base))
+            tfs.append(g["tf"].to_numpy(np.int64))
+        if sum(x.size for x in docs):
+            out[term] = (np.concatenate(docs), np.concatenate(tfs))
     return out
 
 
@@ -240,18 +248,19 @@ def _assert_accumulate_identical(parts, need, live):
 def test_single_decode_fetch_postings_equals_per_term_decode(
     spark, plain_index, multigen_index
 ):
-    """fetch_postings decodes all terms in one pass and splits per term;
-    docs, tfs and block slices equal a per-term decode on every reader."""
+    """fetch_postings slices every term out of the store with no decode;
+    its int32 slots and tfs equal a per-term pandas read of the parquet on
+    every reader, pinned and not, and the slots ascend."""
     for label, r in _readers(spark, plain_index, multigen_index):
         for terms in TERM_SETS:
             got = r.fetch_postings(terms)
             want = _fetch_postings_per_term(r, terms)
             assert list(got) == list(want), (label, terms)
-            for term, (docs, tfs, g) in got.items():
-                wd, wt, nblk = want[term]
-                assert docs.dtype == wd.dtype and np.array_equal(docs, wd), (label, term)
-                assert tfs.dtype == wt.dtype and np.array_equal(tfs, wt), (label, term)
-                assert len(g) == nblk
+            for term, (docs, tfs) in got.items():
+                wd, wt = want[term]
+                assert docs.dtype == tfs.dtype == np.int32, (label, term)
+                assert np.array_equal(docs, wd) and np.array_equal(tfs, wt), (label, term)
+                assert (np.diff(docs) > 0).all(), (label, term)
 
 
 def test_bincount_accumulate_bit_identical_to_add_at(spark, plain_index, multigen_index):
@@ -264,7 +273,7 @@ def test_bincount_accumulate_bit_identical_to_add_at(spark, plain_index, multige
             post = r.fetch_postings(terms)
             parts = [
                 (d, _bm25(r, r.idf(max(1, len(d))), tf, doc_len[d], r.avg_dl), i % 2 == 0)
-                for i, (d, tf, _g) in enumerate(post[t] for t in sorted(post))
+                for i, (d, tf) in enumerate(post[t] for t in sorted(post))
             ]
             for need in (0, 1, len(parts)):
                 _assert_accumulate_identical(parts, need, live)
@@ -418,17 +427,14 @@ def _doc_arrays_spark(spark, r):
 def _assert_same_store(got, want):
     assert got.positions == want.positions
     assert got.rows == want.rows
-    assert got.index == want.index
-    assert got.term_starts.tobytes() == want.term_starts.tobytes()
-    assert got.term_ends.tobytes() == want.term_ends.tobytes()
-    assert sorted(got.cols) == sorted(want.cols)
-    for name, ref in want.cols.items():
-        assert got.cols[name].dtype == ref.dtype and got.cols[name].tobytes() == ref.tobytes(), name
-    assert sorted(got.streams) == sorted(want.streams)
-    for name, (offs, data) in want.streams.items():
-        g_offs, g_data = got.streams[name]
-        assert g_offs.tobytes() == offs.tobytes(), name
-        assert bytes(g_data[g_offs[0]:g_offs[-1]]) == bytes(data[offs[0]:offs[-1]]), name
+    assert len(got.parts) == len(want.parts)
+    for g, w in zip(got.parts, want.parts):
+        assert {t: g.span(t) for t in g.index} == {t: w.span(t) for t in w.index}
+        for name in ("docs", "tfs", "pos"):
+            a, b = getattr(g, name), getattr(w, name)
+            assert (a is None) == (b is None), name
+            if a is not None:
+                assert a.dtype == b.dtype and a.tobytes() == b.tobytes(), name
 
 
 def _set_up_readers(spark, plain_index, multigen_index):
@@ -451,8 +457,8 @@ def _set_up_readers(spark, plain_index, multigen_index):
 def test_driver_read_set_up_equals_spark_reference(spark, plain_index, multigen_index):
     """The doc arrays and the pinned store read from parquet in the driver
     are bit-identical to the Spark-built ones (the toPandas docs collect,
-    and the store built from the Spark segment scan), with and without
-    position streams, on every reader kind."""
+    and the store built from the Spark postings scan), with and without
+    positions, on every reader kind."""
     for label, make in _set_up_readers(spark, plain_index, multigen_index):
         r = make()
         dl, ids = r.doc_arrays()
@@ -463,21 +469,22 @@ def test_driver_read_set_up_equals_spark_reference(spark, plain_index, multigen_
             assert ids.size == r.shard_range[1] - r.shard_range[0], label
         for positions in (False, True):
             got = make().pin_driver(positions=positions)._pinned
-            want = r._block_store(r._segment_scan(positions), positions)
+            want = r._scan_store(positions)
             assert got.rows > 0, label
             _assert_same_store(got, want)
         # the position upgrade of a plain pin reads the same store
         up = make().pin_driver().pin_driver(positions=True)._pinned
-        _assert_same_store(up, r._block_store(r._segment_scan(True), True))
+        _assert_same_store(up, r._scan_store(True))
 
 
 def test_driver_read_position_less_index_asked_for_positions(spark, small_index):
     """An index built without positions, pinned with positions=True, pins
-    the same store as the Spark scan (its position streams are empty), and
-    a phrase query on it still raises the no-positions error."""
+    the same position-less store as the Spark scan, and a phrase query on
+    it still raises the no-positions error."""
     idx, _stats = small_index
     r = IndexReader(spark, idx).pin_driver(positions=True)
-    want = r._block_store(r._segment_scan(True), True)
+    want = r._scan_store(True)
+    assert not want.positions
     _assert_same_store(r._pinned, want)
     with pytest.raises(ValueError, match="positional index"):
         phrase_topk(r, "apache license", 5)
@@ -567,7 +574,7 @@ def test_fielded_norms_on_shard_readers_equal_full_reader(spark, tmp_path):
         "content": [" ".join([words[i % 4]] * (1 + i % 5) + [words[(i // 4) % 4]] * (i % 3))
                     for i in range(60)],
     })
-    cfg = IndexConfig(shuffle_partitions=4, hot_df_threshold=200,
+    cfg = IndexConfig(shuffle_partitions=4,
                       field_analyzers=(("content", "text"), ("lang", "keyword")))
     plain = str(tmp_path / "fielded")
     build_index(spark, spark.createDataFrame(docs), plain, cfg)
@@ -602,7 +609,7 @@ def test_shard_set_up_with_a_nested_stored_column(spark, corpus, tmp_path):
     from pyspark.sql import functions as F
 
     cfg = IndexConfig(
-        shuffle_partitions=4, hot_df_threshold=200, store_source=True,
+        shuffle_partitions=4, store_source=True,
         input_columns=("repo", "path", "commit", "lang", "content", "inlined"),
     )
     df = spark.createDataFrame(corpus).withColumn(
@@ -626,4 +633,29 @@ def test_shard_set_up_with_a_nested_stored_column(spark, corpus, tmp_path):
         assert ids.size == r.shard_range[1] - r.shard_range[0]
         assert dl.tobytes() == want_dl.tobytes() and ids.tobytes() == want_ids.tobytes()
         r.pin_driver()
-        _assert_same_store(r._pinned, r._block_store(r._segment_scan(False), False))
+        _assert_same_store(r._pinned, r._scan_store(False))
+
+
+def test_generational_shards_partition_the_full_reader(spark, multigen_index):
+    """Pinned generational shard readers over a partition of the slot
+    space, one holding a single generation and one spanning two, together
+    answer exactly the full reader's live hits: match and bool scores to
+    1e-9 relative, phrase hits too, each doc in exactly one shard."""
+    full = MultiGenReader(spark, multigen_index).pin_driver(positions=True)
+    slots = sum(g["n_docs"] for g in full.live_gens)
+    shards = [MultiGenReader(spark, multigen_index, shard_range=rng).pin_driver(positions=True)
+              for rng in ((0, 100), (100, 200), (200, slots))]
+    for scorer in (
+        lambda r: dict(zip(*[a.tolist() for a in TermAtATimeScorer(r).score(
+            "license apache", None, live=r._live)])),
+        lambda r: dict(zip(*[a.tolist() for a in bool_topk(
+            r, must=["def"], should=["return", "the"], k=None, live=r._live)])),
+        lambda r: dict(phrase_topk(r, "apache license", 1000, slop=1)),
+    ):
+        want = scorer(full)
+        parts = [scorer(s) for s in shards]
+        assert want and sum(len(p) for p in parts) == len(want)
+        got = {d: sc for p in parts for d, sc in p.items()}
+        assert got.keys() == want.keys()
+        for d, sc in got.items():
+            assert sc == pytest.approx(want[d], rel=1e-9), d

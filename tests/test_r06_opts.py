@@ -3,16 +3,7 @@ bit-identical results to the shapes they replaced."""
 
 from __future__ import annotations
 
-import pandas as pd
 import pytest
-from pyspark.sql import functions as F
-
-from search_replica_spark.config import IndexConfig
-from search_replica_spark.index.build import (
-    SEGMENT_SCHEMA,
-    _encode_blocks_fn,
-    _encode_partition_arrow,
-)
 
 
 @pytest.fixture(scope="module")
@@ -20,150 +11,6 @@ def spark():
     from search_replica_spark.session import get_spark
 
     return get_spark("test_r06_opts", cores=4, shuffle_partitions=4)
-
-
-def test_arrow_encoder_matches_grouped_pandas(spark):
-    """The mapInArrow segment encoder (fast path) must emit exactly the
-    rows of the grouped-map pandas encoder — including salted hot terms
-    and groups spanning multiple Arrow batches."""
-    import numpy as np
-
-    rng = np.random.default_rng(11)
-    n_docs, avg_dl = 150_000, 200.0
-    rows = []
-    # a hot salted term spanning >2 salt ranges and many Arrow batches
-    hot_docs = np.sort(rng.choice(n_docs, size=60_000, replace=False))
-    rows.append(
-        pd.DataFrame({
-            "term": "hotterm",
-            "doc_idx": hot_docs,
-            "tf": rng.integers(1, 9, hot_docs.size),
-            "doc_len": rng.integers(50, 400, hot_docs.size),
-            "df_hot": np.int64(60_000),
-        })
-    )
-    # several cold terms (df below threshold → salt 0, df from group size)
-    for i in range(5):
-        docs = np.sort(rng.choice(n_docs, size=300 + 40 * i, replace=False))
-        rows.append(
-            pd.DataFrame({
-                "term": f"cold{i}",
-                "doc_idx": docs,
-                "tf": rng.integers(1, 5, docs.size),
-                "doc_len": rng.integers(50, 400, docs.size),
-                "df_hot": pd.array([None] * docs.size, dtype="Int64"),
-            })
-        )
-    pdf = pd.concat(rows, ignore_index=True)
-    cfg = IndexConfig(shuffle_partitions=4, hot_df_threshold=10_000)
-    df = spark.createDataFrame(
-        pdf, "term string, doc_idx long, tf long, doc_len long, df_hot long"
-    ).withColumn(
-        "salt",
-        F.when(
-            F.col("df_hot").isNotNull(),
-            (F.col("doc_idx") / F.lit(cfg.salt_range_docs)).cast("int"),
-        ).otherwise(F.lit(0)),
-    )
-
-    old = (
-        df.groupBy("term", "salt")
-        .applyInPandas(_encode_blocks_fn(n_docs, avg_dl, cfg), schema=SEGMENT_SCHEMA)
-        .toPandas()
-        .sort_values(["term", "block_id"])
-        .reset_index(drop=True)
-    )
-    new = (
-        df.select("term", "salt", "doc_idx", "tf", "doc_len", "df_hot")
-        .repartition(4, "term", "salt")
-        .sortWithinPartitions("term", "salt", "doc_idx")
-        .mapInArrow(_encode_partition_arrow(n_docs, avg_dl, cfg), schema=SEGMENT_SCHEMA)
-        .toPandas()
-        .sort_values(["term", "block_id"])
-        .reset_index(drop=True)
-    )
-    assert list(old.columns) == list(new.columns)
-    assert len(old) == len(new)
-    for c in old.columns:
-        assert (old[c] == new[c]).all(), f"column {c} differs"
-
-    # broadcast variant: doc_len/df_hot resolved Python-side from broadcasts
-    # (the narrow-exchange fast path) must match too
-    dl_arr = np.zeros(n_docs, dtype=np.int64)
-    dl_map = pdf.drop_duplicates("doc_idx")
-    dl_arr[dl_map["doc_idx"].to_numpy()] = dl_map["doc_len"].to_numpy()
-    # doc_len must be consistent per doc for the lookup to be equivalent
-    pdf2 = pdf.copy()
-    pdf2["doc_len"] = dl_arr[pdf2["doc_idx"].to_numpy()]
-    df2 = spark.createDataFrame(
-        pdf2, "term string, doc_idx long, tf long, doc_len long, df_hot long"
-    ).withColumn(
-        "salt",
-        F.when(
-            F.col("df_hot").isNotNull(),
-            (F.col("doc_idx") / F.lit(cfg.salt_range_docs)).cast("int"),
-        ).otherwise(F.lit(0)),
-    )
-    old2 = (
-        df2.groupBy("term", "salt")
-        .applyInPandas(_encode_blocks_fn(n_docs, avg_dl, cfg), schema=SEGMENT_SCHEMA)
-        .toPandas()
-        .sort_values(["term", "block_id"])
-        .reset_index(drop=True)
-    )
-    dl_bc = spark.sparkContext.broadcast(dl_arr)
-    hot_bc = spark.sparkContext.broadcast({"hotterm": 60_000})
-    new2 = (
-        df2.select("term", "salt", "doc_idx", F.col("tf").cast("int").alias("tf"))
-        .repartition(4, "term", "salt")
-        .sortWithinPartitions("term", "salt", "doc_idx")
-        .mapInArrow(
-            _encode_partition_arrow(n_docs, avg_dl, cfg, dl_bc, hot_bc),
-            schema=SEGMENT_SCHEMA,
-        )
-        .toPandas()
-        .sort_values(["term", "block_id"])
-        .reset_index(drop=True)
-    )
-    assert len(old2) == len(new2)
-    for c in old2.columns:
-        assert (old2[c] == new2[c]).all(), f"broadcast-path column {c} differs"
-
-    # int-stream variant (r6): term_id int32 + int32 doc_idx/tf, salt
-    # derived inside the encoder — must still match the grouped-map rows
-    terms_sorted = sorted(pdf2["term"].unique())
-    tmap = {t: i for i, t in enumerate(terms_sorted)}
-    rev_bc = spark.sparkContext.broadcast(terms_sorted)
-    hot_bc3 = spark.sparkContext.broadcast({tmap["hotterm"]: 60_000})
-    hot_ids = [tmap["hotterm"]]
-    pdf3 = pdf2.assign(term_id=pdf2["term"].map(tmap).astype("int32"))
-    df3 = spark.createDataFrame(
-        pdf3[["term_id", "doc_idx", "tf"]],
-        "term_id int, doc_idx long, tf long",
-    )
-    salt_expr = F.when(
-        F.col("term_id").isin(hot_ids),
-        (F.col("doc_idx") / F.lit(cfg.salt_range_docs)).cast("int"),
-    ).otherwise(F.lit(0))
-    new3 = (
-        df3.select(
-            "term_id",
-            F.col("doc_idx").cast("int").alias("doc_idx"),
-            F.col("tf").cast("int").alias("tf"),
-        )
-        .repartition(4, F.col("term_id"), salt_expr)
-        .sortWithinPartitions("term_id", "doc_idx")
-        .mapInArrow(
-            _encode_partition_arrow(n_docs, avg_dl, cfg, dl_bc, hot_bc3, rev_bc),
-            schema=SEGMENT_SCHEMA,
-        )
-        .toPandas()
-        .sort_values(["term", "block_id"])
-        .reset_index(drop=True)
-    )
-    assert len(old2) == len(new3)
-    for c in old2.columns:
-        assert (old2[c] == new3[c]).all(), f"int-stream column {c} differs"
 
 
 def test_bucket_pairs_slice_expansion(spark):

@@ -13,6 +13,7 @@ import time
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 
 from search_replica_spark.config import IndexConfig
@@ -30,9 +31,9 @@ from search_replica_spark.streaming.incremental import (
     merge_generations,
 )
 
-CFG = IndexConfig(shuffle_partitions=4, hot_df_threshold=200, salt_range_docs=256)
+CFG = IndexConfig(shuffle_partitions=4)
 PCFG = IndexConfig(
-    shuffle_partitions=4, hot_df_threshold=200, salt_range_docs=256, store_positions=True
+    shuffle_partitions=4, store_positions=True
 )
 
 
@@ -68,7 +69,8 @@ def test_merge_preserves_positions(spark, tmp_path):
     before = phrase_topk(MultiGenReader(spark, idx), "table hash", 10)
     assert before
     merge_generations(spark, idx, CFG)  # cfg WITHOUT store_positions
-    with open(os.path.join(idx, "gen=0", "stats.json")) as f:
+    merged, = MultiGenReader(spark, idx).live_gens
+    with open(os.path.join(merged["dir"], "stats.json")) as f:
         assert json.load(f)["store_positions"] is True
 
     mg = MultiGenReader(spark, idx)
@@ -179,23 +181,21 @@ def _phrase_naive(reader, phrase, k=10, slop=0):
     import math
 
     from search_replica_spark.analysis import tokenize_text
-    from search_replica_spark.index.codec import decode_position_lists, delta_decode
 
     r = reader
     qterms = tokenize_text(phrase)
     uniq = sorted(set(qterms))
-    blk = r.fetch_blocks(uniq, positions=True)
     doc_len, doc_ids = r.doc_arrays()
+    # the postings rows read straight from parquet (plain index: slot =
+    # doc_idx), one position list per posting
+    ids = pq.read_table(os.path.join(r.index_dir, "dict"), columns=["term", "term_id"])
+    ids = dict(zip(ids["term"].to_pylist(), ids["term_id"].to_pylist()))
+    rows = pq.read_table(os.path.join(r.index_dir, "postings")).to_pandas()
     per_term = {}
-    for term, g in blk.by_term():
-        offs = g["doc_off"] if "doc_off" in g else np.zeros(len(g), np.int64)
-        docs = np.concatenate(
-            [delta_decode(bb) + o for bb, o in zip(g["docs_bin"], offs)]
-        ).astype(np.int64)
-        plists = []
-        for npb, pb in zip(g["npos_bin"], g["pos_bin"]):
-            plists.extend(decode_position_lists(npb, pb))
-        per_term[term] = (docs, plists)
+    for term in uniq:
+        g = rows[rows["term_id"] == ids[term]].sort_values("doc_idx")
+        per_term[term] = (g["doc_idx"].to_numpy(np.int64),
+                          [np.asarray(p, np.int64) for p in g["positions"]])
     cand = per_term[uniq[0]][0]
     for t in uniq[1:]:
         cand = np.intersect1d(cand, per_term[t][0], assume_unique=True)
@@ -274,40 +274,6 @@ def test_phrase_vectorized_small_cases(spark, small_index):
         got = phrase_topk(r, phrase, 10, slop=slop)
         want = _phrase_naive(r, phrase, 10, slop=slop)
         assert [(d, round(s, 12)) for d, s in got] == [(d, round(s, 12)) for d, s in want], phrase
-
-
-# ---------------------------------------------------------------------------
-# legacy (pre-dls_bin) layout
-# ---------------------------------------------------------------------------
-
-
-def test_legacy_stats_without_store_doclens_key(spark, tmp_path):
-    """A stats.json that predates dls_bin (no store_doclens key, no dls_bin
-    column) must route bm25_topk_spark to the docs-join fallback."""
-    from search_replica_spark.query.bm25 import bm25_topk_spark
-
-    rows = [("r0", f"l/{i}.py", f"omega w{i % 4} shared tail") for i in range(50)]
-    idx = str(tmp_path / "legacy")
-    build_index(spark, spark.createDataFrame(_mk_docs(rows)), idx, CFG)
-    # strip the index down to the legacy layout
-    seg = spark.read.parquet(os.path.join(idx, "segments")).drop("dls_bin")
-    seg.write.mode("overwrite").parquet(os.path.join(idx, "segments_legacy"))
-    import shutil
-
-    shutil.rmtree(os.path.join(idx, "segments"))
-    os.rename(os.path.join(idx, "segments_legacy"), os.path.join(idx, "segments"))
-    with open(os.path.join(idx, "stats.json")) as f:
-        st = json.load(f)
-    st.pop("store_doclens")
-    with open(os.path.join(idx, "stats.json"), "w") as f:
-        json.dump(st, f)
-
-    got = [(r.doc_id, round(r.score, 9)) for r in bm25_topk_spark(spark, idx, "omega shared", 5).collect()]
-    want = [
-        (d, round(s, 9))
-        for d, s in TermAtATimeScorer(IndexReader(spark, idx)).score("omega shared", 5)
-    ]
-    assert got == want
 
 
 # ---------------------------------------------------------------------------
@@ -571,7 +537,7 @@ def test_range_match_keyword_bounds(spark, tmp_path):
     df["lang"] = [l for _, _, l in rows]
     idx = str(tmp_path / "ridx")
     cfg = IndexConfig(
-        shuffle_partitions=2, hot_df_threshold=200,
+        shuffle_partitions=2,
         field_analyzers=(("content", "text"), ("lang", "keyword")),
     )
     build_index(spark, spark.createDataFrame(df), idx, cfg)
@@ -636,7 +602,7 @@ def test_mapping_options_noindex_and_ignore_above(spark, tmp_path):
     rows.loc[rows["path"] == "b/long.py", "lang"] = "golang"  # 6 > 4 chars
     idx = str(tmp_path / "mopt")
     cfg = IndexConfig(
-        shuffle_partitions=4, hot_df_threshold=200, store_source=True,
+        shuffle_partitions=4, store_source=True,
         field_analyzers=(
             ("content", "text"),
             ("lang", "keyword:4"),     # ignore_above=4

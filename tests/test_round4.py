@@ -16,7 +16,7 @@ from search_replica_spark.streaming.incremental import (
     source_view,
 )
 
-CFG = IndexConfig(shuffle_partitions=4, hot_df_threshold=200, salt_range_docs=256)
+CFG = IndexConfig(shuffle_partitions=4)
 SCHEMA = "repo string, path string, commit string, lang string, content string"
 
 
@@ -194,7 +194,7 @@ def test_per_field_norms_build_and_scorer(spark, tmp_path):
     rows["lang"] = ["go", "py", "go"]
     idx = str(tmp_path / "fn")
     cfg = IndexConfig(
-        shuffle_partitions=4, hot_df_threshold=200,
+        shuffle_partitions=4,
         field_analyzers=(("content", "text"), ("lang", "keyword")),
     )
     st = build_index(spark, spark.createDataFrame(rows), idx, cfg)
@@ -225,6 +225,7 @@ def test_per_field_norms_build_and_scorer(spark, tmp_path):
 
 def test_per_field_norms_survive_merge(spark, tmp_path):
     from search_replica_spark.streaming.incremental import (
+        MultiGenReader,
         add_generation,
         merge_generations,
     )
@@ -233,7 +234,7 @@ def test_per_field_norms_survive_merge(spark, tmp_path):
     b = _mk_docs([("r0", f"b/{i}.py", "gamma delta kappa") for i in range(4)])
     idx = str(tmp_path / "fm")
     cfg = IndexConfig(
-        shuffle_partitions=4, hot_df_threshold=200,
+        shuffle_partitions=4,
         field_analyzers=(("content", "text"), ("lang", "keyword")),
     )
     add_generation(spark, spark.createDataFrame(a), idx, cfg)
@@ -241,7 +242,8 @@ def test_per_field_norms_survive_merge(spark, tmp_path):
     st = merge_generations(spark, idx)
     assert st["field_stats"]["content"]["n"] == 10
     assert abs(st["field_stats"]["content"]["avg_dl"] - 2.4) < 1e-12
-    docs = spark.read.parquet(idx + "/gen=0/docs")
+    merged, = MultiGenReader(spark, idx).live_gens
+    docs = spark.read.parquet(merged["dir"] + "/docs")
     assert "dl_content" in docs.columns and "dl_lang" in docs.columns
 
 
@@ -336,7 +338,7 @@ def test_per_field_norms_multigen(spark, tmp_path):
     upd["content"] = "alpha replaced"
     idx = str(tmp_path / "mgfn")
     cfg = IndexConfig(
-        shuffle_partitions=4, hot_df_threshold=200,
+        shuffle_partitions=4,
         field_analyzers=(("content", "text"), ("lang", "keyword")),
     )
     add_generation(spark, spark.createDataFrame(a), idx, cfg)

@@ -452,7 +452,7 @@ def _jobs_run_by(sc, fn):
 def test_sharded_serve_topk_reads_the_dictionary_once(spark, small_index, small_corpus, tmp_path):
     """A sharded serve_topk reads the query terms' dictionary dfs once and
     hands them to every shard reader: beyond that read, each shard runs
-    only the jobs of its doc arrays, liveDocs and segment scan, on a plain
+    only the jobs of its doc arrays, liveDocs and postings scan, on a plain
     and on a generational index."""
     from search_replica_spark.query.bm25 import (
         _global_dfs,
@@ -477,7 +477,7 @@ def test_sharded_serve_topk_reads_the_dictionary_once(spark, small_index, small_
             for r in readers:
                 r.doc_arrays()
                 getattr(r, "_live", None)
-                r._segment_scan(False, terms).toArrow()
+                r._postings_scan(False, terms)[0].toArrow()
             return len(readers)
 
         for mode in ("or", "and"):
