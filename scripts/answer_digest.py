@@ -9,7 +9,10 @@ one that updates two docs and tombstones a third). It then answers a fixed
 matrix over plain, shard and generational readers, pinned and not:
 ``execute_request`` bodies, term-at-a-time ``or``/``and``, ``bool_topk``
 and ``phrase_topk`` (exact and ``slop=1``), plus the index-level
-``serve_topk`` (``or``/``and``) over three shards.
+``serve_topk`` (``or``/``and``) over three shards and the distributed
+plan's answers (``or``/``and``) on both indexes. The generational case
+calls the plan by its ``bm25_topk_spark_multigen`` name, which every
+version of the engine has.
 
 Each answer prints as one line, ``group | case | hits``, with every hit as
 ``doc_id:score`` and the score in float hex, so the line changes when any
@@ -144,9 +147,12 @@ def main() -> int:
     args = ap.parse_args()
     sys.path.insert(0, os.path.abspath(args.root))
 
-    from search_replica_spark.query.bm25 import IndexReader, serve_topk
+    from search_replica_spark.query.bm25 import IndexReader, bm25_topk_spark, serve_topk
     from search_replica_spark.session import get_spark
-    from search_replica_spark.streaming.incremental import MultiGenReader
+    from search_replica_spark.streaming.incremental import (
+        MultiGenReader,
+        bm25_topk_spark_multigen,
+    )
 
     spark = get_spark("answer_digest", cores=2, shuffle_partitions=4,
                       extra={"spark.driver.memory": "2g"})
@@ -178,6 +184,13 @@ def main() -> int:
                     lines.append(("sharded", f"serve_topk and {name} {q!r} | " + answer(
                         lambda: serve_topk(spark, idx, q, 10, mode="and", min_docs=0,
                                            target_docs=n // 3))))
+            plans = (("plain", plain, bm25_topk_spark), ("multigen", mg, bm25_topk_spark_multigen))
+            for q in QUERIES:
+                for name, idx, plan in plans:
+                    for mode in ("or", "and"):
+                        lines.append(("distributed", f"spark {mode} {name} {q!r} | " + answer(
+                            lambda: [(r["doc_id"], r["score"]) for r in
+                                     plan(spark, idx, q, 10, mode=mode).collect()])))
     finally:
         spark.stop()
 

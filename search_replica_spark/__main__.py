@@ -238,13 +238,13 @@ def main(argv: list[str] | None = None) -> int:
         ]}))
         return 0
     if args.cmd == "mapping":  # pure file metadata — no Spark session
-        import os
-
         from search_replica_spark.index.alias import resolve_index
+        from search_replica_spark.index.manifest import _gen_stats, read_generations
 
         idx = resolve_index(args.index_dir)
-        with open(os.path.join(idx, "stats.json")) as f:
-            st = json.load(f)
+        gens = read_generations(idx)
+        # build flags are fixed at creation: every generation has the same
+        st = _gen_stats(idx, [g for g in gens if g["dir"]][-1])
         fa = st.get("field_analyzers")
         # a plain build analyzes the default content field; a fielded build
         # analyzes exactly its mapped fields
@@ -269,7 +269,7 @@ def main(argv: list[str] | None = None) -> int:
             "index_options": (
                 "positions" if st.get("store_positions") else "freqs"
             ),
-            "n_docs": st.get("n_docs"),
+            "n_docs": sum(g["n_docs"] for g in gens),
         }}))
         return 0
     if args.cmd == "alias":  # pure file metadata — no Spark session
@@ -347,16 +347,9 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps(delete_by_query(spark, args.index_dir, q)))
         return 0
     if args.cmd == "count":
-        import os
-
         from search_replica_spark.query.bm25 import IndexReader, count_match
 
-        if os.path.exists(os.path.join(args.index, "generations.json")):
-            from search_replica_spark.streaming.incremental import MultiGenReader
-
-            rd = MultiGenReader(spark, args.index)
-        else:
-            rd = IndexReader(spark, args.index)
+        rd = IndexReader(spark, args.index)
         print(json.dumps({"count": count_match(rd, args.q, mode=args.operator)}))
         return 0
     if args.cmd == "termvectors":
@@ -400,8 +393,6 @@ def main(argv: list[str] | None = None) -> int:
             serve_topk,
         )
 
-        import os
-
         if args.dsl:
             # the ES switch-over path: run the user's /_search body as-is
             from search_replica_spark.query.dsl import execute_dsl
@@ -410,12 +401,7 @@ def main(argv: list[str] | None = None) -> int:
             if body.startswith("@"):
                 with open(body[1:]) as f:
                     body = f.read()
-            if os.path.exists(os.path.join(args.index, "generations.json")):
-                from search_replica_spark.streaming.incremental import MultiGenReader
-
-                rd = MultiGenReader(spark, args.index)
-            else:
-                rd = IndexReader(spark, args.index)
+            rd = IndexReader(spark, args.index)
             req = json.loads(body)
             if isinstance(req, dict) and (set(req) - {"query"}):
                 # a full /_search request body (from/size/sort/highlight/
@@ -442,11 +428,6 @@ def main(argv: list[str] | None = None) -> int:
             # default serving path: cost-switched doc-sharded scoring —
             # above SHARD_MIN_DOCS no node holds O(corpus) doc arrays
             hits = serve_topk(spark, args.index, args.q, args.k)
-        elif os.path.exists(os.path.join(args.index, "generations.json")):
-            from search_replica_spark.streaming.incremental import bm25_topk_spark_multigen
-
-            rows = bm25_topk_spark_multigen(spark, args.index, args.q, args.k).collect()
-            hits = [(r["doc_id"], r["score"]) for r in rows]
         else:
             rows = bm25_topk_spark(spark, args.index, args.q, args.k).collect()
             hits = [(r["doc_id"], r["score"]) for r in rows]

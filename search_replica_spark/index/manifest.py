@@ -20,6 +20,11 @@ import json
 import os
 import time
 
+# the commit log of a generational index: one entry per generation, in
+# generation order ({"gen", "dir", "n_docs", "total_tokens", "deleted_ids",
+# epoch fields}); "dir" is None for a delete-only generation
+GENS_FILE = "generations.json"
+
 # stats.json "format": 2 is the postings layout (term_id, doc_idx, tf rows
 # plus a dictionary of term, term_id, df, start). An index without the key
 # predates it and is refused rather than read through a second path.
@@ -39,6 +44,63 @@ def read_stats(index_dir: str) -> dict:
             "`reindex` it from its stored _source."
         )
     return stats
+
+
+def _load_gens(index_dir: str) -> list[dict]:
+    """The committed generations.json of ``index_dir``; [] when there is
+    none (a plain ``build_index`` output or an empty directory)."""
+    p = os.path.join(index_dir, GENS_FILE)
+    if os.path.exists(p):
+        with open(p) as f:
+            return json.load(f)
+    return []
+
+
+def _gen_stats(index_dir: str, g: dict) -> dict:
+    """A live generation's stats.json, format-checked (``read_stats``);
+    the top-level copy while an adoption's move into gen=0 is pending."""
+    d = g["dir"] if os.path.exists(os.path.join(g["dir"], "stats.json")) else index_dir
+    return read_stats(d)
+
+
+def read_generations(index_dir: str) -> list[dict]:
+    """The generations a reader serves: generations.json when it exists,
+    else the plain ``build_index`` output at ``index_dir`` as generation 0
+    with no tombstones (the entry adoption would commit for it). So a
+    plain index is a one-generation index, and readers and the
+    distributed plan take one path for both."""
+    gens = _load_gens(index_dir)
+    if gens:
+        return gens
+    st = read_stats(index_dir)
+    return [{"gen": 0, "dir": index_dir, "n_docs": int(st["n_docs"]),
+             "total_tokens": int(st["total_tokens"]), "epoch_id": None,
+             "deleted_ids": []}]
+
+
+def slot_bases(gens: list[dict]) -> dict[int, int]:
+    """generation → slot base: the live generations' docs follow each
+    other in generation order, so a doc's slot is its doc_idx plus the
+    docs of the live generations before its own."""
+    out, acc = {}, 0
+    for g in gens:
+        if g["dir"]:
+            out[g["gen"]] = acc
+            acc += int(g["n_docs"])
+    return out
+
+
+def fold_tombstones(gens: list[dict]) -> dict[int, int]:
+    """doc_id → the latest generation holding a tombstone for it. A
+    tombstone of generation t kills the versions of its doc_id in
+    generations strictly before t; a generation's own upserts beat its
+    tombstones (delete plus insert of one key in one batch nets to the
+    insert)."""
+    out: dict[int, int] = {}
+    for g in gens:
+        for d in g.get("deleted_ids", ()):
+            out[int(d)] = max(out.get(int(d), -1), int(g["gen"]))
+    return out
 
 
 def part_files(table_dir: str) -> list[str]:

@@ -450,28 +450,25 @@ def ft_span_first_top10(spark, sf_dir):
 
 
 class _OrigIdReader:
-    """IndexReader whose doc_ids are the SOURCE doc_ids (parsed back from the
-    indexed path column), so every scorer tie-break (score desc, doc_id asc)
-    happens on the same key as the DuckDB oracle. Without this an exact float
-    score tie at the top-k boundary could pick different docs than the oracle
-    (the engine's hashed doc_id orders differently than the source id)."""
+    """IndexReader (over a plain or a generational index) whose doc_ids are
+    the SOURCE doc_ids (parsed back from the indexed path column), so every
+    scorer tie-break (score desc, doc_id asc) happens on the same key as the
+    DuckDB oracle. Without this an exact float score tie at the top-k
+    boundary could pick different docs than the oracle (the engine's hashed
+    doc_id orders differently than the source id)."""
 
     def __new__(cls, spark, index_dir):
+        import numpy as np
+
         from search_replica_spark.query.bm25 import IndexReader
 
         class Reader(IndexReader):
             def doc_arrays(self):
                 if self._doc_len is None:
-                    pdf = (
-                        self.spark.read.parquet(os.path.join(self.index_dir, "docs"))
-                        .select("doc_idx", "path", "doc_len")
-                        .toPandas()
-                        .sort_values("doc_idx")
-                    )
-                    self._doc_len = pdf["doc_len"].to_numpy("float64")
-                    self._doc_ids = (
-                        pdf["path"].str.split("_", n=1).str[1].astype("int64").to_numpy()
-                    )
+                    c = self._doc_columns(["path", "doc_len"])
+                    self._doc_len = c["doc_len"].astype(np.float64)
+                    self._doc_ids = np.array(
+                        [int(p.split("_", 1)[1]) for p in c["path"]], dtype=np.int64)
                 return self._doc_len, self._doc_ids
 
         return Reader(spark, index_dir)
@@ -1180,33 +1177,9 @@ def _fielded_multigen_index_dir_for(spark, sf_dir) -> str:
 )
 def ft_bm25_fielded_norms_multigen_top10(spark, sf_dir):
     from search_replica_spark.query.bm25 import fielded_norms_topk
-    from search_replica_spark.streaming.incremental import MultiGenReader
 
     idx = _fielded_multigen_index_dir_for(spark, sf_dir)
-
-    class _OrigIdMG(MultiGenReader):
-        def doc_arrays(self):
-            if self._doc_len is None:
-                parts = []
-                for g in self.live_gens:
-                    parts.append(
-                        self.spark.read.parquet(os.path.join(g["dir"], "docs"))
-                        .select("doc_idx", "path", "doc_len")
-                        .withColumn("gen", F.lit(int(g["gen"])))
-                    )
-                uni = parts[0]
-                for p in parts[1:]:
-                    uni = uni.unionByName(p)
-                pdf = uni.toPandas()
-                pdf["slot"] = pdf["doc_idx"] + pdf["gen"].map(self.bases)
-                pdf = pdf.sort_values("slot")
-                self._doc_len = pdf["doc_len"].to_numpy("float64")
-                self._doc_ids = (
-                    pdf["path"].str.split("_", n=1).str[1].astype("int64").to_numpy()
-                )
-            return self._doc_len, self._doc_ids
-
-    hits = fielded_norms_topk(_OrigIdMG(spark, idx), ["content:spark", "lang:de"], 10)
+    hits = fielded_norms_topk(_OrigIdReader(spark, idx), ["content:spark", "lang:de"], 10)
     rows = [(d, round(s, 6)) for d, s in hits]
     return spark.createDataFrame(rows, "doc_id long, score double")
 

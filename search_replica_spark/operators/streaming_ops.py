@@ -99,7 +99,7 @@ def cdc_delete_live_docs(spark, sf_dir):
     idx = cdc_index_dir(spark, sf_dir)
     mg = MultiGenReader(spark, idx)
     _, doc_ids = mg.doc_arrays()
-    live_ids = [(int(x),) for x in mg._live.drop_dead(doc_ids)]
+    live_ids = [(int(x),) for x in mg._live_docs().drop_dead(doc_ids)]
     live_df = spark.createDataFrame(live_ids, "doc_id long")
     docs = spark.read.parquet(os.path.join(mg.live_gens[0]["dir"], "docs")).select(
         "doc_id", "path"

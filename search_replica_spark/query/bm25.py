@@ -2,19 +2,24 @@
 
 Implements the search semantics the reference delegates to Elasticsearch
 (reference: demo/README.md:18-42 queries a live ES; demo/mapping.json
-configures it). One top-k computation, in two execution forms that return
-the same ranking:
+configures it). An index is a list of generations (Lucene's segments):
+a plain ``build_index`` directory is one generation with no tombstones,
+a CDC-maintained one lists its generations in generations.json. One
+reader, ``IndexReader``, serves both: summed stats, slots over the
+generations, and liveDocs (a slot is dead if its doc_id appears again in
+a later generation or a strictly later tombstone covers it). One top-k
+computation, in two execution forms that return the same ranking:
 
   - ``TermAtATimeScorer`` / ``bool_topk`` — the in-driver NumPy scorer over
     fetched postings (slices of flat int32 columns, no decode), a
-    ``bincount`` accumulate over the touched docs and an array top-k.
-    ``/_search``, the CDC path and doc-sharded serving (``serve_topk``) all
-    score here.
-  - ``bm25_topk_spark`` — the fully distributed plan, plain Spark SQL:
-    ``term_id IN (...)`` pushed to the postings parquet (sorted by term_id,
-    so only the query terms' row groups are read), joined to a broadcast
-    idf table and to docs(doc_idx, doc_len), summed per doc, TakeOrdered
-    top-k.
+    ``bincount`` accumulate over the touched docs, the reader's liveDocs
+    and an array top-k. ``/_search``, the CDC path and doc-sharded serving
+    (``serve_topk``) all score here.
+  - ``bm25_topk_spark`` — the fully distributed plan, plain Spark SQL over
+    the generations: ``term_id IN (...)`` pushed to each postings parquet
+    (sorted by term_id, so only the query terms' row groups are read),
+    joined to a broadcast idf table and to docs(doc_idx, doc_len), summed
+    per slot, joined to the live docs (``live_docs``), TakeOrdered top-k.
 
 Scores are float64 with idf from Python ``math.log``, summing per-doc
 contributions in sorted-term order where we control the order, so scores
@@ -33,17 +38,25 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from search_replica_spark import B, K1
 from search_replica_spark.analysis import tokenize_text
-from search_replica_spark.index.manifest import read_stats
+from search_replica_spark.index.manifest import (
+    _gen_stats,
+    fold_tombstones,
+    read_generations,
+    slot_bases,
+)
 from search_replica_spark.query.store import (
     PostingStore,
     Postings,
+    _strings,
     read_postings,
     read_table,
 )
 
-# The block codec's decode entry points, kept bound as names that run no
-# code: format-2 postings need no decode (ROADMAP 8(b)).
+# The deleted block codec's decode entry points, kept bound as names that
+# run no code because perfbench/spans.py looks them up: format-2 postings
+# need no decode (ROADMAP 8(b)).
 decode_doc_blocks = varint_decode = None
 
 
@@ -68,21 +81,126 @@ def prefix_range_cond(prefix: str):
     return cond
 
 
+def dead_slots(doc_ids: np.ndarray, gens: np.ndarray,
+               tombstones: dict[int, int]) -> np.ndarray:
+    """The liveness rule in NumPy (``live_docs`` is its Spark form): a
+    bool mask over slots, given each slot's doc_id and generation, that
+    marks the dead ones. A slot is dead if its doc_id appears again in a
+    later generation (last wins), or if a tombstone from a strictly later
+    generation covers it (``manifest.fold_tombstones``)."""
+    order = np.lexsort((gens, doc_ids))  # by doc_id, then generation
+    ids = doc_ids[order]
+    dead = np.zeros(doc_ids.size, dtype=bool)
+    dead[order[:-1][ids[:-1] == ids[1:]]] = True  # all but a doc_id's newest
+    if tombstones:
+        tid = np.fromiter(tombstones, np.int64, len(tombstones))
+        tgen = np.fromiter(tombstones.values(), np.int64, len(tombstones))
+        o = np.argsort(tid)
+        tid, tgen = tid[o], tgen[o]
+        at = np.minimum(np.searchsorted(tid, doc_ids), tid.size - 1)
+        dead |= (tid[at] == doc_ids) & (tgen[at] > gens)
+    return dead
+
+
+class LiveDocs:
+    """Sparse Lucene-liveDocs: stores only the DEAD slots (sorted int64
+    array), so a query node serving a generational shard holds O(superseded
+    + tombstoned) driver state instead of an O(corpus) bitmap — at 10^9-10^12
+    docs a dense ``np.ones(n_docs)`` is GBs of memory that scales with the
+    corpus; this scales with churn. Supports exactly the mask operations
+    the scorers use: fancy-index with an int slot array (vectorized
+    searchsorted membership), scalar index, ``sum()``
+    (live count), and ``astype(bool)`` for the rare dense-mask consumer."""
+
+    __slots__ = ("n", "dead")
+
+    def __init__(self, n: int, dead):
+        self.n = int(n)
+        self.dead = np.unique(np.asarray(dead, dtype=np.int64))
+
+    def __getitem__(self, idx):
+        if isinstance(idx, (int, np.integer)):
+            i = int(np.searchsorted(self.dead, idx))
+            return not (i < self.dead.size and self.dead[i] == idx)
+        idx = np.asarray(idx)
+        if self.dead.size == 0:
+            return np.ones(idx.shape, dtype=bool)
+        pos = np.minimum(np.searchsorted(self.dead, idx), self.dead.size - 1)
+        return self.dead[pos] != idx
+
+    def sum(self) -> int:
+        return self.n - int(self.dead.size)
+
+    def astype(self, dtype):
+        m = np.ones(self.n, dtype=bool)
+        m[self.dead] = False
+        return m.astype(dtype)
+
+    def drop_dead(self, arr):
+        """``arr`` (slot-indexed, len n) without the dead slots — the
+        sparse form of ``arr[self.astype(bool)]``: slice-gather around the
+        sorted dead array, O(dead) segments, NO dense O(n_docs) mask
+        allocation (the r4 verdict's match_all finding)."""
+        if self.dead.size == 0:
+            return arr
+        cuts = np.stack([self.dead, self.dead + 1], axis=1).ravel()
+        return np.concatenate(np.split(arr, cuts)[::2])
+
+    def __len__(self) -> int:
+        return self.n
+
+
+def _field_stats(stats: list[dict]) -> dict | None:
+    """The per-field stats of the generations whose stats.json are
+    ``stats``: docCounts and token sums add up as INTEGERS, with one final
+    float division — bit-identical to the avg a single build over the
+    same docs computes (recombining n*avg floats would round twice).
+    Stats without sum_dl fall back to n*avg. None unless every
+    generation has per-field stats."""
+    acc: dict[str, list] = {}
+    for st in stats:
+        if not st.get("field_stats"):
+            return None
+        for fld, fs in st["field_stats"].items():
+            n, total = acc.get(fld, (0, 0))
+            gn, gs = int(fs["n"]), fs.get("sum_dl")
+            gs = int(gs) if gs is not None else gn * float(fs["avg_dl"])
+            acc[fld] = [n + gn, total + gs]
+    return {fld: {"n": n, "avg_dl": (total / n) if n else 0.0}
+            for fld, (n, total) in acc.items()} or None
+
+
 class IndexReader:
-    """Driver-side handle on an index directory (stats + postings fetch)."""
+    """Driver-side handle on an index: stats, doc arrays, liveDocs and the
+    postings fetch over its generations.
+
+    A generational index is read as its generations.json lists it; a
+    plain ``build_index`` directory is one generation with no tombstones
+    (``manifest.read_generations``), so one reader serves both, as one
+    Lucene ``DirectoryReader`` serves any number of segments. Each live
+    generation's local doc_idx space maps onto disjoint slots: slot =
+    doc_idx + the generation's base, bases following generation order.
+    Corpus statistics sum over every generation (superseded and
+    tombstoned versions count until a merge, as in Lucene); k1 and b are
+    the index's own, from the generations' stats.json."""
 
     def __init__(self, spark: SparkSession, index_dir: str,
                  shard_range: tuple[int, int] | None = None):
         self.spark = spark
         self.index_dir = index_dir
-        self.stats = read_stats(index_dir)
-        self.n_docs = self.stats["n_docs"]
-        self.avg_dl = self.stats["avg_dl"]
-        self.k1 = self.stats["k1"]
-        self.b = self.stats["b"]
-        self.positions_stored = bool(self.stats.get("store_positions", False))
+        self.gens = read_generations(index_dir)
+        self.live_gens = [g for g in self.gens if g["dir"]]
+        stats = [_gen_stats(index_dir, g) for g in self.live_gens]
+        self.positions_stored = any(st.get("store_positions", False) for st in stats)
+        self.k1 = stats[0]["k1"] if stats else K1
+        self.b = stats[0]["b"] if stats else B
+        self.n_docs = int(sum(g["n_docs"] for g in self.gens))
+        total_tokens = sum(g["total_tokens"] for g in self.gens)
+        self.avg_dl = total_tokens / self.n_docs if self.n_docs else 0.0
+        self.bases = slot_bases(self.gens)
+        self._field_stats = _field_stats(stats)
         # doc-sharded serving (ES shard semantics): this reader owns ONLY
-        # the doc_idx slots in [lo, hi) — its doc arrays and postings are
+        # the slots in [lo, hi) — its doc arrays and postings are
         # O(hi-lo), and fetch_postings returns SHARD-LOCAL indices
         # (global - lo). Corpus-level stats (n_docs, avg_dl, idf) stay
         # GLOBAL — the dfs phase of dfs_query_then_fetch — so per-doc
@@ -92,14 +210,25 @@ class IndexReader:
         self._doc_ids: np.ndarray | None = None
         self._pinned: PostingStore | None = None
         self._dict_df: dict[str, int] | None = None
+        self._live_cache: LiveDocs | None = None
 
     # --- doc store (slot-ordered arrays, loaded once) ---
     def _gens(self) -> list[tuple[str, int, int, tuple[int, int] | None]]:
-        """(directory, generation, slot base, doc_idx range) of each
+        """(directory, generation, slot base, doc_idx range) of each live
         generation this reader holds slots of: slot = doc_idx + base, and
         the range is None when the reader holds the whole generation. A
-        plain index is one generation at base 0."""
-        return [(self.index_dir, 0, 0, self.shard_range)]
+        shard reader keeps each generation's doc_idx range inside
+        [lo, hi) and skips the generations entirely outside it."""
+        out = []
+        for g in self.live_gens:
+            base, rng = self.bases[g["gen"]], None
+            if self.shard_range is not None:
+                lo, hi = self.shard_range
+                rng = max(0, lo - base), min(int(g["n_docs"]), hi - base)
+                if rng[0] >= rng[1]:
+                    continue
+            out.append((g["dir"], g["gen"], base, rng))
+        return out
 
     def _slot_offset(self, base: int) -> int:
         """What turns a generation's doc_idx into this reader's slot."""
@@ -130,11 +259,55 @@ class IndexReader:
     def idf(self, df: int) -> float:
         return math.log(1.0 + (self.n_docs - df + 0.5) / (df + 0.5))
 
+    # --- liveDocs ---
+    @property
+    def _live(self) -> LiveDocs | None:
+        """The slots' liveDocs, or None when no slot is dead (a plain or
+        tombstone-free single-generation index), so a scorer applies no
+        mask at all. Computed on first use (``_live_docs``)."""
+        live = self._live_docs()
+        return live if live.dead.size else None
+
+    def _live_docs(self) -> LiveDocs:
+        """Sparse liveDocs over this reader's slots, computed once in
+        NumPy with no Spark job (``dead_slots``). Only the live
+        generations' ``doc_idx, doc_id`` columns are read, never the doc
+        arrays, and nothing at all when one live generation has no later
+        tombstone. A shard reader's slot can be superseded by a doc that
+        another shard holds, so liveness reads every generation and then
+        keeps the dead slots inside [lo, hi), rebased."""
+        if self._live_cache is None:
+            n = sum(int(g["n_docs"]) for g in self.live_gens)
+            tombs = fold_tombstones(self.gens)
+            dead = np.empty(0, np.int64)
+            first = self.live_gens[0]["gen"] if self.live_gens else 0
+            if len(self.live_gens) > 1 or any(t > first for t in tombs.values()):
+                ids, gens, slots = [], [], []
+                for g in self.live_gens:
+                    t = read_table(os.path.join(g["dir"], "docs"), ["doc_idx", "doc_id"])
+                    ids.append(t["doc_id"].to_numpy())
+                    gens.append(np.full(t.num_rows, int(g["gen"]), np.int64))
+                    slots.append(t["doc_idx"].to_numpy() + self.bases[g["gen"]])
+                slots = np.concatenate(slots)
+                dead = slots[dead_slots(np.concatenate(ids), np.concatenate(gens), tombs)]
+            if self.shard_range is not None:
+                lo, hi = self.shard_range
+                n, dead = hi - lo, dead[(dead >= lo) & (dead < hi)] - lo
+            self._live_cache = LiveDocs(n, dead)
+        return self._live_cache
+
+    def __len__(self) -> int:  # docs currently visible
+        return self._live_docs().sum()
+
+    def score(self, query: str, k: int = 10, mode: str = "or") -> list[tuple[int, float]]:
+        """Top-k of a match query under this reader's liveDocs."""
+        return TermAtATimeScorer(self).score(query, k, mode=mode, live=self._live)
+
     # --- per-field norms surface (fielded_norms_topk) ---
     def field_stats(self) -> dict | None:
         """{field: {"n": docCount, "avg_dl": float}} for field_analyzers
-        builds (round 4+); None otherwise."""
-        return self.stats.get("field_stats")
+        builds (round 4+); None otherwise (``_field_stats``)."""
+        return self._field_stats
 
     def field_dl_arrays(self, fields: list[str]) -> dict[str, np.ndarray]:
         """Per-slot per-field doc lengths, slot for slot with doc_arrays():
@@ -228,16 +401,17 @@ class IndexReader:
     def expand_prefix(
         self, prefix: str, max_expansions: int | None = 50, extra_filter=None
     ) -> list[str]:
-        """Term-dictionary range seek: the terms starting with ``prefix``,
-        in term order, capped at ``max_expansions`` (ES's cap, default 50).
-        The range predicate (prefix <= term < successor(prefix), see
-        prefix_range_cond) is pushed down to the term-sorted dict parquet —
-        a row-group-pruned seek, never a dictionary scan. ``extra_filter``
-        (a Column over ``term``) narrows the expansion INSIDE the scan —
-        fuzzy/wildcard pass their edit-distance/LIKE predicate here so the
-        driver only ever receives actual candidates, not the whole
-        single-character prefix slice."""
-        q = self._dict_query(prefix, extra_filter).select("term").orderBy("term")
+        """Term-dictionary range seek: the terms starting with ``prefix``
+        over the live generations' dictionaries, in term order, capped at
+        ``max_expansions`` (ES's cap, default 50). The range predicate
+        (prefix <= term < successor(prefix), see prefix_range_cond) is
+        pushed down to each term-sorted dict parquet — a row-group-pruned
+        seek, never a dictionary scan. ``extra_filter`` (a Column over
+        ``term``) narrows the expansion INSIDE the scan — fuzzy/wildcard
+        pass their edit-distance/LIKE predicate here so the driver only
+        ever receives actual candidates, not the whole single-character
+        prefix slice."""
+        q = self._dict_query(prefix, extra_filter).orderBy("term")
         if max_expansions is not None:
             q = q.limit(max_expansions)
         return [row["term"] for row in q.collect()]
@@ -245,16 +419,22 @@ class IndexReader:
     def _dict_query(self, prefix: str, extra_filter=None):
         """The dictionary range-seek DataFrame expand_prefix collects from
         (kept separate so the plan audit exercises the reader's OWN query
-        builder): range predicate + startswith pushed into the term-sorted
-        dict parquet, caller predicate evaluated inside the same scan."""
-        q = (
-            self.spark.read.parquet(os.path.join(self.index_dir, "dict"))
-            .filter(prefix_range_cond(prefix))
-            .filter(F.col("term").startswith(prefix))
-        )
-        if extra_filter is not None:
-            q = q.filter(extra_filter)
-        return q
+        builder): per live generation, range predicate + startswith pushed
+        into the term-sorted dict parquet and the caller predicate
+        evaluated inside the same scan; the generations' terms unioned
+        and, when there are several, made distinct."""
+        parts = []
+        for g in self.live_gens:
+            q = (
+                self.spark.read.parquet(os.path.join(g["dir"], "dict"))
+                .filter(prefix_range_cond(prefix))
+                .filter(F.col("term").startswith(prefix))
+            )
+            if extra_filter is not None:
+                q = q.filter(extra_filter)
+            parts.append(q.select("term"))
+        q = functools.reduce(DataFrame.unionByName, parts)
+        return q.distinct() if len(parts) > 1 else q
 
     def term_df(self, term: str, held: int) -> int:
         """The document frequency to score ``term`` with, given ``held``,
@@ -295,16 +475,16 @@ def _bm25_slots(spark: SparkSession, gens: list[tuple[str, int]], terms: list[st
                         (("term", "in", terms),)) for d, _base in gens]
     df: dict[str, int] = {}
     for dic in dicts:
-        for t, n in zip(dic["term"].to_pylist(), dic["df"].to_pylist()):
-            df[t] = df.get(t, 0) + int(n)
+        for t, n in zip(_strings(dic["term"]), dic["df"].to_numpy().tolist()):
+            df[t] = df.get(t, 0) + n
     idf = {t: math.log(1.0 + (n_docs - n + 0.5) / (n + 0.5)) for t, n in df.items()}
     parts = []
     for (d, base), dic in zip(gens, dicts):
         if dic.num_rows == 0:
             continue
-        ids = dic["term_id"].to_pylist()
+        ids = dic["term_id"].to_numpy().tolist()
         idf_tbl = spark.createDataFrame(
-            [(int(i), idf[t]) for i, t in zip(ids, dic["term"].to_pylist())],
+            [(i, idf[t]) for i, t in zip(ids, _strings(dic["term"]))],
             "term_id int, idf double",
         )
         docs = spark.read.parquet(os.path.join(d, "docs")).select(
@@ -334,27 +514,64 @@ def _bm25_slots(spark: SparkSession, gens: list[tuple[str, int]], terms: list[st
     return agg.drop("_nm")
 
 
+def live_docs(spark: SparkSession, gens: list[dict], cols=None) -> DataFrame:
+    """The liveness rule as a Spark plan (``dead_slots`` is its NumPy
+    form): the live rows of the generations' docs stores, as slot, then
+    doc_id and ``cols`` in the stores' column order (``cols`` None: every
+    docs column but doc_idx). The generations' docs are unioned with
+    their slot bases; with several live generations each doc_id keeps
+    only its newest generation's row (a (doc_id, generation) aggregate
+    joined back as a semi-join, so the value columns are carried, never
+    compared), and the rows a strictly later tombstone covers are dropped
+    through a broadcast join of the folded tombstones. One shuffle on
+    doc_id over the docs stores, and none for a single live generation."""
+    parts, bases = [], slot_bases(gens)
+    for g in gens:
+        if not g["dir"]:
+            continue
+        docs = spark.read.parquet(os.path.join(g["dir"], "docs"))
+        keep = [c for c in docs.columns if c != "doc_idx"
+                and (cols is None or c == "doc_id" or c in cols)]
+        parts.append(docs.select(
+            (F.col("doc_idx") + F.lit(bases[g["gen"]])).cast("long").alias("slot"),
+            F.lit(int(g["gen"])).alias("_gen"), *keep))
+    if not parts:
+        raise ValueError("no generation holds documents")
+    out = functools.reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+    if len(parts) > 1:
+        newest = out.groupBy("doc_id").agg(F.max("_gen").alias("_gen"))
+        out = out.join(newest, ["doc_id", "_gen"], "left_semi")
+    tombs = fold_tombstones(gens)
+    if tombs:
+        dels = spark.createDataFrame(list(tombs.items()), "doc_id long, _del_gen long")
+        out = out.join(F.broadcast(dels), "doc_id", "left").filter(
+            F.col("_del_gen").isNull() | (F.col("_del_gen") <= F.col("_gen"))
+        ).drop("_del_gen")
+    return out.drop("_gen")
+
+
 def bm25_topk_spark(
     spark: SparkSession, index_dir: str, query: str, k: int = 10, mode: str = "or"
 ) -> DataFrame:
-    """Distributed BM25 top-k: returns DataFrame(doc_id, score) ordered.
-    mode="and" = ES operator:and (all analyzed terms must match)."""
-    stats = read_stats(index_dir)
+    """Distributed BM25 top-k over the index's generations (a plain index
+    is one): returns DataFrame(doc_id, score) ordered. mode="and" = ES
+    operator:and (all analyzed terms must match). ``_bm25_slots`` scores
+    the matching slots of every live generation; joining them to
+    ``live_docs`` drops the superseded and tombstoned slots and gives each
+    its doc_id, and TakeOrdered keeps the top k by (score desc, doc_id
+    asc). No driver array of corpus size is built."""
+    r = IndexReader(spark, index_dir)  # metadata only: no doc or postings read
     terms = sorted(set(tokenize_text(query)))
-    if not terms:
+    if not terms or not r.live_gens:
         return spark.createDataFrame([], "doc_id long, score double")
-    agg = _bm25_slots(spark, [(index_dir, 0)], terms, stats["n_docs"], stats["avg_dl"],
-                      stats["k1"], stats["b"], mode)
-    # doc_idx is assigned in doc_id order (assign_dense_doc_idx), so the
-    # (score desc, doc_idx asc) tie-break is identical to tie-breaking on
-    # doc_id; the doc_id lookup joins the top k rows only
-    topk = agg.orderBy(F.col("score").desc(), F.col("slot").asc()).limit(k)
-    docs = spark.read.parquet(os.path.join(index_dir, "docs")).select(
-        F.col("doc_idx").cast("long").alias("slot"), "doc_id")
+    agg = _bm25_slots(spark, [(g["dir"], r.bases[g["gen"]]) for g in r.live_gens], terms,
+                      r.n_docs, r.avg_dl, r.k1, r.b, mode)
     return (
-        docs.join(F.broadcast(topk), "slot")
+        agg.join(live_docs(spark, r.gens, ()), "slot")
         .select("doc_id", "score")
         .orderBy(F.col("score").desc(), F.col("doc_id").asc())
+        .limit(k)
     )
 
 
@@ -472,10 +689,8 @@ def phrase_topk(
     Requires an index built with IndexConfig(store_positions=True)."""
     r = reader
     if live is None:
-        # generational readers carry a liveDocs mask — default to it, like
-        # every other query entry point (tombstoned/superseded docs must not
-        # surface from a phrase query either)
-        live = getattr(r, "_live", None)
+        # tombstoned/superseded docs must not surface from a phrase query
+        live = r._live
     qterms = tokenize_text(phrase)  # order + duplicates matter
     if not qterms:
         return []
@@ -581,7 +796,7 @@ def span_near_or_topk(
     analogue of Lucene's SpanOr df. Requires store_positions=True."""
     r = reader
     if live is None:
-        live = getattr(r, "_live", None)
+        live = r._live
     groups = [sorted({t for alt in cl for t in tokenize_text(alt)}) for cl in clauses]
     if len(groups) < 2 or any(not g for g in groups):
         return []
@@ -667,7 +882,7 @@ def span_first_topk(
     Requires IndexConfig(store_positions=True)."""
     r = reader
     if live is None:
-        live = getattr(r, "_live", None)
+        live = r._live
     toks = tokenize_text(term)
     if len(toks) != 1:
         raise ValueError("span_first takes a single-term clause")
@@ -717,7 +932,7 @@ def span_not_topk(
     occurrence loop). Requires store_positions=True."""
     r = reader
     if live is None:
-        live = getattr(r, "_live", None)
+        live = r._live
     ti = tokenize_text(include)
     te = tokenize_text(exclude)
     if len(ti) != 1 or len(te) != 1:
@@ -817,7 +1032,7 @@ def intervals_match(
     IndexConfig(store_positions=True)."""
     r = reader
     if live is None:
-        live = getattr(r, "_live", None)
+        live = r._live
     qterms = tokenize_text(query)
     if not qterms:
         return []
@@ -865,7 +1080,7 @@ def intervals_groups_match(
     doc_id order. Requires store_positions=True."""
     r = reader
     if live is None:
-        live = getattr(r, "_live", None)
+        live = r._live
     norm = [sorted({t for alt in g for t in tokenize_text(alt)}) for g in groups]
     if not norm or any(not g for g in norm):
         return []
@@ -1003,14 +1218,14 @@ def prefix_match(
     """ES prefix query (constant-score): doc_ids containing ANY term that
     starts with ``prefix``.
 
-    Term expansion goes through ``reader.expand_prefix`` (so MultiGenReader
-    unions its per-generation dictionaries) and is capped at
+    Term expansion goes through ``reader.expand_prefix`` (the union of
+    the generations' dictionaries) and is capped at
     ``max_expansions`` terms in term order — ES's expansion cap, default 50;
     pass None for the uncapped rewrite. Every score is the same constant, so
     top-k under the (score desc, doc_id asc) tie-break is simply the k
     smallest doc_ids; ``k=None`` returns all matches. ``live`` defaults to
-    the reader's own liveness mask when it has one (generational indexes),
-    so superseded/tombstoned docs never surface."""
+    the reader's own liveDocs, so superseded/tombstoned docs never
+    surface."""
     r = reader
     terms = r.expand_prefix(prefix.lower(), max_expansions)
     out = _expansion_docs(r, terms, live)
@@ -1026,7 +1241,7 @@ def _expansion_docs(
     if not terms:
         return []
     if live is None:
-        live = getattr(r, "_live", None)
+        live = r._live
     _, doc_ids = r.doc_arrays()
     postings = r.fetch_postings(terms)
     if not postings:
@@ -1257,7 +1472,7 @@ def match_phrase_prefix(
         out = _expansion_docs(r, expansions, live)
         return out[:k] if k is not None else out
     if live is None:
-        live = getattr(r, "_live", None)
+        live = r._live
     _, doc_ids = r.doc_arrays()
     uniq = sorted(set(fixed) | set(expansions))
     per_term = _fetch_positional(r, uniq)
@@ -1330,54 +1545,41 @@ def make_serving_readers(
     target_docs: int = SHARD_TARGET_DOCS,
 ) -> list:
     """The reader set a serving node (or test harness) should score with:
-    ONE plain reader below ``min_docs`` (generational indexes get a
-    MultiGenReader), else ``ceil(n_docs / target_docs)`` shard-scoped
-    readers over disjoint slot ranges. Constructing a reader is metadata-
-    only (stats.json / generations.json) — doc arrays stay lazy, so the
-    probe used for the cost switch is free; a reader's doc arrays and
-    pinned store are later read from the index parquet in the driver,
-    with no Spark job."""
-    from search_replica_spark.streaming.incremental import (
-        MultiGenReader,
-        _load_gens,
-    )
-
-    gens = _load_gens(index_dir)
-    if gens:
-        def make(rng=None):
-            return MultiGenReader(spark, index_dir, shard_range=rng)
-    else:
-        def make(rng=None):
-            return IndexReader(spark, index_dir, shard_range=rng)
-
-    probe = make()
+    ONE reader below ``min_docs``, else ``ceil(n_docs / target_docs)``
+    shard-scoped readers over disjoint slot ranges, for a plain and a
+    generational index alike. Constructing a reader is metadata-only
+    (stats.json / generations.json) — doc arrays stay lazy, so the probe
+    used for the cost switch is free; a reader's doc arrays and pinned
+    store are later read from the index parquet in the driver, with no
+    Spark job."""
+    probe = IndexReader(spark, index_dir)
     n = int(probe.n_docs)
     if n < min_docs:
         return [probe]
     n_shards = -(-n // max(1, target_docs))
     bounds = np.linspace(0, n, n_shards + 1).astype(np.int64)
-    return [make((int(bounds[i]), int(bounds[i + 1]))) for i in range(n_shards)]
+    return [IndexReader(spark, index_dir, shard_range=(int(bounds[i]), int(bounds[i + 1])))
+            for i in range(n_shards)]
 
 
-def _global_dfs(reader, terms: list[str] | None) -> dict[str, int]:
+def _global_dfs(reader: IndexReader, terms: list[str] | None) -> dict[str, int]:
     """dfs phase of dfs_query_then_fetch: GLOBAL document frequencies from
-    the term dictionary (summed across generations), independent of any
-    shard's local view — so every shard scores with the same idf the
-    unsharded scorer derives from its full posting lengths. Read in the
-    driver with no Spark job; a term lookup reads only the row groups
-    whose term statistics can hold one of ``terms``. ``terms=None``
-    reads every term."""
-    dirs = (
-        [g["dir"] for g in reader.live_gens]
-        if hasattr(reader, "live_gens")
-        else [reader.index_dir]
-    )
+    the term dictionaries of the reader's live generations (summed),
+    independent of any shard's local view — so every shard scores with
+    the same idf the unsharded scorer derives from its full posting
+    lengths. Read in the driver with no Spark job; a term lookup reads
+    only the row groups whose term statistics can hold one of ``terms``.
+    ``terms=None`` reads every term."""
     flt = () if terms is None else (("term", "in", sorted(set(terms))),)
     out: dict[str, int] = {}
-    for d in dirs:
-        t = read_table(os.path.join(d, "dict"), ["term", "df"], flt)
-        for term, df in zip(t["term"].to_pylist(), t["df"].to_pylist()):
-            out[term] = out.get(term, 0) + int(df)
+    for g in reader.live_gens:
+        t = read_table(os.path.join(g["dir"], "dict"), ["term", "df"], flt)
+        dfs = dict(zip(_strings(t["term"]), t["df"].to_numpy().tolist()))
+        if out:
+            for term, df in dfs.items():
+                out[term] = out.get(term, 0) + df
+        else:
+            out = dfs
     return out
 
 
@@ -1403,9 +1605,7 @@ def serve_topk(
     readers = make_serving_readers(spark, index_dir, min_docs, target_docs)
     if len(readers) == 1:
         r = readers[0]
-        return TermAtATimeScorer(r).score(
-            query, k, mode=mode, live=getattr(r, "_live", None)
-        )
+        return TermAtATimeScorer(r).score(query, k, mode=mode, live=r._live)
     terms = sorted(set(tokenize_text(query)))
     if not terms:
         return []
@@ -1415,14 +1615,12 @@ def serve_topk(
 
     def score_shard(r) -> list[tuple[int, float]]:
         r._dict_df = dfs
-        local = TermAtATimeScorer(r).score(query, k, mode=mode, live=getattr(r, "_live", None))
+        local = TermAtATimeScorer(r).score(query, k, mode=mode, live=r._live)
         # release this shard's arrays once scored: in production each shard
         # is a different NODE; a single-process coordinator (tests, small
         # deployments) must not accumulate every slice into the O(corpus)
         # footprint the sharding exists to avoid (r5 review)
-        r._doc_len = r._doc_ids = None
-        if hasattr(r, "_live_cache"):
-            r._live_cache = None
+        r._doc_len = r._doc_ids = r._live_cache = None
         return local
 
     # shards are independent Spark jobs — overlap a few so one shard's
@@ -1465,11 +1663,11 @@ def match_all(
     No postings are touched: the doc store IS the answer. Deterministic
     order (doc_id asc, ES's tie-break for equal scores) so paging over the
     result is stable. At scale this is a doc-store scan, not a scorer.
-    ``live`` defaults to the reader's own liveDocs (generational readers),
-    like every other query entry point."""
+    ``live`` defaults to the reader's own liveDocs, like every other query
+    entry point."""
     _dl, ids = reader.doc_arrays()
     if live is None:
-        live = getattr(reader, "_live", None)
+        live = reader._live
     if live is not None:
         # sparse path: LiveDocs drops its dead slots without materializing
         # a dense O(n_docs) mask; a caller-supplied plain ndarray mask
@@ -1584,7 +1782,7 @@ def simple_query_string(
     every scorer here, merged in plain dicts (the serving-node glue
     layer, not a Spark job)."""
     if live is None:
-        live = getattr(reader, "_live", None)
+        live = reader._live
     groups = parse_simple_query_string(query, default_operator)
     if not groups:
         return []
@@ -1631,9 +1829,8 @@ def completion_suggest(
     explicit weight is indexed — desc, then term asc (the completion
     tie-break). Lucene serves this from an FST; the columnar analogue is
     the row-group-pruned range seek ``expand_prefix`` runs over the
-    term-sorted dict parquet — which a ``MultiGenReader`` overrides to
-    union its per-generation dictionaries, so generational indexes
-    complete too; weights are the generation-summed dictionary dfs
+    generations' term-sorted dict parquet; weights are the
+    generation-summed dictionary dfs
     (``_global_dfs``, the same global-df convention the dfs phase of
     sharded serving uses). Returns (term, weight) pairs."""
     terms = reader.expand_prefix(prefix.lower(), max_expansions=None)
@@ -1677,8 +1874,7 @@ def terms_lookup(
         return []
     terms = sorted(set(tokenize_text(rows[0][0])))
     if max_terms is not None and len(terms) > max_terms:
-        # generation-aware dictionary dfs (a MultiGenReader has no
-        # top-level dict); unindexed terms (noindex/ignore_above mappings)
+        # generation-summed dictionary dfs; unindexed terms (noindex/ignore_above mappings)
         # match nothing, so they never compete for cap slots
         dfs = _global_dfs(reader, terms)
         ranked = sorted((df, t) for t, df in dfs.items())
@@ -1694,8 +1890,8 @@ def explain_score(
     """ES explain API (`GET /_explain/{id}`): the per-term BM25 breakdown
     for one document — term, tf, df, idf, and the term's score
     contribution, exactly the numbers the scorers sum. ``doc_id=None``
-    explains the TOP LIVE hit (generational readers' liveDocs applies, as
-    in every query entry point). On a generational reader a re-upserted
+    explains the TOP LIVE hit (the reader's liveDocs applies, as in
+    every query entry point). On a generational index a re-upserted
     doc_id resolves to its LATEST live slot — the version queries actually
     score — never a superseded one. Float ops mirror TermAtATimeScorer
     bit-for-bit (same formula, same order), so an oracle recomputing the
@@ -1704,7 +1900,7 @@ def explain_score(
     terms = sorted(set(tokenize_text(query)))
     if not terms:
         return []
-    live = getattr(reader, "_live", None)
+    live = reader._live
     if doc_id is None:
         top = TermAtATimeScorer(reader).score(query, 1, live=live)
         if not top:
@@ -1760,7 +1956,7 @@ def collapse_topk(
     sorted view of doc_ids). At scale the same shape runs as a window
     partitioned by the collapse key over the distributed scorer output."""
     if live is None:
-        live = getattr(reader, "_live", None)
+        live = reader._live
     hits = TermAtATimeScorer(reader).score(query, k=len(collapse_ids), live=live)
     if not hits:
         return []
@@ -1806,9 +2002,9 @@ def fielded_norms_topk(
 
     Requires a build whose docs/ carries dl_<field> columns and whose
     stats.json carries field_stats (field_analyzers builds do, round 4+).
-    Works over generational indexes too: MultiGenReader overrides
-    ``field_stats`` to merge per-generation stats, and ``field_dl_arrays``
-    reads the per-generation dl columns onto global slots. On a shard
+    Works over generational indexes too: ``field_stats`` merges the
+    generations' stats, and ``field_dl_arrays`` reads the generations' dl
+    columns onto slots. On a shard
     reader the dl columns hold the shard's slots and idf uses the
     dictionary df (``term_df``), so scores equal the full reader's.
     Accumulation mirrors TATA: sorted-term order, ``_accumulate``, same
@@ -1825,7 +2021,7 @@ def fielded_norms_topk(
             "(rebuild with round-4+ build_index)"
         )
     if live is None:
-        live = getattr(reader, "_live", None)  # generational liveDocs default
+        live = reader._live
     terms = sorted(set(terms))
     if not terms:
         return []
@@ -1878,7 +2074,7 @@ def rescore_topk(
     doc_id asc) like every other entry point."""
     r = reader or IndexReader(spark, index_dir)
     base = TermAtATimeScorer(r).score(
-        query, window, live=getattr(r, "_live", None)
+        query, window, live=r._live
     )
     if not base:
         return []
@@ -1918,7 +2114,7 @@ def function_score_topk(
     asc)."""
     r = reader
     if live is None:
-        live = getattr(r, "_live", None)
+        live = r._live
     base = TermAtATimeScorer(r).score(query, int(r.n_docs) or 1, live=live)
     if not base:
         return []
@@ -1956,7 +2152,7 @@ def more_like_this_topk(
     no dictionary scan."""
     r = reader
     if live is None:
-        live = getattr(r, "_live", None)
+        live = r._live
     tf: dict[str, int] = {}
     for t in tokenize_text(like_text):
         tf[t] = tf.get(t, 0) + 1
@@ -1989,7 +2185,7 @@ def count_match(
     deletes, but the general path here is exact under tombstones."""
     r = reader
     if live is None:
-        live = getattr(r, "_live", None)
+        live = r._live
     terms = sorted(set(tokenize_text(query)))
     if not terms:
         return 0
@@ -2025,7 +2221,7 @@ def dis_max_topk(
     segmented max/sum over the union of match sets."""
     r = reader
     if live is None:
-        live = getattr(r, "_live", None)
+        live = r._live
     id_parts: list[np.ndarray] = []
     score_parts: list[np.ndarray] = []
     for q in queries:
@@ -2063,7 +2259,7 @@ def boosting_topk(
     one posting fetch, no scoring."""
     r = reader
     if live is None:
-        live = getattr(r, "_live", None)
+        live = r._live
     base = TermAtATimeScorer(r).score(positive, int(r.n_docs) or 1, live=live)
     if not base:
         return []
@@ -2110,7 +2306,7 @@ def msearch(
     serves every subquery; at the Spark layer the same batching folds N
     queries' term fetches into one ``term IN (...)`` pushdown scan."""
     if live is None:
-        live = getattr(reader, "_live", None)
+        live = reader._live
     return [TermAtATimeScorer(reader).score(q, k, live=live) for q in queries]
 
 
@@ -2129,7 +2325,7 @@ def terms_set_topk(
     over the concatenated postings."""
     r = reader
     if live is None:
-        live = getattr(r, "_live", None)
+        live = r._live
     want = sorted({t for q in terms for t in tokenize_text(q)})
     if not want:
         return []

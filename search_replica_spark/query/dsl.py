@@ -84,7 +84,7 @@ def execute_dsl(reader, query: dict, k: int = 10, live=None, inner_hits=None):
     parent doc_id → [(child doc_id, child score), ...] (top ``size``,
     default 3, child-score desc / id asc — ES's inner-hits ordering)."""
     if live is None:
-        live = getattr(reader, "_live", None)
+        live = reader._live
     if isinstance(query, dict) and set(query) == {"query"}:
         query = query["query"]
     # top-level LEAF fast path: for kinds whose primitive already returns
@@ -739,37 +739,46 @@ def _has_child_map(reader, body: dict, live, ih=None) -> dict[int, float]:
     return out
 
 
-def _stored_content(reader, doc_id: int) -> str:
-    """The analyzed text of one stored document (more_like_this by _id):
-    a pushed-down point GET through the docs store — requires a
-    ``store_source=True`` build, exactly like ES requires ``_source`` for
-    MLT by id.  The id is resolved in the READER's id space (doc_arrays)
-    to its slot, so readers that remap ids still fetch the right row;
-    generational readers GET through source_view (last-wins) instead.
-    The branch keys on the READER (live_gens), never the directory: a
-    plain reader over an index that later gained generations (adoption by
-    reindex/ingest) must keep resolving in ITS OWN id space."""
+def _matched_docs_df(reader, ids: list[int]):
+    """The docs-store rows of the reader's live docs among ``ids``, with
+    an ``_rid`` column holding the id. The ids are resolved in the
+    READER's id space (its doc arrays, then its liveDocs), so a reader
+    that remaps ids fetches the right rows and a superseded version is
+    never read. Each generation's rows are selected on doc_idx: a small
+    set pushes an IN filter into the scan, and every set broadcast-joins
+    its (doc_idx, _rid) list — the shapes that survive a page or an agg
+    over millions of matches."""
     import os
+    from functools import reduce
 
     from pyspark.sql import functions as F
 
-    if hasattr(reader, "live_gens"):
-        from search_replica_spark.streaming.incremental import get_docs
+    _dl, arr = reader.doc_arrays()
+    want = np.fromiter((int(i) for i in ids), dtype=np.int64, count=len(ids))
+    slots = np.flatnonzero(np.isin(arr, want))
+    if reader._live is not None:
+        slots = slots[reader._live[slots]]
+    n_docs = {g["gen"]: int(g["n_docs"]) for g in reader.live_gens}
+    parts = []
+    for d, gen, base, rng in reader._gens():
+        lo, hi = rng or (0, n_docs[gen])
+        off = reader._slot_offset(base)
+        mine = slots[(slots >= lo + off) & (slots < hi + off)]
+        rid = reader.spark.createDataFrame(
+            list(zip((mine - off).tolist(), arr[mine].tolist())), "doc_idx long, _rid long")
+        docs = reader.spark.read.parquet(os.path.join(d, "docs"))
+        if mine.size <= 1000:
+            docs = docs.filter(F.col("doc_idx").isin((mine - off).tolist()))
+        parts.append(docs.join(F.broadcast(rid), "doc_idx"))
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
 
-        rows = (
-            get_docs(reader.spark, reader.index_dir, [int(doc_id)])
-            .select(DEFAULT_FIELD)
-            .collect()
-        )
-    else:
-        _dl, ids = reader.doc_arrays()
-        slots = np.flatnonzero(ids == int(doc_id))
-        rows = (
-            reader.spark.read.parquet(os.path.join(reader.index_dir, "docs"))
-            .filter(F.col("doc_idx") == int(slots[0]))
-            .select(DEFAULT_FIELD)
-            .collect()
-        ) if slots.size else []
+
+def _stored_content(reader, doc_id: int) -> str:
+    """The analyzed text of one stored document (more_like_this by _id):
+    a pushed-down point read of its live row in the docs store
+    (``_matched_docs_df``) — requires a ``store_source=True`` build, exactly
+    like ES requires ``_source`` for MLT by id."""
+    rows = _matched_docs_df(reader, [int(doc_id)]).select(DEFAULT_FIELD).collect()
     if not rows or rows[0][0] is None:
         raise ValueError(
             f"more_like_this: no stored _source for _id {doc_id} "
@@ -782,32 +791,10 @@ def _stored_contents(reader, ids: list[int]) -> dict[int, str]:
     """Batch form of ``_stored_content``: ONE pushed-down docs-store read
     for all requested ids (highlighting a page of hits must not issue a
     GET per hit)."""
-    import os
-
-    from pyspark.sql import functions as F
-
     if not ids:
         return {}
-    if hasattr(reader, "live_gens"):
-        from search_replica_spark.streaming.incremental import get_docs
-
-        rows = (
-            get_docs(reader.spark, reader.index_dir, ids)
-            .select("doc_id", DEFAULT_FIELD)
-            .collect()
-        )
-        return {int(r[0]): r[1] for r in rows}
-    _dl, arr = reader.doc_arrays()
-    want = np.fromiter((int(i) for i in ids), dtype=np.int64, count=len(ids))
-    slots = np.flatnonzero(np.isin(arr, want))
-    by_slot = {int(s): int(arr[s]) for s in slots}
-    rows = (
-        reader.spark.read.parquet(os.path.join(reader.index_dir, "docs"))
-        .filter(F.col("doc_idx").isin([int(s) for s in slots]))
-        .select("doc_idx", DEFAULT_FIELD)
-        .collect()
-    )
-    return {by_slot[int(r[0])]: r[1] for r in rows}
+    rows = _matched_docs_df(reader, ids).select("_rid", DEFAULT_FIELD).collect()
+    return {int(r[0]): r[1] for r in rows}
 
 
 def _highlight_terms(q) -> list[str]:
@@ -863,46 +850,6 @@ def _highlight_terms(q) -> list[str]:
     if kind == "pinned":
         return _highlight_terms(body["organic"])
     return []
-
-
-def _matched_docs_df(reader, ids: list[int]):
-    """DataFrame of the docs-store rows for a matched id set, resolved in
-    the READER's id space and exposed with an ``_rid`` column holding that
-    reader id.  Small sets push an IN filter into the scan; large sets
-    broadcast-join the slot list — both are the shapes that survive a page
-    or an agg over millions of matches."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    spark = reader.spark
-    if hasattr(reader, "live_gens"):
-        from search_replica_spark.streaming.incremental import source_view
-
-        docs = source_view(spark, reader.index_dir)
-        key_col = "doc_id"  # generational readers speak engine doc_ids
-        keys = [int(i) for i in ids]
-        docs = docs.withColumn("_rid", F.col(key_col))
-    else:
-        _dl, arr = reader.doc_arrays()
-        want = np.fromiter((int(i) for i in ids), dtype=np.int64, count=len(ids))
-        slots = np.flatnonzero(np.isin(arr, want))
-        rid = {int(s): int(arr[s]) for s in slots}
-        docs = spark.read.parquet(os.path.join(reader.index_dir, "docs"))
-        key_col = "doc_idx"
-        keys = sorted(rid)
-        mapping = spark.createDataFrame(
-            [(s, r) for s, r in rid.items()], "doc_idx long, _rid long"
-        )
-        if len(keys) <= 1000:
-            return docs.filter(F.col(key_col).isin(keys)).join(
-                F.broadcast(mapping), key_col
-            )
-        return docs.join(F.broadcast(mapping), key_col)
-    if len(keys) <= 1000:
-        return docs.filter(F.col(key_col).isin(keys))
-    key_df = spark.createDataFrame([(k,) for k in keys], f"{key_col} long")
-    return docs.join(F.broadcast(key_df), key_col)
 
 
 def _run_aggs(reader, aggs: dict, matched: list[int]) -> dict:
@@ -987,7 +934,7 @@ def execute_request(reader, body: dict, live=None) -> dict:
     "aggregations": {...}}`` — the envelope a reference user's client
     already parses."""
     if live is None:
-        live = getattr(reader, "_live", None)
+        live = reader._live
     knn = body.get("knn")
     # a knn-only request returns vector hits alone (ES semantics); with a
     # query, the union is scored additively (query score + boost·cosine)
@@ -1241,7 +1188,7 @@ def query_string_map(reader, text: str, live=None, default_operator: str = "or")
     the serving node (reference parity: the query language ES exposes on
     /_search?q= and {"query_string": ...})."""
     if live is None:
-        live = getattr(reader, "_live", None)
+        live = reader._live
     node, p = _qs_parse(_qs_tokens(text), 0, str(default_operator).lower())
     m, neg = _qs_eval(reader, node, live)
     if neg:

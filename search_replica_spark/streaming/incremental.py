@@ -18,8 +18,13 @@ We re-express exactly that model Spark-first:
     doc that was never indexed is a silent no-op — the reference ignores
     document_missing_exception the same way (search/errors.go:9-47);
   - a doc_id appearing in a later generation supersedes earlier versions
-    (last-wins by arrival order — reference P16, table.go:56-63); readers
-    resolve liveness Lucene-style via a liveDocs mask;
+    (last-wins by arrival order — reference P16, table.go:56-63);
+  - reading needs nothing of this module: ``query.bm25.IndexReader``
+    reads the generation list (``index.manifest.read_generations``; a
+    plain ``build_index`` directory is one generation with no
+    tombstones), computes liveDocs in NumPy, and ``bm25_topk_spark``
+    runs the same rule as a Spark plan (``live_docs``), which
+    ``source_view`` and ``merge_generations`` here use too;
   - global BM25 statistics (N, avgdl, df) are merged across generations at
     read time. Like ES/Lucene, superseded/tombstoned versions still
     influence corpus statistics until **compaction** — ``compact()``
@@ -38,8 +43,8 @@ processingTime (a long-running replication loop like the reference's).
 Tombstone representation: delete keys are small per batch (a CDC micro-
 batch), so they live in generations.json as engine doc_ids; at true 100 TB
 scale the same ids would go to a per-generation parquet/roaring-bitmap
-sidecar and the liveness pass below would read that instead — nothing else
-changes.
+sidecar and the reader's liveness pass would read that instead — nothing
+else changes.
 """
 
 from __future__ import annotations
@@ -51,17 +56,30 @@ import os
 import re
 import shutil
 
-import numpy as np
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from search_replica_spark.analysis import tokenize_text
 from search_replica_spark.config import IndexConfig
 from search_replica_spark.errors import SchemaMismatch, with_retries
 from search_replica_spark.index.build import build_index, with_doc_ids
-from search_replica_spark.index.manifest import read_stats, write_durable
-from search_replica_spark.query.bm25 import IndexReader, TermAtATimeScorer, _bm25_slots
+from search_replica_spark.index.manifest import (  # noqa: F401 (re-exported)
+    GENS_FILE,
+    _gen_stats,
+    _load_gens,
+    read_generations,
+    read_stats,
+    slot_bases,
+    write_durable,
+)
+from search_replica_spark.query.bm25 import (  # noqa: F401 (re-exported)
+    IndexReader,
+    LiveDocs,
+    TermAtATimeScorer,
+    bm25_topk_spark,
+    live_docs,
+)
 
-GENS_FILE = "generations.json"
 CHANGE_COL = "_change_type"  # insert | update | update_partial | delete
 # (Iceberg CDC dialect + ES's partial-update bulk op, table.go:143-151)
 
@@ -167,14 +185,6 @@ def _fold_epochs(gens: list[dict]) -> dict[str, int]:
     return out
 
 
-def _load_gens(index_dir: str) -> list[dict]:
-    p = os.path.join(index_dir, GENS_FILE)
-    if os.path.exists(p):
-        with open(p) as f:
-            return json.load(f)
-    return []
-
-
 def _save_gens(index_dir: str, gens: list[dict]) -> None:
     os.makedirs(index_dir, exist_ok=True)
     write_durable(os.path.join(index_dir, GENS_FILE), json.dumps(gens, indent=2))
@@ -258,13 +268,6 @@ def _adopt_plain_index(index_dir: str) -> list[dict]:
     return gens
 
 
-def _gen_stats(index_dir: str, g: dict) -> dict:
-    """A live generation's stats.json, format-checked (``read_stats``);
-    the top-level copy while an adoption's move into gen=0 is pending."""
-    d = g["dir"] if os.path.exists(os.path.join(g["dir"], "stats.json")) else index_dir
-    return read_stats(d)
-
-
 def derive_index_cfg(index_dir: str, base: IndexConfig | None = None) -> IndexConfig:
     """An IndexConfig whose BUILD FLAGS match the index's existing
     generations — ES semantics: index settings are fixed at creation, every
@@ -326,11 +329,10 @@ def _require_stored_source(index_dir: str) -> None:
 def source_view(spark, index_dir: str):
     """Current live document state as a DataFrame — ES GET/_source parity.
 
-    Unions every generation's docs/ store, keeps each doc_id's
-    latest-generation row (last-wins, one ``max(struct(gen, ...))`` partial
-    aggregation — no window sort), then drops rows covered by a strictly
-    later tombstone (same semantics as ``MultiGenReader._liveness``: a
-    generation's own upserts beat its tombstones).
+    The live rows of every generation's docs store (``live_docs``: each
+    doc_id's newest-generation row, minus the rows a strictly later
+    tombstone covers — the rule the reader's liveDocs applies), as doc_id
+    plus every stored column. A plain index reads as its one generation.
 
     With ``IndexConfig(store_source=True)`` builds, the view carries every
     input column (content included) — the stored-fields half of Lucene that
@@ -338,61 +340,7 @@ def source_view(spark, index_dir: str):
     shuffle on doc_id over the docs stores (tiny vs postings) plus a
     broadcast of the tombstone set.
     """
-    gens = _load_gens(index_dir)
-    if not gens and os.path.exists(os.path.join(index_dir, "docs")):
-        # plain (non-generational) build_index output = one live generation
-        return spark.read.parquet(os.path.join(index_dir, "docs")).drop("doc_idx")
-    doc_gens = [g for g in gens if g["dir"]]
-    if not doc_gens:
-        raise ValueError(f"no document generations in {index_dir}")
-    if len(doc_gens) == 1:
-        # single live generation: doc_ids are unique within a generation
-        # (the build fails fast otherwise), so the last-wins aggregation is
-        # an identity — skip its full-store shuffle; the tombstone filter
-        # below still applies against this generation's number
-        g0 = doc_gens[0]
-        one = spark.read.parquet(os.path.join(g0["dir"], "docs"))
-        val_cols = [c for c in one.columns if c not in ("doc_id", "doc_idx")]
-        picked = one.select(
-            "doc_id", F.lit(int(g0["gen"])).alias("_gen"), *val_cols
-        )
-    else:
-        uni = None
-        for g in doc_gens:
-            part = spark.read.parquet(os.path.join(g["dir"], "docs")).withColumn(
-                "_gen", F.lit(int(g["gen"]))
-            )
-            uni = part if uni is None else uni.unionByName(part, allowMissingColumns=True)
-        val_cols = [c for c in uni.columns if c not in ("doc_id", "doc_idx", "_gen")]
-        # max_by orders ONLY by _gen and merely carries the value struct — a
-        # plain max(struct(_gen, ...)) would try to ORDER by the value columns
-        # on ties, which breaks for non-orderable column types (map-kind inline
-        # fields); _gen ties are impossible (the build fails fast on duplicate
-        # doc_ids within a generation)
-        picked = (
-            uni.groupBy("doc_id")
-            .agg(
-                F.max_by(
-                    F.struct(*[F.col(c) for c in val_cols]), F.col("_gen")
-                ).alias("_s"),
-                F.max("_gen").alias("_gen"),
-            )
-            .select("doc_id", "_gen", "_s.*")
-        )
-    del_gen: dict[int, int] = {}
-    for g in gens:
-        for d in g.get("deleted_ids", ()):
-            del_gen[int(d)] = max(del_gen.get(int(d), -1), int(g["gen"]))
-    if del_gen:
-        dels = spark.createDataFrame(
-            [(k, v) for k, v in del_gen.items()], "doc_id long, _del_gen long"
-        )
-        picked = (
-            picked.join(F.broadcast(dels), "doc_id", "left")
-            .filter(F.col("_del_gen").isNull() | (F.col("_del_gen") <= F.col("_gen")))
-            .drop("_del_gen")
-        )
-    return picked.drop("_gen")
+    return live_docs(spark, read_generations(index_dir)).drop("slot")
 
 
 def get_docs(spark, index_dir: str, doc_ids):
@@ -1287,267 +1235,15 @@ def compact(spark, corpus_df, index_dir: str, cfg: IndexConfig | None = None) ->
     return stats
 
 
-class LiveDocs:
-    """Sparse Lucene-liveDocs: stores only the DEAD slots (sorted int64
-    array), so a query node serving a generational shard holds O(superseded
-    + tombstoned) driver state instead of an O(corpus) bitmap — at 10^9-10^12
-    docs a dense ``np.ones(n_docs)`` is GBs of memory that scales with the
-    corpus; this scales with churn. Supports exactly the mask operations
-    the scorers use: fancy-index with an int slot array (vectorized
-    searchsorted membership), scalar index, ``sum()``
-    (live count), and ``astype(bool)`` for the rare dense-mask consumer."""
-
-    __slots__ = ("n", "dead")
-
-    def __init__(self, n: int, dead):
-        self.n = int(n)
-        self.dead = np.unique(np.asarray(dead, dtype=np.int64))
-
-    def __getitem__(self, idx):
-        if isinstance(idx, (int, np.integer)):
-            i = int(np.searchsorted(self.dead, idx))
-            return not (i < self.dead.size and self.dead[i] == idx)
-        idx = np.asarray(idx)
-        if self.dead.size == 0:
-            return np.ones(idx.shape, dtype=bool)
-        pos = np.minimum(np.searchsorted(self.dead, idx), self.dead.size - 1)
-        return self.dead[pos] != idx
-
-    def sum(self) -> int:
-        return self.n - int(self.dead.size)
-
-    def astype(self, dtype):
-        m = np.ones(self.n, dtype=bool)
-        m[self.dead] = False
-        return m.astype(dtype)
-
-    def drop_dead(self, arr):
-        """``arr`` (slot-indexed, len n) without the dead slots — the
-        sparse form of ``arr[self.astype(bool)]``: slice-gather around the
-        sorted dead array, O(dead) segments, NO dense O(n_docs) mask
-        allocation (the r4 verdict's match_all finding)."""
-        if self.dead.size == 0:
-            return arr
-        cuts = np.stack([self.dead, self.dead + 1], axis=1).ravel()
-        return np.concatenate(np.split(arr, cuts)[::2])
-
-    def __len__(self) -> int:
-        return self.n
-
-
 class MultiGenReader(IndexReader):
-    """IndexReader-compatible facade over a generational index: merged
-    stats, last-wins + tombstone liveness (Lucene liveDocs), and postings
-    of every generation, each generation's local doc_idx space mapped onto
-    disjoint global slots (slot = doc_idx + the generation's base). Doc
-    arrays and the pinned store are read from every generation's parquet
-    in the driver with no Spark job: the store keeps one immutable array
-    pair per generation, with the slot base added at pin time, and a
-    term's postings are its per-generation slices concatenated in
-    generation (slot) order. An unpinned request fetches the query terms'
-    rows across ALL generations in one Spark job (a union of per-generation
-    `term_id IN` scans). Because the interface matches IndexReader, the
-    same TermAtATimeScorer runs unchanged over N generations.
-    """
+    """``IndexReader`` under its generational name. It adds nothing: the
+    reader entry points are bound here again only so that each class owns
+    them (``perfbench/spans.py`` wraps them per class, and a call through
+    an inherited entry would be traced twice)."""
 
-    def __init__(self, spark, index_dir: str, k1: float = 1.2, b: float = 0.75,
-                 shard_range: tuple[int, int] | None = None):
-        self.spark = spark
-        self.index_dir = index_dir
-        self.gens = _load_gens(index_dir)
-        if not self.gens:
-            raise FileNotFoundError(f"no generations at {index_dir}")
-        self.live_gens = [g for g in self.gens if g["dir"]]
-        self.positions_stored = any(
-            _gen_stats(index_dir, g).get("store_positions", False) for g in self.live_gens
-        )
-        self.k1, self.b = k1, b
-        self.n_docs = int(sum(g["n_docs"] for g in self.gens))
-        total_tokens = sum(g["total_tokens"] for g in self.gens)
-        self.avg_dl = total_tokens / self.n_docs if self.n_docs else 0.0
-        # slot base per live generation (docs concatenate in gen order)
-        self.bases = {}
-        acc = 0
-        for g in self.live_gens:
-            self.bases[g["gen"]] = acc
-            acc += g["n_docs"]
-        # doc-sharded serving over the merged SLOT space (gen-concatenated
-        # doc_idx): this reader holds only slots in [lo, hi) — same
-        # contract as IndexReader.shard_range; global stats stay global.
-        self.shard_range = shard_range
-        self._doc_len = None
-        self._doc_ids = None
-        self._pinned = None
-        self._live_cache: LiveDocs | None = None
-        self._dict_df: dict[str, int] | None = None
-
-    def _gens(self):
-        """IndexReader._gens over the live generations: a shard reader
-        keeps each generation's doc_idx range inside [lo, hi) and skips
-        the generations entirely outside it."""
-        out = []
-        for g in self.live_gens:
-            base = self.bases[g["gen"]]
-            rng = None
-            if self.shard_range is not None:
-                lo, hi = self.shard_range
-                rng = max(0, lo - base), min(int(g["n_docs"]), hi - base)
-                if rng[0] >= rng[1]:
-                    continue
-            out.append((g["dir"], g["gen"], base, rng))
-        return out
-
-    @property
-    def _live(self) -> LiveDocs:
-        """Lazy sparse liveDocs — computed on first use, so constructing a
-        reader for the distributed query path (which resolves liveness as
-        an anti-join, not a mask) costs no doc-store load at all."""
-        if self._live_cache is None:
-            full = self._liveness()
-            if self.shard_range is not None:
-                # shard-local liveDocs: dead slots inside [lo, hi), rebased
-                lo, hi = self.shard_range
-                d = full.dead
-                local = d[(d >= lo) & (d < hi)] - lo
-                full = LiveDocs(hi - lo, local)
-            self._live_cache = full
-        return self._live_cache
-
-    # --- merged doc store: each generation's docs read in the driver,
-    # concatenated onto global slots (IndexReader._doc_columns) ---
-    doc_arrays = IndexReader.doc_arrays
-
-    def _liveness(self) -> LiveDocs:
-        """Sparse liveDocs: a slot is dead if its doc_id re-appears in a
-        later generation (last-wins) or a tombstone at a strictly later
-        generation covers it (a generation's own upserts beat its
-        tombstones — delete+insert of one key in one batch nets to the
-        insert, reference P12 key-change semantics, table.go:66-86).
-
-        Computed DISTRIBUTIVELY: a window over the unioned doc stores (and
-        a broadcast tombstone join) ships only the DEAD slots back —
-        O(superseded + tombstoned) driver state, never an O(corpus) bitmap.
-        Single-live-generation fast path (the post-merge steady state):
-        no duplicates are possible, so liveness is at most a point-lookup
-        of the tombstoned ids."""
-        del_gen: dict[int, int] = {}
-        for g in self.gens:
-            for d in g.get("deleted_ids", ()):
-                del_gen[int(d)] = max(del_gen.get(int(d), -1), int(g["gen"]))
-
-        if len(self.live_gens) == 1:
-            g0 = self.live_gens[0]
-            victims = [d for d, t in del_gen.items() if t > g0["gen"]]
-            if not victims:
-                return LiveDocs(self.n_docs, np.empty(0, np.int64))
-            base = self.bases[g0["gen"]]
-            rows = (
-                self.spark.read.parquet(os.path.join(g0["dir"], "docs"))
-                .filter(F.col("doc_id").isin(victims))
-                .select("doc_idx")
-                .collect()
-            )
-            return LiveDocs(self.n_docs, [int(r["doc_idx"]) + base for r in rows])
-
-        from pyspark.sql.window import Window as W
-
-        parts = [
-            self.spark.read.parquet(os.path.join(g["dir"], "docs")).select(
-                "doc_id",
-                (F.col("doc_idx") + F.lit(self.bases[g["gen"]])).alias("slot"),
-                F.lit(int(g["gen"])).alias("gen"),
-            )
-            for g in self.live_gens
-        ]
-        uni = parts[0]
-        for p in parts[1:]:
-            uni = uni.unionByName(p)
-        w = W.partitionBy("doc_id").orderBy(F.col("gen").desc())
-        dead = (
-            uni.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") > 1)
-            .select("slot")
-        )
-        if del_gen:
-            dels = self.spark.createDataFrame(
-                [(k, v) for k, v in del_gen.items()], "doc_id long, _del_gen long"
-            )
-            tomb = (
-                uni.join(F.broadcast(dels), "doc_id")
-                .filter(F.col("_del_gen") > F.col("gen"))
-                .select("slot")
-            )
-            dead = dead.unionByName(tomb)
-        dead_arr = [int(r["slot"]) for r in dead.distinct().collect()]
-        return LiveDocs(self.n_docs, dead_arr)
-
-    # --- postings across generations ---
-    # IndexReader's pin/fetch run unchanged over _gens(). They are bound
-    # here as well so that each reader class owns its entry points:
-    # perfbench/spans.py wraps them per class, and a call through a
-    # subclass override would be traced twice.
     pin_driver = IndexReader.pin_driver
+    doc_arrays = IndexReader.doc_arrays
     fetch_blocks = IndexReader.fetch_blocks
-
-    def expand_prefix(self, prefix: str, max_expansions: int | None = 50,
-                      extra_filter=None):
-        """Prefix expansion over the UNION of per-generation dictionaries
-        (a generational index has no top-level dict) — same pushed-down
-        range seek per generation (+ optional extra predicate, see
-        IndexReader.expand_prefix), distinct, term order, capped."""
-        from search_replica_spark.query.bm25 import prefix_range_cond
-
-        def one(g):
-            q = (
-                self.spark.read.parquet(os.path.join(g["dir"], "dict"))
-                .filter(prefix_range_cond(prefix))
-                .filter(F.col("term").startswith(prefix))
-            )
-            if extra_filter is not None:
-                q = q.filter(extra_filter)
-            return q.select("term")
-
-        parts = [one(g) for g in self.live_gens]
-        uni = parts[0]
-        for p in parts[1:]:
-            uni = uni.unionByName(p)
-        q = uni.distinct().orderBy("term")
-        if max_expansions is not None:
-            q = q.limit(max_expansions)
-        return [row["term"] for row in q.collect()]
-
-    # --- per-field norms over generations ---
-    def field_stats(self) -> dict | None:
-        """Merged per-field stats: docCounts and token sums accumulate as
-        INTEGERS over live generations, with one final float division —
-        bit-identical to the avg a single-index build over the same live
-        docs computes (recombining n*avg floats would round twice). None
-        if any live generation predates per-field builds (uniform flags
-        are already enforced by derive_index_cfg/merge). Legacy stats
-        without sum_dl fall back to n*avg."""
-        acc: dict[str, list] = {}
-        for g in self.live_gens:
-            with open(os.path.join(g["dir"], "stats.json")) as f:
-                fs = json.load(f).get("field_stats")
-            if not fs:
-                return None
-            for fld, st in fs.items():
-                n, s = acc.get(fld, (0, 0))
-                gn = int(st["n"])
-                gs = st.get("sum_dl")
-                gs = int(gs) if gs is not None else gn * float(st["avg_dl"])
-                acc[fld] = [n + gn, s + gs]
-        return {
-            fld: {"n": int(n), "avg_dl": (s / n) if n else 0.0}
-            for fld, (n, s) in acc.items()
-        }
-
-    # --- query API (same scorers as a single-generation index) ---
-    def score(self, query: str, k: int = 10, mode: str = "or"):
-        return TermAtATimeScorer(self).score(query, k, mode=mode, live=self._live)
-
-    def __len__(self):  # docs currently visible
-        return int(self._live.sum())
 
 
 @_locked_writer(1)
@@ -1614,39 +1310,9 @@ def merge_generations(spark, index_dir: str, cfg: IndexConfig | None = None) -> 
         cfg = dataclasses.replace(
             cfg, store_positions=has_positions, store_source=has_source
         )
-    bases, acc = {}, 0
-    for g in live_gens:
-        bases[g["gen"]] = acc
-        acc += g["n_docs"]
-
-    def union_all(dfs):
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
-
-    docs_u = union_all(
-        [
-            spark.read.parquet(os.path.join(g["dir"], "docs"))
-            .withColumn("slot", F.col("doc_idx") + F.lit(bases[g["gen"]]))
-            .withColumn("gen", F.lit(g["gen"]))
-            for g in live_gens
-        ]
-    )
-    latest = docs_u.groupBy("doc_id").agg(F.max("gen").alias("max_gen"))
-    live = docs_u.join(latest, "doc_id").filter(F.col("gen") == F.col("max_gen"))
-    tomb_rows = [(int(d), g["gen"]) for g in gens for d in g.get("deleted_ids", ())]
-    if tomb_rows:
-        tombs = spark.createDataFrame(tomb_rows, "doc_id long, del_gen int")
-        tmax = tombs.groupBy("doc_id").agg(F.max("del_gen").alias("del_gen"))
-        live = live.join(F.broadcast(tmax), "doc_id", "left").filter(
-            F.col("del_gen").isNull() | (F.col("del_gen") <= F.col("gen"))
-        )
+    live = live_docs(spark, gens)
     # keep every column the docs stores carry (store_source rides through)
-    meta_cols = [
-        c for c in docs_u.columns if c not in ("doc_idx", "slot", "gen", "max_gen")
-    ]
-    live = live.select("slot", *meta_cols)
+    meta_cols = [c for c in live.columns if c != "slot"]
     if live.isEmpty():
         raise ValueError("merge would produce an empty index (everything deleted)")
 
@@ -1663,16 +1329,15 @@ def merge_generations(spark, index_dir: str, cfg: IndexConfig | None = None) -> 
     # their term strings joined back from the generation's dictionary, form
     # the standard stage intermediate over the live docs
     pos_cols = ["positions"] if has_positions else []
-    posts = union_all(
-        [
-            spark.read.parquet(os.path.join(g["dir"], "postings"))
-            .join(spark.read.parquet(os.path.join(g["dir"], "dict"))
-                  .select("term", "term_id"), "term_id")
-            .select("term", (F.col("doc_idx") + F.lit(bases[g["gen"]])).alias("slot"),
-                    "tf", *pos_cols)
-            for g in live_gens
-        ]
-    )
+    bases = slot_bases(gens)
+    posts = functools.reduce(DataFrame.unionByName, [
+        spark.read.parquet(os.path.join(g["dir"], "postings"))
+        .join(spark.read.parquet(os.path.join(g["dir"], "dict"))
+              .select("term", "term_id"), "term_id")
+        .select("term", (F.col("doc_idx") + F.lit(bases[g["gen"]])).alias("slot"),
+                "tf", *pos_cols)
+        for g in live_gens
+    ])
     merged = posts.join(live.select("slot", "doc_id"), "slot").select(
         "doc_id", "term", "tf", *pos_cols
     )
@@ -1694,75 +1359,9 @@ def merge_generations(spark, index_dir: str, cfg: IndexConfig | None = None) -> 
     return stats
 
 
-def bm25_topk_spark_multigen(spark, index_dir: str, query: str, k: int = 10,
-                             mode: str = "or"):
-    """Fully DISTRIBUTED BM25 over a generational index — bm25_topk_spark's
-    plan (``_bm25_slots``: per-generation ``term_id IN`` postings scans
-    with their slot bases, the merged-df idf broadcast, the docs' doc_len
-    joined) unioned across generations, and LIVENESS as a distributed
-    anti-join (a slot is dead if its doc_id re-appears in a later
-    generation, or a strictly-later tombstone covers it) — no driver array
-    of corpus size anywhere, unlike MultiGenReader's pinned-shard arrays.
-    The liveness join is the one cost a generational index cannot avoid
-    (Lucene pays it as per-segment liveDocs bitmaps); AQE broadcasts the
-    matched-slot side for selective queries, and compaction bounds it.
-    """
-    gens = _load_gens(index_dir)
-    if not gens:
-        raise FileNotFoundError(f"no generations at {index_dir}")
-    live_gens = [g for g in gens if g["dir"]]
-    n_docs = int(sum(g["n_docs"] for g in gens))
-    total_tokens = sum(g["total_tokens"] for g in gens)
-    avg_dl = total_tokens / n_docs if n_docs else 0.0
-    bases, acc = {}, 0
-    for g in live_gens:
-        bases[g["gen"]] = acc
-        acc += g["n_docs"]
-    terms = sorted(set(tokenize_text(query)))
-    if not terms or not live_gens:
-        return spark.createDataFrame([], "doc_id long, score double")
-    gstats = _gen_stats(index_dir, live_gens[0])
-    for g in live_gens[1:]:
-        _gen_stats(index_dir, g)
-    agg = _bm25_slots(spark, [(g["dir"], bases[g["gen"]]) for g in live_gens], terms,
-                      n_docs, avg_dl, gstats["k1"], gstats["b"], mode)
-
-    def union_all(dfs):
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
-
-    # distributed liveness: slot -> (doc_id, gen); latest gen per doc wins,
-    # strictly-later tombstones kill older slots
-    docs_u = union_all(
-        [
-            spark.read.parquet(os.path.join(g["dir"], "docs"))
-            .select(
-                (F.col("doc_idx") + F.lit(bases[g["gen"]])).alias("slot"),
-                "doc_id",
-                F.lit(g["gen"]).alias("gen"),
-            )
-            for g in live_gens
-        ]
-    )
-    tomb_rows = [
-        (int(d), g["gen"]) for g in gens for d in g.get("deleted_ids", ())
-    ]
-    latest = docs_u.groupBy("doc_id").agg(F.max("gen").alias("max_gen"))
-    live_docs = docs_u.join(latest, "doc_id").filter(F.col("gen") == F.col("max_gen"))
-    if tomb_rows:
-        tombs = spark.createDataFrame(tomb_rows, "doc_id long, del_gen int")
-        tmax = tombs.groupBy("doc_id").agg(F.max("del_gen").alias("del_gen"))
-        live_docs = live_docs.join(F.broadcast(tmax), "doc_id", "left").filter(
-            F.col("del_gen").isNull() | (F.col("del_gen") <= F.col("gen"))
-        )
-    cand = agg.join(live_docs.select("slot", "doc_id"), "slot")
-    return (
-        cand.select("doc_id", "score")
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-    )
+# the distributed plan under its generational name: bm25_topk_spark runs
+# over the generation list, a plain index being one generation
+bm25_topk_spark_multigen = bm25_topk_spark
 
 
 # retained for callers that tokenized via this module
@@ -1788,8 +1387,8 @@ def delete_by_query(spark, index_dir: str, query, cfg: IndexConfig | None = None
     query. ``query`` is a plain match string or an ES Query-DSL dict (the
     body a reference user posts today — routed through execute_dsl).
 
-    Shape: matching runs on the serving reader (MultiGenReader for
-    generational indexes — its liveness already hides earlier deletes);
+    Shape: matching runs on the serving reader (its liveDocs already
+    hide earlier deletes);
     the matched ids resolve to their (repo, path) keys with ONE pushed-
     down GET over the stored ``_source`` (requires a store_source build,
     exactly like ES's _delete_by_query needs _source to identify docs),
@@ -1804,7 +1403,7 @@ def delete_by_query(spark, index_dir: str, query, cfg: IndexConfig | None = None
     # adoption every ingest entry point performs), so matching, the GET,
     # and the tombstone all speak the generational layout
     _adopt_plain_index(index_dir)
-    reader = MultiGenReader(spark, index_dir)
+    reader = IndexReader(spark, index_dir)
     n = int(reader.doc_arrays()[0].size) or 1
     if isinstance(query, dict):
         from search_replica_spark.query.dsl import execute_dsl
@@ -1812,7 +1411,7 @@ def delete_by_query(spark, index_dir: str, query, cfg: IndexConfig | None = None
         hits = execute_dsl(reader, query, k=n)
     else:
         hits = TermAtATimeScorer(reader).score(
-            str(query), n, live=getattr(reader, "_live", None)
+            str(query), n, live=reader._live
         )
     ids = [int(d) for d, _s in hits]
     if not ids:
@@ -1842,7 +1441,7 @@ def update_by_query(
     from search_replica_spark.query.bm25 import TermAtATimeScorer
 
     _adopt_plain_index(index_dir)
-    reader = MultiGenReader(spark, index_dir)
+    reader = IndexReader(spark, index_dir)
     n = int(reader.doc_arrays()[0].size) or 1
     if isinstance(query, dict):
         from search_replica_spark.query.dsl import execute_dsl
@@ -1850,7 +1449,7 @@ def update_by_query(
         hits = execute_dsl(reader, query, k=n)
     else:
         hits = TermAtATimeScorer(reader).score(
-            str(query), n, live=getattr(reader, "_live", None)
+            str(query), n, live=reader._live
         )
     ids = [int(d) for d, _s in hits]
     if not ids:
