@@ -7,12 +7,17 @@ Builds two small indexes from the seeded synthetic corpus
 positions, and a generational one of three generations (two batches, then
 one that updates two docs and tombstones a third). It then answers a fixed
 matrix over plain, shard and generational readers, pinned and not:
-``execute_request`` bodies, term-at-a-time ``or``/``and``, ``bool_topk``
-and ``phrase_topk`` (exact and ``slop=1``), plus the index-level
+``execute_request`` bodies, term-at-a-time ``or``/``and``, ``bool_topk``,
+``phrase_topk`` (exact and ``slop=1``) and the term-expanding queries
+(``prefix_match`` capped and uncapped, ``fuzzy_match``,
+``wildcard_match``, ``regexp_match``, ``match_phrase_prefix`` and
+``completion_suggest``), plus the index-level
 ``serve_topk`` (``or``/``and``) over three shards and the distributed
 plan's answers (``or``/``and``) on both indexes. The generational case
 calls the plan by its ``bm25_topk_spark_multigen`` name, which every
-version of the engine has.
+version of the engine has. A third pair of indexes, plain and
+generational, maps ``lang`` as a keyword field, for ``range_match`` and
+``exists_match`` on the same reader kinds.
 
 Each answer prints as one line, ``group | case | hits``, with every hit as
 ``doc_id:score`` and the score in float hex, so the line changes when any
@@ -26,6 +31,7 @@ engine answer identically.
 from __future__ import annotations
 
 import argparse
+import functools
 import hashlib
 import os
 import sys
@@ -65,7 +71,54 @@ def bodies() -> list[tuple[str, dict]]:
         ("match_phrase", {"query": {"match_phrase": {"content": "apache license"}}}),
         ("match_phrase slop=1", {"query": {"match_phrase": {
             "content": {"query": "license apache", "slop": 1}}}, "size": 20}),
+        ("prefix", {"query": {"prefix": {"content": "de"}}, "size": 100}),
+        ("fuzzy", {"query": {"fuzzy": {"content": {"value": "licence"}}}, "size": 100}),
+        ("wildcard", {"query": {"wildcard": {"content": "d?l*"}}, "size": 100}),
+        ("regexp", {"query": {"regexp": {"content": "ver(s|t).*"}}, "size": 100}),
+        ("match_phrase_prefix", {"query": {"match_phrase_prefix": {
+            "content": "apache lic"}}, "size": 100}),
     ]
+
+
+# (name, function name in query.bm25, args, kwargs) of the term-expanding
+# queries; each answers constant-score doc_ids, or (term, weight) pairs
+EXPANSIONS = [
+    ("prefix 'lic'", "prefix_match", ("lic",), {}),
+    ("prefix 's' capped", "prefix_match", ("s",), {}),
+    ("prefix 's' max_expansions=5", "prefix_match", ("s",), {"max_expansions": 5}),
+    ("prefix 's' uncapped", "prefix_match", ("s",), {"max_expansions": None}),
+    ("prefix absent", "prefix_match", ("zzq",), {"max_expansions": None}),
+    ("fuzzy 'licence'", "fuzzy_match", ("licence",), {}),
+    ("fuzzy 'versab' fuzziness=2", "fuzzy_match", ("versab",), {"fuzziness": 2}),
+    ("fuzzy 'delrl' prefix_length=2 max_expansions=3", "fuzzy_match", ("delrl",),
+     {"fuzziness": 2, "prefix_length": 2, "max_expansions": 3}),
+    ("wildcard 'lic*se'", "wildcard_match", ("lic*se",), {}),
+    ("wildcard 'd?l*'", "wildcard_match", ("d?l*",), {"max_expansions": None}),
+    ("wildcard 're*' max_expansions=4", "wildcard_match", ("re*",), {"max_expansions": 4}),
+    ("regexp 'lic.*'", "regexp_match", ("lic.*",), {}),
+    ("regexp 'ver(s|t).*'", "regexp_match", ("ver(s|t).*",), {"max_expansions": None}),
+    ("regexp 'de[a-l]+'", "regexp_match", ("de[a-l]+",), {}),
+    ("regexp 'sa.' max_expansions=2", "regexp_match", ("sa.",), {"max_expansions": 2}),
+    ("match_phrase_prefix 'apache lic'", "match_phrase_prefix", ("apache lic",), {}),
+    ("match_phrase_prefix 'lic'", "match_phrase_prefix", ("lic",), {}),
+    ("match_phrase_prefix 'def re' max_expansions=3", "match_phrase_prefix", ("def re",),
+     {"max_expansions": 3}),
+    ("completion 'li'", "completion_suggest", ("li",), {}),
+    ("completion 'd' size=20", "completion_suggest", ("d",), {"size": 20}),
+]
+
+# the same for the keyword-mapped ``lang`` field of the fielded indexes
+FIELDED_EXPANSIONS = [
+    ("range lang [go, js]", "range_match", ("lang",), {"gte": "go", "lte": "js"}),
+    ("range lang >= java", "range_match", ("lang",), {"gte": "java"}),
+    ("range lang <= go", "range_match", ("lang",), {"lte": "go"}),
+    ("range lang [js, go]", "range_match", ("lang",), {"gte": "js", "lte": "go"}),
+    ("range lang [c, md] max_expansions=2", "range_match", ("lang",),
+     {"gte": "c", "lte": "md", "max_expansions": 2}),
+    ("exists lang", "exists_match", ("lang",), {}),
+    ("exists absent", "exists_match", ("zzq",), {}),
+    ("prefix 'lang:j'", "prefix_match", ("lang:j",), {"max_expansions": None}),
+]
 
 
 def hits_line(hits) -> str:
@@ -74,7 +127,8 @@ def hits_line(hits) -> str:
 
 def answer(fn) -> str:
     try:
-        return hits_line(fn())
+        out = fn()
+        return out if isinstance(out, str) else hits_line(out)
     except Exception as exc:  # an error is an answer too: it must match
         return f"error {type(exc).__name__}"
 
@@ -109,10 +163,23 @@ def reader_cases(r) -> list[tuple[str, object]]:
         return [(resp["hits"]["total"]["value"], 0.0), *hits]
 
     cases += [(f"request {name}", lambda b=b: request(b)) for name, b in bodies()]
-    return cases
+    return cases + expansion_cases(r, EXPANSIONS)
 
 
-def build(spark, n_docs: int, tmp: str) -> tuple[str, str]:
+def expansion_cases(r, expansions) -> list[tuple[str, object]]:
+    from search_replica_spark.query import bm25
+
+    def run(fn, args, kw):
+        out = getattr(bm25, fn)(r, *args, **kw)
+        if fn == "completion_suggest":
+            return " ".join(f"{t}:{w}" for t, w in out) or "-"
+        return [(d, 1.0) for d in out]
+
+    return [(name, lambda f=fn, a=args, kw=kw: run(f, a, kw))
+            for name, fn, args, kw in expansions]
+
+
+def build(spark, n_docs: int, tmp: str, tag: str = "", **fields) -> tuple[str, str]:
     import pandas as pd
 
     from search_replica_spark.config import IndexConfig
@@ -120,13 +187,11 @@ def build(spark, n_docs: int, tmp: str) -> tuple[str, str]:
     from search_replica_spark.index.build import build_index
     from search_replica_spark.streaming.incremental import add_generation
 
-    cfg = IndexConfig(
-        shuffle_partitions=4, store_positions=True
-    )
+    cfg = IndexConfig(shuffle_partitions=4, store_positions=True, **fields)
     corpus = generate_corpus(n_docs)
-    plain = os.path.join(tmp, "plain")
+    plain = os.path.join(tmp, "plain" + tag)
     build_index(spark, spark.createDataFrame(corpus), plain, cfg)
-    mg = os.path.join(tmp, "multigen")
+    mg = os.path.join(tmp, "multigen" + tag)
     half = n_docs // 2
     add_generation(spark, spark.createDataFrame(corpus.iloc[:half]), mg, cfg)
     add_generation(spark, spark.createDataFrame(corpus.iloc[half:]), mg, cfg)
@@ -160,22 +225,32 @@ def main() -> int:
     try:
         with tempfile.TemporaryDirectory(prefix="answer_digest_") as tmp:
             plain, mg = build(spark, args.docs, tmp)
+            fplain, fmg = build(spark, args.docs, tmp, "-fielded",
+                                field_analyzers=(("content", "text"), ("lang", "keyword")))
             n = IndexReader(spark, plain).n_docs
             shard = (n // 3, 2 * n // 3)
             readers = {
-                "plain": lambda: IndexReader(spark, plain),
-                "shard": lambda: IndexReader(spark, plain, shard_range=shard),
-                "multigen": lambda: MultiGenReader(spark, mg),
-                "multigen-shard": lambda: MultiGenReader(spark, mg, shard_range=shard),
+                "plain": (lambda: IndexReader(spark, plain), reader_cases),
+                "shard": (lambda: IndexReader(spark, plain, shard_range=shard), reader_cases),
+                "multigen": (lambda: MultiGenReader(spark, mg), reader_cases),
+                "multigen-shard": (lambda: MultiGenReader(spark, mg, shard_range=shard),
+                                   reader_cases),
             }
-            for group, make in readers.items():
+            fielded = functools.partial(expansion_cases, expansions=FIELDED_EXPANSIONS)
+            readers.update({
+                "fielded plain": (lambda: IndexReader(spark, fplain), fielded),
+                "fielded shard": (lambda: IndexReader(spark, fplain, shard_range=shard),
+                                  fielded),
+                "fielded multigen": (lambda: MultiGenReader(spark, fmg), fielded),
+            })
+            for group, (make, cases_of) in readers.items():
                 for pinned in (False, True):
                     r = make()
                     if pinned:
                         r.doc_arrays()
                         r.pin_driver(positions=True)
                     tag = "pinned" if pinned else "unpinned"
-                    for case, fn in reader_cases(r):
+                    for case, fn in cases_of(r):
                         lines.append((group, f"{tag} {case} | {answer(fn)}"))
             for q in QUERIES:
                 for name, idx in (("plain", plain), ("multigen", mg)):

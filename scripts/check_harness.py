@@ -63,7 +63,8 @@ def main():
     import __spark_entry__ as ent
     from search_replica_spark.session import get_spark
 
-    spark = get_spark("harness_check", cores=8, shuffle_partitions=8)
+    spark = get_spark("harness_check", cores=8, shuffle_partitions=8,
+                      extra={"spark.ui.showConsoleProgress": "false"})
     con = duckdb.connect()
     for t in TABLES:
         p = f"{SF_DIR}/{t}.parquet"

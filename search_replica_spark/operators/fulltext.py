@@ -1767,7 +1767,7 @@ def ft_simple_query_string(spark, sf_dir):
 
 # B5u: ES regexp query — anchored regex over dictionary terms (Lucene:
 # automaton ∩ term FST). The pattern's literal prefix drives the
-# row-group-pruned dict range seek; the regex itself runs INSIDE the scan.
+# row-group-pruned dict range seek; the regex then filters that expansion.
 # Pattern stays in the RE2 ∩ Java ∩ Python common subset so all three
 # engines agree. 's.a.*' ⇒ {scan, small, spark} on this vocabulary.
 _REGEXP_PATTERN = "s.a.*"

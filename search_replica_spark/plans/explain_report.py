@@ -52,11 +52,6 @@ CHECKS = {
         "avoid": ["BroadcastNestedLoopJoin", "CartesianProduct"],
         "why": "prefix filtering (df-ranked window, prefix tokens only) sits BELOW the self-join, so hot tokens cannot explode the join",
     },
-    "shard_postings_range_prune": {
-        "want": ["In(term_id", "GreaterThanOrEqual(doc_idx", "LessThan(doc_idx"],
-        "avoid": ["CartesianProduct"],
-        "why": "shard-scoped posting fetch: term_id IN + the doc_idx range both reach the postings scan",
-    },
     "inline_resolve": {
         "want": ["BroadcastHashJoin"],
         "avoid": ["CartesianProduct", "SortMergeJoin"],
@@ -141,11 +136,6 @@ CHECKS = {
         "want": ["BroadcastNestedLoopJoin"],
         "avoid": ["CartesianProduct", "SortMergeJoin"],
         "why": "bucket_script (r5): the sibling-total is a 1-ROW broadcast riding a nested-loop join over O(buckets) rows — constant work; the fact table is scanned exactly once (by the bucket aggregation below)",
-    },
-    "regexp_dict_seek": {
-        "want": ["GreaterThanOrEqual(term", "LessThan(term", "StringStartsWith(term"],
-        "avoid": ["CartesianProduct"],
-        "why": "regexp query (r5): the pattern's literal prefix becomes a pushed-down dictionary RANGE (>=, <, startswith all reach the parquet scan — row-group pruning on the term-sorted dict); the regex itself evaluates inside that scan, so the driver transfer is bounded by actual matches, never the dictionary",
     },
     "agg_auto_date_histogram": {
         "want": ["BroadcastNestedLoopJoin"],
@@ -236,16 +226,6 @@ def main():
     plans["b8b_routing_partition_pruning"] = plan_of(
         reg["b8b_routing_partition_pruning"][0](spark, sf_dir)
     )
-    # r5: shard-scoped unpinned posting fetch — captured from the READER'S
-    # OWN query builder (_postings_scan), so a pushdown regression in
-    # IndexReader fails this audit, not a hand-rebuilt twin
-    from search_replica_spark.query.bm25 import IndexReader
-
-    shard_rd = IndexReader(spark, idx, shard_range=(100, 600))
-    plans["shard_postings_range_prune"] = plan_of(
-        shard_rd._postings_scan(False, ["spark", "join"])[0]
-    )
-
     # r5: streamed inline resolution (dry-run plan, nothing committed)
     from search_replica_spark.operators.streaming_ops import inl_index_dir
     from search_replica_spark.streaming.incremental import apply_inline_updates
@@ -272,12 +252,6 @@ def main():
         reg["agg_bucket_script_share"][0](spark, sf_dir)
     )
 
-    # r5: regexp dict seek — captured from the reader's own _dict_query
-    # builder with the pushed-inside regex, exactly what regexp_match runs
-    rd_plain = IndexReader(spark, idx)
-    plans["regexp_dict_seek"] = plan_of(
-        rd_plain._dict_query("s", F.col("term").rlike("^(?:s.a.*)$"))
-    )
     plans["agg_auto_date_histogram"] = plan_of(
         reg["agg_auto_date_histogram"][0](spark, sf_dir)
     )

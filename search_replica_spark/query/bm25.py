@@ -19,11 +19,12 @@ computation, in two execution forms that return the same ranking:
     the generations: ``term_id IN (...)`` pushed to each postings parquet
     (sorted by term_id, so only the query terms' row groups are read),
     joined to a broadcast idf table and to docs(doc_idx, doc_len), summed
-    per slot, joined to the live docs (``live_docs``), TakeOrdered top-k.
+    per slot in term order, joined to the live docs (``live_docs``),
+    TakeOrdered top-k.
 
 Scores are float64 with idf from Python ``math.log``, summing per-doc
-contributions in sorted-term order where we control the order, so scores
-are bit-comparable with the oracle.
+contributions in sorted-term order in both forms, so scores agree with
+the oracle and do not change from run to run.
 """
 
 from __future__ import annotations
@@ -34,7 +35,6 @@ import math
 import os
 
 import numpy as np
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -48,7 +48,6 @@ from search_replica_spark.index.manifest import (
 )
 from search_replica_spark.query.store import (
     PostingStore,
-    Postings,
     _strings,
     read_postings,
     read_table,
@@ -60,25 +59,24 @@ from search_replica_spark.query.store import (
 decode_doc_blocks = varint_decode = None
 
 
-def prefix_range_cond(prefix: str):
-    """Pushdown-safe dictionary range covering ALL terms starting with
-    ``prefix``: term >= prefix AND term < successor(prefix), successor =
+def prefix_successor(prefix: str) -> str | None:
+    """The least string above every term that starts with ``prefix``, so
+    that those terms are exactly ``prefix <= term < successor``: the
     prefix with its last codepoint incremented (skipping the surrogate
-    gap, carrying past U+10FFFF). A ``prefix + '\\uffff'`` upper bound is
-    WRONG under Spark's UTF8-byte string order: supplementary-plane
-    codepoints (4-byte UTF-8, lead F0-F4) sort ABOVE U+FFFF, so keyword
-    terms containing emoji/CJK-extension chars would silently escape the
-    range. Callers still apply startswith(prefix) above this filter."""
-    cond = F.col("term") >= prefix
+    gap, carrying past U+10FFFF), or None when no such bound exists. A
+    ``prefix + '\\uffff'`` upper bound is WRONG: supplementary-plane
+    codepoints (4-byte UTF-8, lead F0-F4) sort ABOVE U+FFFF in codepoint
+    and UTF-8 byte order alike, so keyword terms containing
+    emoji/CJK-extension chars would silently escape the range."""
     p = prefix
     while p and ord(p[-1]) >= 0x10FFFF:
         p = p[:-1]  # carry: no codepoint above U+10FFFF exists
-    if p:
-        nxt = ord(p[-1]) + 1
-        if 0xD800 <= nxt <= 0xDFFF:
-            nxt = 0xE000  # surrogate range holds no valid terms
-        cond = cond & (F.col("term") < p[:-1] + chr(nxt))
-    return cond
+    if not p:
+        return None
+    nxt = ord(p[-1]) + 1
+    if 0xD800 <= nxt <= 0xDFFF:
+        nxt = 0xE000  # surrogate range holds no valid terms
+    return p[:-1] + chr(nxt)
 
 
 def dead_slots(doc_ids: np.ndarray, gens: np.ndarray,
@@ -325,116 +323,64 @@ class IndexReader:
         segments in RAM/page cache). ``positions``: also pin the flat token
         positions (phrase serving). A ``positions=True`` call on a store
         pinned without them re-pins with them — otherwise every phrase
-        request would run a Spark read."""
+        request would re-read its terms' positions."""
         positions = positions and self.positions_stored
         if self._pinned is None or (positions and not self._pinned.positions):
             self._pinned = None  # one pinned copy at a time
-            self._pinned = PostingStore(
-                [read_postings(d, self._slot_offset(base), rng, positions)
-                 for d, _gen, base, rng in self._gens()],
-                positions,
-            )
+            self._pinned = self._read_store(positions)
         if self.shard_range is not None:
-            self._dictionary_dfs()  # so a pinned shard request runs no Spark job
+            self._dictionary_dfs()  # so a pinned shard request reads no dictionary
         return self
+
+    def _read_store(self, positions: bool, terms: list[str] | None = None) -> PostingStore:
+        """A ``PostingStore`` of this reader's generations read in the
+        driver (``store.read_postings``): every posting it holds, or only
+        the rows of ``terms``."""
+        positions = positions and self.positions_stored
+        return PostingStore(
+            [read_postings(d, self._slot_offset(base), rng, positions, terms)
+             for d, _gen, base, rng in self._gens()],
+            positions,
+        )
 
     def fetch_blocks(self, terms: list[str], positions: bool = False) -> dict[str, tuple]:
         """The postings of ``terms`` in this reader's slot space: term →
         (slots, tfs), or (slots, tfs, flat positions) with ``positions``,
         for the terms present, in term order (``PostingStore.select``).
-        Served from the pinned store, or from a store built from one Spark
-        scan of the query terms' rows. ``len()`` of the result is the
-        number of terms found."""
+        Served from the pinned store; an unpinned reader reads the terms'
+        dictionary rows and then only the postings row groups that can
+        hold their term ids, in the driver with no Spark job. ``len()`` of
+        the result is the number of terms found."""
         if self._pinned is not None and (not positions or self._pinned.positions):
             return self._pinned.select(terms, positions)
-        return self._scan_store(positions, terms).select(terms, positions)
+        return self._read_store(positions, terms).select(terms, positions)
 
     def fetch_postings(self, terms: list[str]) -> dict[str, tuple[np.ndarray, np.ndarray]]:
         """term → (slots, tfs), slot-ascending (see ``fetch_blocks``)."""
         return self.fetch_blocks(terms)
 
-    def _postings_scan(self, positions: bool, terms: list[str] | None = None):
-        """The Spark scan an unpinned request's store is built from: one
-        union over this reader's generations of the postings rows of
-        ``terms`` (every row when None) — ``term_id IN (...)`` with the
-        ids from a driver-side read of each generation's dictionary — and,
-        on a shard reader, doc_idx in the generation's range; a ``g``
-        column numbers the generation. Returns (DataFrame or None, and per
-        generation its term_id → term map and slot offset)."""
-        positions = positions and self.positions_stored
-        parts, gens = [], []
-        for d, _gen, base, rng in self._gens():
-            flt = () if terms is None else (("term", "in", sorted(set(terms))),)
-            dic = read_table(os.path.join(d, "dict"), ["term", "term_id"], flt)
-            ids = dic["term_id"].to_pylist()
-            q = self.spark.read.parquet(os.path.join(d, "postings"))
-            cols = ["term_id", "doc_idx", "tf"] + (["positions"] if positions else [])
-            if terms is not None:
-                q = q.filter(F.col("term_id").isin(ids) if ids else F.lit(False))
-            if rng is not None:
-                q = q.filter((F.col("doc_idx") >= rng[0]) & (F.col("doc_idx") < rng[1]))
-            parts.append(q.select(*cols, F.lit(len(gens)).alias("g")))
-            gens.append((dict(zip(ids, dic["term"].to_pylist())), self._slot_offset(base)))
-        if not parts:
-            return None, gens
-        return functools.reduce(DataFrame.unionByName, parts), gens
+    def expand_prefix(self, prefix: str, max_expansions: int | None = 50) -> list[str]:
+        """The terms starting with ``prefix`` over the live generations'
+        dictionaries, in term order, capped at ``max_expansions`` (ES's
+        cap, default 50): ``expand_range`` from the prefix to its
+        successor (``prefix_successor``)."""
+        return self.expand_range(prefix, prefix_successor(prefix), max_expansions)
 
-    def _scan_store(self, positions: bool, terms: list[str] | None = None) -> PostingStore:
-        """A ``PostingStore`` of the rows ``_postings_scan`` collects."""
-        positions = positions and self.positions_stored
-        scan, gens = self._postings_scan(positions, terms)
-        if scan is None:
-            return PostingStore([], positions)
-        t = scan.toArrow().sort_by([("g", "ascending"), ("term_id", "ascending"),
-                                    ("doc_idx", "ascending")])
-        g = t["g"].to_numpy()
-        cuts = np.searchsorted(g, np.arange(len(gens) + 1))
-        parts = []
-        for i, (terms_by_id, offset) in enumerate(gens):
-            s = t.slice(cuts[i], cuts[i + 1] - cuts[i])
-            pos = pc.list_flatten(s["positions"]).to_numpy() if positions else None
-            parts.append(Postings.from_rows(
-                terms_by_id, s["term_id"].to_numpy(), s["doc_idx"].to_numpy(),
-                s["tf"].to_numpy(), pos, offset))
-        return PostingStore(parts, positions)
-
-    def expand_prefix(
-        self, prefix: str, max_expansions: int | None = 50, extra_filter=None
-    ) -> list[str]:
-        """Term-dictionary range seek: the terms starting with ``prefix``
-        over the live generations' dictionaries, in term order, capped at
-        ``max_expansions`` (ES's cap, default 50). The range predicate
-        (prefix <= term < successor(prefix), see prefix_range_cond) is
-        pushed down to each term-sorted dict parquet — a row-group-pruned
-        seek, never a dictionary scan. ``extra_filter`` (a Column over
-        ``term``) narrows the expansion INSIDE the scan — fuzzy/wildcard
-        pass their edit-distance/LIKE predicate here so the driver only
-        ever receives actual candidates, not the whole single-character
-        prefix slice."""
-        q = self._dict_query(prefix, extra_filter).orderBy("term")
-        if max_expansions is not None:
-            q = q.limit(max_expansions)
-        return [row["term"] for row in q.collect()]
-
-    def _dict_query(self, prefix: str, extra_filter=None):
-        """The dictionary range-seek DataFrame expand_prefix collects from
-        (kept separate so the plan audit exercises the reader's OWN query
-        builder): per live generation, range predicate + startswith pushed
-        into the term-sorted dict parquet and the caller predicate
-        evaluated inside the same scan; the generations' terms unioned
-        and, when there are several, made distinct."""
-        parts = []
+    def expand_range(self, lo: str, hi: str | None,
+                     max_expansions: int | None = None) -> list[str]:
+        """Term-dictionary range seek: the terms in ``[lo, hi)`` (no upper
+        bound when ``hi`` is None) over the live generations'
+        dictionaries, merged, deduplicated and sorted in term order, then
+        capped at ``max_expansions``. Each generation's ``dict/term`` is
+        read in the driver with no Spark job; the dictionary is sorted by
+        term, so only the row groups whose term statistics overlap the
+        range are read."""
+        flt = (("term", ">=", lo),) + (() if hi is None else (("term", "<", hi),))
+        terms: set[str] = set()
         for g in self.live_gens:
-            q = (
-                self.spark.read.parquet(os.path.join(g["dir"], "dict"))
-                .filter(prefix_range_cond(prefix))
-                .filter(F.col("term").startswith(prefix))
-            )
-            if extra_filter is not None:
-                q = q.filter(extra_filter)
-            parts.append(q.select("term"))
-        q = functools.reduce(DataFrame.unionByName, parts)
-        return q.distinct() if len(parts) > 1 else q
+            t = read_table(os.path.join(g["dir"], "dict"), ["term"], flt)
+            terms.update(_strings(t["term"]).tolist())
+        return sorted(terms)[:max_expansions]
 
     def term_df(self, term: str, held: int) -> int:
         """The document frequency to score ``term`` with, given ``held``,
@@ -499,13 +445,20 @@ def _bm25_slots(spark: SparkSession, gens: list[tuple[str, int]], terms: list[st
         )
         parts.append(posts.select(
             (F.col("doc_idx") + F.lit(base)).cast("long").alias("slot"),
+            "term_id",
             (F.col("idf") * F.col("tf") / (F.col("tf") + F.lit(k1) * (
                 F.lit(1.0 - b) + F.lit(b) * F.col("doc_len") / F.lit(avg_dl)))).alias("score"),
         ))
     if not parts:
         return spark.createDataFrame([], "slot long, score double")
+    # a slot's contributions are added in term order from 0.0, as the
+    # in-driver scorer adds them (a slot lies in one generation, whose
+    # term_id is the term's rank). F.sum would add them in task arrival
+    # order, which varies from run to run and flips near-ties.
+    in_term_order = F.array_sort(F.collect_list(F.struct("term_id", "score")))
     agg = functools.reduce(DataFrame.unionByName, parts).groupBy("slot").agg(
-        F.sum("score").alias("score"), F.count("*").alias("_nm"))
+        F.aggregate(in_term_order, F.lit(0.0), lambda acc, x: acc + x["score"]).alias("score"),
+        F.count("*").alias("_nm"))
     if mode == "and":
         # posting rows are unique per (term, doc), so the row count per slot
         # IS the matched-term count; a term absent from the corpus caps it
@@ -1280,24 +1233,19 @@ def fuzzy_match(
     """ES fuzzy query (constant-score): docs containing any term within
     ``fuzziness`` edits of ``term``. ``prefix_length`` (ES default 0; ours 1
     — the scale-sane setting ES docs themselves recommend) pins the first
-    characters so expansion is a pushed-down dictionary RANGE seek, never a
-    dict scan; the edit-distance predicate runs inside that scan too, so
-    driver transfer is bounded by actual candidates, capped at
-    ``max_expansions`` in term order. Edit distance matches DuckDB's
-    levenshtein() exactly."""
+    characters so expansion is a row-group-pruned dictionary RANGE seek
+    (``expand_prefix``), never a dict scan. Each candidate whose length
+    is within ``fuzziness`` of the query's then gets the edit-distance
+    DP; the matches are capped at ``max_expansions`` in term order. Edit
+    distance matches DuckDB's levenshtein() exactly."""
     r = reader
     q = term.lower()
     if prefix_length <= 0:
         raise ValueError("prefix_length must be >= 1 (a dict scan is not a plan)")
-    pre = q[:prefix_length]
-    # the edit-distance predicate runs INSIDE the dict scan (Spark's
-    # levenshtein, same definition as ours/DuckDB's), so the driver only
-    # receives actual candidates — never the whole single-char prefix
-    # slice; the driver-side re-check keeps the oracle authoritative
-    cand = r.expand_prefix(
-        pre, None, extra_filter=F.levenshtein(F.col("term"), F.lit(q)) <= fuzziness
-    )
-    terms = [t for t in cand if _levenshtein(t, q) <= fuzziness]
+    terms = [
+        t for t in r.expand_prefix(q[:prefix_length], None)
+        if abs(len(t) - len(q)) <= fuzziness and _levenshtein(t, q) <= fuzziness
+    ]
     if max_expansions is not None:
         terms = terms[:max_expansions]
     out = _expansion_docs(r, terms, live)
@@ -1314,7 +1262,8 @@ def wildcard_match(
     """ES wildcard query (constant-score): ``*`` = any run, ``?`` = one
     char — exactly SQL LIKE's %/_ (the oracle translates verbatim). The
     fixed prefix before the first wildcard drives the dictionary range
-    seek; the residual pattern filters the (small) expansion driver-side.
+    seek (``expand_prefix``); the whole pattern, compiled to a regex,
+    filters that expansion in the driver.
     A leading-wildcard pattern is refused, as ES operators do in practice —
     it cannot seek and would scan the whole term dictionary."""
     import re as _re
@@ -1330,17 +1279,7 @@ def wildcard_match(
         )
         + r"\Z"
     )
-    # translate to SQL LIKE (%/_; literal %/_ backslash-escaped — Spark's
-    # default LIKE escape) and evaluate it INSIDE the dict scan, so the
-    # driver receives only matching terms; the compiled-regex re-check
-    # keeps the oracle authoritative
-    like_pat = "".join(
-        "%" if ch == "*" else "_" if ch == "?"
-        else ch.replace("\\", "\\\\").replace("%", r"\%").replace("_", r"\_")
-        for ch in pat
-    )
-    cand = r.expand_prefix(fixed, None, extra_filter=F.col("term").like(like_pat))
-    terms = [t for t in cand if rx.match(t)]
+    terms = [t for t in r.expand_prefix(fixed, None) if rx.match(t)]
     if max_expansions is not None:
         terms = terms[:max_expansions]
     out = _expansion_docs(r, terms, live)
@@ -1363,13 +1302,12 @@ def regexp_match(
     extracts the pattern's LITERAL PREFIX (the chars before the first
     regex metacharacter, exactly Lucene's ``CompiledAutomaton``
     common-prefix optimisation) to drive the row-group-pruned dictionary
-    range seek, and pushes the full regex INSIDE that scan (Spark
-    ``rlike``), so the driver only receives matching terms. A pattern
-    with no literal prefix is refused — it cannot seek and would scan
-    the whole dictionary (same stance as ``wildcard_match``). The
-    driver-side ``re.fullmatch`` re-check keeps Python's engine
-    authoritative; stick to the RE2 ∩ Java ∩ Python common subset (no
-    lookarounds, no backrefs) when an external oracle must agree."""
+    range seek (``expand_prefix``), and keeps the expanded terms that
+    Python's ``re.fullmatch`` accepts. A pattern with no literal prefix
+    is refused — it cannot seek and would scan the whole dictionary (same
+    stance as ``wildcard_match``). Stick to the RE2 ∩ Java ∩ Python
+    common subset (no lookarounds, no backrefs) when an external oracle
+    must agree."""
     import re as _re
 
     r = reader
@@ -1406,10 +1344,7 @@ def regexp_match(
     if not fixed:
         raise ValueError("pattern without a literal prefix would scan the dictionary")
     rx = _re.compile(pat)
-    cand = r.expand_prefix(
-        fixed, None, extra_filter=F.col("term").rlike("^(?:" + pat + ")$")
-    )
-    terms = [t for t in cand if rx.fullmatch(t)]
+    terms = [t for t in r.expand_prefix(fixed, None) if rx.fullmatch(t)]
     if max_expansions is not None:
         terms = terms[:max_expansions]
     out = _expansion_docs(r, terms, live)
@@ -1428,20 +1363,18 @@ def range_match(
     """ES range query on a KEYWORD field of a fielded index (constant
     score): docs whose ``field`` value is lexicographically within
     [gte, lte] — ES's keyword-range semantics exactly. The field's terms
-    live as ``field:value`` in the term dict, so the expansion is the
-    ``field:`` prefix RANGE SEEK with the value bounds evaluated inside
-    the scan (expand_prefix extra_filter) — dictionary cost is the
-    matching values only, never a scan. Numeric ranges at scale belong on
-    the docs store / doc values (a plain pushed-down filter); this is the
-    term-dict form ES uses for keyword fields."""
+    live as ``field:value`` in the term dict, so the expansion is one
+    dictionary RANGE SEEK (``expand_range``) from ``field:gte`` (or the
+    ``field:`` prefix) up to ``field:lte + "\\x00"``, the least string
+    above ``field:lte`` (or the prefix's successor): the value bounds
+    prune the dictionary's row groups, so its cost is the matching values
+    only, never a scan. Numeric ranges at scale belong on the docs store /
+    doc values (a plain pushed-down filter); this is the term-dict form ES
+    uses for keyword fields."""
     pre = f"{field}:"
-    cond = None
-    if gte is not None:
-        cond = F.col("term") >= pre + gte
-    if lte is not None:
-        c2 = F.col("term") <= pre + lte
-        cond = c2 if cond is None else (cond & c2)
-    terms = reader.expand_prefix(pre, max_expansions, extra_filter=cond)
+    lo = pre if gte is None else pre + gte
+    hi = prefix_successor(pre) if lte is None else pre + lte + "\x00"
+    terms = reader.expand_range(lo, hi, max_expansions)
     out = _expansion_docs(reader, terms, live)
     return out[:k] if k is not None else out
 
@@ -1623,9 +1556,10 @@ def serve_topk(
         r._doc_len = r._doc_ids = r._live_cache = None
         return local
 
-    # shards are independent Spark jobs — overlap a few so one shard's
-    # scan tail backfills with the next shard's work (guide §2.6). Results
-    # are collected in shard order, so the merge is deterministic and
+    # each shard reads its own row groups of the index parquet in the
+    # driver (no Spark job); pyarrow releases the GIL while it reads and
+    # decodes, so a few shards in flight overlap their reads. Results are
+    # collected in shard order, so the merge is deterministic and
     # identical to the sequential loop.
     merged: list[tuple[int, float]] = []
     from concurrent.futures import ThreadPoolExecutor
@@ -1691,7 +1625,7 @@ def exists_match(
     options participate exactly like ES: a ``noindex`` field never
     matches, and a keyword whose value exceeded ``ignore_above`` does not
     count as existing (no indexed value, no doc value). The expansion is a
-    pushed-down dictionary range seek over the ``field:`` prefix, then one
+    row-group-pruned dictionary range seek over the ``field:`` prefix, then one
     multi-term posting fetch (constant score, doc_id order)."""
     terms = reader.expand_prefix(f"{field}:", max_expansions=None)
     if not terms:

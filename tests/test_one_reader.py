@@ -48,6 +48,39 @@ def test_generational_reader_scores_with_the_index_k1_b(spark, tmp_path):
         _same([(r["doc_id"], r["score"]) for r in rows], want)
 
 
+def test_distributed_plan_adds_each_slots_contributions_in_term_order(spark, small_index):
+    """The distributed plan adds a slot's per-term contributions from 0.0
+    in term order, as the in-driver scorer does, so no score depends on
+    which task's rows reach the final aggregate first: on the 8-part
+    index every slot's score equals, bit for bit, that fold of the plan's
+    own per-posting formula."""
+    import math
+    import os
+
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from search_replica_spark.query.bm25 import _bm25_slots
+
+    idx = small_index[0]
+    r = IndexReader(spark, idx)
+    terms = ["apache", "def", "license", "return", "the", "version"]
+    dic = pq.read_table(os.path.join(idx, "dict")).to_pandas().set_index("term").loc[terms]
+    rows = pq.read_table(os.path.join(idx, "postings")).to_pandas()
+    rows = rows[rows["term_id"].isin(dic["term_id"])].sort_values(["doc_idx", "term_id"])
+    doc_len = pq.read_table(os.path.join(idx, "docs")).to_pandas().set_index("doc_idx")["doc_len"]
+    idf = {int(i): math.log(1.0 + (r.n_docs - n + 0.5) / (n + 0.5))
+           for i, n in zip(dic["term_id"], dic["df"])}
+    want: dict[int, float] = {}
+    for d, t, tf in zip(rows["doc_idx"].tolist(), rows["term_id"].tolist(), rows["tf"].tolist()):
+        norm = tf + r.k1 * ((1.0 - r.b) + r.b * float(doc_len[d]) / r.avg_dl)
+        want[d] = want.get(d, 0.0) + idf[t] * tf / norm
+    got = {row["slot"]: row["score"] for row in _bm25_slots(
+        spark, [(idx, 0)], terms, r.n_docs, r.avg_dl, r.k1, r.b, "or").collect()}
+    assert len(np.unique(rows["doc_idx"])) == len(got) == len(want) > 100
+    assert [d for d in got if got[d] != want[d]] == []
+
+
 def _batch(rows: pd.DataFrame, change: str) -> pd.DataFrame:
     out = rows.copy()
     out["_change_type"] = change

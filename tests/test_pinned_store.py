@@ -7,6 +7,7 @@ Spark, fetched postings equal a per-term pandas reference and the
 and shard readers score with the global df, positional queries included."""
 
 import os
+import time
 
 import numpy as np
 import pandas as pd
@@ -102,6 +103,18 @@ def _assert_same_answers(reference, other, bodies):
         assert _answer(other, body) == _answer(reference, body), body
 
 
+def _spark_jobs(spark, fn):
+    """(fn's result, the ids of the Spark jobs it started)."""
+    sc = spark.sparkContext
+    gid = f"no-spark-{time.monotonic_ns()}"
+    sc.setJobGroup(gid, gid)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(gid))
+
+
 def test_pinned_and_unpinned_serving_identical(spark, plain_index, multigen_index):
     """Every reader kind answers the same /_search bodies identically
     pinned and unpinned: a plain reader, a doc-sharded reader, and a
@@ -163,17 +176,65 @@ def test_positions_repin_serves_phrases_without_spark(spark, plain_index):
     r.pin_driver(positions=True)
     assert r._pinned.positions
     body = {"query": {"match_phrase": {"content": "apache license"}}, "size": 10}
-    sc = spark.sparkContext
-    gid = "pinned-phrase"
-    sc.setJobGroup(gid, gid)
-    try:
-        resp = execute_request(r, body)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    resp, jobs = _spark_jobs(spark, lambda: execute_request(r, body))
     assert resp["hits"]["total"]["value"] > 0
-    assert list(sc.statusTracker().getJobIdsForGroup(gid)) == []
+    assert jobs == []
     want = execute_request(IndexReader(spark, plain_index), body)
     assert resp == want
+
+
+def test_unpinned_requests_and_expansions_run_no_spark_job(
+    spark, plain_index, multigen_index, fielded_indexes
+):
+    """On plain, shard and generational readers, none of them pinned,
+    match, bool and match_phrase requests and every term-expanding query
+    (prefix capped and uncapped, fuzzy, wildcard, regexp,
+    match_phrase_prefix, completion, and range and exists on a keyword
+    field) read the index parquet in the driver and start no Spark job."""
+    from search_replica_spark.query.bm25 import completion_suggest
+
+    def q(kind, **spec):
+        return {"query": {kind: spec}, "size": 100}
+
+    text_bodies = [
+        _match("license apache"),
+        _match("def return", "and"),
+        {"query": {"bool": {"must": [{"match": {"content": "license"}}],
+                            "should": [{"match": {"content": "apache"}}],
+                            "must_not": [{"match": {"content": "return"}}]}}},
+        q("match_phrase", content="apache license"),
+        q("prefix", content="lic"),
+        q("prefix", content={"value": "s", "max_expansions": None}),
+        q("fuzzy", content={"value": "licence"}),
+        q("wildcard", content="lic*se"),
+        q("regexp", content="lic.*"),
+        q("match_phrase_prefix", content="apache lic"),
+    ]
+    keyword_bodies = [
+        q("range", lang={"gte": "go", "lte": "py"}),
+        q("exists", field="lang"),
+    ]
+
+    def readers(index):
+        n = IndexReader(spark, index).n_docs
+        yield "plain", lambda: IndexReader(spark, index)
+        yield "shard", lambda: IndexReader(spark, index, shard_range=(n // 3, 2 * n // 3))
+
+    fielded, fielded_gens = fielded_indexes
+    cases = [(label, make, text_bodies) for label, make in readers(plain_index)]
+    cases.append(("multigen", lambda: MultiGenReader(spark, multigen_index), text_bodies))
+    cases += [(f"fielded {label}", make, keyword_bodies) for label, make in readers(fielded)]
+    cases.append(("fielded multigen", lambda: MultiGenReader(spark, fielded_gens),
+                  keyword_bodies))
+    for label, make, bodies in cases:
+        r = make()
+        for body in bodies:
+            resp, jobs = _spark_jobs(spark, lambda: execute_request(r, body))
+            assert jobs == [], (label, body)
+            assert resp["hits"]["total"]["value"] > 0, (label, body)
+        if bodies is text_bodies:
+            suggested, jobs = _spark_jobs(spark, lambda: completion_suggest(r, "li"))
+            assert jobs == [] and suggested, label
 
 
 # --- fetch and accumulate ---------------------------------------------
@@ -424,6 +485,50 @@ def _doc_arrays_spark(spark, r):
     return pdf["doc_len"].to_numpy(np.float64), pdf["doc_id"].to_numpy(np.int64)
 
 
+def _scan_store(spark, r, positions, terms=None):
+    """The Spark-built store the driver reads replaced, kept as the
+    reference: one Spark scan over the reader's generations of the
+    postings rows of ``terms`` (every row when None) — ``term_id IN
+    (...)`` with the ids from each generation's dictionary and, on a shard
+    reader, doc_idx in the generation's range — collected with
+    ``toArrow()`` and cut into one part per generation."""
+    from functools import reduce
+
+    import pyarrow.compute as pc
+    from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
+
+    from search_replica_spark.query.store import Postings, PostingStore, read_table
+
+    positions = positions and r.positions_stored
+    scans, gens = [], []
+    for d, _gen, base, rng in r._gens():
+        flt = () if terms is None else (("term", "in", sorted(set(terms))),)
+        dic = read_table(os.path.join(d, "dict"), ["term", "term_id"], flt)
+        ids = dic["term_id"].to_pylist()
+        q = spark.read.parquet(os.path.join(d, "postings"))
+        if terms is not None:
+            q = q.filter(F.col("term_id").isin(ids) if ids else F.lit(False))
+        if rng is not None:
+            q = q.filter((F.col("doc_idx") >= rng[0]) & (F.col("doc_idx") < rng[1]))
+        cols = ["term_id", "doc_idx", "tf"] + (["positions"] if positions else [])
+        scans.append(q.select(*cols, F.lit(len(gens)).alias("g")))
+        gens.append((dict(zip(ids, dic["term"].to_pylist())), r._slot_offset(base)))
+    if not scans:
+        return PostingStore([], positions)
+    t = reduce(DataFrame.unionByName, scans).toArrow().sort_by(
+        [("g", "ascending"), ("term_id", "ascending"), ("doc_idx", "ascending")])
+    cuts = np.searchsorted(t["g"].to_numpy(), np.arange(len(gens) + 1))
+    parts = []
+    for i, (terms_by_id, offset) in enumerate(gens):
+        s = t.slice(cuts[i], cuts[i + 1] - cuts[i])
+        pos = pc.list_flatten(s["positions"]).to_numpy() if positions else None
+        parts.append(Postings.from_rows(
+            terms_by_id, s["term_id"].to_numpy(), s["doc_idx"].to_numpy(),
+            s["tf"].to_numpy(), pos, offset))
+    return PostingStore(parts, positions)
+
+
 def _assert_same_store(got, want):
     assert got.positions == want.positions
     assert got.rows == want.rows
@@ -454,11 +559,40 @@ def _set_up_readers(spark, plain_index, multigen_index):
     return makers
 
 
+def _term_absent_from_a_generation(reader):
+    """A term of the first generation's dictionary that the last one lacks."""
+    gens = reader.live_gens
+    first, last = (set(pq.read_table(os.path.join(g["dir"], "dict"), columns=["term"])
+                       .column("term").to_pylist()) for g in (gens[0], gens[-1]))
+    term = min(first - last)
+    assert term and term not in last
+    return term
+
+
+def _term_spanning_two_parts(index_dir):
+    """A term whose postings rows run across a part-file boundary."""
+    from search_replica_spark.index.manifest import part_files
+
+    sizes = [pq.ParquetFile(p).metadata.num_rows
+             for p in part_files(os.path.join(index_dir, "postings"))]
+    dic = pq.read_table(os.path.join(index_dir, "dict")).to_pandas()
+    start, end = dic["start"].to_numpy(), (dic["start"] + dic["df"]).to_numpy()
+    spans = np.zeros(len(dic), bool)
+    for cut in np.cumsum(sizes)[:-1]:
+        spans |= (start < cut) & (end > cut)
+    assert spans.any()
+    return dic["term"][spans].iloc[0]
+
+
 def test_driver_read_set_up_equals_spark_reference(spark, plain_index, multigen_index):
     """The doc arrays and the pinned store read from parquet in the driver
     are bit-identical to the Spark-built ones (the toPandas docs collect,
     and the store built from the Spark postings scan), with and without
-    positions, on every reader kind."""
+    positions, on every reader kind. So is the store an unpinned request
+    reads for its terms: a term held by some generations only, and a term
+    absent from the index, included."""
+    partial = _term_absent_from_a_generation(MultiGenReader(spark, multigen_index))
+    term_sets = (["apache", "license"], [partial, "def", "zzqqabsentqq"], ["zzqqabsentqq"])
     for label, make in _set_up_readers(spark, plain_index, multigen_index):
         r = make()
         dl, ids = r.doc_arrays()
@@ -469,23 +603,33 @@ def test_driver_read_set_up_equals_spark_reference(spark, plain_index, multigen_
             assert ids.size == r.shard_range[1] - r.shard_range[0], label
         for positions in (False, True):
             got = make().pin_driver(positions=positions)._pinned
-            want = r._scan_store(positions)
+            want = _scan_store(spark, r, positions)
             assert got.rows > 0, label
             _assert_same_store(got, want)
+            for terms in term_sets:
+                _assert_same_store(r._read_store(positions, terms),
+                                   _scan_store(spark, r, positions, terms))
         # the position upgrade of a plain pin reads the same store
         up = make().pin_driver().pin_driver(positions=True)._pinned
-        _assert_same_store(up, r._scan_store(True))
+        _assert_same_store(up, _scan_store(spark, r, True))
 
 
 def test_driver_read_position_less_index_asked_for_positions(spark, small_index):
     """An index built without positions, pinned with positions=True, pins
     the same position-less store as the Spark scan, and a phrase query on
-    it still raises the no-positions error."""
+    it still raises the no-positions error. On this 8-part index a term
+    whose rows cross a part-file boundary reads the same store as the
+    Spark scan."""
     idx, _stats = small_index
     r = IndexReader(spark, idx).pin_driver(positions=True)
-    want = r._scan_store(True)
+    want = _scan_store(spark, r, True)
     assert not want.positions
     _assert_same_store(r._pinned, want)
+    span = _term_spanning_two_parts(idx)
+    for terms in ([span], [span, "license", "zzqqabsentqq"]):
+        got = IndexReader(spark, idx)._read_store(True, terms)
+        _assert_same_store(got, _scan_store(spark, r, True, terms))
+        assert got.select([span])[span][0].size == r._pinned.select([span])[span][0].size
     with pytest.raises(ValueError, match="positional index"):
         phrase_topk(r, "apache license", 5)
 
@@ -558,13 +702,12 @@ def test_shard_doc_read_skips_row_groups_outside_the_range(spark, plain_index, m
     assert read == overlapping
 
 
-def test_fielded_norms_on_shard_readers_equal_full_reader(spark, tmp_path):
-    """fielded_norms_topk on a shard reader, plain and generational, gives
-    the full reader's hits restricted to the shard's live slots, with the
-    same scores: the per-field lengths are read for the shard's own slots
-    and the idf uses the dictionary df, not the shard's posting count."""
-    from search_replica_spark.query.bm25 import fielded_norms_topk
-
+@pytest.fixture(scope="module")
+def fielded_indexes(spark, tmp_path_factory):
+    """(plain, generational) indexes with ``content`` as text and ``lang``
+    as a keyword field; the generational one has an update and a
+    tombstone in its second generation."""
+    tmp = tmp_path_factory.mktemp("fielded")
     words = ["alpha", "beta", "gamma", "delta"]
     docs = pd.DataFrame({
         "repo": ["r0"] * 60,
@@ -576,9 +719,9 @@ def test_fielded_norms_on_shard_readers_equal_full_reader(spark, tmp_path):
     })
     cfg = IndexConfig(shuffle_partitions=4,
                       field_analyzers=(("content", "text"), ("lang", "keyword")))
-    plain = str(tmp_path / "fielded")
+    plain = str(tmp / "fielded")
     build_index(spark, spark.createDataFrame(docs), plain, cfg)
-    gens = str(tmp_path / "fielded_gens")
+    gens = str(tmp / "fielded_gens")
     add_generation(spark, spark.createDataFrame(docs.iloc[:35]), gens, cfg)
     upd = docs.iloc[[21, 24, 27]].copy()
     upd["content"] = "alpha alpha omega"
@@ -586,6 +729,17 @@ def test_fielded_norms_on_shard_readers_equal_full_reader(spark, tmp_path):
     dele = docs.iloc[[30]].copy()
     dele["_change_type"] = "delete"
     add_generation(spark, spark.createDataFrame(pd.concat([docs.iloc[35:], upd, dele])), gens)
+    return plain, gens
+
+
+def test_fielded_norms_on_shard_readers_equal_full_reader(spark, fielded_indexes):
+    """fielded_norms_topk on a shard reader, plain and generational, gives
+    the full reader's hits restricted to the shard's live slots, with the
+    same scores: the per-field lengths are read for the shard's own slots
+    and the idf uses the dictionary df, not the shard's posting count."""
+    from search_replica_spark.query.bm25 import fielded_norms_topk
+
+    plain, gens = fielded_indexes
     terms = ["content:alpha", "lang:go"]
     for full, part in (
         (IndexReader(spark, plain), IndexReader(spark, plain, shard_range=(20, 40))),
@@ -633,7 +787,7 @@ def test_shard_set_up_with_a_nested_stored_column(spark, corpus, tmp_path):
         assert ids.size == r.shard_range[1] - r.shard_range[0]
         assert dl.tobytes() == want_dl.tobytes() and ids.tobytes() == want_ids.tobytes()
         r.pin_driver()
-        _assert_same_store(r._pinned, r._scan_store(False))
+        _assert_same_store(r._pinned, _scan_store(spark, r, False))
 
 
 def test_generational_shards_partition_the_full_reader(spark, multigen_index):

@@ -554,6 +554,45 @@ def test_range_match_keyword_bounds(spark, tmp_path):
     assert {by_id[d] for d in range_match(rd, "lang", lte="de")} == {"aa", "de"}
 
 
+def test_prefix_seek_keeps_supplementary_plane_terms(spark, tmp_path):
+    """The prefix seek's upper bound is the prefix's successor, not
+    ``prefix + '\\uffff'``: a term holding a supplementary-plane codepoint
+    (above U+FFFF in codepoint and UTF-8 byte order) is in the prefix's
+    range, a term starting with the successor is not, and prefix_match
+    returns exactly the brute-force startswith set. A range whose ``lte``
+    is an existing value includes that value."""
+    from search_replica_spark.query.bm25 import prefix_match, prefix_successor, range_match
+
+    langs = ["a", "a\U0001F600", "a\U0001F600z", "a\uffff", "ab", "b", "b\U0001F600",
+             "a\U0010FFFF", "`z"]
+    df = _mk_docs([("r0", f"d/{i}.py", "alpha beta") for i in range(len(langs))])
+    df["lang"] = langs
+    idx = str(tmp_path / "pidx")
+    cfg = IndexConfig(
+        shuffle_partitions=2,
+        field_analyzers=(("content", "text"), ("lang", "keyword")),
+    )
+    build_index(spark, spark.createDataFrame(df), idx, cfg)
+    rd = IndexReader(spark, idx)
+    docs = pq.read_table(os.path.join(idx, "docs"), columns=["doc_id", "lang"]).to_pydict()
+    by_id = dict(zip(docs["doc_id"], docs["lang"]))
+    for prefix in ("a", "a\U0001F600", "a\U0010FFFF", "b"):
+        got = prefix_match(rd, "lang:" + prefix, max_expansions=None)
+        want = sorted(d for d, v in by_id.items() if v.startswith(prefix))
+        assert got == want, prefix
+        assert rd.expand_prefix("lang:" + prefix, None) == sorted(
+            "lang:" + v for v in set(langs) if v.startswith(prefix))
+    assert "lang:b" in rd.expand_prefix("lang:", None)  # the successor of lang:a exists
+    assert prefix_successor("a") == "b"
+    assert prefix_successor("a\U0010FFFF") == "b"
+    assert prefix_successor("\U0010FFFF\U0010FFFF") is None
+    assert prefix_successor("a\ud7ff") == "a\ue000"
+    for lte in ("ab", "a\U0001F600", "b"):
+        got = sorted(by_id[d] for d in range_match(rd, "lang", gte="a", lte=lte))
+        assert got == sorted(v for v in langs if "a" <= v <= lte), lte
+        assert lte in got
+
+
 def test_connected_components_transitive_chain(spark):
     """Near-dup is not transitive; components must be — a chain a-b-c-d
     collapses to one cluster, disjoint pairs stay separate."""

@@ -449,17 +449,15 @@ def _jobs_run_by(sc, fn):
     return out, marker() - start - 1
 
 
-def test_sharded_serve_topk_reads_the_dictionary_once(spark, small_index, small_corpus, tmp_path):
-    """A sharded serve_topk reads the query terms' dictionary dfs once and
-    hands them to every shard reader: beyond that read, each shard runs
-    only the jobs of its doc arrays, liveDocs and postings scan, on a plain
-    and on a generational index."""
-    from search_replica_spark.query.bm25 import (
-        _global_dfs,
-        make_serving_readers,
-        serve_topk,
-        tokenize_text,
-    )
+def test_sharded_serve_topk_reads_the_dictionary_once(
+    spark, small_index, small_corpus, tmp_path, monkeypatch
+):
+    """A sharded serve_topk reads the query terms' dictionary dfs once per
+    call and hands them to every shard reader, and it starts no Spark job:
+    each shard reads its doc arrays, liveDocs and postings from the index
+    parquet in the driver, on a plain and on a generational index."""
+    from search_replica_spark.query import bm25
+    from search_replica_spark.query.bm25 import serve_topk
     from search_replica_spark.streaming.incremental import add_generation
 
     mg = str(tmp_path / "mg")
@@ -469,25 +467,24 @@ def test_sharded_serve_topk_reads_the_dictionary_once(spark, small_index, small_
     add_generation(spark, sdf.limit(300), mg, cfg)
     sc = spark.sparkContext
     q = "license apache"
-    terms = sorted(set(tokenize_text(q)))
-    for idx, target in ((small_index[0], 150), (mg, 200)):
-        def reads():
-            readers = make_serving_readers(spark, idx, min_docs=0, target_docs=target)
-            _global_dfs(readers[0], terms)
-            for r in readers:
-                r.doc_arrays()
-                getattr(r, "_live", None)
-                r._postings_scan(False, terms)[0].toArrow()
-            return len(readers)
+    dfs_reads = []
+    global_dfs = bm25._global_dfs
 
+    def counting_global_dfs(reader, terms):
+        dfs_reads.append(terms)
+        return global_dfs(reader, terms)
+
+    monkeypatch.setattr(bm25, "_global_dfs", counting_global_dfs)
+    for idx, target in ((small_index[0], 150), (mg, 200)):
+        n_shards = len(bm25.make_serving_readers(spark, idx, min_docs=0, target_docs=target))
         for mode in ("or", "and"):
-            serve_topk(spark, idx, q, 10, mode=mode, min_docs=0, target_docs=target)
+            dfs_reads.clear()
             hits, served = _jobs_run_by(
                 sc, lambda: serve_topk(spark, idx, q, 10, mode=mode, min_docs=0,
                                        target_docs=target))
-            n_shards, needed = _jobs_run_by(sc, reads)
             assert len(hits) == 10 and n_shards > 2
-            assert 0 < served <= needed, (idx, mode, served, needed)
+            assert served == 0, (idx, mode, served)
+            assert dfs_reads == [["apache", "license"]], (idx, mode, dfs_reads)
 
 
 def test_exact_checker_rejects_unconvertible_floats(monkeypatch):
