@@ -17,11 +17,20 @@ plan's answers (``or``/``and``) on both indexes. The generational case
 calls the plan by its ``bm25_topk_spark_multigen`` name, which every
 version of the engine has. A third pair of indexes, plain and
 generational, maps ``lang`` as a keyword field, for ``range_match`` and
-``exists_match`` on the same reader kinds.
+``exists_match`` on the same reader kinds. A fourth pair stores
+``_source`` (the generational one gains a fourth generation whose partial
+update nulls ``lang`` on three docs) for the fetch phase on plain and
+generational readers: ``highlight`` (default and custom tags and fragment
+size), every flat agg kind under a ``match``, under ``match_all`` and
+under a match with no hits, stored-field sorts on ``doc_len``, ``path``
+and the nullable ``lang``, ``more_like_this`` by ``_id`` (an updated doc
+and a deleted one) and the terms lookup (request form, and ``terms_lookup``
+with and without ``max_terms``).
 
 Each answer prints as one line, ``group | case | hits``, with every hit as
 ``doc_id:score`` and the score in float hex, so the line changes when any
-bit of a score does. An exception prints as ``error <type>``. The last
+bit of a score does; a fetch-phase answer prints as its whole response in
+sorted-key JSON, so an int that turns into a float changes it too. An exception prints as ``error <type>``. The last
 lines are one sha256 per group and one over every line. ``--root`` imports
 ``search_replica_spark`` from another checkout, so running the script once
 per checkout and diffing the outputs shows whether two versions of the
@@ -33,6 +42,8 @@ from __future__ import annotations
 import argparse
 import functools
 import hashlib
+import inspect
+import json
 import os
 import sys
 import tempfile
@@ -121,6 +132,74 @@ FIELDED_EXPANSIONS = [
 ]
 
 
+def fetch_bodies(lookup_id: int, deleted_id: int) -> list[tuple[str, dict]]:
+    """The fetch-phase request bodies: ``lookup_id`` names a doc updated in
+    the generational index, ``deleted_id`` one it tombstones."""
+    match = {"match": {"content": "license apache"}}
+    out = [
+        ("highlight", {"query": match, "size": 5, "highlight": {"fields": {"content": {}}}}),
+        ("highlight custom", {"query": match, "size": 5, "highlight": {
+            "pre_tags": ["[["], "post_tags": ["]]"],
+            "fields": {"content": {"fragment_size": 30}}}}),
+    ]
+    aggs = {
+        "terms lang": {"terms": {"field": "lang", "size": 4}},
+        "terms doc_len": {"terms": {"field": "doc_len", "size": 5}},
+        "stats doc_len": {"stats": {"field": "doc_len"}},
+        "min doc_len": {"min": {"field": "doc_len"}},
+        "max doc_len": {"max": {"field": "doc_len"}},
+        "min path": {"min": {"field": "path"}},
+        "max lang": {"max": {"field": "lang"}},
+        "sum doc_len": {"sum": {"field": "doc_len"}},
+        "avg doc_len": {"avg": {"field": "doc_len"}},
+        "value_count lang": {"value_count": {"field": "lang"}},
+        "cardinality lang": {"cardinality": {"field": "lang"}},
+        "histogram doc_len": {"histogram": {"field": "doc_len", "interval": 25}},
+    }
+    for qname, query in (("match", {"query": match}), ("match_all", {})):
+        out += [(f"aggs {name} {qname}", {**query, "size": 0, "aggs": {"a": agg}})
+                for name, agg in aggs.items()]
+    out.append(("aggs all no hits", {"query": {"match": {"content": "zzqqabsentqq"}},
+                                     "aggs": {n.replace(" ", "_"): a for n, a in aggs.items()}}))
+    for field in ("doc_len", "path"):
+        for order in ("asc", "desc"):
+            out.append((f"sort {field} {order} from=10", {
+                "query": {"match": {"content": "license"}},
+                "sort": [{field: {"order": order}}], "from": 10, "size": 10}))
+    for order in ("asc", "desc"):
+        out.append((f"sort lang {order} match_all", {
+            "sort": [{"lang": {"order": order}}], "size": 400}))
+    for name, doc in (("updated", lookup_id), ("deleted", deleted_id)):
+        out += [
+            (f"mlt by _id {name}", {"query": {"more_like_this": {"like": {"_id": doc}}},
+                                    "size": 10}),
+            (f"mlt by _id {name} include", {"query": {"more_like_this": {
+                "like": {"_id": doc}, "include": True}}, "size": 10}),
+            (f"terms lookup {name}", {"query": {"terms": {"content": {
+                "index": "self", "id": doc, "path": "content"}}}, "size": 100}),
+        ]
+    return out
+
+
+def fetch_cases(r, lookup_id: int, deleted_id: int) -> list[tuple[str, object]]:
+    from search_replica_spark.query import bm25
+    from search_replica_spark.query.dsl import execute_request
+
+    def lookup(doc, **kw):
+        # the Spark GET of earlier versions took the session and the index dir
+        if "spark" in inspect.signature(bm25.terms_lookup).parameters:
+            kw.update(spark=r.spark, index_dir=r.index_dir)
+        return [(d, 1.0) for d in bm25.terms_lookup(r, lookup_doc_id=doc, **kw)]
+
+    cases = [(f"request {name}",
+              lambda b=b: json.dumps(execute_request(r, b), sort_keys=True))
+             for name, b in fetch_bodies(lookup_id, deleted_id)]
+    for name, doc in (("updated", lookup_id), ("deleted", deleted_id)):
+        cases += [(f"terms_lookup {name}", lambda d=doc: lookup(d)),
+                  (f"terms_lookup {name} max_terms=3", lambda d=doc: lookup(d, max_terms=3))]
+    return cases
+
+
 def hits_line(hits) -> str:
     return " ".join(f"{int(d)}:{float(s).hex()}" for d, s in hits) or "-"
 
@@ -204,6 +283,26 @@ def build(spark, n_docs: int, tmp: str, tag: str = "", **fields) -> tuple[str, s
     return plain, mg
 
 
+def build_source(spark, n_docs: int, tmp: str) -> tuple[str, str, int, int]:
+    """``build``'s two indexes with stored ``_source``; the generational
+    one gains a generation whose partial update nulls ``lang`` on three
+    docs. Returns them with the doc_ids of an updated and a deleted doc."""
+    from search_replica_spark.corpus import generate_corpus
+    from search_replica_spark.oracle import doc_id_of
+    from search_replica_spark.streaming.incremental import add_generation
+
+    plain, mg = build(spark, n_docs, tmp, "-source", store_source=True)
+    corpus = generate_corpus(n_docs)
+    unset = corpus.iloc[[20, 21, 22]][["repo", "path"]].copy()
+    for c in ("commit", "lang", "content"):
+        unset[c] = None
+    unset["_change_type"] = "update_partial"
+    unset["_unset"] = [["lang"]] * 3
+    add_generation(spark, spark.createDataFrame(unset), mg)
+    ids = [doc_id_of(corpus["repo"][i], corpus["path"][i]) for i in (4, 11)]
+    return plain, mg, *ids
+
+
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--root", default=ROOT, help="checkout to import search_replica_spark from")
@@ -227,6 +326,7 @@ def main() -> int:
             plain, mg = build(spark, args.docs, tmp)
             fplain, fmg = build(spark, args.docs, tmp, "-fielded",
                                 field_analyzers=(("content", "text"), ("lang", "keyword")))
+            splain, smg, updated, deleted = build_source(spark, args.docs, tmp)
             n = IndexReader(spark, plain).n_docs
             shard = (n // 3, 2 * n // 3)
             readers = {
@@ -242,6 +342,11 @@ def main() -> int:
                 "fielded shard": (lambda: IndexReader(spark, fplain, shard_range=shard),
                                   fielded),
                 "fielded multigen": (lambda: MultiGenReader(spark, fmg), fielded),
+            })
+            fetch = functools.partial(fetch_cases, lookup_id=updated, deleted_id=deleted)
+            readers.update({
+                "fetch plain": (lambda: IndexReader(spark, splain), fetch),
+                "fetch multigen": (lambda: MultiGenReader(spark, smg), fetch),
             })
             for group, (make, cases_of) in readers.items():
                 for pinned in (False, True):

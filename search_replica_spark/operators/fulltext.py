@@ -714,11 +714,12 @@ def ft_bm25_and_top10(spark, sf_dir):
 
 
 # B5h: ES highlighting over STORED FIELDS — score top-10 with the real
-# engine, then fetch each hit's stored _source from the index's docs/
-# store (never the source table) and compute a plain-highlighter fragment
-# (query/highlight.py). The oracle recomputes BM25 AND the identical
-# fragment rule in SQL (instr/substr/regexp_replace over documents.text,
-# which equals the stored content byte-for-byte).
+# engine, then read each hit's stored _source from the index's docs/
+# store through the reader (never the source table) and compute a
+# plain-highlighter fragment (query/highlight.py). The oracle recomputes
+# BM25 AND the identical fragment rule in SQL (instr/substr/
+# regexp_replace over documents.text, which equals the stored content
+# byte-for-byte).
 HL_TERM = "spark"
 _HL_SQL = f"""
 WITH topk AS ({_bm25_sql(10, qterms=(HL_TERM,))})
@@ -733,19 +734,12 @@ FROM topk t JOIN documents d USING (doc_id)
 @register("ft_highlight_top10", _HL_SQL)
 def ft_highlight_top10(spark, sf_dir):
     from search_replica_spark.query.bm25 import TermAtATimeScorer
+    from search_replica_spark.query.dsl import _stored_contents
     from search_replica_spark.query.highlight import highlight_hits
 
-    idx = _index_dir_for(spark, sf_dir)
-    hits = TermAtATimeScorer(_OrigIdReader(spark, idx)).score(HL_TERM, 10)
-    ids = [d for d, _ in hits]
-    stored = (
-        spark.read.parquet(os.path.join(idx, "docs"))
-        .withColumn("orig_id", F.split(F.col("path"), "_").getItem(1).cast("long"))
-        .filter(F.col("orig_id").isin(ids))
-        .select("orig_id", "content")
-        .collect()
-    )
-    contents = {r["orig_id"]: r["content"] for r in stored}
+    reader = _OrigIdReader(spark, _index_dir_for(spark, sf_dir))
+    hits = TermAtATimeScorer(reader).score(HL_TERM, 10)
+    contents = _stored_contents(reader, [d for d, _ in hits])
     rows = [(d, round(s, 6), frag) for d, s, frag in highlight_hits(hits, contents, [HL_TERM])]
     return spark.createDataFrame(rows, "doc_id long, score double, frag string")
 
@@ -1701,15 +1695,8 @@ def ft_terms_lookup(spark, sf_dir):
     idx = _index_dir_for(spark, sf_dir)
     d = load(spark, sf_dir, "documents")
     orig = int(d.agg(F.min("doc_id")).collect()[0][0])
-    # resolve the lookup doc's ENGINE id via its indexed path (harness path
-    # convention "doc_<source id>"); real callers already hold the _id
-    eng = (
-        spark.read.parquet(os.path.join(idx, "docs"))
-        .filter(F.col("path") == f"doc_{orig}")
-        .select("doc_id")
-        .collect()[0][0]
-    )
-    ids = terms_lookup(_OrigIdReader(spark, idx), spark, idx, int(eng), max_terms=3)
+    # the lookup id lives in the reader's id space: the source id here
+    ids = terms_lookup(_OrigIdReader(spark, idx), orig, max_terms=3)
     return spark.createDataFrame([(i,) for i in ids], "doc_id long")
 
 
@@ -2254,8 +2241,8 @@ def dsl_frequent_item_sets(spark, sf_dir):
 
 
 # B5req: the /_search REQUEST shim end-to-end — query + aggs in ONE body
-# (execute_request): the terms agg computes over the docs-store rows of
-# the matched set (ids broadcast into the scan, one Spark aggregation),
+# (execute_request): the terms agg counts the docs-store rows of the
+# matched set, read in the driver (``IndexReader.stored_fields``),
 # exactly what a reference user's dashboard request does today.
 @register(
     "dsl_request_terms_agg",

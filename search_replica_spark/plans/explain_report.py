@@ -157,11 +157,6 @@ CHECKS = {
         "avoid": ["CartesianProduct", "SortMergeJoin"],
         "why": "variable_width_histogram (r5): corpus rows reduce to the per-VALUE histogram first; the rank window runs over |distinct values| rows only and the 4-row ntile bucket spec rides a broadcast — no single-partition window ever touches corpus rows",
     },
-    "dsl_request_matched_docs": {
-        "want": ["BroadcastHashJoin"],
-        "avoid": ["CartesianProduct", "SortMergeJoin"],
-        "why": "request-body aggs / stored-field sort (r5): a large matched id set BROADCASTS into the docs-store scan — buckets and page sorts compute distributed with one broadcast join, never a shuffle join or a driver-side hit loop",
-    },
     "knn_partition_pruning": {
         "want": ["PartitionFilters: [", "label"],
         "avoid": ["CartesianProduct"],
@@ -259,15 +254,7 @@ def main():
         reg["ft_rank_feature_top10"][0](spark, sf_dir)
     )
 
-    # r5: the request shim's matched-docs join (large-set shape) + the knn
-    # store's partition-pruned probe, captured from the live helpers
-    from search_replica_spark.operators.fulltext import _OrigIdReader
-    from search_replica_spark.query.dsl import _matched_docs_df
-
-    _rd = _OrigIdReader(spark, idx)
-    _ids = [int(x) for x in _rd.doc_arrays()[1][:1200]]  # >1000 → join path
-    plans["dsl_request_matched_docs"] = plan_of(_matched_docs_df(_rd, _ids))
-
+    # r5: the knn store's partition-pruned probe, captured from the live helper
     from search_replica_spark.operators.similarity import (  # noqa: F401
         dsl_knn_search_top10 as _knn_entry,
     )

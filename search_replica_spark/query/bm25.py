@@ -35,6 +35,7 @@ import math
 import os
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -232,20 +233,57 @@ class IndexReader:
         """What turns a generation's doc_idx into this reader's slot."""
         return base - (self.shard_range[0] if self.shard_range is not None else 0)
 
+    def _doc_tables(self, cols: list[str], slots: np.ndarray | None = None):
+        """Each generation's docs rows as (table of ``doc_idx`` and the
+        ``cols`` it holds, the offset that turns its doc_idx into this
+        reader's slot), read from the docs parquet in the driver (no Spark
+        job): the rows of every slot this reader holds, or only those of
+        ``slots``. Only the row groups whose doc_idx statistics can hold
+        them are read, so a shard reader reads O(hi - lo) rows, never the
+        corpus."""
+        n_docs = {g["gen"]: int(g["n_docs"]) for g in self.live_gens}
+        for d, gen, base, rng in self._gens():
+            off = self._slot_offset(base)
+            if slots is None:
+                flt = () if rng is None else (("doc_idx", ">=", rng[0]), ("doc_idx", "<", rng[1]))
+            else:
+                lo, hi = rng or (0, n_docs[gen])
+                local = slots - off
+                flt = (("doc_idx", "in", local[(local >= lo) & (local < hi)]),)
+            yield read_table(os.path.join(d, "docs"), ["doc_idx", *cols], flt), off
+
     def _doc_columns(self, cols: list[str]) -> dict[str, np.ndarray]:
         """``cols`` of the docs table for the slots this reader holds, in
-        slot order, read from the docs parquet in the driver (no Spark
-        job). A shard reader reads only the row groups whose doc_idx
-        statistics overlap its range: O(hi - lo), never the corpus."""
+        slot order (``_doc_tables``)."""
         slots, vals = [np.empty(0, np.int64)], {c: [np.empty(0, np.int64)] for c in cols}
-        for d, _gen, base, rng in self._gens():
-            flt = () if rng is None else (("doc_idx", ">=", rng[0]), ("doc_idx", "<", rng[1]))
-            t = read_table(os.path.join(d, "docs"), ["doc_idx", *cols], flt)
-            slots.append(t["doc_idx"].to_numpy() + base)
+        for t, off in self._doc_tables(cols):
+            slots.append(t["doc_idx"].to_numpy() + off)
             for c in cols:
                 vals[c].append(t[c].to_numpy())
         order = np.argsort(np.concatenate(slots), kind="stable")
         return {c: np.concatenate(v)[order] for c, v in vals.items()}
+
+    def stored_fields(self, ids, cols: list[str]) -> pa.Table:
+        """The stored ``cols`` of this reader's live docs among ``ids``:
+        one row per doc, ``_rid`` (its id) and the ``cols`` some
+        generation's docs store holds (null where a generation lacks one).
+        The ids are resolved in this reader's id space (``doc_arrays``,
+        then its liveDocs), so a reader that remaps ids reads the right
+        rows and a superseded or tombstoned version is never read. Each
+        generation reads only its rows' doc_idx (``_doc_tables``), in the
+        driver with no Spark job: the fetch phase of a request."""
+        _dl, arr = self.doc_arrays()
+        slots = np.flatnonzero(np.isin(arr, np.asarray(ids, dtype=np.int64)))
+        if self._live is not None:
+            slots = slots[self._live[slots]]
+        parts = [
+            t.add_column(0, "_rid", pa.array(arr[t["doc_idx"].to_numpy() + off]))
+            .drop_columns(["doc_idx"])
+            for t, off in self._doc_tables(cols, slots)
+        ]
+        if not parts:  # no generation holds documents
+            return pa.table({"_rid": pa.array([], pa.int64())})
+        return pa.concat_tables(parts, promote_options="default")
 
     def doc_arrays(self) -> tuple[np.ndarray, np.ndarray]:
         if self._doc_len is None:
@@ -446,8 +484,8 @@ def _bm25_slots(spark: SparkSession, gens: list[tuple[str, int]], terms: list[st
         parts.append(posts.select(
             (F.col("doc_idx") + F.lit(base)).cast("long").alias("slot"),
             "term_id",
-            (F.col("idf") * F.col("tf") / (F.col("tf") + F.lit(k1) * (
-                F.lit(1.0 - b) + F.lit(b) * F.col("doc_len") / F.lit(avg_dl)))).alias("score"),
+            (F.col("idf") * (F.col("tf") / (F.col("tf") + F.lit(k1) * (
+                F.lit(1.0 - b) + F.lit(b) * F.col("doc_len") / F.lit(avg_dl))))).alias("score"),
         ))
     if not parts:
         return spark.createDataFrame([], "slot long, score double")
@@ -1777,8 +1815,6 @@ def completion_suggest(
 
 def terms_lookup(
     reader: IndexReader,
-    spark: SparkSession,
-    index_dir: str,
     lookup_doc_id: int,
     field: str = "content",
     k: int | None = None,
@@ -1787,13 +1823,14 @@ def terms_lookup(
 ) -> list[int]:
     """ES terms-lookup query ({"terms": {"content": {"index": ..., "id":
     ..., "path": "content"}}}): the terms list is fetched from ANOTHER
-    document's stored ``_source`` (one pushed-down GET through
-    ``get_docs`` — requires a ``store_source=True`` index, exactly like
-    ES requires the lookup field in ``_source``), analyzed with the same
-    analyzer as the index, then executed as a constant-score terms query
-    (one multi-term posting fetch, doc_id order). The lookup doc itself
-    matches, as in ES. Scale shape: O(1) point GET + the same bounded
-    expansion fetch every constant-score query uses.
+    document's stored ``_source`` (a point read of its live row through
+    ``reader.stored_fields``, in the reader's id space — requires a
+    ``store_source=True`` index, exactly like ES requires the lookup field
+    in ``_source``), analyzed with the same analyzer as the index, then
+    executed as a constant-score terms query (one multi-term posting
+    fetch, doc_id order). The lookup doc itself matches, as in ES. A
+    lookup doc that is not live, or has no stored ``field``, matches
+    nothing.
 
     ``max_terms`` is the analogue of ES's ``index.max_terms_count``
     safeguard (ES hard-errors past 65536 lookup terms); instead of
@@ -1801,12 +1838,11 @@ def terms_lookup(
     SELECTIVE terms (dictionary df asc, term asc — a deliberate deviation
     from ES's rejection, chosen so capped lookups stay useful: the rare
     terms are the ones that carry the lookup's meaning)."""
-    from search_replica_spark.streaming.incremental import get_docs
-
-    rows = get_docs(spark, index_dir, [int(lookup_doc_id)]).select(field).collect()
-    if not rows or rows[0][0] is None:
+    row = reader.stored_fields([int(lookup_doc_id)], [field])
+    text = row[field][0].as_py() if row.num_rows and field in row.column_names else None
+    if text is None:
         return []
-    terms = sorted(set(tokenize_text(rows[0][0])))
+    terms = sorted(set(tokenize_text(text)))
     if max_terms is not None and len(terms) > max_terms:
         # generation-summed dictionary dfs; unindexed terms (noindex/ignore_above mappings)
         # match nothing, so they never compete for cap slots

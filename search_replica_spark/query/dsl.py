@@ -45,6 +45,8 @@ there, fetched once per query here), never a per-parent loop.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from search_replica_spark.query import bm25 as Q
 
@@ -211,12 +213,11 @@ def _score_map(reader, q, live, ih=None, leaf_k=None) -> dict[int, float]:
         if kind == "terms" and isinstance(spec, dict) and "id" in spec:
             # terms-LOOKUP form: the value list lives in another stored
             # document ({"terms": {field: {"index": ..., "id": ..,
-            # "path": ...}}}) — one pushed-down GET, then the same
-            # constant-score terms query
+            # "path": ...}}}) — one point read of its stored field, then
+            # the same constant-score terms query
             return _members(
                 Q.terms_lookup(
-                    reader, reader.spark, reader.index_dir, int(spec["id"]),
-                    field=str(spec.get("path", field)), live=live,
+                    reader, int(spec["id"]), field=str(spec.get("path", field)), live=live,
                 )
             )
         values = (
@@ -739,62 +740,34 @@ def _has_child_map(reader, body: dict, live, ih=None) -> dict[int, float]:
     return out
 
 
-def _matched_docs_df(reader, ids: list[int]):
-    """The docs-store rows of the reader's live docs among ``ids``, with
-    an ``_rid`` column holding the id. The ids are resolved in the
-    READER's id space (its doc arrays, then its liveDocs), so a reader
-    that remaps ids fetches the right rows and a superseded version is
-    never read. Each generation's rows are selected on doc_idx: a small
-    set pushes an IN filter into the scan, and every set broadcast-joins
-    its (doc_idx, _rid) list — the shapes that survive a page or an agg
-    over millions of matches."""
-    import os
-    from functools import reduce
-
-    from pyspark.sql import functions as F
-
-    _dl, arr = reader.doc_arrays()
-    want = np.fromiter((int(i) for i in ids), dtype=np.int64, count=len(ids))
-    slots = np.flatnonzero(np.isin(arr, want))
-    if reader._live is not None:
-        slots = slots[reader._live[slots]]
-    n_docs = {g["gen"]: int(g["n_docs"]) for g in reader.live_gens}
-    parts = []
-    for d, gen, base, rng in reader._gens():
-        lo, hi = rng or (0, n_docs[gen])
-        off = reader._slot_offset(base)
-        mine = slots[(slots >= lo + off) & (slots < hi + off)]
-        rid = reader.spark.createDataFrame(
-            list(zip((mine - off).tolist(), arr[mine].tolist())), "doc_idx long, _rid long")
-        docs = reader.spark.read.parquet(os.path.join(d, "docs"))
-        if mine.size <= 1000:
-            docs = docs.filter(F.col("doc_idx").isin((mine - off).tolist()))
-        parts.append(docs.join(F.broadcast(rid), "doc_idx"))
-    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+def _stored_contents(reader, ids: list[int]) -> dict[int, str]:
+    """The stored default-field text of the live docs among ``ids``, by
+    id: ONE docs-store read for all of them (``reader.stored_fields``), so
+    highlighting a page of hits never issues a GET per hit. A build
+    without stored ``_source`` holds no text."""
+    t = reader.stored_fields(ids, [DEFAULT_FIELD])
+    if DEFAULT_FIELD not in t.column_names:
+        return {}
+    return dict(zip(t["_rid"].to_pylist(), t[DEFAULT_FIELD].to_pylist()))
 
 
 def _stored_content(reader, doc_id: int) -> str:
-    """The analyzed text of one stored document (more_like_this by _id):
-    a pushed-down point read of its live row in the docs store
-    (``_matched_docs_df``) — requires a ``store_source=True`` build, exactly
-    like ES requires ``_source`` for MLT by id."""
-    rows = _matched_docs_df(reader, [int(doc_id)]).select(DEFAULT_FIELD).collect()
-    if not rows or rows[0][0] is None:
+    """The analyzed text of one stored document (more_like_this by _id),
+    ``_stored_contents`` of its id — requires a ``store_source=True``
+    build, exactly like ES requires ``_source`` for MLT by id."""
+    text = _stored_contents(reader, [int(doc_id)]).get(int(doc_id))
+    if text is None:
         raise ValueError(
             f"more_like_this: no stored _source for _id {doc_id} "
             "(MLT by id needs a store_source=True build)"
         )
-    return rows[0][0]
+    return text
 
 
-def _stored_contents(reader, ids: list[int]) -> dict[int, str]:
-    """Batch form of ``_stored_content``: ONE pushed-down docs-store read
-    for all requested ids (highlighting a page of hits must not issue a
-    GET per hit)."""
-    if not ids:
-        return {}
-    rows = _matched_docs_df(reader, ids).select("_rid", DEFAULT_FIELD).collect()
-    return {int(r[0]): r[1] for r in rows}
+def _stored_column(t: pa.Table, field) -> pa.ChunkedArray:
+    if field not in t.column_names:
+        raise ValueError(f"{field!r} is not a stored field of this index")
+    return t[field]
 
 
 def _highlight_terms(q) -> list[str]:
@@ -852,18 +825,42 @@ def _highlight_terms(q) -> list[str]:
     return []
 
 
-def _run_aggs(reader, aggs: dict, matched: list[int]) -> dict:
-    """ES request-body ``aggs`` over the query's matched set: each agg is
-    ONE Spark aggregation over the docs-store rows of the matches (the
-    matched ids broadcast into the scan), so buckets/stats compute
-    distributed, never by iterating hits on the serving node.  Supported:
-    terms, stats, min/max/sum/avg/value_count, cardinality, histogram —
-    the flat (non-nested) core; deep sub-agg trees belong to the
-    first-class operators in operators/aggregations.py."""
-    from pyspark.sql import functions as F
+def _buckets(keys: pa.ChunkedArray, by_count: bool) -> list[dict]:
+    """ES buckets of ``keys``: each distinct value, null included, with
+    its count, ordered by count desc then key asc (``by_count``: terms) or
+    by key asc (histogram), a null key first as Spark orders it."""
+    vc = pc.value_counts(keys)
+    t = pa.table({"key": vc.field("values"), "doc_count": vc.field("counts")})
+    by = [("doc_count", "descending")] if by_count else []
+    return t.sort_by(by + [("key", "ascending")], null_placement="at_start").to_pylist()
 
-    mdf = _matched_docs_df(reader, matched)
-    out: dict = {}
+
+def _avg(col: pa.ChunkedArray) -> float | None:
+    n = pc.count(col).as_py()
+    return pc.sum(pc.cast(col, pa.float64())).as_py() / n if n else None
+
+
+#: the single-value metric aggs over a column's non-null values; each
+#: keeps the Python type Spark gives it (a sum of ints is an int)
+_METRICS = {
+    "min": lambda c: pc.min(c).as_py(),
+    "max": lambda c: pc.max(c).as_py(),
+    "sum": lambda c: pc.sum(c).as_py(),
+    "avg": _avg,
+    "value_count": lambda c: pc.count(c).as_py(),
+    "cardinality": lambda c: pc.count_distinct(c).as_py(),  # exact: what ES's HLL approximates
+}
+
+
+def _run_aggs(reader, aggs: dict, matched: np.ndarray) -> dict:
+    """ES request-body ``aggs`` over the query's matched set, computed in
+    the driver with ``pyarrow.compute`` over ONE docs-store read of the
+    matches' agg fields (``reader.stored_fields``), never by iterating
+    hits in Python.  Supported: terms, stats,
+    min/max/sum/avg/value_count, cardinality, histogram — the flat
+    (non-nested) core; deep sub-agg trees belong to the first-class
+    operators in operators/aggregations.py."""
+    specs = {}
     for name, spec in aggs.items():
         if "aggs" in spec or "aggregations" in spec:
             raise ValueError(
@@ -871,50 +868,23 @@ def _run_aggs(reader, aggs: dict, matched: list[int]) -> dict:
                 "first-class operators (operators/aggregations.py), not the "
                 "request shim — flat aggs only here"
             )
-        akind, abody = _single(spec, f"agg {name!r}")
-        field = abody.get("field")
+        specs[name] = _single(spec, f"agg {name!r}")
+    fields = dict.fromkeys(abody.get("field") for _k, abody in specs.values())
+    t = reader.stored_fields(matched, list(fields))
+    out: dict = {}
+    for name, (akind, abody) in specs.items():
+        col = _stored_column(t, abody.get("field"))
         if akind == "terms":
-            size = int(abody.get("size", 10))
-            rows = (
-                mdf.groupBy(F.col(field).alias("key"))
-                .agg(F.count("*").alias("doc_count"))
-                .orderBy(F.col("doc_count").desc(), F.col("key").asc())
-                .limit(size)
-                .collect()
-            )
-            out[name] = {"buckets": [
-                {"key": r["key"], "doc_count": r["doc_count"]} for r in rows
-            ]}
+            out[name] = {"buckets": _buckets(col, by_count=True)[: int(abody.get("size", 10))]}
         elif akind == "stats":
-            r = mdf.agg(
-                F.count(field).alias("count"), F.min(field).alias("min"),
-                F.max(field).alias("max"), F.sum(field).alias("sum"),
-                F.avg(field).alias("avg"),
-            ).collect()[0]
-            out[name] = {k: r[k] for k in ("count", "min", "max", "sum", "avg")}
-        elif akind in ("min", "max", "sum", "avg"):
-            fn = getattr(F, akind)
-            out[name] = {"value": mdf.agg(fn(field).alias("v")).collect()[0]["v"]}
-        elif akind == "value_count":
-            out[name] = {"value": mdf.agg(F.count(field).alias("v")).collect()[0]["v"]}
-        elif akind == "cardinality":
-            # exact — the value ES's HLL sketch approximates
-            out[name] = {
-                "value": mdf.agg(F.countDistinct(field).alias("v")).collect()[0]["v"]
-            }
+            out[name] = {"count": pc.count(col).as_py(),
+                         **{k: _METRICS[k](col) for k in ("min", "max", "sum", "avg")}}
+        elif akind in _METRICS:
+            out[name] = {"value": _METRICS[akind](col)}
         elif akind == "histogram":
             iv = float(abody["interval"])
-            rows = (
-                mdf.groupBy(
-                    (F.floor(F.col(field) / F.lit(iv)) * F.lit(iv)).alias("key")
-                )
-                .agg(F.count("*").alias("doc_count"))
-                .orderBy("key")
-                .collect()
-            )
-            out[name] = {"buckets": [
-                {"key": r["key"], "doc_count": r["doc_count"]} for r in rows
-            ]}
+            keys = pc.multiply(pc.floor(pc.divide(pc.cast(col, pa.float64()), iv)), iv)
+            out[name] = {"buckets": _buckets(keys, by_count=False)}
         else:
             raise ValueError(f"request agg {akind!r} not supported")
     return out
@@ -924,12 +894,14 @@ def execute_request(reader, body: dict, live=None) -> dict:
     """The full ES ``/_search`` REQUEST BODY, answered ES-shaped: supports
     ``query`` (default match_all), ``from``/``size`` paging, ``sort``
     (``_score`` desc — the default — ``_doc``, or any STORED field, the
-    latter ranked by one distributed orderBy+limit over the matched docs),
+    latter ranked by a table sort of the matched docs' values),
     ``min_score``, ``track_total_hits`` (always exact — a batch engine's
     totals are free), ``highlight`` over the stored default field (one
-    batched docs-store GET for the page, never per-hit), and flat ``aggs``
-    (terms/stats/min/max/sum/avg/value_count/cardinality/histogram, each
-    one Spark aggregation over the matched set).  Returns
+    batched docs-store read for the page, never per-hit), and flat
+    ``aggs`` (terms/stats/min/max/sum/avg/value_count/cardinality/
+    histogram over the matched set).  The fetch phase (highlight, a
+    stored-field sort, aggs) reads the docs store through
+    ``reader.stored_fields`` in the driver, with no Spark job.  Returns
     ``{"hits": {"total": {...}, "hits": [{"_id", "_score", ...}]},
     "aggregations": {...}}`` — the envelope a reference user's client
     already parses."""
@@ -987,28 +959,25 @@ def execute_request(reader, body: dict, live=None) -> dict:
             keep = (scores < cs) | ((scores == cs) & (ids > cd))
         page = Q._select_topk(scores[keep], ids[keep], offset + size)[offset:]
     else:
-        # stored-field sort: ONE distributed orderBy + limit over the
-        # matched docs (ties break on the id, ES-style) — the plan that
-        # holds when the match set dwarfs the page
+        # stored-field sort: the matches' key column, sorted on (key, id
+        # asc) with a null key first ascending and last descending, as
+        # Spark orders them
         if after is not None:
             raise ValueError(
                 "search_after supports _score/_doc sorts; cursor paging on "
                 "a stored field needs the field value in the cursor — use "
                 "from/size there instead"
             )
-        from pyspark.sql import functions as F
-
-        mdf = _matched_docs_df(reader, ids.tolist())
-        col = F.col(key).asc() if order == "asc" else F.col(key).desc()
-        rows = (
-            mdf.select("_rid", key)
-            .orderBy(col, F.col("_rid").asc())
-            .limit(offset + size)
-            .collect()
-        )
+        t = reader.stored_fields(ids, [key])
+        _stored_column(t, key)
+        asc = order == "asc"
+        rows = t.sort_by(
+            [(key, "ascending" if asc else "descending"), ("_rid", "ascending")],
+            null_placement="at_start" if asc else "at_end",
+        ).slice(offset, size).to_pylist()
         smap = _as_map(ids, scores)
-        page = [(int(r["_rid"]), smap[int(r["_rid"])]) for r in rows[offset:]]
-        sort_vals = {int(r["_rid"]): r[key] for r in rows[offset:]}
+        page = [(r["_rid"], smap[r["_rid"]]) for r in rows]
+        sort_vals = {r["_rid"]: r[key] for r in rows}
 
     hits = []
     frags: dict[int, str | None] = {}
@@ -1046,7 +1015,7 @@ def execute_request(reader, body: dict, live=None) -> dict:
     resp: dict = {"hits": {"total": {"value": total, "relation": "eq"}, "hits": hits}}
     aggs = body.get("aggs") or body.get("aggregations")
     if aggs:
-        resp["aggregations"] = _run_aggs(reader, aggs, ids.tolist())
+        resp["aggregations"] = _run_aggs(reader, aggs, ids)
     return resp
 
 

@@ -525,7 +525,7 @@ def test_dsl_terms_lookup_form(dsl_index):
     rd = dsl_index
     _dl, ids = rd.doc_arrays()
     src = int(ids[0])
-    want = terms_lookup(rd, rd.spark, rd.index_dir, src)
+    want = terms_lookup(rd, src)
     got = execute_dsl(
         rd,
         {"terms": {"content": {"index": "self", "id": src, "path": "content"}}},

@@ -53,14 +53,16 @@ def test_distributed_plan_adds_each_slots_contributions_in_term_order(spark, sma
     in term order, as the in-driver scorer does, so no score depends on
     which task's rows reach the final aggregate first: on the 8-part
     index every slot's score equals, bit for bit, that fold of the plan's
-    own per-posting formula."""
+    own per-posting formula. That formula is the in-driver scorer's
+    (``_bm25``: idf · (tf / norm)), so the plan's top-k equals
+    ``TermAtATimeScorer``'s bit for bit."""
     import math
     import os
 
     import numpy as np
     import pyarrow.parquet as pq
 
-    from search_replica_spark.query.bm25 import _bm25_slots
+    from search_replica_spark.query.bm25 import _bm25_slots, bm25_topk_spark
 
     idx = small_index[0]
     r = IndexReader(spark, idx)
@@ -74,11 +76,17 @@ def test_distributed_plan_adds_each_slots_contributions_in_term_order(spark, sma
     want: dict[int, float] = {}
     for d, t, tf in zip(rows["doc_idx"].tolist(), rows["term_id"].tolist(), rows["tf"].tolist()):
         norm = tf + r.k1 * ((1.0 - r.b) + r.b * float(doc_len[d]) / r.avg_dl)
-        want[d] = want.get(d, 0.0) + idf[t] * tf / norm
+        want[d] = want.get(d, 0.0) + idf[t] * (tf / norm)
     got = {row["slot"]: row["score"] for row in _bm25_slots(
         spark, [(idx, 0)], terms, r.n_docs, r.avg_dl, r.k1, r.b, "or").collect()}
     assert len(np.unique(rows["doc_idx"])) == len(got) == len(want) > 100
     assert [d for d in got if got[d] != want[d]] == []
+    for q in (" ".join(terms), "license apache", "def return the", "apache license version"):
+        for mode in ("or", "and"):
+            plan = [(row["doc_id"], row["score"])
+                    for row in bm25_topk_spark(spark, idx, q, 50, mode=mode).collect()]
+            assert plan == TermAtATimeScorer(r).score(q, 50, mode=mode), (q, mode)
+            assert plan or mode == "and", q
 
 
 def _batch(rows: pd.DataFrame, change: str) -> pd.DataFrame:

@@ -4,8 +4,11 @@ generation's postings at its slot base exactly as a pandas read of the
 parquet gives them, a positional re-pin serves phrase requests without
 Spark, fetched postings equal a per-term pandas reference and the
 ``bincount`` accumulate is bit-identical to its ``np.add.at`` reference,
-and shard readers score with the global df, positional queries included."""
+and shard readers score with the global df, positional queries included.
+The fetch phase (stored fields, request aggs, stored-field sorts) read in
+the driver equals the Spark plans it replaced, kept here as references."""
 
+import json
 import os
 import time
 
@@ -30,7 +33,7 @@ from search_replica_spark.query.dsl import execute_request
 from search_replica_spark.streaming.incremental import MultiGenReader, add_generation
 
 CFG = IndexConfig(
-    shuffle_partitions=4, store_positions=True
+    shuffle_partitions=4, store_positions=True, store_source=True
 )
 
 
@@ -187,14 +190,34 @@ def test_unpinned_requests_and_expansions_run_no_spark_job(
     spark, plain_index, multigen_index, fielded_indexes
 ):
     """On plain, shard and generational readers, none of them pinned,
-    match, bool and match_phrase requests and every term-expanding query
+    match, bool and match_phrase requests, every term-expanding query
     (prefix capped and uncapped, fuzzy, wildcard, regexp,
     match_phrase_prefix, completion, and range and exists on a keyword
-    field) read the index parquet in the driver and start no Spark job."""
+    field) and the fetch phase (highlight, every flat agg kind, stored-field
+    sorts, more_like_this by _id and the terms lookup) read the index
+    parquet in the driver and start no Spark job."""
     from search_replica_spark.query.bm25 import completion_suggest
 
     def q(kind, **spec):
         return {"query": {kind: spec}, "size": 100}
+
+    def fetch_bodies(r):
+        doc = int(r._live_docs().drop_dead(r.doc_arrays()[1])[0])  # a doc r holds live
+        aggs = {"langs": {"terms": {"field": "lang"}}, "dl": {"stats": {"field": "doc_len"}},
+                "lo": {"min": {"field": "doc_len"}}, "hi": {"max": {"field": "path"}},
+                "sum": {"sum": {"field": "doc_len"}}, "avg": {"avg": {"field": "doc_len"}},
+                "n": {"value_count": {"field": "lang"}},
+                "nlang": {"cardinality": {"field": "lang"}},
+                "hist": {"histogram": {"field": "doc_len", "interval": 20}}}
+        return [
+            _match("license apache", highlight={"fields": {"content": {}}}),
+            _match("license", size=0, aggs=aggs),
+            {"size": 0, "aggs": aggs},
+            _match("license", sort=[{"doc_len": {"order": "desc"}}], **{"from": 10}),
+            _match("license", sort=[{"path": {"order": "asc"}}]),
+            q("more_like_this", like={"_id": doc}),
+            q("terms", content={"index": "self", "id": doc, "path": "content"}),
+        ]
 
     text_bodies = [
         _match("license apache"),
@@ -228,7 +251,7 @@ def test_unpinned_requests_and_expansions_run_no_spark_job(
                   keyword_bodies))
     for label, make, bodies in cases:
         r = make()
-        for body in bodies:
+        for body in bodies + (fetch_bodies(r) if bodies is text_bodies else []):
             resp, jobs = _spark_jobs(spark, lambda: execute_request(r, body))
             assert jobs == [], (label, body)
             assert resp["hits"]["total"]["value"] > 0, (label, body)
@@ -701,6 +724,27 @@ def test_shard_doc_read_skips_row_groups_outside_the_range(spark, plain_index, m
     assert dl.size == ids.size == hi - lo
     assert read == overlapping
 
+    # an ``in`` list whose values straddle every row group's doc_idx range,
+    # none inside it, reads no row group; one value inside reads only the
+    # row group(s) holding it
+    from search_replica_spark.query.store import read_table
+
+    bounds = []
+    for name, i in sorted(every):
+        rg = pq.ParquetFile(os.path.join(docs, name)).metadata.row_group(i)
+        col, = (j for j in range(rg.num_columns) if rg.column(j).path_in_schema == "doc_idx")
+        bounds.append((rg.column(col).statistics.min, rg.column(col).statistics.max))
+    gaps = sorted({b for lo_, hi_ in bounds for b in (lo_ - 1, hi_ + 1)}
+                  - {d for lo_, hi_ in bounds for d in range(lo_, hi_ + 1)})
+    assert gaps
+    read.clear()
+    t = read_table(docs, ["doc_idx"], (("doc_idx", "in", np.array(gaps[::-1])),))
+    assert t.num_rows == 0 and read == set()
+    inside = bounds[0][0] + (bounds[0][1] - bounds[0][0]) // 2
+    t = read_table(docs, ["doc_idx"], (("doc_idx", "in", [gaps[-1], inside, gaps[0]]),))
+    assert t["doc_idx"].to_pylist() == [inside]
+    assert read == {k for k, (lo_, hi_) in zip(sorted(every), bounds) if lo_ <= inside <= hi_}
+
 
 @pytest.fixture(scope="module")
 def fielded_indexes(spark, tmp_path_factory):
@@ -813,3 +857,183 @@ def test_generational_shards_partition_the_full_reader(spark, multigen_index):
         assert got.keys() == want.keys()
         for d, sc in got.items():
             assert sc == pytest.approx(want[d], rel=1e-9), d
+
+
+# --- the fetch phase read in the driver -------------------------------------
+
+
+def _matched_docs_df(reader, ids):
+    """The Spark plan the fetch phase ran before it read in the driver, kept
+    as the reference: the docs-store rows of the reader's live docs among
+    ``ids`` with an ``_rid`` column holding the id, each generation's rows
+    selected on doc_idx (an IN filter for up to 1,000 slots) and
+    broadcast-joined to its (doc_idx, _rid) list."""
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
+    _dl, arr = reader.doc_arrays()
+    want = np.fromiter((int(i) for i in ids), dtype=np.int64, count=len(ids))
+    slots = np.flatnonzero(np.isin(arr, want))
+    if reader._live is not None:
+        slots = slots[reader._live[slots]]
+    n_docs = {g["gen"]: int(g["n_docs"]) for g in reader.live_gens}
+    parts = []
+    for d, gen, base, rng in reader._gens():
+        lo, hi = rng or (0, n_docs[gen])
+        off = reader._slot_offset(base)
+        mine = slots[(slots >= lo + off) & (slots < hi + off)]
+        rid = reader.spark.createDataFrame(
+            list(zip((mine - off).tolist(), arr[mine].tolist())), "doc_idx long, _rid long")
+        docs = reader.spark.read.parquet(os.path.join(d, "docs"))
+        if mine.size <= 1000:
+            docs = docs.filter(F.col("doc_idx").isin((mine - off).tolist()))
+        parts.append(docs.join(F.broadcast(rid), "doc_idx"))
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+
+
+def _spark_aggs(reader, aggs, matched):
+    """The request aggs as the Spark plan computed them: one Spark
+    aggregation per agg over ``_matched_docs_df``."""
+    from pyspark.sql import functions as F
+
+    mdf = _matched_docs_df(reader, matched)
+    out = {}
+    for name, spec in aggs.items():
+        akind, abody = next(iter(spec.items()))
+        field = abody.get("field")
+        if akind == "terms":
+            rows = (mdf.groupBy(F.col(field).alias("key")).agg(F.count("*").alias("doc_count"))
+                    .orderBy(F.col("doc_count").desc(), F.col("key").asc())
+                    .limit(int(abody.get("size", 10))).collect())
+            out[name] = {"buckets": [{"key": r["key"], "doc_count": r["doc_count"]} for r in rows]}
+        elif akind == "stats":
+            r = mdf.agg(F.count(field).alias("count"), F.min(field).alias("min"),
+                        F.max(field).alias("max"), F.sum(field).alias("sum"),
+                        F.avg(field).alias("avg")).collect()[0]
+            out[name] = {k: r[k] for k in ("count", "min", "max", "sum", "avg")}
+        elif akind in ("min", "max", "sum", "avg"):
+            out[name] = {"value": mdf.agg(getattr(F, akind)(field).alias("v")).collect()[0]["v"]}
+        elif akind == "value_count":
+            out[name] = {"value": mdf.agg(F.count(field).alias("v")).collect()[0]["v"]}
+        elif akind == "cardinality":
+            out[name] = {"value": mdf.agg(F.countDistinct(field).alias("v")).collect()[0]["v"]}
+        elif akind == "histogram":
+            iv = float(abody["interval"])
+            rows = (mdf.groupBy((F.floor(F.col(field) / F.lit(iv)) * F.lit(iv)).alias("key"))
+                    .agg(F.count("*").alias("doc_count")).orderBy("key").collect())
+            out[name] = {"buckets": [{"key": r["key"], "doc_count": r["doc_count"]} for r in rows]}
+    return out
+
+
+def _spark_sort(reader, ids, key, order, offset, size):
+    """The stored-field sort page as the Spark plan computed it, as (id,
+    sort value) pairs: one orderBy on (key, _rid asc) + limit."""
+    from pyspark.sql import functions as F
+
+    col = F.col(key).asc() if order == "asc" else F.col(key).desc()
+    rows = (_matched_docs_df(reader, ids).select("_rid", key)
+            .orderBy(col, F.col("_rid").asc()).limit(offset + size).collect())
+    return [(r["_rid"], r[key]) for r in rows[offset:]]
+
+
+FETCH_AGGS = {
+    "langs": {"terms": {"field": "lang", "size": 10}},
+    "lens": {"terms": {"field": "doc_len", "size": 6}},
+    "dl": {"stats": {"field": "doc_len"}},
+    "min_dl": {"min": {"field": "doc_len"}},
+    "max_dl": {"max": {"field": "doc_len"}},
+    "min_lang": {"min": {"field": "lang"}},
+    "max_path": {"max": {"field": "path"}},
+    "sum_dl": {"sum": {"field": "doc_len"}},
+    "avg_dl": {"avg": {"field": "doc_len"}},
+    "n_lang": {"value_count": {"field": "lang"}},
+    "card_lang": {"cardinality": {"field": "lang"}},
+    "hist": {"histogram": {"field": "doc_len", "interval": 20}},
+}
+
+
+@pytest.fixture(scope="module")
+def fetch_indexes(spark, tmp_path_factory):
+    """Stored-_source indexes over 1,200 docs: a plain one, and a
+    generational one of two batches, then upserts of two docs beside a
+    tombstone, then a partial update that nulls ``lang`` of four docs.
+    Returns them with the corpus."""
+    cfg = IndexConfig(shuffle_partitions=4, store_source=True)
+    corpus = generate_corpus(1200)
+    tmp = tmp_path_factory.mktemp("fetch")
+    plain, gens = str(tmp / "plain"), str(tmp / "gens")
+    build_index(spark, spark.createDataFrame(corpus), plain, cfg)
+    add_generation(spark, spark.createDataFrame(corpus.iloc[:700]), gens, cfg)
+    add_generation(spark, spark.createDataFrame(corpus.iloc[700:]), gens, cfg)
+    upd = corpus.iloc[[4, 7]].copy()
+    upd["content"] = upd["content"] + " license apache"
+    upd["_change_type"] = "update"
+    dele = corpus.iloc[[11]].copy()
+    dele["_change_type"] = "delete"
+    add_generation(spark, spark.createDataFrame(pd.concat([upd, dele])), gens, cfg)
+    unset = corpus.iloc[[20, 21, 22, 700]][["repo", "path"]].copy()
+    for c in ("commit", "lang", "content"):
+        unset[c] = None
+    unset["_change_type"] = "update_partial"
+    unset["_unset"] = [["lang"]] * 4
+    add_generation(spark, spark.createDataFrame(unset), gens, cfg)
+    return plain, gens, corpus
+
+
+def test_driver_fetch_equals_spark_reference(spark, fetch_indexes):
+    """``IndexReader.stored_fields``, the request aggs and the stored-field
+    sort equal the Spark plans they replaced (``_matched_docs_df``, one
+    Spark aggregation per agg, one orderBy + limit per sort), value for
+    value and type for type, and start no Spark job. Readers: plain,
+    generational (a superseded version and a tombstoned doc are never
+    read) and a generational shard spanning two generations. Id sets:
+    every live id (over 1,000: the reference's broadcast-join shape), a
+    few, superseded, deleted and absent ids, and none. The ``lang`` that a
+    partial update nulled is a ``terms`` bucket of its own (key None) and
+    sorts first ascending and last descending."""
+    from search_replica_spark.oracle import doc_id_of
+    from search_replica_spark.query.dsl import _run_aggs, execute_request
+
+    plain, gens, corpus = fetch_indexes
+    cols = ["doc_len", "path", "lang", "content"]
+    changed = [doc_id_of(corpus["repo"][i], corpus["path"][i]) for i in (4, 11, 20)]
+    readers = [("plain", IndexReader(spark, plain)), ("multigen", MultiGenReader(spark, gens)),
+               ("multigen shard", MultiGenReader(spark, gens, shard_range=(600, 1100)))]
+    for label, r in readers:
+        live = r._live_docs().drop_dead(r.doc_arrays()[1])
+        id_sets = {"all": live, "few": live[::250], "changed": np.array([*changed, 10**17]),
+                   "none": np.empty(0, np.int64)}
+        if label != "multigen shard":
+            assert live.size > 1000
+        for name, ids in id_sets.items():
+            got, jobs = _spark_jobs(spark, lambda: r.stored_fields(ids, cols))
+            assert jobs == [], (label, name)
+            want = _matched_docs_df(r, ids.tolist()).select("_rid", *cols).collect()
+            assert got.column_names == ["_rid", *cols]
+            assert sorted(map(tuple, (row.values() for row in got.to_pylist()))) == sorted(
+                map(tuple, want)), (label, name)
+            aggs, jobs = _spark_jobs(spark, lambda: _run_aggs(r, FETCH_AGGS, ids))
+            assert jobs == [], (label, name)
+            assert json.dumps(aggs, sort_keys=True) == json.dumps(
+                _spark_aggs(r, FETCH_AGGS, ids.tolist()), sort_keys=True), (label, name)
+            if label == "multigen" and name == "all":
+                assert None in [b["key"] for b in aggs["langs"]["buckets"]]
+            if label == "multigen" and name == "changed":
+                by_id = {row["_rid"]: row for row in got.to_pylist()}
+                assert len(by_id) == 2 and changed[1] not in by_id  # tombstoned
+                assert by_id[changed[0]]["content"].endswith(" license apache")  # newest
+                assert by_id[changed[2]]["lang"] is None
+        for key in ("doc_len", "path", "lang"):
+            for order in ("asc", "desc"):
+                for offset, size in ((0, 1200), (15, 10)):
+                    body = {"sort": [{key: {"order": order}}], "from": offset, "size": size}
+                    resp, jobs = _spark_jobs(spark, lambda: execute_request(r, body))
+                    assert jobs == [], (label, body)
+                    page = [(h["_id"], h["sort"][0]) for h in resp["hits"]["hits"]]
+                    want = _spark_sort(r, live.tolist(), key, order, offset, size)
+                    assert json.dumps(page) == json.dumps(want), (label, body)
+                    if label == "multigen" and key == "lang" and size == 1200:
+                        nulls = [v is None for _d, v in page]
+                        assert sum(nulls) == 4
+                        assert nulls == sorted(nulls, reverse=order == "asc")

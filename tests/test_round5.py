@@ -911,7 +911,7 @@ def test_terms_lookup_matches_and_caps(spark, tmp_path):
     row = c.iloc[0]
     lid = doc_id_of(row.repo, row.path)
 
-    full = terms_lookup(rd, spark, out, lid)
+    full = terms_lookup(rd, lid)
     # the lookup doc shares its own tokens, so it must match itself
     assert lid in full
     # python oracle: docs sharing ANY analyzed token with the lookup doc
@@ -923,7 +923,7 @@ def test_terms_lookup_matches_and_caps(spark, tmp_path):
     )
     assert full == want
 
-    capped = terms_lookup(rd, spark, out, lid, max_terms=3)
+    capped = terms_lookup(rd, lid, max_terms=3)
     assert set(capped) <= set(full)
     # cap keeps the 3 RAREST terms (df asc, term asc) — oracle the selection
     df = {}
@@ -939,7 +939,7 @@ def test_terms_lookup_matches_and_caps(spark, tmp_path):
     assert capped == want_capped
 
     # missing lookup doc -> empty, like ES document_missing
-    assert terms_lookup(rd, spark, out, 999999999, max_terms=3) == []
+    assert terms_lookup(rd, 999999999, max_terms=3) == []
 
 
 def test_alias_zero_downtime_swap(spark, tmp_path, capsys):
