@@ -18,7 +18,9 @@ parent's own spread is wider than the bound the result reads
 ``unresolved`` unless every change run beat every parent run.
 
 Each run's last stdout line (the benchmark's JSON) is appended to
-``--out`` with its side and seed. Runs are sequential: one benchmark at a
+``--out`` with its side and seed, and with the unbounded figures the run
+printed before it (``ingest_batch_s``, ``visible_s``, ...) under
+``printed``. Runs are sequential: one benchmark at a
 time, so the two sides never share the machine.
 """
 
@@ -48,14 +50,28 @@ def run_one(root: str, workload: str, seed: int, seconds: int, trace: int) -> di
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
     p = subprocess.run(cmd, cwd=root, capture_output=True, text=True)
-    last = p.stdout.strip().splitlines()[-1] if p.stdout.strip() else ""
+    lines = p.stdout.strip().splitlines()
     try:
-        out = json.loads(last)
+        out = json.loads(lines[-1] if lines else "")
     except json.JSONDecodeError:
         out = {"correct": False, "failed": -1, "metrics": {},
                "error": (p.stderr or p.stdout)[-2000:]}
     out["exit"] = p.returncode
+    # the "name value unit" lines printed before the JSON: the bounded
+    # metrics plus unbounded detail figures (ingest_batch_s, visible_s, ...)
+    out["printed"] = {
+        f[0]: float(f[1]) for f in (ln.split() for ln in lines[:-1])
+        if len(f) == 3 and f[0] not in out["metrics"] and _is_number(f[1])
+    }
     return out
+
+
+def _is_number(s: str) -> bool:
+    try:
+        float(s)
+    except ValueError:
+        return False
+    return True
 
 
 def verdict(spec: dict, par: list[float], chg: list[float], wins: int) -> str:

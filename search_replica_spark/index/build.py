@@ -13,7 +13,7 @@ Pipeline (manifest-checkpointed stages):
       → tokenize + count per (doc, term)
       → write _tokens/                (stage checkpoint intermediate)
       → groupBy doc_id                (doc lengths; dense doc_idx two-pass)
-      → write docs/
+      → write docs/                   (zstd, parquet v2 pages, like postings/)
   stage "segments":
     read _tokens/ + docs/ back
       → term_id = rank in term order  (the same dense two-pass assignment)
@@ -24,6 +24,13 @@ Pipeline (manifest-checkpointed stages):
         first row (``start``), written with the df into dict/, and lineage/
   stage "finalize":
     stats.json (with ``"format": 2``), drop the intermediate.
+
+Every table Spark writes into the index goes out under one parquet policy,
+``INDEX_WRITE_OPTIONS``. The codecs are not part of the format: footers
+describe their own, so a docs/ written snappy with v1 pages reads as it
+is. Before a stage is marked done in the manifest, and before stats.json
+is written, the stage's part files and directories are fsynced
+(``fsync_tables``), so a commit never names files a power loss can tear.
 
 A term's postings are rows ``[start, start + df)`` of the concatenation of
 the postings part files in name order; a reader slices them as they are,
@@ -60,6 +67,7 @@ from search_replica_spark.config import IndexConfig
 from search_replica_spark.index.manifest import (
     INDEX_FORMAT,
     Manifest,
+    fsync_tables,
     input_fingerprint,
     part_files,
     write_durable,
@@ -175,6 +183,23 @@ def tokenize_counts(docs: DataFrame) -> DataFrame:
     )
 
 
+# the tables a build's stats.json commits
+INDEX_TABLES = ("docs", "postings", "dict", "lineage")
+
+INDEX_WRITE_OPTIONS = {
+    # every table Spark writes into an index (docs/, postings/): parquet v2
+    # pages, so sorted ints go out DELTA_BINARY_PACKED and unique strings
+    # (content_sha256, path) DELTA_BYTE_ARRAY once the dictionary falls
+    # back; term_id and doc_idx, sorted, skip the dictionary outright.
+    # With zstd, postings/ is less than half and docs/ about 55% of the
+    # bytes of Spark's default (snappy, v1 pages)
+    "compression": "zstd",
+    "parquet.writer.version": "v2",
+    "parquet.enable.dictionary#term_id": "false",
+    "parquet.enable.dictionary#doc_idx": "false",
+}
+
+
 def assign_dense_doc_idx(
     doc_stats: DataFrame,
     partitions: int,
@@ -239,7 +264,7 @@ def assign_dense_doc_idx(
     schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in doc_stats.schema.fields)
     out = ds.mapInPandas(fn, schema=f"{schema}, {idx_col} long").select(*cols, idx_col)
     if write_to is not None:
-        out.write.mode("overwrite").parquet(write_to)
+        out.write.mode("overwrite").options(**INDEX_WRITE_OPTIONS).parquet(write_to)
         ds.unpersist()
         return None
     return out
@@ -350,17 +375,6 @@ def _stage_docmap(spark: SparkSession, corpus: DataFrame, out: str, cfg: IndexCo
     return dm
 
 
-POSTINGS_WRITE_OPTIONS = {
-    # parquet v2 pages: term_id and doc_idx, sorted, go out as
-    # DELTA_BINARY_PACKED (dictionary pages would hide that) — with zstd
-    # this is less than half the bytes of the default encoding
-    "compression": "zstd",
-    "parquet.writer.version": "v2",
-    "parquet.enable.dictionary#term_id": "false",
-    "parquet.enable.dictionary#doc_idx": "false",
-}
-
-
 def _stage_segments(
     spark: SparkSession, out: str, cfg: IndexConfig, dm: dict | None = None
 ) -> dict:
@@ -420,7 +434,7 @@ def _stage_segments(
             narrow.repartitionByRange(width, "term_id", "doc_idx")
             .sortWithinPartitions("term_id", "doc_idx")
             .write.mode("overwrite")
-            .options(**POSTINGS_WRITE_OPTIONS)
+            .options(**INDEX_WRITE_OPTIONS)
             .parquet(os.path.join(out, "postings"))
         )
     finally:
@@ -539,6 +553,9 @@ def _stage_finalize(spark: SparkSession, out: str, cfg: IndexConfig, core: dict,
         "field_stats": field_stats,
         "build_sec": round(time.time() - t0, 3),
     }
+    # merge_generations/compact reach here without build_index's stage
+    # commits; for a build this re-syncs files already on disk
+    fsync_tables(out, INDEX_TABLES)
     write_durable(os.path.join(out, "stats.json"), json.dumps(stats, indent=2))
     # drop the stage intermediate (resume keeps it only until finalize)
     shutil.rmtree(os.path.join(out, "_tokens"), ignore_errors=True)
@@ -554,6 +571,7 @@ def build_index(
 
     Layout:
       out_dir/docs/      doc_idx, doc_id, repo, path, lang, content_sha256, doc_len
+                         (zstd, v2 pages: the sorted ints DELTA_BINARY_PACKED)
       out_dir/postings/  term_id int32, doc_idx int32, tf int32
                          [, positions list<int32>], sorted by (term_id, doc_idx)
       out_dir/dict/      term, term_id, df, start  (postings rows [start, start + df))
@@ -586,6 +604,7 @@ def build_index(
     if not m.stage_done("docmap"):
         m.start_stage("docmap")
         dm = _stage_docmap(spark, corpus, out_dir, cfg)
+        fsync_tables(out_dir, ("_tokens", "docs"))
         m.finish_stage("docmap", dm)
     else:
         dm = m.data["stages"]["docmap"].get("metrics") or None
@@ -593,6 +612,7 @@ def build_index(
     if not m.stage_done("segments"):
         m.start_stage("segments")
         core = _stage_segments(spark, out_dir, cfg, dm)
+        fsync_tables(out_dir, ("postings", "dict", "lineage"))
         m.finish_stage("segments", core)
     else:
         core = m.data["stages"]["segments"]["metrics"]

@@ -5,10 +5,11 @@ only after a successful flush (search/bulk.go:345-347), the replication
 loop persists it (replication.go:153-168), and a restart resumes from the
 last committed LSN (main.go:164-165). Our unit of commit is a completed
 build *stage* whose output parquet is fully written (Spark's atomic
-rename-on-commit), recorded with an input fingerprint so a resume against
-different input restarts from scratch. Within a stage, per-partition
-recovery is Spark task retry (spark.task.maxFailures) — idempotent because
-stage outputs are overwrite-mode parquet.
+rename-on-commit) and fsynced (``fsync_tables``), recorded with an input
+fingerprint so a resume against different input restarts from scratch.
+Within a stage, per-partition recovery is Spark task retry
+(spark.task.maxFailures) — idempotent because stage outputs are
+overwrite-mode parquet.
 
 Per-file lineage (postings, terms and bytes of each postings part file)
 is recorded in ``out_dir/lineage/`` as a parquet table.
@@ -114,6 +115,14 @@ def part_files(table_dir: str) -> list[str]:
     ]
 
 
+def _fsync_path(path: str) -> None:
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
 def write_durable(path: str, text: str) -> None:
     """Commit ``text`` as the new content of ``path``: write a temp file
     beside it, fsync it, rename it over ``path`` (atomic on POSIX, so a
@@ -132,11 +141,24 @@ def write_durable(path: str, text: str) -> None:
         if os.path.exists(tmp):
             os.unlink(tmp)
         raise
-    fd = os.open(os.path.dirname(os.path.abspath(path)), os.O_RDONLY)
-    try:
-        os.fsync(fd)
-    finally:
-        os.close(fd)
+    _fsync_path(os.path.dirname(os.path.abspath(path)))
+
+
+def fsync_tables(root: str, names) -> None:
+    """Make the data files a commit will name survive power loss: fsync
+    every file under each ``root/name`` table directory, then its
+    directories from the deepest up, then ``root`` and ``root``'s parent,
+    which hold the tables' and ``root``'s own directory entries. Call it
+    before a commit file (a stage's manifest entry, stats.json,
+    generations.json) names the tables; a missing table is skipped."""
+    for name in names:
+        top = os.path.join(root, name)
+        for d, _subdirs, files in os.walk(top, topdown=False):
+            for f in files:
+                _fsync_path(os.path.join(d, f))
+            _fsync_path(d)
+    _fsync_path(root)
+    _fsync_path(os.path.dirname(os.path.abspath(root)))
 
 
 class Manifest:

@@ -67,6 +67,7 @@ from search_replica_spark.index.manifest import (  # noqa: F401 (re-exported)
     GENS_FILE,
     _gen_stats,
     _load_gens,
+    fsync_tables,
     read_generations,
     read_stats,
     slot_bases,
@@ -258,6 +259,7 @@ def _adopt_plain_index(index_dir: str) -> list[dict]:
         dst = os.path.join(gen_dir, name)
         if not os.path.exists(dst):
             shutil.move(os.path.join(index_dir, name), dst)
+    fsync_tables(gen_dir, ())  # the moves' directory entries
     gens = [{
         "gen": 0, "dir": gen_dir, "n_docs": int(st["n_docs"]),
         "total_tokens": int(st["total_tokens"]), "epoch_id": None,

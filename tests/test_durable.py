@@ -2,7 +2,9 @@
 metrics.json, build's stats.json, the alias registry) goes through
 ``write_durable``, which fsyncs the temp file, renames it over the target
 and then fsyncs the directory, and leaves the old file intact when it
-fails before the rename."""
+fails before the rename. The data files a commit names (the part files
+and directories of docs/, postings/, dict/, lineage/) are fsynced before
+it."""
 
 import json
 import os
@@ -15,17 +17,24 @@ from search_replica_spark.index.manifest import Manifest, write_durable
 from search_replica_spark.streaming import incremental
 
 
-def _record(monkeypatch):
-    """Log os.fsync (of a file or of a directory) and os.replace calls."""
+def _record(monkeypatch, log=None):
+    """Log os.fsync (of a file or of a directory) and os.replace calls.
+    ``log``, when given, also gets ``("fsync", (st_dev, st_ino))`` and
+    ``("replace", target basename)`` entries in call order."""
     events = []
     real_fsync, real_replace = os.fsync, os.replace
 
     def fsync(fd):
-        events.append("fsync dir" if stat.S_ISDIR(os.fstat(fd).st_mode) else "fsync file")
+        st = os.fstat(fd)
+        events.append("fsync dir" if stat.S_ISDIR(st.st_mode) else "fsync file")
+        if log is not None:
+            log.append(("fsync", (st.st_dev, st.st_ino)))
         real_fsync(fd)
 
     def replace(src, dst):
         events.append("replace")
+        if log is not None:
+            log.append(("replace", os.path.basename(dst)))
         real_replace(src, dst)
 
     monkeypatch.setattr(os, "fsync", fsync)
@@ -80,6 +89,44 @@ def test_build_commits_stats_json_durably(spark, tmp_path, monkeypatch):
     assert written.count("stats.json") == 1
     with open(os.path.join(out, "stats.json")) as f:
         assert json.load(f)["n_docs"] == stats["n_docs"] == 40
+
+
+def _unsynced_before(log, commit_file, root):
+    """The files and directories of ``root``'s tables, ``root`` itself
+    and its parent that no fsync reached before the last replace of
+    ``commit_file``."""
+    at = max(i for i, e in enumerate(log) if e == ("replace", commit_file))
+    synced = {ident for kind, ident in log[:at] if kind == "fsync"}
+    paths = [root, os.path.dirname(root)]
+    for table in ("docs", "postings", "dict", "lineage"):
+        for d, _dirs, files in os.walk(os.path.join(root, table)):
+            paths += [d] + [os.path.join(d, f) for f in files]
+    assert sum(p.endswith(".parquet") for p in paths) >= 4
+    return [p for p in paths if (os.stat(p).st_dev, os.stat(p).st_ino) not in synced]
+
+
+def test_data_files_are_fsynced_before_the_commit_file(spark, tmp_path, monkeypatch):
+    """build_index fsyncs every part file (and .crc, _SUCCESS) and
+    directory of the tables before stats.json names them, and
+    add_generation before generations.json commits the generation."""
+    from search_replica_spark.config import IndexConfig
+    from search_replica_spark.corpus import generate_corpus
+    from search_replica_spark.index import build
+
+    log = []
+    _record(monkeypatch, log)
+    cfg = IndexConfig(shuffle_partitions=2)
+    corpus = generate_corpus(60)
+    out = str(tmp_path / "plain")
+    build.build_index(spark, spark.createDataFrame(corpus), out, cfg)
+    assert _unsynced_before(log, "stats.json", out) == []
+
+    idx = str(tmp_path / "gens")
+    for rows in (corpus.iloc[:40], corpus.iloc[40:]):
+        log.clear()
+        incremental.add_generation(spark, spark.createDataFrame(rows), idx, cfg)
+        gen_dir = incremental._load_gens(idx)[-1]["dir"]
+        assert _unsynced_before(log, "generations.json", gen_dir) == []
 
 
 def test_failure_before_the_replace_keeps_the_old_file(tmp_path, monkeypatch):

@@ -250,3 +250,133 @@ def test_second_writer_process_is_refused(spark, small_corpus, tmp_path):
     stats = add_generation(spark, batch, idx, IndexConfig(shuffle_partitions=2))
     assert stats["n_docs"] == 30 and len(MultiGenReader(spark, idx)) == 30
     assert [g["n_docs"] for g in incremental._load_gens(idx)] == [30]
+
+
+# --- the docs table's parquet policy -----------------------------------------
+
+def _docs_chunks(index_dir: str) -> list[tuple[str, str, str, tuple]]:
+    """(docs dir, column, codec, encodings) of every column chunk of every
+    docs/ table under ``index_dir`` (one per generation)."""
+    out = []
+    for d, _dirs, _files in sorted(os.walk(index_dir)):
+        if os.path.basename(d) != "docs":
+            continue
+        for f in part_files(d):
+            md = pq.ParquetFile(f).metadata
+            for rg in range(md.num_row_groups):
+                for i in range(md.num_columns):
+                    c = md.row_group(rg).column(i)
+                    out.append((d, c.path_in_schema, c.compression, c.encodings))
+    return out
+
+
+def _assert_docs_policy(index_dir: str, n_tables: int) -> None:
+    chunks = _docs_chunks(index_dir)
+    assert len({d for d, *_ in chunks}) == n_tables
+    assert {codec for _d, _c, codec, _e in chunks} == {"ZSTD"}
+    for _d, col, _codec, encodings in chunks:
+        if col in ("doc_id", "doc_idx"):
+            assert encodings == ("DELTA_BINARY_PACKED",), col
+
+
+def test_docs_are_written_zstd_with_delta_ints(spark, small_index, tmp_path):
+    """build_index, add_generation and merge_generations write docs/ zstd
+    with v2 pages: every column chunk is ZSTD, and the sorted doc_id and
+    doc_idx columns are DELTA_BINARY_PACKED."""
+    _assert_docs_policy(small_index[0], 1)
+    corpus = generate_corpus(120)
+    idx = str(tmp_path / "gens")
+    cfg = IndexConfig(shuffle_partitions=2)
+    add_generation(spark, spark.createDataFrame(corpus.iloc[:70]), idx, cfg)
+    add_generation(spark, spark.createDataFrame(corpus.iloc[70:]), idx, cfg)
+    _assert_docs_policy(idx, 2)
+    merge_generations(spark, idx, cfg)
+    _assert_docs_policy(idx, 1)
+    assert len(MultiGenReader(spark, idx)) == 120
+
+
+def _second_batch(corpus: pd.DataFrame) -> tuple[pd.DataFrame, pd.DataFrame, pd.DataFrame]:
+    """A batch that upserts docs 3..11 and tombstones docs 20..25 of
+    ``corpus``: (the batch, its upserted rows, its deleted rows)."""
+    upd = corpus.iloc[3:12].copy()
+    upd["content"] = upd["content"] + " license apache mixedmarker"
+    upd["_change_type"] = "update"
+    dele = corpus.iloc[20:26].copy()
+    dele["_change_type"] = "delete"
+    return pd.concat([upd, dele]), upd, dele
+
+
+def _rewrite_snappy_v1(docs_dir: str) -> None:
+    """Rewrite each docs/ part file in place as snappy with v1 pages and
+    dictionary encodings (same rows, same order), as Spark's defaults
+    wrote it; the stale Hadoop checksum files go with the old bytes."""
+    for f in part_files(docs_dir):
+        t = pq.read_table(f)
+        pq.write_table(t, f, compression="snappy", data_page_version="1.0")
+        crc = os.path.join(docs_dir, f".{os.path.basename(f)}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+
+
+def test_mixed_codec_generations_answer_as_one_policy(spark, tmp_path):
+    """A generational index whose generation 0 docs/ is snappy with v1
+    pages (an index written before docs/ took the postings' policy) and
+    whose zstd generation 1 upserts and tombstones some of its docs:
+    its dead slots equal the same history written with one policy, and
+    its /_search answers, pinned and not, equal that index's and the
+    versioned oracle's (superseded versions counted in N, avgdl and df;
+    only live versions returned)."""
+    from search_replica_spark.query.dsl import execute_request
+
+    corpus = generate_corpus(200)
+    batch1, upd, dele = _second_batch(corpus)
+    cfg = IndexConfig(shuffle_partitions=2)
+    mixed, same = str(tmp_path / "mixed"), str(tmp_path / "same")
+    for idx in (mixed, same):
+        add_generation(spark, spark.createDataFrame(corpus), idx, cfg)
+    gen0_docs = os.path.join(incremental._load_gens(mixed)[0]["dir"], "docs")
+    _rewrite_snappy_v1(gen0_docs)
+    assert {c for *_x, c, _e in _docs_chunks(gen0_docs)} == {"SNAPPY"}
+    assert not any("DELTA" in e for *_x, encs in _docs_chunks(gen0_docs) for e in encs)
+    for idx in (mixed, same):
+        add_generation(spark, spark.createDataFrame(batch1), idx, cfg)
+    assert {c for *_x, c, _e in _docs_chunks(mixed)} == {"SNAPPY", "ZSTD"}
+
+    ids0 = sorted(doc_id_of(r, p) for r, p in zip(corpus["repo"], corpus["path"]))
+    changed = {doc_id_of(r, p) for rows in (upd, dele) for r, p in zip(rows["repo"], rows["path"])}
+    want_dead = [i for i, d in enumerate(ids0) if d in changed]
+    r_mixed, r_same = MultiGenReader(spark, mixed), MultiGenReader(spark, same)
+    assert r_mixed._live_docs().dead.tolist() == r_same._live_docs().dead.tolist() == want_dead
+
+    # the versioned oracle: superseded versions keep a slot of their own
+    old = corpus[corpus.apply(lambda x: doc_id_of(x["repo"], x["path"]) in changed, axis=1)]
+    old = old.assign(path=old["path"] + "\x00superseded")
+    live = pd.concat([corpus.drop(old.index), upd.drop(columns="_change_type")])
+    oracle = OracleIndex.build(pd.concat([old, live]))
+    live_ids = {doc_id_of(r, p) for r, p in zip(live["repo"], live["path"])}
+
+    bodies = [
+        {"query": {"match": {"content": {"query": q, "operator": op}}}, "size": 20}
+        for q in ("license apache", "mixedmarker", "def return", "the license")
+        for op in ("or", "and")
+    ]
+    fetch = [
+        {"query": {"match": {"content": "license apache"}}, "size": 15,
+         "sort": [{"path": "asc"}]},
+        {"query": {"match_all": {}}, "size": 0,
+         "aggs": {"langs": {"terms": {"field": "lang"}}, "dl": {"stats": {"field": "doc_len"}}}},
+    ]
+    pinned = MultiGenReader(spark, mixed).pin_driver()
+    for body in bodies + fetch:
+        want = execute_request(r_same, body)
+        assert execute_request(r_mixed, body) == want, body
+        assert execute_request(pinned, body) == want, body
+    for body in bodies:
+        q = body["query"]["match"]["content"]
+        full = [(d, s) for d, s in oracle.score(q["query"], oracle.n_docs, q["operator"])
+                if d in live_ids]
+        hits = execute_request(r_mixed, body)["hits"]
+        assert hits["total"]["value"] == len(full), body
+        assert [int(h["_id"]) for h in hits["hits"]] == [d for d, _ in full[:20]], body
+        for h, (_d, s) in zip(hits["hits"], full):
+            assert h["_score"] == pytest.approx(s, rel=1e-9), body
