@@ -227,23 +227,6 @@ def main():
     assert st_inl["inline_parents_updated"] > 0
     shutil.rmtree(inl_dir, ignore_errors=True)
 
-    # --- 2d. doc-sharded serving (r5): forced 4-shard serve_topk (each
-    # query re-resolves shard readers from disk — the cold-cache shape) ---
-    from search_replica_spark.query.bm25 import serve_topk
-
-    with open(os.path.join(idx_dir, "stats.json")) as _f:
-        _n_docs = json.load(_f)["n_docs"]
-    lat_serve = []
-    for qtext, k in list(zip(qset["query_text"], qset["k"]))[:5]:
-        t = time.time()
-        serve_topk(spark, idx_dir, qtext, int(k), min_docs=0,
-                   target_docs=max(1, _n_docs // 4))
-        lat_serve.append(time.time() - t)
-    lat_serve.sort()
-    queries["bm25_p50_serve_sharded_forced"] = round(
-        lat_serve[len(lat_serve) // 2], 4
-    )
-
     # --- 3. operator queries at the sf dir ---
     reg = all_registered()
     for name in ("ft_bm25_sql_top10", "dedup_minhash_lsh", "ann_cosine_top10",

@@ -6,14 +6,13 @@ Builds two small indexes from the seeded synthetic corpus
 (``generate_corpus``) in a temporary directory: a plain index with
 positions, and a generational one of three generations (two batches, then
 one that updates two docs and tombstones a third). It then answers a fixed
-matrix over plain, shard and generational readers, pinned and not:
+matrix over plain and generational readers, pinned and not:
 ``execute_request`` bodies, term-at-a-time ``or``/``and``, ``bool_topk``,
 ``phrase_topk`` (exact and ``slop=1``) and the term-expanding queries
 (``prefix_match`` capped and uncapped, ``fuzzy_match``,
 ``wildcard_match``, ``regexp_match``, ``match_phrase_prefix`` and
-``completion_suggest``), plus the index-level
-``serve_topk`` (``or``/``and``) over three shards and the distributed
-plan's answers (``or``/``and``) on both indexes. The generational case
+``completion_suggest``), plus the distributed plan's answers
+(``or``/``and``) on both indexes. The generational case
 calls the plan by its ``bm25_topk_spark_multigen`` name, which every
 version of the engine has. A third pair of indexes, plain and
 generational, maps ``lang`` as a keyword field, for ``range_match`` and
@@ -311,7 +310,7 @@ def main() -> int:
     args = ap.parse_args()
     sys.path.insert(0, os.path.abspath(args.root))
 
-    from search_replica_spark.query.bm25 import IndexReader, bm25_topk_spark, serve_topk
+    from search_replica_spark.query.bm25 import IndexReader, bm25_topk_spark
     from search_replica_spark.session import get_spark
     from search_replica_spark.streaming.incremental import (
         MultiGenReader,
@@ -327,20 +326,13 @@ def main() -> int:
             fplain, fmg = build(spark, args.docs, tmp, "-fielded",
                                 field_analyzers=(("content", "text"), ("lang", "keyword")))
             splain, smg, updated, deleted = build_source(spark, args.docs, tmp)
-            n = IndexReader(spark, plain).n_docs
-            shard = (n // 3, 2 * n // 3)
             readers = {
                 "plain": (lambda: IndexReader(spark, plain), reader_cases),
-                "shard": (lambda: IndexReader(spark, plain, shard_range=shard), reader_cases),
                 "multigen": (lambda: MultiGenReader(spark, mg), reader_cases),
-                "multigen-shard": (lambda: MultiGenReader(spark, mg, shard_range=shard),
-                                   reader_cases),
             }
             fielded = functools.partial(expansion_cases, expansions=FIELDED_EXPANSIONS)
             readers.update({
                 "fielded plain": (lambda: IndexReader(spark, fplain), fielded),
-                "fielded shard": (lambda: IndexReader(spark, fplain, shard_range=shard),
-                                  fielded),
                 "fielded multigen": (lambda: MultiGenReader(spark, fmg), fielded),
             })
             fetch = functools.partial(fetch_cases, lookup_id=updated, deleted_id=deleted)
@@ -357,13 +349,6 @@ def main() -> int:
                     tag = "pinned" if pinned else "unpinned"
                     for case, fn in cases_of(r):
                         lines.append((group, f"{tag} {case} | {answer(fn)}"))
-            for q in QUERIES:
-                for name, idx in (("plain", plain), ("multigen", mg)):
-                    lines.append(("sharded", f"serve_topk {name} {q!r} | " + answer(
-                        lambda: serve_topk(spark, idx, q, 10, min_docs=0, target_docs=n // 3))))
-                    lines.append(("sharded", f"serve_topk and {name} {q!r} | " + answer(
-                        lambda: serve_topk(spark, idx, q, 10, mode="and", min_docs=0,
-                                           target_docs=n // 3))))
             plans = (("plain", plain, bm25_topk_spark), ("multigen", mg, bm25_topk_spark_multigen))
             for q in QUERIES:
                 for name, idx, plan in plans:

@@ -1,12 +1,10 @@
-"""Times bench.py's 2c (inline apply) and 2d (forced sharded serve)
-sections in isolation, against an existing bench-style index build.
+"""Times bench.py's 2c section (inline apply) in isolation.
 
 Usage: python scripts/profile_inline_serve.py [cpus]
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import sys
@@ -21,9 +19,8 @@ def main():
     from pyspark.sql import functions as F
 
     from search_replica_spark.config import IndexConfig
-    from search_replica_spark.corpus import corpus_parquet, reference_queries
+    from search_replica_spark.corpus import corpus_parquet
     from search_replica_spark.index.build import build_index
-    from search_replica_spark.query.bm25 import serve_topk
     from search_replica_spark.session import get_spark
     from search_replica_spark.streaming.incremental import add_generation, apply_inline_updates
 
@@ -63,24 +60,6 @@ def main():
     assert st["inline_parents_updated"] > 0
     shutil.rmtree(inl_dir, ignore_errors=True)
     print("inline_apply_batch:", t_inline)
-
-    # --- 2d: forced 4-shard serve over a bench-style index ---
-    idx_dir = "/dev/shm/pi_idx"
-    if not os.path.exists(os.path.join(idx_dir, "stats.json")):
-        shutil.rmtree(idx_dir, ignore_errors=True)
-        build_index(spark, corpus, idx_dir,
-                    IndexConfig(shuffle_partitions=CPUS))
-    with open(os.path.join(idx_dir, "stats.json")) as f:
-        n_docs = json.load(f)["n_docs"]
-    qset = reference_queries()
-    lat = []
-    for qtext, k in list(zip(qset["query_text"], qset["k"]))[:5]:
-        t = time.time()
-        serve_topk(spark, idx_dir, qtext, int(k), min_docs=0,
-                   target_docs=max(1, n_docs // 4))
-        lat.append(round(time.time() - t, 3))
-    lat.sort()
-    print("serve_sharded lats:", lat, "p50:", lat[len(lat) // 2])
 
 
 if __name__ == "__main__":

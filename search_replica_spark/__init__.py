@@ -11,9 +11,10 @@ Architecture is Spark-first, not a port:
   - corpus           deterministic synthetic source-code corpus (test input)
   - analysis         code-aware tokenizer (vectorized pandas, Arrow UDF)
   - index            posting-list build: tokenize → local postings →
-                     shuffle-merge by term hash → varint/block segments
+                     range-shuffle by term_id → format-2 parquet postings,
+                     one (term_id, doc_idx, tf) row per posting
   - query            BM25 scoring: one in-driver NumPy scorer (/_search,
-                     doc-sharded serving) + one distributed Spark plan
+                     the CLI's query) + one distributed Spark plan
   - operators        row→doc transform, dedup family, ANN, text stats
   - oracle           pure-Python reference engine (plays the role ES plays
                      for the reference's consistency test)

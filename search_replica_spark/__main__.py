@@ -330,6 +330,13 @@ def main(argv: list[str] | None = None) -> int:
         out = write_metrics(args.index_dir) if args.refresh else read_metrics(args.index_dir)
         print(json.dumps(out))
         return 0
+    if args.cmd == "query" and args.strategy == "tata" and not args.dsl:
+        # the in-driver scorer reads the index parquet — no Spark session
+        from search_replica_spark.query.bm25 import IndexReader
+
+        hits = IndexReader(None, args.index).score(args.q, args.k)
+        print(json.dumps([{"doc_id": d, "score": s} for d, s in hits]))
+        return 0
 
     spark = _spark(args)
 
@@ -387,11 +394,7 @@ def main(argv: list[str] | None = None) -> int:
         )
         print(json.dumps(stats))
     elif args.cmd == "query":
-        from search_replica_spark.query.bm25 import (
-            IndexReader,
-            bm25_topk_spark,
-            serve_topk,
-        )
+        from search_replica_spark.query.bm25 import IndexReader, bm25_topk_spark
 
         if args.dsl:
             # the ES switch-over path: run the user's /_search body as-is
@@ -424,14 +427,8 @@ def main(argv: list[str] | None = None) -> int:
             print(json.dumps(out))
             return 0
 
-        if args.strategy == "tata":
-            # default serving path: cost-switched doc-sharded scoring —
-            # above SHARD_MIN_DOCS no node holds O(corpus) doc arrays
-            hits = serve_topk(spark, args.index, args.q, args.k)
-        else:
-            rows = bm25_topk_spark(spark, args.index, args.q, args.k).collect()
-            hits = [(r["doc_id"], r["score"]) for r in rows]
-        print(json.dumps([{"doc_id": d, "score": s} for d, s in hits]))
+        rows = bm25_topk_spark(spark, args.index, args.q, args.k).collect()
+        print(json.dumps([{"doc_id": r["doc_id"], "score": r["score"]} for r in rows]))
     elif args.cmd == "compact":
         from search_replica_spark.sources.code_table import read_corpus
         from search_replica_spark.streaming.incremental import compact

@@ -13,8 +13,8 @@ computation, in two execution forms that return the same ranking:
   - ``TermAtATimeScorer`` / ``bool_topk`` — the in-driver NumPy scorer over
     fetched postings (slices of flat int32 columns, no decode), a
     ``bincount`` accumulate over the touched docs, the reader's liveDocs
-    and an array top-k. ``/_search``, the CDC path and doc-sharded serving
-    (``serve_topk``) all score here.
+    and an array top-k. ``/_search``, the CDC path and the CLI's default
+    ``query`` all score here.
   - ``bm25_topk_spark`` — the fully distributed plan, plain Spark SQL over
     the generations: ``term_id IN (...)`` pushed to each postings parquet
     (sorted by term_id, so only the query terms' row groups are read),
@@ -103,10 +103,9 @@ def dead_slots(doc_ids: np.ndarray, gens: np.ndarray,
 
 class LiveDocs:
     """Sparse Lucene-liveDocs: stores only the DEAD slots (sorted int64
-    array), so a query node serving a generational shard holds O(superseded
-    + tombstoned) driver state instead of an O(corpus) bitmap — at 10^9-10^12
-    docs a dense ``np.ones(n_docs)`` is GBs of memory that scales with the
-    corpus; this scales with churn. Supports exactly the mask operations
+    array), so a reader over a generational index holds O(superseded +
+    tombstoned) driver state instead of an O(corpus) bitmap: this scales
+    with churn, not with the corpus. Supports exactly the mask operations
     the scorers use: fancy-index with an int slot array (vectorized
     searchsorted membership), scalar index, ``sum()``
     (live count), and ``astype(bool)`` for the rare dense-mask consumer."""
@@ -183,8 +182,7 @@ class IndexReader:
     tombstoned versions count until a merge, as in Lucene); k1 and b are
     the index's own, from the generations' stats.json."""
 
-    def __init__(self, spark: SparkSession, index_dir: str,
-                 shard_range: tuple[int, int] | None = None):
+    def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.index_dir = index_dir
         self.gens = read_generations(index_dir)
@@ -198,63 +196,27 @@ class IndexReader:
         self.avg_dl = total_tokens / self.n_docs if self.n_docs else 0.0
         self.bases = slot_bases(self.gens)
         self._field_stats = _field_stats(stats)
-        # doc-sharded serving (ES shard semantics): this reader owns ONLY
-        # the slots in [lo, hi) — its doc arrays and postings are
-        # O(hi-lo), and fetch_postings returns SHARD-LOCAL indices
-        # (global - lo). Corpus-level stats (n_docs, avg_dl, idf) stay
-        # GLOBAL — the dfs phase of dfs_query_then_fetch — so per-doc
-        # scores are identical to unsharded scoring.
-        self.shard_range = shard_range
         self._doc_len: np.ndarray | None = None
         self._doc_ids: np.ndarray | None = None
         self._pinned: PostingStore | None = None
-        self._dict_df: dict[str, int] | None = None
         self._live_cache: LiveDocs | None = None
 
     # --- doc store (slot-ordered arrays, loaded once) ---
-    def _gens(self) -> list[tuple[str, int, int, tuple[int, int] | None]]:
-        """(directory, generation, slot base, doc_idx range) of each live
-        generation this reader holds slots of: slot = doc_idx + base, and
-        the range is None when the reader holds the whole generation. A
-        shard reader keeps each generation's doc_idx range inside
-        [lo, hi) and skips the generations entirely outside it."""
-        out = []
-        for g in self.live_gens:
-            base, rng = self.bases[g["gen"]], None
-            if self.shard_range is not None:
-                lo, hi = self.shard_range
-                rng = max(0, lo - base), min(int(g["n_docs"]), hi - base)
-                if rng[0] >= rng[1]:
-                    continue
-            out.append((g["dir"], g["gen"], base, rng))
-        return out
-
-    def _slot_offset(self, base: int) -> int:
-        """What turns a generation's doc_idx into this reader's slot."""
-        return base - (self.shard_range[0] if self.shard_range is not None else 0)
-
     def _doc_tables(self, cols: list[str], slots: np.ndarray | None = None):
-        """Each generation's docs rows as (table of ``doc_idx`` and the
-        ``cols`` it holds, the offset that turns its doc_idx into this
-        reader's slot), read from the docs parquet in the driver (no Spark
-        job): the rows of every slot this reader holds, or only those of
-        ``slots``. Only the row groups whose doc_idx statistics can hold
-        them are read, so a shard reader reads O(hi - lo) rows, never the
-        corpus."""
-        n_docs = {g["gen"]: int(g["n_docs"]) for g in self.live_gens}
-        for d, gen, base, rng in self._gens():
-            off = self._slot_offset(base)
-            if slots is None:
-                flt = () if rng is None else (("doc_idx", ">=", rng[0]), ("doc_idx", "<", rng[1]))
-            else:
-                lo, hi = rng or (0, n_docs[gen])
-                local = slots - off
-                flt = (("doc_idx", "in", local[(local >= lo) & (local < hi)]),)
-            yield read_table(os.path.join(d, "docs"), ["doc_idx", *cols], flt), off
+        """Each live generation's docs rows as (table of ``doc_idx`` and
+        the ``cols`` it holds, its slot base: slot = doc_idx + base), read
+        from the docs parquet in the driver (no Spark job): every row, or
+        only those of ``slots``, reading only the row groups whose doc_idx
+        statistics can hold them."""
+        for g in self.live_gens:
+            base, flt = self.bases[g["gen"]], ()
+            if slots is not None:
+                local = slots - base
+                flt = (("doc_idx", "in", local[(local >= 0) & (local < int(g["n_docs"]))]),)
+            yield read_table(os.path.join(g["dir"], "docs"), ["doc_idx", *cols], flt), base
 
     def _doc_columns(self, cols: list[str]) -> dict[str, np.ndarray]:
-        """``cols`` of the docs table for the slots this reader holds, in
-        slot order (``_doc_tables``)."""
+        """``cols`` of the docs table, in slot order (``_doc_tables``)."""
         slots, vals = [np.empty(0, np.int64)], {c: [np.empty(0, np.int64)] for c in cols}
         for t, off in self._doc_tables(cols):
             slots.append(t["doc_idx"].to_numpy() + off)
@@ -309,9 +271,7 @@ class IndexReader:
         NumPy with no Spark job (``dead_slots``). Only the live
         generations' ``doc_idx, doc_id`` columns are read, never the doc
         arrays, and nothing at all when one live generation has no later
-        tombstone. A shard reader's slot can be superseded by a doc that
-        another shard holds, so liveness reads every generation and then
-        keeps the dead slots inside [lo, hi), rebased."""
+        tombstone."""
         if self._live_cache is None:
             n = sum(int(g["n_docs"]) for g in self.live_gens)
             tombs = fold_tombstones(self.gens)
@@ -326,9 +286,6 @@ class IndexReader:
                     slots.append(t["doc_idx"].to_numpy() + self.bases[g["gen"]])
                 slots = np.concatenate(slots)
                 dead = slots[dead_slots(np.concatenate(ids), np.concatenate(gens), tombs)]
-            if self.shard_range is not None:
-                lo, hi = self.shard_range
-                n, dead = hi - lo, dead[(dead >= lo) & (dead < hi)] - lo
             self._live_cache = LiveDocs(n, dead)
         return self._live_cache
 
@@ -346,19 +303,16 @@ class IndexReader:
         return self._field_stats
 
     def field_dl_arrays(self, fields: list[str]) -> dict[str, np.ndarray]:
-        """Per-slot per-field doc lengths, slot for slot with doc_arrays():
-        a shard reader holds its own slots only."""
+        """Per-slot per-field doc lengths, slot for slot with doc_arrays()."""
         c = self._doc_columns([f"dl_{f}" for f in fields])
         return {f: c[f"dl_{f}"].astype(np.float64) for f in fields}
 
     def pin_driver(self, positions: bool = False):
-        """Serving mode: read the postings this reader holds into driver
-        memory as a ``PostingStore`` — per generation, doc slots and tfs as
+        """Serving mode: read the index's postings into driver memory as a ``PostingStore`` — per generation, doc slots and tfs as
         flat int32 arrays and a term → row range map — from the postings
         parquet in the driver with no Spark job (``store.read_postings``).
         A request is then a dict probe and a slice, never a Spark job or a
-        decode. This is how a query node serves a shard (ES holds its
-        segments in RAM/page cache). ``positions``: also pin the flat token
+        decode, as ES holds its segments in RAM/page cache. ``positions``: also pin the flat token
         positions (phrase serving). A ``positions=True`` call on a store
         pinned without them re-pins with them — otherwise every phrase
         request would re-read its terms' positions."""
@@ -366,18 +320,16 @@ class IndexReader:
         if self._pinned is None or (positions and not self._pinned.positions):
             self._pinned = None  # one pinned copy at a time
             self._pinned = self._read_store(positions)
-        if self.shard_range is not None:
-            self._dictionary_dfs()  # so a pinned shard request reads no dictionary
         return self
 
     def _read_store(self, positions: bool, terms: list[str] | None = None) -> PostingStore:
         """A ``PostingStore`` of this reader's generations read in the
-        driver (``store.read_postings``): every posting it holds, or only
-        the rows of ``terms``."""
+        driver (``store.read_postings``): every posting, or only the rows
+        of ``terms``."""
         positions = positions and self.positions_stored
         return PostingStore(
-            [read_postings(d, self._slot_offset(base), rng, positions, terms)
-             for d, _gen, base, rng in self._gens()],
+            [read_postings(g["dir"], self.bases[g["gen"]], positions, terms)
+             for g in self.live_gens],
             positions,
         )
 
@@ -419,26 +371,6 @@ class IndexReader:
             t = read_table(os.path.join(g["dir"], "dict"), ["term"], flt)
             terms.update(_strings(t["term"]).tolist())
         return sorted(terms)[:max_expansions]
-
-    def term_df(self, term: str, held: int) -> int:
-        """The document frequency to score ``term`` with, given ``held``,
-        the number of its postings this reader holds. An unsharded reader
-        holds every posting, so that is the df. A shard reader holds only
-        its slot range: it takes the dictionary df (the dfs phase of
-        dfs_query_then_fetch), so its scores equal the full reader's.
-        The scorers take a term's df from here."""
-        if self.shard_range is None:
-            return held
-        return self._dictionary_dfs().get(term, 0)
-
-    def term_idf(self, term: str, held: int) -> float:
-        return self.idf(self.term_df(term, held))
-
-    def _dictionary_dfs(self) -> dict[str, int]:
-        """term → dictionary df of the whole index, read once per reader."""
-        if self._dict_df is None:
-            self._dict_df = _global_dfs(self, None)
-        return self._dict_df
 
 
 # a docs(doc_idx, doc_len) side up to this size is broadcast into the
@@ -645,7 +577,7 @@ class TermAtATimeScorer:
             for term in terms:
                 if term in postings:
                     docs, tfs = postings[term]
-                    idf = r.term_idf(term, len(docs))
+                    idf = r.idf(len(docs))
                     parts.append((docs, _bm25(r, idf, tfs, doc_len[docs], r.avg_dl), True))
         slots, scores = _accumulate(parts, len(terms) if mode == "and" else 1, live)
         if k is None:
@@ -700,7 +632,7 @@ def phrase_topk(
         cand = cand[live[cand]]
     if cand.size == 0:
         return []
-    idf_sum = sum(r.term_idf(t, len(per_term[t][0])) for t in qterms)
+    idf_sum = sum(r.idf(len(per_term[t][0])) for t in qterms)
 
     # --- vectorized candidate scoring (no per-doc Python) ---
     # Each term's candidate positions are gathered into ONE flat array in
@@ -898,7 +830,7 @@ def span_first_topk(
     idxs = docs[mask]
     if idxs.size == 0:
         return []
-    idf = r.term_idf(t, len(docs))
+    idf = r.idf(len(docs))
     tf = tf_early[mask].astype(np.float64)
     dl = reader.doc_arrays()[0][idxs]
     scores = idf * tf / (tf + r.k1 * (1.0 - r.b + r.b * dl / r.avg_dl))
@@ -934,7 +866,7 @@ def span_not_topk(
         return []
     docs_i, counts_i, flat_i = per_term[ti]
     doc_len, doc_ids = r.doc_arrays()
-    idf = r.term_idf(ti, len(docs_i))
+    idf = r.idf(len(docs_i))
     if te not in per_term:
         surviving = counts_i.copy()  # nothing to exclude anywhere
         docs = docs_i
@@ -1187,7 +1119,7 @@ def bool_topk(
         for term in scoring:
             if term in postings:
                 docs, tfs = postings[term]
-                idf = r.term_idf(term, len(docs))
+                idf = r.idf(len(docs))
                 parts.append((docs, _bm25(r, idf, tfs, doc_len[docs], r.avg_dl), term in must))
     slots, scores = _accumulate(parts, len(must), live)
     for term in must_not:
@@ -1500,48 +1432,12 @@ def match_phrase_prefix(
     return out[:k] if k is not None else out
 
 
-# Doc-sharded serving cost switch: below SHARD_MIN_DOCS one unsharded
-# reader is faster (every shard adds a scan + merge), and its O(corpus)
-# doc arrays are small anyway; above it, serving defaults to shard-scoped
-# readers so NO node ever materializes O(corpus) doc_len/doc_ids state.
-# Each shard reader holds ≤ SHARD_TARGET_DOCS slots.
-SHARD_MIN_DOCS = 20_000_000
-SHARD_TARGET_DOCS = 10_000_000
-
-
-def make_serving_readers(
-    spark: SparkSession,
-    index_dir: str,
-    min_docs: int = SHARD_MIN_DOCS,
-    target_docs: int = SHARD_TARGET_DOCS,
-) -> list:
-    """The reader set a serving node (or test harness) should score with:
-    ONE reader below ``min_docs``, else ``ceil(n_docs / target_docs)``
-    shard-scoped readers over disjoint slot ranges, for a plain and a
-    generational index alike. Constructing a reader is metadata-only
-    (stats.json / generations.json) — doc arrays stay lazy, so the probe
-    used for the cost switch is free; a reader's doc arrays and pinned
-    store are later read from the index parquet in the driver, with no
-    Spark job."""
-    probe = IndexReader(spark, index_dir)
-    n = int(probe.n_docs)
-    if n < min_docs:
-        return [probe]
-    n_shards = -(-n // max(1, target_docs))
-    bounds = np.linspace(0, n, n_shards + 1).astype(np.int64)
-    return [IndexReader(spark, index_dir, shard_range=(int(bounds[i]), int(bounds[i + 1])))
-            for i in range(n_shards)]
-
-
-def _global_dfs(reader: IndexReader, terms: list[str] | None) -> dict[str, int]:
-    """dfs phase of dfs_query_then_fetch: GLOBAL document frequencies from
-    the term dictionaries of the reader's live generations (summed),
-    independent of any shard's local view — so every shard scores with
-    the same idf the unsharded scorer derives from its full posting
-    lengths. Read in the driver with no Spark job; a term lookup reads
-    only the row groups whose term statistics can hold one of ``terms``.
-    ``terms=None`` reads every term."""
-    flt = () if terms is None else (("term", "in", sorted(set(terms))),)
+def _global_dfs(reader: IndexReader, terms: list[str]) -> dict[str, int]:
+    """The dictionary dfs of ``terms`` found in the reader's live
+    generations, summed over them: each term's number of postings in the
+    reader. Read in the driver with no Spark job, only from the row
+    groups whose term statistics can hold one of ``terms``."""
+    flt = (("term", "in", sorted(set(terms))),)
     out: dict[str, int] = {}
     for g in reader.live_gens:
         t = read_table(os.path.join(g["dir"], "dict"), ["term", "df"], flt)
@@ -1552,61 +1448,6 @@ def _global_dfs(reader: IndexReader, terms: list[str] | None) -> dict[str, int]:
         else:
             out = dfs
     return out
-
-
-def serve_topk(
-    spark: SparkSession,
-    index_dir: str,
-    query: str,
-    k: int = 10,
-    mode: str = "or",
-    min_docs: int = SHARD_MIN_DOCS,
-    target_docs: int = SHARD_TARGET_DOCS,
-) -> list[tuple[int, float]]:
-    """DEFAULT serving entry point, cost-switched so that per-node memory
-    stays bounded: below ``min_docs`` it is exactly
-    ``TermAtATimeScorer(reader).score`` on one reader; above, each
-    shard-scoped reader loads only its own slot range (row-group-masked
-    postings reads, O(n/shards) doc arrays, shard-local liveDocs), scores it
-    with ``TermAtATimeScorer`` and returns a local top-k, and the
-    coordinator merges the lists by (score desc, doc_id asc) — ES's
-    dfs_query_then_fetch. Bit-equal to the unsharded scorer: idf comes from
-    the dictionary df (the dfs phase), every doc lives in exactly one
-    shard, and per-doc summation order is the same sorted-term order."""
-    readers = make_serving_readers(spark, index_dir, min_docs, target_docs)
-    if len(readers) == 1:
-        r = readers[0]
-        return TermAtATimeScorer(r).score(query, k, mode=mode, live=r._live)
-    terms = sorted(set(tokenize_text(query)))
-    if not terms:
-        return []
-    # the dfs phase, once per call: every shard reader scores with these
-    # dictionary dfs instead of reading the whole dictionary itself
-    dfs = _global_dfs(readers[0], terms)
-
-    def score_shard(r) -> list[tuple[int, float]]:
-        r._dict_df = dfs
-        local = TermAtATimeScorer(r).score(query, k, mode=mode, live=r._live)
-        # release this shard's arrays once scored: in production each shard
-        # is a different NODE; a single-process coordinator (tests, small
-        # deployments) must not accumulate every slice into the O(corpus)
-        # footprint the sharding exists to avoid (r5 review)
-        r._doc_len = r._doc_ids = r._live_cache = None
-        return local
-
-    # each shard reads its own row groups of the index parquet in the
-    # driver (no Spark job); pyarrow releases the GIL while it reads and
-    # decodes, so a few shards in flight overlap their reads. Results are
-    # collected in shard order, so the merge is deterministic and
-    # identical to the sequential loop.
-    merged: list[tuple[int, float]] = []
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(4, len(readers))) as pool:
-        for local in pool.map(score_shard, readers):
-            merged.extend(local)
-    merged.sort(key=lambda t: (-t[1], t[0]))
-    return merged[:k]
 
 
 def terms_match(
@@ -1802,9 +1643,8 @@ def completion_suggest(
     tie-break). Lucene serves this from an FST; the columnar analogue is
     the row-group-pruned range seek ``expand_prefix`` runs over the
     generations' term-sorted dict parquet; weights are the
-    generation-summed dictionary dfs
-    (``_global_dfs``, the same global-df convention the dfs phase of
-    sharded serving uses). Returns (term, weight) pairs."""
+    generation-summed dictionary dfs (``_global_dfs``). Returns (term,
+    weight) pairs."""
     terms = reader.expand_prefix(prefix.lower(), max_expansions=None)
     if not terms:
         return []
@@ -1890,7 +1730,7 @@ def explain_score(
     dl = float(doc_len[slot])
     out = []
     for term, (docs, tfs) in sorted(reader.fetch_postings(terms).items()):
-        df = reader.term_df(term, len(docs))
+        df = len(docs)
         pos = np.nonzero(docs == slot)[0]
         if pos.size == 0:
             continue  # term not in this doc
@@ -1974,10 +1814,7 @@ def fielded_norms_topk(
     stats.json carries field_stats (field_analyzers builds do, round 4+).
     Works over generational indexes too: ``field_stats`` merges the
     generations' stats, and ``field_dl_arrays`` reads the generations' dl
-    columns onto slots. On a shard
-    reader the dl columns hold the shard's slots and idf uses the
-    dictionary df (``term_df``), so scores equal the full reader's.
-    Accumulation mirrors TATA: sorted-term order, ``_accumulate``, same
+    columns onto slots. A term's df is its posting count. Accumulation mirrors TATA: sorted-term order, ``_accumulate``, same
     tie-exact top-k.
 
     ``boosts``: per-field score multipliers — ES ``fields: ["title^2",
@@ -2010,7 +1847,7 @@ def fielded_norms_topk(
         st = field_stats[fld]
         n_f, avg_f = int(st["n"]), float(st["avg_dl"])
         docs, tfs = postings[term]
-        df = reader.term_df(term, len(docs))
+        df = len(docs)
         idf = math.log(1.0 + (n_f - df + 0.5) / (df + 0.5))
         boost = float(boosts.get(fld, 1.0)) if boosts else 1.0
         parts.append((docs, _bm25(reader, boost * idf, tfs, fdl[fld][docs], avg_f), True))
@@ -2114,9 +1951,8 @@ def more_like_this_topk(
     bool/should TATA query, dropping ``exclude`` (the like-document
     itself, ES's default) from the hits.
 
-    df for selection comes from each candidate term's posting length
-    (``term_df``) — identical to the dictionary df (postings carry one
-    entry per doc; a shard reader takes the dictionary df) and,
+    df for selection comes from each candidate term's posting length —
+    identical to the dictionary df (postings carry one entry per doc) and,
     on generational indexes, to Lucene's stats-count-tombstones-until-
     merge semantics — so selection costs ONE pushed-down multi-term fetch,
     no dictionary scan."""
@@ -2130,7 +1966,7 @@ def more_like_this_topk(
         return []
     postings = r.fetch_postings(sorted(tf))
     scored = sorted(
-        ((tf[t] * r.term_idf(t, len(postings[t][0])), t) for t in tf if t in postings),
+        ((tf[t] * r.idf(len(postings[t][0])), t) for t in tf if t in postings),
         key=lambda x: (-x[0], x[1]),
     )
     terms = [t for _s, t in scored[:max_query_terms]]
@@ -2306,7 +2142,7 @@ def terms_set_topk(
     parts = []
     for term in sorted(postings):
         docs, tfs = postings[term]
-        idf = r.term_idf(term, len(docs))
+        idf = r.idf(len(docs))
         parts.append((docs, _bm25(r, idf, tfs, doc_len[docs], r.avg_dl), True))
     # postings are distinct per term, so a doc's count is its distinct matches
     slots, scores = _accumulate(parts, int(min_match), live)

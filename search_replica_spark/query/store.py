@@ -150,20 +150,19 @@ def term_runs(tid: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return firsts, np.append(firsts[1:], tid.size)
 
 
-def read_postings(index_dir: str, offset: int, rng: tuple[int, int] | None,
-                  positions: bool, terms: list[str] | None = None) -> Postings:
+def read_postings(index_dir: str, offset: int, positions: bool,
+                  terms: list[str] | None = None) -> Postings:
     """One generation's postings read in the driver (no Spark job), as
     slots ``doc_idx + offset``. With ``terms`` only the rows of those
-    terms are kept, and with ``rng`` only the rows whose doc_idx lies in
-    ``[lo, hi)``: each row group is masked as it is read (row groups whose
-    term_id or doc_idx statistics rule it out are skipped), so resident
-    memory is O(the kept rows) plus one row group; the term ranges are
-    then recomputed from the kept rows. With neither, doc_idx and tf go
-    row group by row group into preallocated int32 arrays, and each
-    term's range is ``[start, start + df)`` from the dictionary."""
+    terms are kept: each row group is masked as it is read (row groups
+    whose term_id statistics rule it out are skipped), so resident memory
+    is O(the kept rows) plus one row group; the term ranges are then
+    recomputed from the kept rows. Without, doc_idx and tf go row group
+    by row group into preallocated int32 arrays, and each term's range is
+    ``[start, start + df)`` from the dictionary."""
     files = [pq.ParquetFile(p) for p in part_files(os.path.join(index_dir, "postings"))]
     cols = ["doc_idx", "tf"] + (["positions"] if positions else [])
-    if rng is None and terms is None:
+    if terms is None:
         d = read_table(os.path.join(index_dir, "dict"), ["term", "df", "start"])
         total = sum(pf.metadata.num_rows for pf in files)
         docs, tfs, pos, at = np.empty(total, np.int32), np.empty(total, np.int32), [], 0
@@ -181,17 +180,11 @@ def read_postings(index_dir: str, offset: int, rng: tuple[int, int] | None,
         starts = d["start"].to_numpy()
         return Postings(_strings(d["term"]), starts, starts + d["df"].to_numpy(),
                         docs, tfs, _cat(pos) if positions else None)
-    flt = () if rng is None else (("doc_idx", ">=", rng[0]), ("doc_idx", "<", rng[1]))
-    if terms is None:
-        d = read_table(os.path.join(index_dir, "dict"), ["term", "term_id"]).sort_by("term_id")
-        terms_by_id = _strings(d["term"])  # term_id is the term's rank: 0..n-1
-    else:
-        d = read_table(os.path.join(index_dir, "dict"), ["term", "term_id"],
-                       (("term", "in", sorted(set(terms))),))
-        ids = d["term_id"].to_numpy().tolist()
-        terms_by_id = dict(zip(ids, _strings(d["term"])))
-        flt = (("term_id", "in", ids), *flt)
-    flt = _sorted_in(flt)
+    d = read_table(os.path.join(index_dir, "dict"), ["term", "term_id"],
+                   (("term", "in", sorted(set(terms))),))
+    ids = d["term_id"].to_numpy().tolist()
+    terms_by_id = dict(zip(ids, _strings(d["term"])))
+    flt = _sorted_in((("term_id", "in", ids),))
     kept: dict[str, list] = {c: [] for c in ["term_id", *cols]}
     for pf in files:
         for i in range(pf.num_row_groups):

@@ -5,6 +5,11 @@ it loads the input, runs the engine, then compares every result against the
 independent reference implementation.
 """
 
+import json
+import os
+import subprocess
+import sys
+
 import numpy as np
 import pytest
 
@@ -12,6 +17,7 @@ from search_replica_spark.corpus import reference_queries
 from search_replica_spark.query.bm25 import (
     IndexReader,
     TermAtATimeScorer,
+    _global_dfs,
     bm25_topk_spark,
 )
 
@@ -82,6 +88,28 @@ def test_rank_identity_spark_distributed(spark, small_index, small_oracle, queri
         assert_rank_identical(got, want)
 
 
+def test_cli_query_answers_without_a_jvm(spark, small_index, small_oracle, queries, tmp_path):
+    """The CLI's default ``query`` scores in the driver and starts no JVM:
+    run in a fresh interpreter with Java unusable (JAVA_HOME names a
+    missing directory), it prints TermAtATimeScorer's hits, which equal
+    the oracle's."""
+    idx_dir, _ = small_index
+    scorer = TermAtATimeScorer(IndexReader(spark, idx_dir))
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "JAVA_HOME": str(tmp_path / "no-java")}
+    cases = [*list(zip(queries["query_text"], queries["k"]))[:3], ("zzzzqqq", 10)]
+    for qtext, k in cases:
+        out = subprocess.run(
+            [sys.executable, "-m", "search_replica_spark", "query",
+             "--index", idx_dir, "--q", qtext, "-k", str(k)],
+            cwd=root, env=env, capture_output=True, text=True, timeout=300,
+        )
+        assert out.returncode == 0, out.stderr[-2000:]
+        got = [(h["doc_id"], h["score"]) for h in json.loads(out.stdout)]
+        assert got == scorer.score(qtext, int(k)), qtext
+        assert_rank_identical(got, small_oracle.score(qtext, int(k)))
+
+
 def test_empty_and_absent_queries(spark, small_index):
     idx_dir, _ = small_index
     reader = IndexReader(spark, idx_dir)
@@ -97,7 +125,7 @@ def test_salted_hot_terms_blocks_sorted(spark, small_index):
     idx_dir, _ = small_index
     reader = IndexReader(spark, idx_dir)
     postings = reader.fetch_postings(["license", "the"])
-    dfs = reader._dictionary_dfs()
+    dfs = _global_dfs(reader, ["license", "the"])
     assert sorted(postings) == ["license", "the"]
     for term, (docs, tfs) in postings.items():
         assert (np.diff(docs) > 0).all(), f"{term} postings not strictly sorted"

@@ -176,13 +176,6 @@ def test_numpy_liveness_equals_the_spark_window(spark, churned_index):
     n = sum(g["n_docs"] for g in full.live_gens)
     kept = sorted(r["slot"] for r in live_docs(spark, full.gens, ()).collect())
     assert kept == sorted(set(range(n)) - set(ref))
-    # shard readers: the first holds gen 0's slots [0, 40), five of them
-    # superseded by the upserts the second shard holds (gen 1: [40, 55))
-    ids = full.doc_arrays()[1]
-    assert sum(1 for s in ref if s < 40 and ids[s] in set(ids[40:55].tolist())) == 5
-    for lo, hi in ((0, 40), (40, 57), (57, n)):
-        shard = IndexReader(spark, idx, shard_range=(lo, hi))
-        assert _dead(shard) == [s - lo for s in ref if lo <= s < hi]
 
 
 def test_plain_index_is_one_generation_with_no_liveness(spark, small_index, monkeypatch):

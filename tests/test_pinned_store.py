@@ -3,8 +3,7 @@
 generation's postings at its slot base exactly as a pandas read of the
 parquet gives them, a positional re-pin serves phrase requests without
 Spark, fetched postings equal a per-term pandas reference and the
-``bincount`` accumulate is bit-identical to its ``np.add.at`` reference,
-and shard readers score with the global df, positional queries included.
+``bincount`` accumulate is bit-identical to its ``np.add.at`` reference.
 The fetch phase (stored fields, request aggs, stored-field sorts) read in
 the driver equals the Spark plans it replaced, kept here as references."""
 
@@ -20,15 +19,7 @@ import pytest
 from search_replica_spark.config import IndexConfig
 from search_replica_spark.corpus import generate_corpus
 from search_replica_spark.index.build import build_index
-from search_replica_spark.query.bm25 import (
-    IndexReader,
-    TermAtATimeScorer,
-    _accumulate,
-    _bm25,
-    bool_topk,
-    explain_score,
-    phrase_topk,
-)
+from search_replica_spark.query.bm25 import IndexReader, _accumulate, _bm25, phrase_topk
 from search_replica_spark.query.dsl import execute_request
 from search_replica_spark.streaming.incremental import MultiGenReader, add_generation
 
@@ -101,11 +92,6 @@ def _bodies(reference):
     return bodies
 
 
-def _assert_same_answers(reference, other, bodies):
-    for body in bodies:
-        assert _answer(other, body) == _answer(reference, body), body
-
-
 def _spark_jobs(spark, fn):
     """(fn's result, the ids of the Spark jobs it started)."""
     sc = spark.sparkContext
@@ -120,25 +106,19 @@ def _spark_jobs(spark, fn):
 
 def test_pinned_and_unpinned_serving_identical(spark, plain_index, multigen_index):
     """Every reader kind answers the same /_search bodies identically
-    pinned and unpinned: a plain reader, a doc-sharded reader, and a
-    generational reader over an update and a tombstone."""
+    pinned and unpinned, and a pinned request starts no Spark job: a plain
+    reader and a generational reader over an update and a tombstone."""
     plain = IndexReader(spark, plain_index)
     bodies = _bodies(plain)
-    _assert_same_answers(plain, IndexReader(spark, plain_index).pin_driver(), bodies)
-
-    n = plain.n_docs
-    shard = (n // 3, 2 * n // 3)
-    shard_plain = IndexReader(spark, plain_index, shard_range=shard)
-    shard_pinned = IndexReader(spark, plain_index, shard_range=shard).pin_driver()
-    _assert_same_answers(shard_plain, shard_pinned, bodies)
-    # the shard answers from its own docs only
-    part, _ = _answer(shard_pinned, _match("license apache", size=n))
-    assert part and {d for d, _s in part} <= set(shard_pinned.doc_arrays()[1].tolist())
-
     mg = MultiGenReader(spark, multigen_index)
     assert len(mg.gens) == 3 and mg.gens[2]["deleted_ids"]
     assert len(mg) < mg.n_docs  # superseded and tombstoned slots
-    _assert_same_answers(mg, MultiGenReader(spark, multigen_index).pin_driver(), bodies)
+    for ref, pinned in ((plain, IndexReader(spark, plain_index).pin_driver()),
+                        (mg, MultiGenReader(spark, multigen_index).pin_driver())):
+        pinned.doc_arrays()
+        for body in bodies:
+            got, jobs = _spark_jobs(spark, lambda: _answer(pinned, body))
+            assert jobs == [] and got == _answer(ref, body), body
 
 
 def _postings_pandas(reader, gen_dir, positions=False):
@@ -189,7 +169,7 @@ def test_positions_repin_serves_phrases_without_spark(spark, plain_index):
 def test_unpinned_requests_and_expansions_run_no_spark_job(
     spark, plain_index, multigen_index, fielded_indexes
 ):
-    """On plain, shard and generational readers, none of them pinned,
+    """On plain and generational readers, none of them pinned,
     match, bool and match_phrase requests, every term-expanding query
     (prefix capped and uncapped, fuzzy, wildcard, regexp,
     match_phrase_prefix, completion, and range and exists on a keyword
@@ -238,15 +218,12 @@ def test_unpinned_requests_and_expansions_run_no_spark_job(
         q("exists", field="lang"),
     ]
 
-    def readers(index):
-        n = IndexReader(spark, index).n_docs
-        yield "plain", lambda: IndexReader(spark, index)
-        yield "shard", lambda: IndexReader(spark, index, shard_range=(n // 3, 2 * n // 3))
-
     fielded, fielded_gens = fielded_indexes
-    cases = [(label, make, text_bodies) for label, make in readers(plain_index)]
-    cases.append(("multigen", lambda: MultiGenReader(spark, multigen_index), text_bodies))
-    cases += [(f"fielded {label}", make, keyword_bodies) for label, make in readers(fielded)]
+    cases = [
+        ("plain", lambda: IndexReader(spark, plain_index), text_bodies),
+        ("multigen", lambda: MultiGenReader(spark, multigen_index), text_bodies),
+        ("fielded plain", lambda: IndexReader(spark, fielded), keyword_bodies),
+    ]
     cases.append(("fielded multigen", lambda: MultiGenReader(spark, fielded_gens),
                   keyword_bodies))
     for label, make, bodies in cases:
@@ -272,12 +249,10 @@ TERM_SETS = [
 
 
 def _readers(spark, plain_index, multigen_index):
-    """(label, reader) for a plain, a shard and a generational reader,
-    each unpinned and pinned."""
-    n = IndexReader(spark, plain_index).n_docs
+    """(label, reader) for a plain and a generational reader, each
+    unpinned and pinned."""
     makers = {
         "plain": lambda: IndexReader(spark, plain_index),
-        "shard": lambda: IndexReader(spark, plain_index, shard_range=(n // 3, 2 * n // 3)),
         "multigen": lambda: MultiGenReader(spark, multigen_index),
     }
     for label, make in makers.items():
@@ -286,19 +261,17 @@ def _readers(spark, plain_index, multigen_index):
 
 
 def _fetch_postings_per_term(reader, terms):
-    """A per-term pandas reference for fetch_postings: each generation's
-    rows of the term read from parquet, kept to the reader's doc_idx range,
-    shifted to its slots, concatenated in generation order."""
+    """A per-term pandas reference for fetch_postings: each live
+    generation's rows of the term read from parquet, shifted to its slots,
+    concatenated in generation order."""
     out = {}
     for term in sorted(set(terms)):
         docs, tfs = [], []
-        for d, _gen, base, rng in reader._gens():
-            rows, dic = _postings_pandas(reader, d)
+        for gen in reader.live_gens:
+            rows, dic = _postings_pandas(reader, gen["dir"])
             ids = dic.loc[dic["term"] == term, "term_id"].tolist()
             g = rows[rows["term_id"].isin(ids)]
-            if rng is not None:
-                g = g[(g["doc_idx"] >= rng[0]) & (g["doc_idx"] < rng[1])]
-            docs.append(g["doc_idx"].to_numpy(np.int64) + reader._slot_offset(base))
+            docs.append(g["doc_idx"].to_numpy(np.int64) + reader.bases[gen["gen"]])
             tfs.append(g["tf"].to_numpy(np.int64))
         if sum(x.size for x in docs):
             out[term] = (np.concatenate(docs), np.concatenate(tfs))
@@ -375,135 +348,17 @@ def test_accumulate_single_part_not_ascending():
     _assert_accumulate_identical([(np.array([4]), np.array([-0.0]), True)], 1, None)
 
 
-# --- shard readers -----------------------------------------------------------
-
-
-def test_shard_reader_scores_with_global_df(spark, plain_index, multigen_index):
-    """A shard reader's matches are the full reader's matches restricted
-    to the shard, with the same scores: idf comes from the dictionary df,
-    not from the shard's own posting lengths."""
-    n = IndexReader(spark, plain_index).n_docs
-    shard = (n // 3, 2 * n // 3)
-    pairs = [
-        (IndexReader(spark, plain_index), IndexReader(spark, plain_index, shard_range=shard)),
-        (MultiGenReader(spark, multigen_index),
-         MultiGenReader(spark, multigen_index, shard_range=shard).pin_driver()),
-    ]
-    for full, part in pairs:
-        ids, live = part.doc_arrays()[1], getattr(part, "_live", None)
-        in_shard = ids if live is None else ids[live.astype(bool)]  # live slots only
-        for q in ("license", "license apache", "def return the"):
-            answers = [
-                (TermAtATimeScorer(r).score(q, None, live=getattr(r, "_live", None)),
-                 TermAtATimeScorer(r).score(q, None, mode="and", live=getattr(r, "_live", None)),
-                 bool_topk(r, must=q.split()[:1], should=q.split()[1:], k=None,
-                           live=getattr(r, "_live", None)))
-                for r in (full, part)
-            ]
-            for (fid, fsc), (pid, psc) in zip(*answers):
-                keep = np.isin(fid, in_shard)
-                assert keep.any() and not keep.all()
-                want = dict(zip(fid[keep].tolist(), fsc[keep].tolist()))
-                got = dict(zip(pid.tolist(), psc.tolist()))
-                assert got.keys() == want.keys(), q
-                for d, sc in got.items():
-                    assert sc == pytest.approx(want[d], rel=1e-9), (q, d)
-
-
-def test_explain_on_shard_reader_sums_to_its_score(spark, plain_index, multigen_index):
-    """explain_score on a shard reader reports the global df and idf, the
-    same breakdown as the full reader, and its contributions sum to the
-    score TermAtATimeScorer gives the hit."""
-    n = IndexReader(spark, plain_index).n_docs
-    shard = (n // 3, 2 * n // 3)
-    pairs = [
-        (IndexReader(spark, plain_index), IndexReader(spark, plain_index, shard_range=shard)),
-        (MultiGenReader(spark, multigen_index),
-         MultiGenReader(spark, multigen_index, shard_range=shard).pin_driver()),
-    ]
-    for full, part in pairs:
-        for q in ("license", "license apache", "def return the"):
-            (doc, score), = TermAtATimeScorer(part).score(q, 1, live=getattr(part, "_live", None))
-            got = explain_score(part, q)
-            assert got == explain_score(full, q, doc), q
-            assert {e["term"] for e in got} <= set(q.split())
-            assert sum(e["contribution"] for e in got) == pytest.approx(score, abs=1e-5), q
-
-
-def test_pinned_shard_reader_serves_match_without_spark(spark, plain_index, multigen_index):
-    """A pinned shard reader holds the dictionary dfs it scores with, so a
-    match request, with terms it has not seen before, starts no Spark job."""
-    n = IndexReader(spark, plain_index).n_docs
-    shard = (n // 3, 2 * n // 3)
-    sc = spark.sparkContext
-    for i, (r, full) in enumerate((
-        (IndexReader(spark, plain_index, shard_range=shard).pin_driver(),
-         IndexReader(spark, plain_index, shard_range=shard)),
-        (MultiGenReader(spark, multigen_index, shard_range=shard).pin_driver(),
-         MultiGenReader(spark, multigen_index, shard_range=shard)),
-    )):
-        r.doc_arrays()
-        getattr(r, "_live", None)
-        bodies = [_match("license apache"), _match("def return the", "and"), _match("license")]
-        gid = f"pinned-shard-{i}"
-        sc.setJobGroup(gid, gid)
-        try:
-            resps = [execute_request(r, body) for body in bodies]
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        assert list(sc.statusTracker().getJobIdsForGroup(gid)) == []
-        assert resps[0]["hits"]["total"]["value"] > 0
-        assert resps == [execute_request(full, body) for body in bodies]
-
-
-def test_shard_reader_serves_positional_queries(spark, plain_index, multigen_index):
-    """phrase_topk and a match_phrase body on a shard reader, plain and
-    generational, return the full reader's hits restricted to the shard's
-    live slots, with the same scores: positional postings are masked to
-    the shard and rebased like the others, and keep only their own
-    positions."""
-    n = IndexReader(spark, plain_index).n_docs
-    shard = (n // 3, 2 * n // 3)
-    pairs = [
-        (IndexReader(spark, plain_index), IndexReader(spark, plain_index, shard_range=shard)),
-        (IndexReader(spark, plain_index).pin_driver(positions=True),
-         IndexReader(spark, plain_index, shard_range=shard).pin_driver(positions=True)),
-        (MultiGenReader(spark, multigen_index),
-         MultiGenReader(spark, multigen_index, shard_range=shard).pin_driver(positions=True)),
-    ]
-    for full, part in pairs:
-        ids, live = part.doc_arrays()[1], getattr(part, "_live", None)
-        in_shard = ids if live is None else ids[live.astype(bool)]  # live slots only
-        for phrase, slop in (("apache license", 0), ("distributed an", 1), ("license you", 0)):
-            answers = [
-                (phrase_topk(r, phrase, n, slop=slop),
-                 _answer(r, {"query": {"match_phrase": {"content": {"query": phrase, "slop": slop}}},
-                             "size": n})[0])
-                for r in (full, part)
-            ]
-            for f_hits, p_hits in zip(*answers):
-                want = {d: sc for d, sc in f_hits if d in set(in_shard.tolist())}
-                assert want and len(want) < len(f_hits), (phrase, slop)
-                got = dict(p_hits)
-                assert got.keys() == want.keys(), (phrase, slop)
-                for d, sc in got.items():
-                    assert sc == pytest.approx(want[d], rel=1e-9), (phrase, d)
-
-
 # --- reader set-up read in the driver -------------------------------------
 
 
 def _doc_arrays_spark(spark, r):
     """The Spark collect doc_arrays() replaced, kept as the reference: each
-    generation's docs in the reader's slot range, toPandas, slot order."""
-    gens = getattr(r, "live_gens", None) or [{"gen": 0, "dir": r.index_dir}]
-    bases = getattr(r, "bases", {0: 0})
-    lo, hi = r.shard_range or (0, 1 << 62)
+    live generation's docs, toPandas, slot order."""
     parts = []
-    for g in gens:
+    for g in r.live_gens:
         pdf = spark.read.parquet(f"{g['dir']}/docs").select("doc_idx", "doc_id", "doc_len").toPandas()
-        pdf["slot"] = pdf["doc_idx"] + bases[g["gen"]]
-        parts.append(pdf[(pdf["slot"] >= lo) & (pdf["slot"] < hi)])
+        pdf["slot"] = pdf["doc_idx"] + r.bases[g["gen"]]
+        parts.append(pdf)
     pdf = pd.concat(parts).sort_values("slot")
     return pdf["doc_len"].to_numpy(np.float64), pdf["doc_id"].to_numpy(np.int64)
 
@@ -512,9 +367,8 @@ def _scan_store(spark, r, positions, terms=None):
     """The Spark-built store the driver reads replaced, kept as the
     reference: one Spark scan over the reader's generations of the
     postings rows of ``terms`` (every row when None) — ``term_id IN
-    (...)`` with the ids from each generation's dictionary and, on a shard
-    reader, doc_idx in the generation's range — collected with
-    ``toArrow()`` and cut into one part per generation."""
+    (...)`` with the ids from each generation's dictionary — collected
+    with ``toArrow()`` and cut into one part per generation."""
     from functools import reduce
 
     import pyarrow.compute as pc
@@ -525,18 +379,17 @@ def _scan_store(spark, r, positions, terms=None):
 
     positions = positions and r.positions_stored
     scans, gens = [], []
-    for d, _gen, base, rng in r._gens():
+    for g in r.live_gens:
+        d = g["dir"]
         flt = () if terms is None else (("term", "in", sorted(set(terms))),)
         dic = read_table(os.path.join(d, "dict"), ["term", "term_id"], flt)
         ids = dic["term_id"].to_pylist()
         q = spark.read.parquet(os.path.join(d, "postings"))
         if terms is not None:
             q = q.filter(F.col("term_id").isin(ids) if ids else F.lit(False))
-        if rng is not None:
-            q = q.filter((F.col("doc_idx") >= rng[0]) & (F.col("doc_idx") < rng[1]))
         cols = ["term_id", "doc_idx", "tf"] + (["positions"] if positions else [])
         scans.append(q.select(*cols, F.lit(len(gens)).alias("g")))
-        gens.append((dict(zip(ids, dic["term"].to_pylist())), r._slot_offset(base)))
+        gens.append((dict(zip(ids, dic["term"].to_pylist())), r.bases[g["gen"]]))
     if not scans:
         return PostingStore([], positions)
     t = reduce(DataFrame.unionByName, scans).toArrow().sort_by(
@@ -563,23 +416,6 @@ def _assert_same_store(got, want):
             assert (a is None) == (b is None), name
             if a is not None:
                 assert a.dtype == b.dtype and a.tobytes() == b.tobytes(), name
-
-
-def _set_up_readers(spark, plain_index, multigen_index):
-    """(label, reader factory) for plain, shard, generational and
-    generational shard readers; the generational shards split the slot
-    space so that one holds a single generation and one spans two."""
-    n = IndexReader(spark, plain_index).n_docs
-    slots = sum(g["n_docs"] for g in MultiGenReader(spark, multigen_index).live_gens)
-    makers = [
-        ("plain", lambda: IndexReader(spark, plain_index)),
-        ("shard", lambda: IndexReader(spark, plain_index, shard_range=(n // 3, 2 * n // 3))),
-        ("multigen", lambda: MultiGenReader(spark, multigen_index)),
-    ]
-    for lo, hi in ((0, 100), (100, 200), (200, slots)):
-        makers.append((f"multigen shard {lo}-{hi}",
-                       lambda lo=lo, hi=hi: MultiGenReader(spark, multigen_index, shard_range=(lo, hi))))
-    return makers
 
 
 def _term_absent_from_a_generation(reader):
@@ -616,14 +452,13 @@ def test_driver_read_set_up_equals_spark_reference(spark, plain_index, multigen_
     absent from the index, included."""
     partial = _term_absent_from_a_generation(MultiGenReader(spark, multigen_index))
     term_sets = (["apache", "license"], [partial, "def", "zzqqabsentqq"], ["zzqqabsentqq"])
-    for label, make in _set_up_readers(spark, plain_index, multigen_index):
+    for label, make in (("plain", lambda: IndexReader(spark, plain_index)),
+                        ("multigen", lambda: MultiGenReader(spark, multigen_index))):
         r = make()
         dl, ids = r.doc_arrays()
         want_dl, want_ids = _doc_arrays_spark(spark, r)
         assert dl.dtype == want_dl.dtype and dl.tobytes() == want_dl.tobytes(), label
         assert ids.dtype == want_ids.dtype and ids.tobytes() == want_ids.tobytes(), label
-        if r.shard_range is not None:
-            assert ids.size == r.shard_range[1] - r.shard_range[0], label
         for positions in (False, True):
             got = make().pin_driver(positions=positions)._pinned
             want = _scan_store(spark, r, positions)
@@ -658,15 +493,13 @@ def test_driver_read_position_less_index_asked_for_positions(spark, small_index)
 
 
 def test_reader_set_up_runs_no_spark_job(spark, plain_index, corpus, tmp_path):
-    """doc_arrays() + pin_driver() on a plain, a shard and a
+    """doc_arrays() + pin_driver() on a plain reader and a
     single-generation MultiGenReader start no Spark job."""
     one_gen = str(tmp_path / "one_gen")
     add_generation(spark, spark.createDataFrame(corpus.iloc[:100]), one_gen, CFG)
-    n = IndexReader(spark, plain_index).n_docs
     sc = spark.sparkContext
     for i, make in enumerate((
         lambda: IndexReader(spark, plain_index),
-        lambda: IndexReader(spark, plain_index, shard_range=(n // 3, 2 * n // 3)),
         lambda: MultiGenReader(spark, one_gen),
     )):
         gid = f"set-up-{i}"
@@ -682,31 +515,24 @@ def test_reader_set_up_runs_no_spark_job(spark, plain_index, corpus, tmp_path):
         assert r._pinned.rows > 0 and r.doc_arrays()[0].size > 0
 
 
-def test_shard_doc_read_skips_row_groups_outside_the_range(spark, plain_index, monkeypatch):
-    """A shard reader's doc read returns exactly hi - lo rows and reads only
-    the row groups whose doc_idx statistics overlap its range."""
-    import os
-
-    import pyarrow.parquet as pq
+def test_read_table_in_list_skips_row_groups(plain_index, monkeypatch):
+    """An ``in`` list whose values straddle every row group's doc_idx
+    range, none inside it, reads no row group of the docs table; one value
+    inside reads only the row group(s) holding it (the fetch phase's read
+    of its slots)."""
+    from search_replica_spark.query.store import read_table
 
     docs = os.path.join(plain_index, "docs")
-    n = IndexReader(spark, plain_index).n_docs
-    lo, hi = 0, n // 6
-    overlapping, every = set(), set()
+    bounds = {}
     for name in sorted(os.listdir(docs)):
         if name.startswith(("_", ".")):
             continue
-        pf = pq.ParquetFile(os.path.join(docs, name))
-        meta = pf.metadata
+        meta = pq.ParquetFile(os.path.join(docs, name)).metadata
         for i in range(meta.num_row_groups):
             rg = meta.row_group(i)
             col, = (j for j in range(rg.num_columns) if rg.column(j).path_in_schema == "doc_idx")
-            st = rg.column(col).statistics
-            every.add((name, i))
-            if st.max >= lo and st.min < hi:
-                overlapping.add((name, i))
-    assert overlapping and overlapping < every  # the range must leave some out
-
+            bounds[(name, i)] = (rg.column(col).statistics.min, rg.column(col).statistics.max)
+    assert len(bounds) > 1
     read = set()
 
     class Spy(pq.ParquetFile):
@@ -720,30 +546,16 @@ def test_shard_doc_read_skips_row_groups_outside_the_range(spark, plain_index, m
             return super().read_row_groups(groups, *args, **kwargs)
 
     monkeypatch.setattr(pq, "ParquetFile", Spy)
-    dl, ids = IndexReader(spark, plain_index, shard_range=(lo, hi)).doc_arrays()
-    assert dl.size == ids.size == hi - lo
-    assert read == overlapping
-
-    # an ``in`` list whose values straddle every row group's doc_idx range,
-    # none inside it, reads no row group; one value inside reads only the
-    # row group(s) holding it
-    from search_replica_spark.query.store import read_table
-
-    bounds = []
-    for name, i in sorted(every):
-        rg = pq.ParquetFile(os.path.join(docs, name)).metadata.row_group(i)
-        col, = (j for j in range(rg.num_columns) if rg.column(j).path_in_schema == "doc_idx")
-        bounds.append((rg.column(col).statistics.min, rg.column(col).statistics.max))
-    gaps = sorted({b for lo_, hi_ in bounds for b in (lo_ - 1, hi_ + 1)}
-                  - {d for lo_, hi_ in bounds for d in range(lo_, hi_ + 1)})
+    gaps = sorted({b for lo, hi in bounds.values() for b in (lo - 1, hi + 1)}
+                  - {d for lo, hi in bounds.values() for d in range(lo, hi + 1)})
     assert gaps
-    read.clear()
     t = read_table(docs, ["doc_idx"], (("doc_idx", "in", np.array(gaps[::-1])),))
     assert t.num_rows == 0 and read == set()
-    inside = bounds[0][0] + (bounds[0][1] - bounds[0][0]) // 2
+    first_lo, first_hi = bounds[min(bounds)]
+    inside = first_lo + (first_hi - first_lo) // 2
     t = read_table(docs, ["doc_idx"], (("doc_idx", "in", [gaps[-1], inside, gaps[0]]),))
     assert t["doc_idx"].to_pylist() == [inside]
-    assert read == {k for k, (lo_, hi_) in zip(sorted(every), bounds) if lo_ <= inside <= hi_}
+    assert read == {k for k, (lo, hi) in bounds.items() if lo <= inside <= hi}
 
 
 @pytest.fixture(scope="module")
@@ -776,34 +588,13 @@ def fielded_indexes(spark, tmp_path_factory):
     return plain, gens
 
 
-def test_fielded_norms_on_shard_readers_equal_full_reader(spark, fielded_indexes):
-    """fielded_norms_topk on a shard reader, plain and generational, gives
-    the full reader's hits restricted to the shard's live slots, with the
-    same scores: the per-field lengths are read for the shard's own slots
-    and the idf uses the dictionary df, not the shard's posting count."""
-    from search_replica_spark.query.bm25 import fielded_norms_topk
-
-    plain, gens = fielded_indexes
-    terms = ["content:alpha", "lang:go"]
-    for full, part in (
-        (IndexReader(spark, plain), IndexReader(spark, plain, shard_range=(20, 40))),
-        (MultiGenReader(spark, gens), MultiGenReader(spark, gens, shard_range=(20, 40))),
-        (MultiGenReader(spark, gens), MultiGenReader(spark, gens, shard_range=(30, 50)).pin_driver()),
-    ):
-        ids, live = part.doc_arrays()[1], getattr(part, "_live", None)
-        in_shard = set((ids if live is None else ids[live.astype(bool)]).tolist())
-        want = {d: sc for d, sc in fielded_norms_topk(full, terms, 100) if d in in_shard}
-        got = dict(fielded_norms_topk(part, terms, 100))
-        assert want and got.keys() == want.keys()
-        for d, sc in got.items():
-            assert sc == pytest.approx(want[d], rel=1e-9), d
-
-
-def test_shard_set_up_with_a_nested_stored_column(spark, corpus, tmp_path):
+def test_set_up_and_fetch_with_a_nested_stored_column(spark, corpus, tmp_path):
     """A store_source index keeps its input columns in the docs table ahead
     of doc_idx; a nested one (an ``inlined`` array of structs) has several
     parquet leaves, so doc_idx's statistics are not at its field position.
-    Shard readers still read exactly their slots and the Spark-built store."""
+    Plain and generational readers still read the Spark reference's doc
+    arrays and store, and ``stored_fields``, whose doc_idx filter finds
+    its statistics by leaf path, reads exactly the asked-for rows."""
     from pyspark.sql import functions as F
 
     cfg = IndexConfig(
@@ -819,44 +610,18 @@ def test_shard_set_up_with_a_nested_stored_column(spark, corpus, tmp_path):
     build_index(spark, df, idx, cfg)
     gens = str(tmp_path / "nested_gens")
     add_generation(spark, df.limit(150), gens, cfg)
-    n = IndexReader(spark, idx).n_docs
-    for make in (
-        lambda: IndexReader(spark, idx, shard_range=(n // 3, 2 * n // 3)),
-        lambda: IndexReader(spark, idx, shard_range=(0, n // 5)),
-        lambda: MultiGenReader(spark, gens, shard_range=(40, 110)),
-    ):
-        r = make()
+    for r in (IndexReader(spark, idx), MultiGenReader(spark, gens)):
         dl, ids = r.doc_arrays()
         want_dl, want_ids = _doc_arrays_spark(spark, r)
-        assert ids.size == r.shard_range[1] - r.shard_range[0]
         assert dl.tobytes() == want_dl.tobytes() and ids.tobytes() == want_ids.tobytes()
         r.pin_driver()
         _assert_same_store(r._pinned, _scan_store(spark, r, False))
-
-
-def test_generational_shards_partition_the_full_reader(spark, multigen_index):
-    """Pinned generational shard readers over a partition of the slot
-    space, one holding a single generation and one spanning two, together
-    answer exactly the full reader's live hits: match and bool scores to
-    1e-9 relative, phrase hits too, each doc in exactly one shard."""
-    full = MultiGenReader(spark, multigen_index).pin_driver(positions=True)
-    slots = sum(g["n_docs"] for g in full.live_gens)
-    shards = [MultiGenReader(spark, multigen_index, shard_range=rng).pin_driver(positions=True)
-              for rng in ((0, 100), (100, 200), (200, slots))]
-    for scorer in (
-        lambda r: dict(zip(*[a.tolist() for a in TermAtATimeScorer(r).score(
-            "license apache", None, live=r._live)])),
-        lambda r: dict(zip(*[a.tolist() for a in bool_topk(
-            r, must=["def"], should=["return", "the"], k=None, live=r._live)])),
-        lambda r: dict(phrase_topk(r, "apache license", 1000, slop=1)),
-    ):
-        want = scorer(full)
-        parts = [scorer(s) for s in shards]
-        assert want and sum(len(p) for p in parts) == len(want)
-        got = {d: sc for p in parts for d, sc in p.items()}
-        assert got.keys() == want.keys()
-        for d, sc in got.items():
-            assert sc == pytest.approx(want[d], rel=1e-9), d
+        asked = ids[::7]
+        got = sorted((d["_rid"], d["path"], d["inlined"])
+                     for d in r.stored_fields(asked, ["path", "inlined"]).to_pylist())
+        want = sorted((w["_rid"], w["path"], [x.asDict() for x in w["inlined"]])
+                      for w in _matched_docs_df(r, asked.tolist()).collect())
+        assert len(got) == asked.size and got == want
 
 
 # --- the fetch phase read in the driver -------------------------------------
@@ -877,12 +642,10 @@ def _matched_docs_df(reader, ids):
     slots = np.flatnonzero(np.isin(arr, want))
     if reader._live is not None:
         slots = slots[reader._live[slots]]
-    n_docs = {g["gen"]: int(g["n_docs"]) for g in reader.live_gens}
     parts = []
-    for d, gen, base, rng in reader._gens():
-        lo, hi = rng or (0, n_docs[gen])
-        off = reader._slot_offset(base)
-        mine = slots[(slots >= lo + off) & (slots < hi + off)]
+    for g in reader.live_gens:
+        d, off = g["dir"], reader.bases[g["gen"]]
+        mine = slots[(slots >= off) & (slots < off + int(g["n_docs"]))]
         rid = reader.spark.createDataFrame(
             list(zip((mine - off).tolist(), arr[mine].tolist())), "doc_idx long, _rid long")
         docs = reader.spark.read.parquet(os.path.join(d, "docs"))
@@ -985,9 +748,9 @@ def test_driver_fetch_equals_spark_reference(spark, fetch_indexes):
     """``IndexReader.stored_fields``, the request aggs and the stored-field
     sort equal the Spark plans they replaced (``_matched_docs_df``, one
     Spark aggregation per agg, one orderBy + limit per sort), value for
-    value and type for type, and start no Spark job. Readers: plain,
+    value and type for type, and start no Spark job. Readers: plain and
     generational (a superseded version and a tombstoned doc are never
-    read) and a generational shard spanning two generations. Id sets:
+    read). Id sets:
     every live id (over 1,000: the reference's broadcast-join shape), a
     few, superseded, deleted and absent ids, and none. The ``lang`` that a
     partial update nulled is a ``terms`` bucket of its own (key None) and
@@ -998,14 +761,12 @@ def test_driver_fetch_equals_spark_reference(spark, fetch_indexes):
     plain, gens, corpus = fetch_indexes
     cols = ["doc_len", "path", "lang", "content"]
     changed = [doc_id_of(corpus["repo"][i], corpus["path"][i]) for i in (4, 11, 20)]
-    readers = [("plain", IndexReader(spark, plain)), ("multigen", MultiGenReader(spark, gens)),
-               ("multigen shard", MultiGenReader(spark, gens, shard_range=(600, 1100)))]
+    readers = [("plain", IndexReader(spark, plain)), ("multigen", MultiGenReader(spark, gens))]
     for label, r in readers:
         live = r._live_docs().drop_dead(r.doc_arrays()[1])
         id_sets = {"all": live, "few": live[::250], "changed": np.array([*changed, 10**17]),
                    "none": np.empty(0, np.int64)}
-        if label != "multigen shard":
-            assert live.size > 1000
+        assert live.size > 1000
         for name, ids in id_sets.items():
             got, jobs = _spark_jobs(spark, lambda: r.stored_fields(ids, cols))
             assert jobs == [], (label, name)

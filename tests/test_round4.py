@@ -402,9 +402,10 @@ def test_restored_index_accepts_fresh_stream(spark, tmp_path):
 def test_match_all_and_explain_default_to_liveness(spark, tmp_path):
     """match_all / explain_score on a generational reader must apply the
     liveDocs mask by default: tombstoned docs don't appear, a superseded
-    doc explains as its LATEST version."""
+    doc explains as its LATEST version, whose contributions sum to the
+    score TermAtATimeScorer gives it, pinned or not."""
     from search_replica_spark.oracle import doc_id_of
-    from search_replica_spark.query.bm25 import explain_score, match_all
+    from search_replica_spark.query.bm25 import TermAtATimeScorer, explain_score, match_all
     from search_replica_spark.streaming.incremental import (
         MultiGenReader,
         add_generation,
@@ -427,5 +428,11 @@ def test_match_all_and_explain_default_to_liveness(spark, tmp_path):
 
     exp = explain_score(mg, "alpha", doc_id=doc_id_of("r0", "a/4.py"))
     assert exp[0]["tf"] == 3  # the live (latest) version, not the old tf=1
+    for r in (mg, MultiGenReader(spark, idx).pin_driver()):
+        (top, score), = TermAtATimeScorer(r).score("alpha gamma", 1, live=r._live)
+        assert top == doc_id_of("r0", "a/4.py")
+        got = explain_score(r, "alpha gamma")
+        assert got == explain_score(mg, "alpha gamma", doc_id=top)
+        assert sum(e["contribution"] for e in got) == pytest.approx(score, abs=1e-5)
     with pytest.raises(KeyError, match="deleted"):
         explain_score(mg, "alpha", doc_id=doc_id_of("r0", "a/2.py"))

@@ -11,10 +11,7 @@ Reference parity targets:
 
 from __future__ import annotations
 
-import time
-
 import pytest
-from pyspark.sql import functions as F
 
 from search_replica_spark.config import IndexConfig
 
@@ -370,121 +367,6 @@ def test_snapshot_excludes_nested_checkpoints(tmp_path):
     assert not os.path.exists(snap / "gen=0" / "_checkpoint")
     assert not os.path.exists(snap / "_inline_checkpoint")
     assert os.path.exists(snap / "gen=0" / "dict" / "part-0.parquet")
-
-
-def test_sharded_serving_bit_equal_on_reference_queries(spark, small_index):
-    """r4 verdict #2: doc-sharded serving as the default above a size
-    threshold. Forced sharding must be BIT-EQUAL to the unsharded scorer
-    on the full 50-query reference set, and no shard reader may ever hold
-    O(corpus) doc arrays."""
-    from search_replica_spark.corpus import reference_queries
-    from search_replica_spark.query.bm25 import (
-        IndexReader,
-        TermAtATimeScorer,
-        make_serving_readers,
-        serve_topk,
-    )
-
-    idx_dir, stats = small_index
-    n = stats["n_docs"]
-    target = 150
-    scorer = TermAtATimeScorer(IndexReader(spark, idx_dir))
-    qs = reference_queries()
-    for qtext, k in zip(qs["query_text"], qs["k"]):
-        for mode in ("or", "and"):
-            want = scorer.score(qtext, int(k), mode=mode)
-            got = serve_topk(spark, idx_dir, qtext, int(k), mode=mode, min_docs=0,
-                             target_docs=target)
-            assert got == want, (qtext, mode)  # bit-equal, not just rank-equal
-    # per-node memory contract: every shard's arrays are O(n/shards)
-    readers = make_serving_readers(spark, idx_dir, min_docs=0,
-                                   target_docs=target)
-    sizes = [r.doc_arrays()[0].size for r in readers]
-    assert len(readers) == -(-n // target)
-    assert max(sizes) <= target + 1 < n
-    assert sum(sizes) == n
-    # cost switch: below the threshold, ONE unsharded reader serves
-    assert len(make_serving_readers(spark, idx_dir)) == 1
-
-
-def test_sharded_serving_multigen_with_deletes(spark, small_corpus, tmp_path):
-    """Sharding over the generational slot space: supersessions and
-    tombstones stay correct because each shard scopes its own liveDocs."""
-    from search_replica_spark.query.bm25 import TermAtATimeScorer, serve_topk
-    from search_replica_spark.streaming.incremental import (
-        MultiGenReader,
-        add_generation,
-    )
-
-    idx = str(tmp_path / "idx")
-    cfg = IndexConfig(shuffle_partitions=4)
-    sdf = spark.createDataFrame(small_corpus)
-    add_generation(spark, sdf.limit(400), idx, cfg)
-    add_generation(spark, sdf.limit(300), idx, cfg)  # 300 supersessions
-    dels = sdf.limit(60).withColumn("_change_type", F.lit("delete"))
-    add_generation(spark, dels, idx, cfg)  # 60 tombstones
-    mg = MultiGenReader(spark, idx)
-    full = TermAtATimeScorer(mg)
-    for q in ["versub delrel", "apache license", "def", "license versub"]:
-        want = full.score(q, 10, live=mg._live)
-        got = serve_topk(spark, idx, q, 10, min_docs=0, target_docs=100)
-        assert got == want, q
-
-
-def _jobs_run_by(sc, fn):
-    """(fn's result, the Spark jobs it ran from any thread): job ids are
-    sequential, so count the ids between two marker jobs. A job group
-    alone would miss the jobs of serve_topk's shard threads."""
-    def marker():
-        gid = f"marker-{time.monotonic_ns()}"
-        sc.setJobGroup(gid, gid)
-        try:
-            sc.parallelize([0], 1).count()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return max(sc.statusTracker().getJobIdsForGroup(gid))
-
-    start = marker()
-    out = fn()
-    return out, marker() - start - 1
-
-
-def test_sharded_serve_topk_reads_the_dictionary_once(
-    spark, small_index, small_corpus, tmp_path, monkeypatch
-):
-    """A sharded serve_topk reads the query terms' dictionary dfs once per
-    call and hands them to every shard reader, and it starts no Spark job:
-    each shard reads its doc arrays, liveDocs and postings from the index
-    parquet in the driver, on a plain and on a generational index."""
-    from search_replica_spark.query import bm25
-    from search_replica_spark.query.bm25 import serve_topk
-    from search_replica_spark.streaming.incremental import add_generation
-
-    mg = str(tmp_path / "mg")
-    cfg = IndexConfig(shuffle_partitions=4)
-    sdf = spark.createDataFrame(small_corpus)
-    add_generation(spark, sdf.limit(400), mg, cfg)
-    add_generation(spark, sdf.limit(300), mg, cfg)
-    sc = spark.sparkContext
-    q = "license apache"
-    dfs_reads = []
-    global_dfs = bm25._global_dfs
-
-    def counting_global_dfs(reader, terms):
-        dfs_reads.append(terms)
-        return global_dfs(reader, terms)
-
-    monkeypatch.setattr(bm25, "_global_dfs", counting_global_dfs)
-    for idx, target in ((small_index[0], 150), (mg, 200)):
-        n_shards = len(bm25.make_serving_readers(spark, idx, min_docs=0, target_docs=target))
-        for mode in ("or", "and"):
-            dfs_reads.clear()
-            hits, served = _jobs_run_by(
-                sc, lambda: serve_topk(spark, idx, q, 10, mode=mode, min_docs=0,
-                                       target_docs=target))
-            assert len(hits) == 10 and n_shards > 2
-            assert served == 0, (idx, mode, served)
-            assert dfs_reads == [["apache", "license"]], (idx, mode, dfs_reads)
 
 
 def test_exact_checker_rejects_unconvertible_floats(monkeypatch):
