@@ -24,7 +24,11 @@ size), every flat agg kind under a ``match``, under ``match_all`` and
 under a match with no hits, stored-field sorts on ``doc_len``, ``path``
 and the nullable ``lang``, ``more_like_this`` by ``_id`` (an updated doc
 and a deleted one) and the terms lookup (request form, and ``terms_lookup``
-with and without ``max_terms``).
+with and without ``max_terms``), and ``rescore_topk`` on the plain one. The
+first pair also holds a knn store (``build_knn_store``: one seeded vector
+per doc, keyed by doc_id, with exact duplicates) and a percolator store
+(``register_queries``), for knn-only and query + knn requests (with
+``boost``) and ``percolate`` bodies on plain and generational readers.
 
 Each answer prints as one line, ``group | case | hits``, with every hit as
 ``doc_id:score`` and the score in float hex, so the line changes when any
@@ -199,6 +203,101 @@ def fetch_cases(r, lookup_id: int, deleted_id: int) -> list[tuple[str, object]]:
     return cases
 
 
+KNN_DIM = 8
+PERCOLATE_QUERIES = [
+    (1, "license apache"),
+    (2, "def return"),
+    (3, "apache license version", 2),
+    (4, "catval resnum return", 1),
+    (5, "zzqqabsentqq license"),
+]
+
+
+def build_vectors_and_queries(spark, n_docs: int, index_dirs) -> list[list[float]]:
+    """Write a knn store and a percolator store into each of
+    ``index_dirs``: one seeded vector per doc (vec_id = doc_id, 5 cluster
+    labels, every 7th doc a copy of an earlier one, so cosines tie) and
+    ``PERCOLATE_QUERIES``. Returns the knn query vectors: three stored
+    vectors and two others."""
+    import numpy as np
+
+    from search_replica_spark.corpus import generate_corpus
+    from search_replica_spark.oracle import doc_id_of
+    from search_replica_spark.query.knn import build_knn_store
+    from search_replica_spark.query.percolator import register_queries
+
+    corpus = generate_corpus(n_docs)
+    rng = np.random.default_rng(11)
+    vecs = []
+    for i in range(n_docs):
+        v = vecs[i - 5][2] if i % 7 == 6 else [float(x) for x in rng.normal(size=KNN_DIM)]
+        vecs.append((doc_id_of(corpus["repo"][i], corpus["path"][i]), i % 5, v))
+    df = spark.createDataFrame(vecs, "vec_id long, label int, embedding array<double>")
+    for d in index_dirs:
+        build_knn_store(spark, df, d)
+        register_queries(spark, d, PERCOLATE_QUERIES)
+    return [vecs[0][2], vecs[6][2], vecs[40][2],
+            [float(x) for x in rng.normal(size=KNN_DIM)], [1.0] * KNN_DIM]
+
+
+def knn_cases(r, query_vectors) -> list[tuple[str, object]]:
+    from search_replica_spark.query.dsl import execute_request
+
+    bodies = []
+    for i, qv in enumerate(query_vectors):
+        for k, nc in ((5, 1), (10, 100), (400, 10**6)):
+            bodies.append((f"knn q{i} k={k} num_candidates={nc}", {"knn": {
+                "field": "embedding", "query_vector": qv, "k": k, "num_candidates": nc}}))
+        bodies.append((f"match + knn q{i} boost=2", {
+            "query": {"match": {"content": "license apache"}},
+            "knn": {"field": "embedding", "query_vector": qv, "k": 10,
+                    "num_candidates": 120, "boost": 2.0},
+            "size": 20}))
+    return [(f"request {name}", lambda b=b: json.dumps(execute_request(r, b), sort_keys=True))
+            for name, b in bodies]
+
+
+def percolate_cases(r) -> list[tuple[str, object]]:
+    from search_replica_spark.corpus import generate_corpus
+    from search_replica_spark.query.dsl import execute_request
+
+    docs = [
+        ("license apache", "the apache license governs"),
+        ("2-of-3", {"content": "version license only"}),
+        ("1-of-3", {"content": "resnum"}),
+        ("no match", "zzqq nothing here"),
+        ("empty", ""),
+        *((f"corpus doc {i}", {"content": generate_corpus(12)["content"][i]}) for i in (0, 5, 9)),
+    ]
+    return [(f"request percolate {name}", lambda d=doc: json.dumps(execute_request(r, {
+        "query": {"percolate": {"field": "query", "document": d}}, "size": 10}),
+        sort_keys=True)) for name, doc in docs]
+
+
+RESCORES = [
+    ("license apache", ["apache", "license"], {}),
+    ("license apache version", ["apache", "license", "version"],
+     {"window": 20, "k": 5, "rescore_weight": 0.25}),
+    ("def return", ["def", "return"], {"window": 100, "query_weight": 0.5, "rescore_weight": 2.0}),
+    ("the license", ["license"], {"window": 3, "k": 10}),
+    ("zzqqabsentqq", ["zzqqabsentqq"], {}),
+]
+
+
+def rescore_cases(r) -> list[tuple[str, object]]:
+    from search_replica_spark.query import bm25
+
+    def rescore(q, phrase, kw):
+        # earlier versions took the session and the index dir first, and
+        # the reader by keyword
+        if "spark" in inspect.signature(bm25.rescore_topk).parameters:
+            return bm25.rescore_topk(r.spark, r.index_dir, q, phrase, reader=r, **kw)
+        return bm25.rescore_topk(r, q, phrase, **kw)
+
+    return [(f"rescore {q!r} {phrase} {kw}", lambda q=q, p=phrase, kw=kw: rescore(q, p, kw))
+            for q, phrase, kw in RESCORES]
+
+
 def hits_line(hits) -> str:
     return " ".join(f"{int(d)}:{float(s).hex()}" for d, s in hits) or "-"
 
@@ -302,6 +401,55 @@ def build_source(spark, n_docs: int, tmp: str) -> tuple[str, str, int, int]:
     return plain, mg, *ids
 
 
+def build_all(spark, n_docs: int, tmp: str) -> dict:
+    """Every index of the matrix under ``tmp``, by the name of the reader
+    group it serves, with the doc_ids and knn query vectors the cases
+    use (plain JSON: it passes to another interpreter as it is)."""
+    plain, mg = build(spark, n_docs, tmp)
+    fplain, fmg = build(spark, n_docs, tmp, "-fielded",
+                        field_analyzers=(("content", "text"), ("lang", "keyword")))
+    splain, smg, updated, deleted = build_source(spark, n_docs, tmp)
+    return {"plain": plain, "multigen": mg, "fielded plain": fplain, "fielded multigen": fmg,
+            "fetch plain": splain, "fetch multigen": smg, "updated": updated,
+            "deleted": deleted, "qvecs": build_vectors_and_queries(spark, n_docs, (plain, mg))}
+
+
+def reader_answers(spark, ix: dict) -> list[tuple[str, str]]:
+    """(group, line) for every reader-side answer over ``build_all``'s
+    indexes, unpinned and pinned, the readers opened as ``IndexReader(spark,
+    ...)`` (``spark`` None: with no session)."""
+    from search_replica_spark.query.bm25 import IndexReader
+    from search_replica_spark.streaming.incremental import MultiGenReader
+
+    fielded = functools.partial(expansion_cases, expansions=FIELDED_EXPANSIONS)
+    fetch = functools.partial(fetch_cases, lookup_id=ix["updated"], deleted_id=ix["deleted"])
+    knn = functools.partial(knn_cases, query_vectors=ix["qvecs"])
+    groups = [  # (group, reader class, index, cases)
+        ("plain", IndexReader, "plain", reader_cases),
+        ("multigen", MultiGenReader, "multigen", reader_cases),
+        ("fielded plain", IndexReader, "fielded plain", fielded),
+        ("fielded multigen", MultiGenReader, "fielded multigen", fielded),
+        ("fetch plain", IndexReader, "fetch plain", fetch),
+        ("fetch multigen", MultiGenReader, "fetch multigen", fetch),
+        ("rescore plain", IndexReader, "fetch plain", rescore_cases),
+        ("knn plain", IndexReader, "plain", knn),
+        ("knn multigen", MultiGenReader, "multigen", knn),
+        ("percolate plain", IndexReader, "plain", percolate_cases),
+        ("percolate multigen", MultiGenReader, "multigen", percolate_cases),
+    ]
+    lines = []
+    for group, reader, index, cases_of in groups:
+        for pinned in (False, True):
+            r = reader(spark, ix[index])
+            if pinned:
+                r.doc_arrays()
+                r.pin_driver(positions=True)
+            tag = "pinned" if pinned else "unpinned"
+            for case, fn in cases_of(r):
+                lines.append((group, f"{tag} {case} | {answer(fn)}"))
+    return lines
+
+
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--root", default=ROOT, help="checkout to import search_replica_spark from")
@@ -310,45 +458,17 @@ def main() -> int:
     args = ap.parse_args()
     sys.path.insert(0, os.path.abspath(args.root))
 
-    from search_replica_spark.query.bm25 import IndexReader, bm25_topk_spark
+    from search_replica_spark.query.bm25 import bm25_topk_spark
     from search_replica_spark.session import get_spark
-    from search_replica_spark.streaming.incremental import (
-        MultiGenReader,
-        bm25_topk_spark_multigen,
-    )
+    from search_replica_spark.streaming.incremental import bm25_topk_spark_multigen
 
     spark = get_spark("answer_digest", cores=2, shuffle_partitions=4,
                       extra={"spark.driver.memory": "2g"})
-    lines: list[tuple[str, str]] = []
     try:
         with tempfile.TemporaryDirectory(prefix="answer_digest_") as tmp:
-            plain, mg = build(spark, args.docs, tmp)
-            fplain, fmg = build(spark, args.docs, tmp, "-fielded",
-                                field_analyzers=(("content", "text"), ("lang", "keyword")))
-            splain, smg, updated, deleted = build_source(spark, args.docs, tmp)
-            readers = {
-                "plain": (lambda: IndexReader(spark, plain), reader_cases),
-                "multigen": (lambda: MultiGenReader(spark, mg), reader_cases),
-            }
-            fielded = functools.partial(expansion_cases, expansions=FIELDED_EXPANSIONS)
-            readers.update({
-                "fielded plain": (lambda: IndexReader(spark, fplain), fielded),
-                "fielded multigen": (lambda: MultiGenReader(spark, fmg), fielded),
-            })
-            fetch = functools.partial(fetch_cases, lookup_id=updated, deleted_id=deleted)
-            readers.update({
-                "fetch plain": (lambda: IndexReader(spark, splain), fetch),
-                "fetch multigen": (lambda: MultiGenReader(spark, smg), fetch),
-            })
-            for group, (make, cases_of) in readers.items():
-                for pinned in (False, True):
-                    r = make()
-                    if pinned:
-                        r.doc_arrays()
-                        r.pin_driver(positions=True)
-                    tag = "pinned" if pinned else "unpinned"
-                    for case, fn in cases_of(r):
-                        lines.append((group, f"{tag} {case} | {answer(fn)}"))
+            ix = build_all(spark, args.docs, tmp)
+            lines = reader_answers(spark, ix)
+            plain, mg = ix["plain"], ix["multigen"]
             plans = (("plain", plain, bm25_topk_spark), ("multigen", mg, bm25_topk_spark_multigen))
             for q in QUERIES:
                 for name, idx, plan in plans:

@@ -27,6 +27,105 @@ def _spark(args):
     return get_spark("search_replica_spark", cores=args.cores, shuffle_partitions=args.cores)
 
 
+def _read(args) -> None:
+    """The read commands: ``query`` (the in-driver scorer, or with
+    ``--dsl`` an ES query or /_search request body), ``count``, ``get``
+    and ``termvectors``. Each reads the index parquet in the driver
+    through ``IndexReader`` and starts no Spark session."""
+    from search_replica_spark.query.bm25 import IndexReader
+
+    if args.cmd == "count":
+        from search_replica_spark.query.bm25 import count_match
+
+        rd = IndexReader(None, args.index)
+        print(json.dumps({"count": count_match(rd, args.q, mode=args.operator)}))
+    elif args.cmd == "get":
+        ids = [int(x) for x in args.ids.split(",")]
+        for row in _stored_rows(IndexReader(None, args.index_dir), ids):
+            print(json.dumps(row, default=str))
+    elif args.cmd == "termvectors":
+        _termvectors(IndexReader(None, args.index_dir), args.id)
+    elif args.dsl:
+        _dsl(IndexReader(None, args.index), args.q, args.k)
+    else:
+        hits = IndexReader(None, args.index).score(args.q, args.k)
+        print(json.dumps([{"doc_id": d, "score": s} for d, s in hits]))
+
+
+def _stored_rows(rd, ids: list[int]) -> list[dict]:
+    """ES GET/mget: every stored column of the live docs among ``ids``,
+    ``doc_id`` first and then the docs stores' columns in generation order
+    (a column a generation lacks is null), ordered by doc_id. A struct
+    prints as the list of its values."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from search_replica_spark.index.manifest import part_files
+
+    cols = dict.fromkeys(["doc_id"])
+    for g in rd.live_gens:
+        first = part_files(os.path.join(g["dir"], "docs"))[0]
+        cols.update(dict.fromkeys(pq.read_schema(first).names))
+    cols.pop("doc_idx", None)
+    t = rd.stored_fields(ids, list(cols)).sort_by("doc_id").select(list(cols))
+    return [{c: _struct_values(v) for c, v in row.items()} for row in t.to_pylist()]
+
+
+def _struct_values(v):
+    if isinstance(v, dict):
+        return [_struct_values(x) for x in v.values()]
+    if isinstance(v, list):
+        return [_struct_values(x) for x in v]
+    return v
+
+
+def _termvectors(rd, doc_id: int) -> None:
+    """ES _termvectors of one live doc's stored content: term → tf and
+    positions, analyzed with the build tokenizer."""
+    from search_replica_spark.analysis import tokenize_text
+
+    t = rd.stored_fields([doc_id], ["content"])
+    text = t["content"][0].as_py() if "content" in t.column_names and t.num_rows else None
+    if text is None:
+        print(json.dumps({"_id": doc_id, "found": False}))
+        return
+    terms: dict = {}
+    for pos, tok in enumerate(tokenize_text(text)):
+        e = terms.setdefault(tok, {"term_freq": 0, "positions": []})
+        e["term_freq"] += 1
+        e["positions"].append(pos)
+    print(json.dumps({
+        "_id": doc_id, "found": True,
+        "term_vectors": {"content": {"terms": dict(sorted(terms.items()))}},
+    }))
+
+
+def _dsl(rd, body: str, k: int) -> None:
+    """The ES switch-over path: run the user's query or /_search body
+    as-is (``@path`` reads it from a file)."""
+    from search_replica_spark.query.dsl import execute_dsl, execute_request
+
+    if body.startswith("@"):
+        with open(body[1:]) as f:
+            body = f.read()
+    req = json.loads(body)
+    if isinstance(req, dict) and (set(req) - {"query"}):
+        # a full /_search request body (from/size/sort/highlight/
+        # min_score/...) — answer ES-shaped
+        if "size" not in req:
+            req["size"] = k
+        print(json.dumps(execute_request(rd, req)))
+        return
+    ih: dict = {}
+    hits = execute_dsl(rd, req, k=k, inner_hits=ih)
+    out = [{"doc_id": d, "score": s} for d, s in hits]
+    for h in out:
+        if h["doc_id"] in ih:
+            h["inner_hits"] = [{"doc_id": c, "score": cs} for c, cs in ih[h["doc_id"]]]
+    print(json.dumps(out))
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="search_replica_spark")
     p.add_argument("--cores", type=int, default=None, help="local[N]; omit under spark-submit")
@@ -330,12 +429,10 @@ def main(argv: list[str] | None = None) -> int:
         out = write_metrics(args.index_dir) if args.refresh else read_metrics(args.index_dir)
         print(json.dumps(out))
         return 0
-    if args.cmd == "query" and args.strategy == "tata" and not args.dsl:
-        # the in-driver scorer reads the index parquet — no Spark session
-        from search_replica_spark.query.bm25 import IndexReader
-
-        hits = IndexReader(None, args.index).score(args.q, args.k)
-        print(json.dumps([{"doc_id": d, "score": s} for d, s in hits]))
+    if args.cmd in ("count", "get", "termvectors") or (
+        args.cmd == "query" and (args.dsl or args.strategy == "tata")
+    ):
+        _read(args)
         return 0
 
     spark = _spark(args)
@@ -353,34 +450,6 @@ def main(argv: list[str] | None = None) -> int:
         q = json.loads(args.q) if args.dsl else args.q
         print(json.dumps(delete_by_query(spark, args.index_dir, q)))
         return 0
-    if args.cmd == "count":
-        from search_replica_spark.query.bm25 import IndexReader, count_match
-
-        rd = IndexReader(spark, args.index)
-        print(json.dumps({"count": count_match(rd, args.q, mode=args.operator)}))
-        return 0
-    if args.cmd == "termvectors":
-        from search_replica_spark.analysis import tokenize_text
-        from search_replica_spark.streaming.incremental import get_docs
-
-        rows = (
-            get_docs(spark, args.index_dir, [args.id])
-            .select("content")
-            .collect()
-        )
-        if not rows or rows[0][0] is None:
-            print(json.dumps({"_id": args.id, "found": False}))
-            return 0
-        terms: dict = {}
-        for pos, t in enumerate(tokenize_text(rows[0][0])):
-            e = terms.setdefault(t, {"term_freq": 0, "positions": []})
-            e["term_freq"] += 1
-            e["positions"].append(pos)
-        print(json.dumps({
-            "_id": args.id, "found": True,
-            "term_vectors": {"content": {"terms": dict(sorted(terms.items()))}},
-        }))
-        return 0
 
     if args.cmd == "build":
         from search_replica_spark.config import IndexConfig
@@ -393,39 +462,8 @@ def main(argv: list[str] | None = None) -> int:
             IndexConfig(shuffle_partitions=args.partitions, store_source=args.store_source),
         )
         print(json.dumps(stats))
-    elif args.cmd == "query":
-        from search_replica_spark.query.bm25 import IndexReader, bm25_topk_spark
-
-        if args.dsl:
-            # the ES switch-over path: run the user's /_search body as-is
-            from search_replica_spark.query.dsl import execute_dsl
-
-            body = args.q
-            if body.startswith("@"):
-                with open(body[1:]) as f:
-                    body = f.read()
-            rd = IndexReader(spark, args.index)
-            req = json.loads(body)
-            if isinstance(req, dict) and (set(req) - {"query"}):
-                # a full /_search request body (from/size/sort/highlight/
-                # min_score/...) — answer ES-shaped
-                from search_replica_spark.query.dsl import execute_request
-
-                if "size" not in req:
-                    req["size"] = args.k
-                print(json.dumps(execute_request(rd, req)))
-                return 0
-            ih: dict = {}
-            hits = execute_dsl(rd, req, k=args.k, inner_hits=ih)
-            out = [{"doc_id": d, "score": s} for d, s in hits]
-            if ih:
-                for h in out:
-                    if h["doc_id"] in ih:
-                        h["inner_hits"] = [
-                            {"doc_id": c, "score": cs} for c, cs in ih[h["doc_id"]]
-                        ]
-            print(json.dumps(out))
-            return 0
+    elif args.cmd == "query":  # --strategy spark: the distributed plan
+        from search_replica_spark.query.bm25 import bm25_topk_spark
 
         rows = bm25_topk_spark(spark, args.index, args.q, args.k).collect()
         print(json.dumps([{"doc_id": r["doc_id"], "score": r["score"]} for r in rows]))
@@ -447,14 +485,6 @@ def main(argv: list[str] | None = None) -> int:
         cfg = derive_index_cfg(args.index_dir, IndexConfig(store_source=args.store_source))
         stats = add_generation(spark, spark.read.parquet(args.batch), args.index_dir, cfg)
         print(json.dumps(stats))
-    elif args.cmd == "get":
-        from search_replica_spark.streaming.incremental import get_docs
-
-        rows = get_docs(
-            spark, args.index_dir, [int(x) for x in args.ids.split(",")]
-        ).collect()
-        for r in rows:
-            print(json.dumps(r.asDict(), default=str))
     elif args.cmd == "update":
         from search_replica_spark.streaming.incremental import scripted_update
 

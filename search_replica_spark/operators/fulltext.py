@@ -747,8 +747,8 @@ def ft_highlight_top10(spark, sf_dir):
 # B8b: GET/mget by _id over the engine's stored _source (ES GET API — the
 # reference relies on ES for it; consistency_test.go:189-210 polls exactly
 # this endpoint). The wanted engine doc_ids are derived from the (repo,
-# path) keys with the same JVM sha expression the build uses, then
-# `get_docs` point-filters the docs store — PushedFilters: [In(doc_id ...)]
+# path) keys with the same JVM sha expression the build uses, then the
+# live-docs view is point-filtered — PushedFilters: [In(doc_id ...)]
 # reaches the parquet scan (PLANS.md), content comes from the INDEX.
 @register(
     "ft_get_by_id",
@@ -756,14 +756,14 @@ def ft_highlight_top10(spark, sf_dir):
 )
 def ft_get_by_id(spark, sf_dir):
     from search_replica_spark.index.build import with_doc_ids
-    from search_replica_spark.streaming.incremental import get_docs
+    from search_replica_spark.streaming.incremental import source_view
 
     idx = _index_dir_for(spark, sf_dir)
     keys = _corpus_from_documents(spark, sf_dir).filter(
         F.split(F.col("path"), "_").getItem(1).cast("long") % 97 == 0
     )
     ids = [r["doc_id"] for r in with_doc_ids(keys).select("doc_id").collect()]
-    return get_docs(spark, idx, ids).select(
+    return source_view(spark, idx).filter(F.col("doc_id").isin(ids)).select(
         F.split(F.col("path"), "_").getItem(1).cast("long").alias("doc_id"),
         "lang",
         F.col("content").alias("text"),
@@ -1254,14 +1254,9 @@ def ft_rescore_phrase_top10(spark, sf_dir):
     from search_replica_spark.query.bm25 import rescore_topk
 
     idx = _index_dir_for(spark, sf_dir)
-    content = spark.read.parquet(os.path.join(idx, "docs")).select(
-        F.split(F.col("path"), "_").getItem(1).cast("long").alias("doc_id"),
-        "content",
-    )
     hits = rescore_topk(
-        spark, idx, " ".join(BM25_QUERY_TERMS), ["spark", "join"],
+        _OrigIdReader(spark, idx), " ".join(BM25_QUERY_TERMS), ["spark", "join"],
         window=50, k=10, rescore_weight=0.25,
-        reader=_OrigIdReader(spark, idx), content_df=content,
     )
     return spark.createDataFrame(
         [(d, round(s, 6)) for d, s in hits], "doc_id long, score double"
@@ -1327,6 +1322,18 @@ def ft_count_match(spark, sf_dir):
     )
 
 
+def _dsl_top(spark, sf_dir, query: dict, k: int):
+    """The top ``k`` of an ES query-DSL object over the harness index,
+    answered by ``execute_dsl`` (the /_search path composes the compound
+    kinds), as (doc_id, score rounded to 6 dp)."""
+    from search_replica_spark.query.dsl import execute_dsl
+
+    hits = execute_dsl(_OrigIdReader(spark, _index_dir_for(spark, sf_dir)), query, k)
+    return spark.createDataFrame(
+        [(d, round(s, 6)) for d, s in hits], "doc_id long, score double"
+    )
+
+
 # ---------------------------------------------------------------------------
 # B5dm/B5bq/B5cs/B5ms: four more ES query-DSL surfaces over the same index.
 # Shared twin prelude: per-(doc, term) BM25 contributions for the union of
@@ -1371,15 +1378,10 @@ LIMIT 10
 
 @register("ft_dis_max_top10", _DISMAX_SQL)
 def ft_dis_max_top10(spark, sf_dir):
-    from search_replica_spark.query.bm25 import dis_max_topk
-
-    idx = _index_dir_for(spark, sf_dir)
-    hits = dis_max_topk(
-        _OrigIdReader(spark, idx), ["spark join", "window hash"], 10, tie_breaker=0.5
-    )
-    return spark.createDataFrame(
-        [(d, round(s, 6)) for d, s in hits], "doc_id long, score double"
-    )
+    return _dsl_top(spark, sf_dir, {"dis_max": {
+        "queries": [{"match": {"content": "spark join"}},
+                    {"match": {"content": "window hash"}}],
+        "tie_breaker": 0.5}}, 10)
 
 
 # boosting query: positive = "spark join", negative = "hash" (filter
@@ -1402,15 +1404,10 @@ LIMIT 10
 
 @register("ft_boosting_top10", _BOOSTING_SQL)
 def ft_boosting_top10(spark, sf_dir):
-    from search_replica_spark.query.bm25 import boosting_topk
-
-    idx = _index_dir_for(spark, sf_dir)
-    hits = boosting_topk(
-        _OrigIdReader(spark, idx), "spark join", "hash", negative_boost=0.25, k=10
-    )
-    return spark.createDataFrame(
-        [(d, round(s, 6)) for d, s in hits], "doc_id long, score double"
-    )
+    return _dsl_top(spark, sf_dir, {"boosting": {
+        "positive": {"match": {"content": "spark join"}},
+        "negative": {"match": {"content": "hash"}},
+        "negative_boost": 0.25}}, 10)
 
 
 # constant_score: filter-context match, every hit scores exactly the boost;
@@ -1422,11 +1419,8 @@ def ft_boosting_top10(spark, sf_dir):
         WHERE term IN ('spark', 'window') ORDER BY doc_id LIMIT 25""",
 )
 def ft_constant_score(spark, sf_dir):
-    from search_replica_spark.query.bm25 import constant_score_match
-
-    idx = _index_dir_for(spark, sf_dir)
-    hits = constant_score_match(_OrigIdReader(spark, idx), "spark window", boost=1.5, k=25)
-    return spark.createDataFrame(hits, "doc_id long, score double")
+    return _dsl_top(spark, sf_dir, {"constant_score": {
+        "filter": {"match": {"content": "spark window"}}, "boost": 1.5}}, 25)
 
 
 # _msearch: two searches, one call, one reader — per-query top-5.
@@ -1838,10 +1832,11 @@ _RANK_FEATURE_PIVOT = 500
         ORDER BY sat_micro DESC, d.doc_id LIMIT 10""",
 )
 def ft_rank_feature_top10(spark, sf_dir):
-    from search_replica_spark.query.bm25 import constant_score_match
+    from search_replica_spark.query.dsl import execute_dsl
 
-    idx = _index_dir_for(spark, sf_dir)
-    hits = constant_score_match(_OrigIdReader(spark, idx), _RANK_FEATURE_TERM)
+    rd = _OrigIdReader(spark, _index_dir_for(spark, sf_dir))
+    hits = execute_dsl(rd, {"constant_score": {
+        "filter": {"match": {"content": _RANK_FEATURE_TERM}}}}, int(rd.n_docs))
     matched = spark.createDataFrame([(d,) for d, _s in hits], "doc_id long")
     d = load(spark, sf_dir, "documents")
     return (

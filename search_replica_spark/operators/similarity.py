@@ -797,15 +797,21 @@ ORDER BY sim DESC, e.vec_id LIMIT 10
 """
 
 
+def knn_host_dir(sf_dir: str) -> str:
+    """The directory ``dsl_knn_search_top10`` writes its knn store under
+    (a store host needs no text index)."""
+    import hashlib as _h
+
+    return f"/tmp/ssr_knn_host_{_h.sha1(sf_dir.encode()).hexdigest()[:10]}_v1"
+
+
 @register("dsl_knn_search_top10", _KNN_SQL)
 def dsl_knn_search_top10(spark, sf_dir):
-    import hashlib as _h
     import os
 
     from search_replica_spark.query.knn import build_knn_store, knn_store_dir, knn_query
 
-    tag = _h.sha1(sf_dir.encode()).hexdigest()[:10]
-    host = f"/tmp/ssr_knn_host_{tag}_v1"  # store host dir (no text index needed)
+    host = knn_host_dir(sf_dir)
     if not os.path.exists(os.path.join(knn_store_dir(host), "centroids", "_SUCCESS")):
         build_knn_store(spark, load(spark, sf_dir, "embeddings"), host)
     qvec = (
@@ -814,6 +820,6 @@ def dsl_knn_search_top10(spark, sf_dir):
         .select("embedding")
         .first()[0]
     )
-    hits = knn_query(spark, host, [float(x) for x in qvec], k=10,
+    hits = knn_query(host, [float(x) for x in qvec], k=10,
                      num_candidates=KNN_NUM_CANDIDATES)
     return spark.createDataFrame(hits, "vec_id long, sim double")

@@ -157,11 +157,6 @@ CHECKS = {
         "avoid": ["CartesianProduct", "SortMergeJoin"],
         "why": "variable_width_histogram (r5): corpus rows reduce to the per-VALUE histogram first; the rank window runs over |distinct values| rows only and the 4-row ntile bucket spec rides a broadcast — no single-partition window ever touches corpus rows",
     },
-    "knn_partition_pruning": {
-        "want": ["PartitionFilters: [", "label"],
-        "avoid": ["CartesianProduct"],
-        "why": "kNN search (r5): the vector store is PARTITIONED BY cluster label, so an IVF probe is directory-level partition pruning — only the probed clusters' files are read, the inverted-file trade expressed as the storage layout",
-    },
 }
 
 
@@ -252,21 +247,6 @@ def main():
     )
     plans["ft_rank_feature_top10"] = plan_of(
         reg["ft_rank_feature_top10"][0](spark, sf_dir)
-    )
-
-    # r5: the knn store's partition-pruned probe, captured from the live helper
-    from search_replica_spark.operators.similarity import (  # noqa: F401
-        dsl_knn_search_top10 as _knn_entry,
-    )
-
-    _knn_entry(spark, sf_dir)  # ensures the persisted knn host store exists
-    import hashlib as _h
-
-    _knn_host = f"/tmp/ssr_knn_host_{_h.sha1(sf_dir.encode()).hexdigest()[:10]}_v1"
-    plans["knn_partition_pruning"] = plan_of(
-        spark.read.parquet(os.path.join(_knn_host, "knn", "vectors")).filter(
-            F.col("label").isin([0, 1])
-        )
     )
 
     plans["dsl_frequent_item_sets"] = plan_of(

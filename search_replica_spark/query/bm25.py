@@ -180,10 +180,11 @@ class IndexReader:
     doc_idx + the generation's base, bases following generation order.
     Corpus statistics sum over every generation (superseded and
     tombstoned versions count until a merge, as in Lucene); k1 and b are
-    the index's own, from the generations' stats.json."""
+    the index's own, from the generations' stats.json. Every read is in
+    the driver: ``spark`` is unused, and stays first because
+    ``perfbench/driver.py`` constructs ``IndexReader(spark, index_dir)``."""
 
-    def __init__(self, spark: SparkSession, index_dir: str):
-        self.spark = spark
+    def __init__(self, spark: SparkSession | None, index_dir: str):
         self.index_dir = index_dir
         self.gens = read_generations(index_dir)
         self.live_gens = [g for g in self.gens if g["dir"]]
@@ -1856,16 +1857,13 @@ def fielded_norms_topk(
 
 
 def rescore_topk(
-    spark: SparkSession,
-    index_dir: str,
+    reader: IndexReader,
     query: str,
     phrase: list[str],
     window: int = 50,
     k: int = 10,
     query_weight: float = 1.0,
     rescore_weight: float = 1.0,
-    reader: IndexReader | None = None,
-    content_df=None,
 ) -> list[tuple[int, float]]:
     """ES rescore API (``rescore.window_size``, score_mode=total): a cheap
     BM25 pass ranks the corpus, then ONLY the top-``window`` candidates are
@@ -1874,24 +1872,18 @@ def rescore_topk(
     ``query_weight * base + rescore_weight * phrase_tf``.
 
     This is ES's exact cost contract at 100 TB: the expensive scorer's
-    work is bounded by the window (a point-lookup fetch of ≤window docs,
-    pushed down on doc_id), never by the corpus. Requires a
-    ``store_source`` build unless ``content_df`` supplies (doc_id,
-    content) in the reader's doc_id space. Ties break (score desc,
-    doc_id asc) like every other entry point."""
-    r = reader or IndexReader(spark, index_dir)
-    base = TermAtATimeScorer(r).score(
-        query, window, live=r._live
-    )
+    work is bounded by the window (the window's text is one
+    ``reader.stored_fields`` read of ≤window docs in the driver, the fetch
+    phase of a request), never by the corpus. Requires a ``store_source``
+    build. Ties break (score desc, doc_id asc) like every other entry
+    point."""
+    base = TermAtATimeScorer(reader).score(query, window, live=reader._live)
     if not base:
         return []
-    ids = [int(d) for d, _ in base]
-    if content_df is None:
-        content_df = spark.read.parquet(
-            os.path.join(index_dir, "docs")
-        ).select("doc_id", "content")
-    rows = content_df.filter(F.col("doc_id").isin(ids)).collect()
-    texts = {int(rw["doc_id"]): rw["content"] for rw in rows}
+    src = reader.stored_fields([d for d, _s in base], ["content"])
+    if "content" not in src.column_names:
+        raise ValueError("rescore reads the stored _source: it needs a store_source=True build")
+    texts = dict(zip(src["_rid"].to_pylist(), src["content"].to_pylist()))
     want = [t.lower() for t in phrase]
     n = len(want)
     out = []
@@ -2007,98 +1999,6 @@ def count_match(
     if live is not None and uniq.size:
         uniq = uniq[live[uniq]]
     return int(uniq.size)
-
-
-def dis_max_topk(
-    reader: IndexReader,
-    queries: list[str],
-    k: int = 10,
-    tie_breaker: float = 0.0,
-    live: np.ndarray | None = None,
-) -> list[tuple[int, float]]:
-    """ES dis_max query: each subquery scores independently; a doc's final
-    score is the BEST subquery score plus ``tie_breaker`` times the rest —
-    max(s_i) + tie_breaker * (sum(s_i) - max(s_i)). Unlike bool/should
-    (which sums), dis_max rewards the single best-matching clause, the ES
-    idiom for "same text searched across variant fields/phrasings".
-
-    Each subquery is one multi-term posting fetch over the same reader
-    arrays (no extra index passes); the combine is a vectorized
-    segmented max/sum over the union of match sets."""
-    r = reader
-    if live is None:
-        live = r._live
-    id_parts: list[np.ndarray] = []
-    score_parts: list[np.ndarray] = []
-    for q in queries:
-        hits = TermAtATimeScorer(r).score(q, int(r.n_docs) or 1, live=live)
-        if not hits:
-            continue
-        id_parts.append(np.fromiter((d for d, _ in hits), np.int64, len(hits)))
-        score_parts.append(np.fromiter((s for _, s in hits), np.float64, len(hits)))
-    if not id_parts:
-        return []
-    ids = np.concatenate(id_parts)
-    ss = np.concatenate(score_parts)
-    uniq, inv = np.unique(ids, return_inverse=True)
-    best = np.zeros(uniq.size, np.float64)
-    np.maximum.at(best, inv, ss)
-    total = np.zeros(uniq.size, np.float64)
-    np.add.at(total, inv, ss)
-    final = best + tie_breaker * (total - best)
-    return _select_topk(final, uniq, k)
-
-
-def boosting_topk(
-    reader: IndexReader,
-    positive: str,
-    negative: str,
-    negative_boost: float = 0.5,
-    k: int = 10,
-    live: np.ndarray | None = None,
-) -> list[tuple[int, float]]:
-    """ES boosting query: docs are ranked by the ``positive`` query's BM25
-    score, but any doc that ALSO matches the ``negative`` query keeps its
-    place in the match set with its score multiplied by ``negative_boost``
-    — demotion without exclusion (the must_not alternative when the bad
-    signal should lower, not remove). The negative side is filter-context:
-    one posting fetch, no scoring."""
-    r = reader
-    if live is None:
-        live = r._live
-    base = TermAtATimeScorer(r).score(positive, int(r.n_docs) or 1, live=live)
-    if not base:
-        return []
-    neg_terms = sorted(set(tokenize_text(negative)))
-    postings = r.fetch_postings(neg_terms) if neg_terms else {}
-    _, doc_ids = r.doc_arrays()
-    neg_ids = (
-        np.unique(doc_ids[np.concatenate([p[0] for p in postings.values()])])
-        if postings
-        else np.empty(0, np.int64)
-    )
-    ds = np.fromiter((d for d, _ in base), np.int64, len(base))
-    ss = np.fromiter((s for _, s in base), np.float64, len(base))
-    demoted = np.isin(ds, neg_ids)
-    final = np.where(demoted, ss * negative_boost, ss)
-    return _select_topk(final, ds, k)
-
-
-def constant_score_match(
-    reader: IndexReader,
-    query: str,
-    boost: float = 1.0,
-    k: int | None = None,
-    live: np.ndarray | None = None,
-) -> list[tuple[int, float]]:
-    """ES constant_score query: the wrapped query runs in FILTER context
-    (any-term match, no BM25, cacheable at scale) and every matching doc
-    scores exactly ``boost``. All scores tie, so top-k under the engine-wide
-    (score desc, doc_id asc) tie-break is the k smallest matching doc_ids."""
-    terms = sorted(set(tokenize_text(query)))
-    ids = _expansion_docs(reader, terms, live)
-    ids = ids[:k] if k is not None else ids
-    return [(int(d), float(boost)) for d in ids]
 
 
 def msearch(

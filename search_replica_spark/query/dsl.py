@@ -4,10 +4,17 @@ query JSON against this engine, verbatim.
 The reference delegates all querying to Elasticsearch, so the queries its
 users hold today are ES DSL documents ({"query": {"bool": {...}}}).  This
 module is the switch-over shim: ``execute_dsl`` walks the DSL tree and
-routes every node to the engine primitive that implements it (the same
+routes every leaf to the engine primitive that implements it (the same
 functions the harness verifies against DuckDB oracles), composing
 compound clauses exactly the way ES's BooleanQuery does — must/should
-scores SUM, filter context contributes 0, must_not excludes.
+scores SUM, filter context contributes 0, must_not excludes. The
+compound kinds dis_max, boosting and constant_score have no primitive of
+their own: their harness entries send a DSL body through ``execute_dsl``,
+so the composition here is what the oracles check.
+
+Every kind reads the index in the driver through the reader (knn's
+vector store and percolate's query table through ``store.read_table``):
+no request needs a SparkSession.
 
 Scale shape: every leaf is one bounded dictionary/posting fetch through
 the reader (row-group-pruned parquet seeks); composition happens in
@@ -414,7 +421,7 @@ def _score_map(reader, q, live, ih=None, leaf_k=None) -> dict[int, float]:
         # percolator store registered against this index
         from search_replica_spark.query.percolator import percolate
 
-        return dict(percolate(reader.spark, reader.index_dir, body["document"]))
+        return dict(percolate(reader.index_dir, body["document"]))
 
     if kind == "rank_feature":
         # ES rank_feature over the engine's built-in per-doc feature
@@ -536,7 +543,9 @@ def _score_map(reader, q, live, ih=None, leaf_k=None) -> dict[int, float]:
             else:  # {"_id": ...}: like an indexed doc — ES excludes it
                 lid = int(like["_id"])
                 exclude.add(lid)
-                texts.append(_stored_content(reader, lid))
+                text = _stored_content(reader, lid)
+                if text is not None:  # ES skips a like doc it cannot fetch
+                    texts.append(text)
         return dict(
             Q.more_like_this_topk(
                 reader, " ".join(texts), k=n,
@@ -751,17 +760,22 @@ def _stored_contents(reader, ids: list[int]) -> dict[int, str]:
     return dict(zip(t["_rid"].to_pylist(), t[DEFAULT_FIELD].to_pylist()))
 
 
-def _stored_content(reader, doc_id: int) -> str:
-    """The analyzed text of one stored document (more_like_this by _id),
-    ``_stored_contents`` of its id — requires a ``store_source=True``
-    build, exactly like ES requires ``_source`` for MLT by id."""
-    text = _stored_contents(reader, [int(doc_id)]).get(int(doc_id))
-    if text is None:
-        raise ValueError(
-            f"more_like_this: no stored _source for _id {doc_id} "
-            "(MLT by id needs a store_source=True build)"
-        )
-    return text
+def _stored_content(reader, doc_id: int) -> str | None:
+    """The stored default-field text of one live document (more_like_this
+    by _id), or None when no live doc has that id (absent or tombstoned).
+    Requires a ``store_source=True`` build, exactly like ES requires
+    ``_source`` for MLT by id."""
+    t = reader.stored_fields([int(doc_id)], [DEFAULT_FIELD])
+    if DEFAULT_FIELD in t.column_names:
+        if not t.num_rows:
+            return None
+        text = t[DEFAULT_FIELD][0].as_py()
+        if text is not None:
+            return text
+    raise ValueError(
+        f"more_like_this: no stored _source for _id {doc_id} "
+        "(MLT by id needs a store_source=True build)"
+    )
 
 
 def _stored_column(t: pa.Table, field) -> pa.ChunkedArray:
@@ -918,7 +932,7 @@ def execute_request(reader, body: dict, live=None) -> dict:
 
         kk = int(knn.get("k", body.get("size", 10)))
         khits = knn_query(
-            reader.spark, reader.index_dir, knn["query_vector"], k=kk,
+            reader.index_dir, knn["query_vector"], k=kk,
             num_candidates=int(knn.get("num_candidates", 10 * kk)),
         )
         boost = float(knn.get("boost", 1.0))

@@ -11,8 +11,8 @@ conjunctive term set by default (min_match = all terms), optionally
 relaxed with ``minimum_should_match`` — the same spec the harness-
 verified ``percolate_matches`` operator proves at corpus scale.
 
-Serving shape: percolating ONE document is a driver-side set
-intersection against the (tiny, cacheable) query table — no Spark job.
+Serving shape: percolating ONE document reads the (tiny) query table in
+the driver and intersects term sets there — no Spark job, no session.
 Percolating a whole corpus is the broadcast equi-join + count gate of
 ``operators/fulltext.py:percolate_matches`` — the store here feeds both.
 """
@@ -24,6 +24,7 @@ import os
 from pyspark.sql import functions as F
 
 from search_replica_spark.analysis import tokenize_text
+from search_replica_spark.query.store import read_table
 
 
 def percolator_dir(index_dir: str) -> str:
@@ -53,14 +54,15 @@ def register_queries(spark, index_dir: str, queries: list[tuple]) -> dict:
     return {"queries": len({r[0] for r in rows}), "terms": len(rows)}
 
 
-def percolate(spark, index_dir: str, document) -> list[tuple[int, float]]:
+def percolate(index_dir: str, document) -> list[tuple[int, float]]:
     """The queries matching ONE document: (query_id, 1.0) constant-score,
     query_id ascending (ES returns percolator hits at constant score too).
     ``document`` is the text of the analyzed default field or an ES-style
-    ``{"content": ...}`` dict."""
+    ``{"content": ...}`` dict. The query table is read in the driver with
+    no Spark job (``read_table``)."""
     text = document.get("content") if isinstance(document, dict) else document
     toks = set(tokenize_text(str(text or "")))
-    pdf = spark.read.parquet(percolator_dir(index_dir)).toPandas()
+    pdf = read_table(percolator_dir(index_dir), ["query_id", "term", "min_match"]).to_pandas()
     hits = []
     for qid, g in pdf.groupby("query_id"):
         mm = int(g["min_match"].iloc[0])

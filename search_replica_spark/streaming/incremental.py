@@ -345,17 +345,6 @@ def source_view(spark, index_dir: str):
     return live_docs(spark, read_generations(index_dir)).drop("slot")
 
 
-def get_docs(spark, index_dir: str, doc_ids):
-    """GET/mget by _id over the stored _source (ES GET API — the endpoint
-    the reference's own consistency test polls, consistency_test.go:189-210).
-    The id filter sits on a native column of every docs store, so Catalyst
-    pushes it through the last-wins aggregate and the generation union into
-    each parquet scan (`PushedFilters: [In(doc_id, ...)]` — a point lookup,
-    not a table scan)."""
-    ids = [int(i) for i in doc_ids]
-    return source_view(spark, index_dir).filter(F.col("doc_id").isin(ids))
-
-
 def _resolve_partial_updates(spark, partials, index_dir: str, cfg: IndexConfig):
     """ES ``_update {"doc": ...}`` resolution (reference: EncodeUpdateRowJSON,
     postgres/table.go:143-151): merge each partial row's NON-NULL columns
@@ -1373,7 +1362,6 @@ __all__ = [
     "bm25_topk_spark_multigen",
     "compact",
     "derive_index_cfg",
-    "get_docs",
     "index_stream",
     "merge_generations",
     "read_metrics",
@@ -1419,7 +1407,8 @@ def delete_by_query(spark, index_dir: str, query, cfg: IndexConfig | None = None
     if not ids:
         return {"deleted": 0, "n_docs": 0, "total_tokens": 0}
     keys = (
-        get_docs(spark, index_dir, ids)
+        source_view(spark, index_dir)
+        .filter(F.col("doc_id").isin(ids))
         .select("repo", "path")
         .withColumn(CHANGE_COL, F.lit("delete"))
     )

@@ -577,7 +577,7 @@ def test_execute_request_knn_section(spark, dsl_index):
     # knn-only request: hits == knn_query, ES-shaped
     r = execute_request(rd, {"knn": {"field": "embedding", "query_vector": qv,
                                      "k": 5, "num_candidates": 60}})
-    want = knn_query(spark, rd.index_dir, qv, k=5, num_candidates=60)
+    want = knn_query(rd.index_dir, qv, k=5, num_candidates=60)
     assert [(h["_id"], h["_score"]) for h in r["hits"]["hits"]] == want
     assert want[0][0] == vecs[3][0] and want[0][1] == 1.0  # self-match tops
 
@@ -592,6 +592,83 @@ def test_execute_request_knn_section(spark, dsl_index):
     assert set(got) == set(qpart) | set(kmap)
     for d, s in got.items():
         assert abs(s - (qpart.get(d, 0.0) + 2.0 * kmap.get(d, 0.0))) < 1e-12
+
+
+def _knn_spark(spark, index_dir, query_vector, k, num_candidates):
+    """The Spark probe ``knn_query`` ran before it read in the driver, kept
+    as the reference: the centroids through Spark, then one
+    partition-pruned scan of the probed labels scoring cosine with
+    ``zip_with``/``aggregate`` folds, ``round(sim, 5)`` and a TakeOrdered
+    top-k."""
+    import os
+
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from search_replica_spark.query.knn import knn_store_dir, probe_for_candidates
+
+    def dot(a, b):
+        return F.aggregate(
+            F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
+        )
+
+    dest = knn_store_dir(index_dir)
+    cent = spark.read.parquet(os.path.join(dest, "centroids")).toPandas()
+    qvec = np.asarray(query_vector, dtype=np.float64)
+    probe = probe_for_candidates(cent, qvec, int(num_candidates))
+    q = F.array(*[F.lit(float(x)) for x in qvec])
+    sim = dot(F.col("emb"), q) / (F.sqrt(dot(F.col("emb"), F.col("emb"))) * F.sqrt(dot(q, q)))
+    rows = (
+        spark.read.parquet(os.path.join(dest, "vectors"))
+        .filter(F.col("label").isin(probe))
+        .select("vec_id", F.round(sim, 5).alias("sim"))
+        .orderBy(F.col("sim").desc(), F.col("vec_id").asc())
+        .limit(int(k))
+        .collect()
+    )
+    return [(int(r["vec_id"]), float(r["sim"])) for r in rows]
+
+
+def test_knn_query_equals_spark_reference(spark, tmp_path):
+    """``knn_query`` reads the store in the driver and returns the Spark
+    probe's hits bit for bit: on a test store with duplicate vectors (score
+    ties break on vec_id) and on the sf0.01 harness store
+    (``dsl_knn_search_top10``'s), across candidate pools that probe one
+    cluster, several and all. Its rounding is Spark's ``round(x, 5)``
+    (HALF_UP on the decimal string) on values at the rounding boundary, and
+    a zero vector is refused."""
+    import os
+
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from scripts.check_harness import SF_DIR  # the sf0.01 harness data
+    from search_replica_spark.operators.similarity import dsl_knn_search_top10, knn_host_dir
+    from search_replica_spark.query.knn import _round5, build_knn_store, knn_query
+
+    rng = np.random.default_rng(7)
+    vecs = [(i, i % 6, [float(x) for x in rng.normal(size=12)]) for i in range(600)]
+    vecs += [(600 + i, v[1], v[2]) for i, v in enumerate(vecs[:40])]  # exact ties
+    store = str(tmp_path / "knn")
+    build_knn_store(spark, spark.createDataFrame(
+        vecs, "vec_id long, label int, embedding array<double>"), store)
+    dsl_knn_search_top10(spark, SF_DIR)  # writes the harness store if it is missing
+    host = knn_host_dir(SF_DIR)
+    harness = spark.read.parquet(os.path.join(host, "knn", "vectors")).select("emb")
+    stores = [(store, [v[2] for v in vecs[::25]] + [list(rng.normal(size=12))]),
+              (host, [list(r["emb"]) for r in harness.limit(12).collect()])]
+    for where, queries in stores:
+        for qv in queries:
+            for k, nc in ((10, 1), (25, 150), (700, 10**6)):
+                assert knn_query(where, qv, k, nc) == _knn_spark(spark, where, qv, k, nc)
+
+    edge = [0.123455, -0.123455, 0.000015, 0.000025, 0.999995, 0.5, -0.0, 1e-07,
+            0.12345499999999999, 0.1234550000000001, *rng.uniform(-1, 1, 50)]
+    rows = spark.createDataFrame([(float(x),) for x in edge], "x double").select(
+        F.round("x", 5).alias("r")).collect()
+    assert [_round5(float(x)) for x in edge] == [r["r"] for r in rows]
+    with pytest.raises(ValueError, match="zeros"):
+        knn_query(store, [0.0] * 12, 5, 10)
 
 
 def test_dsl_span_or(dsl_index):
@@ -758,9 +835,9 @@ def test_percolator_store_and_dsl(spark, dsl_index):
     assert st["queries"] == 4
 
     doc = "the apache license governs this spark scan"
-    got = percolate(spark, rd.index_dir, doc)
+    got = percolate(rd.index_dir, doc)
     assert got == [(1, 1.0), (2, 1.0)]  # q3 has only 1 of 3 terms, q4 none
-    got = percolate(spark, rd.index_dir, {"content": "scan filter nothing"})
+    got = percolate(rd.index_dir, {"content": "scan filter nothing"})
     assert got == [(3, 1.0)]  # 2-of-3 gate met
     # DSL kind routes to the same store
     assert execute_dsl(
@@ -776,10 +853,10 @@ def test_percolator_store_and_dsl(spark, dsl_index):
     pairs = {(int(r["query_id"]), int(r["doc_id"]))
              for r in percolate_corpus(spark, rd.index_dir, docs).collect()}
     for i, text in enumerate(pdf["content"]):
-        for qid, _s in percolate(spark, rd.index_dir, text):
+        for qid, _s in percolate(rd.index_dir, text):
             assert (qid, i) in pairs
     for qid, did in pairs:
-        assert (qid, 1.0) in percolate(spark, rd.index_dir, pdf["content"][did])
+        assert (qid, 1.0) in percolate(rd.index_dir, pdf["content"][did])
 
 
 def test_percolate_stream_alerts(spark, tmp_path):
@@ -818,7 +895,7 @@ def test_percolate_stream_alerts(spark, tmp_path):
            for r in read_alerts(spark, out).collect()}
     assert got == {(1, 10), (2, 10), (2, 12)}
     # the one-doc form agrees with every emitted alert
-    assert percolate(spark, host, "gamma only") == [(2, 1.0)]
+    assert percolate(host, "gamma only") == [(2, 1.0)]
 
 
 def test_dsl_intervals_any_of(dsl_index):

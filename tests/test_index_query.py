@@ -88,26 +88,171 @@ def test_rank_identity_spark_distributed(spark, small_index, small_oracle, queri
         assert_rank_identical(got, want)
 
 
-def test_cli_query_answers_without_a_jvm(spark, small_index, small_oracle, queries, tmp_path):
-    """The CLI's default ``query`` scores in the driver and starts no JVM:
-    run in a fresh interpreter with Java unusable (JAVA_HOME names a
-    missing directory), it prints TermAtATimeScorer's hits, which equal
-    the oracle's."""
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _no_jvm_env(tmp_path) -> dict:
+    """The environment of a fresh interpreter in which Java is unusable
+    (JAVA_HOME names a missing directory)."""
+    return {**os.environ, "JAVA_HOME": str(tmp_path / "no-java")}
+
+
+def _cli(tmp_path, *args) -> str:
+    """The stdout of ``python -m search_replica_spark ARGS`` in a fresh
+    interpreter with Java unusable."""
+    out = subprocess.run(
+        [sys.executable, "-m", "search_replica_spark", *args], cwd=ROOT,
+        env=_no_jvm_env(tmp_path), capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    return out.stdout
+
+
+def _read_side_index(spark, corpus, dest) -> list[int]:
+    """Write a store_source index for the CLI's read commands into
+    ``dest``: a nested stored column (``inlined``, an array of structs),
+    two generations of which the second upserts doc 4 and tombstones doc
+    11, a knn store keyed by doc_id and three percolator queries. Returns
+    the doc_ids of the corpus rows it indexed."""
+    from pyspark.sql import functions as F
+
+    from search_replica_spark.config import IndexConfig
+    from search_replica_spark.oracle import doc_id_of
+    from search_replica_spark.query.knn import build_knn_store
+    from search_replica_spark.query.percolator import register_queries
+    from search_replica_spark.streaming.incremental import add_generation
+
+    cfg = IndexConfig(
+        shuffle_partitions=4, store_source=True,
+        input_columns=("repo", "path", "commit", "lang", "content", "inlined"),
+    )
+
+    def with_inlined(pdf):
+        return spark.createDataFrame(pdf).withColumn("inlined", F.array(F.struct(
+            F.length("content").cast("long").alias("ck"), F.col("lang").alias("value"))))
+
+    add_generation(spark, with_inlined(corpus.iloc[:150]), dest, cfg)
+    upd = corpus.iloc[[4, 11]].copy()
+    upd["content"] = upd["content"] + " license apache"
+    upd["_change_type"] = ["update", "delete"]
+    add_generation(spark, with_inlined(upd), dest, cfg)
+    ids = [doc_id_of(corpus["repo"][i], corpus["path"][i]) for i in range(150)]
+    rng = np.random.default_rng(3)
+    build_knn_store(spark, spark.createDataFrame(
+        [(d, i % 4, [float(x) for x in rng.normal(size=6)]) for i, d in enumerate(ids)],
+        "vec_id long, label int, embedding array<double>"), dest)
+    register_queries(spark, dest, [(1, "license apache"), (2, "def return"),
+                                   (3, "apache license version", 2)])
+    return ids
+
+
+def test_cli_query_answers_without_a_jvm(
+    spark, small_index, small_corpus, small_oracle, queries, tmp_path
+):
+    """The CLI's read commands answer in the driver and start no JVM: run
+    in a fresh interpreter with Java unusable, each prints what the
+    session-backed reader answers for the same input (for ``get`` and
+    ``termvectors``, the Spark read of the live docs they replaced). The
+    default ``query`` prints TermAtATimeScorer's hits, which equal the
+    oracle's. ``query --dsl`` answers a query body, a full request with
+    highlight and aggs (read from a file), a knn request and a percolate
+    body; then ``count``, ``get`` (live, upserted, tombstoned and absent
+    ids, on an index with a nested stored column) and ``termvectors``."""
+    from pyspark.sql import functions as F
+
+    from search_replica_spark.analysis import tokenize_text
+    from search_replica_spark.query.bm25 import count_match
+    from search_replica_spark.query.dsl import execute_dsl, execute_request
+    from search_replica_spark.streaming.incremental import source_view
+
     idx_dir, _ = small_index
     scorer = TermAtATimeScorer(IndexReader(spark, idx_dir))
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    env = {**os.environ, "JAVA_HOME": str(tmp_path / "no-java")}
     cases = [*list(zip(queries["query_text"], queries["k"]))[:3], ("zzzzqqq", 10)]
     for qtext, k in cases:
-        out = subprocess.run(
-            [sys.executable, "-m", "search_replica_spark", "query",
-             "--index", idx_dir, "--q", qtext, "-k", str(k)],
-            cwd=root, env=env, capture_output=True, text=True, timeout=300,
-        )
-        assert out.returncode == 0, out.stderr[-2000:]
-        got = [(h["doc_id"], h["score"]) for h in json.loads(out.stdout)]
+        out = _cli(tmp_path, "query", "--index", idx_dir, "--q", qtext, "-k", str(k))
+        got = [(h["doc_id"], h["score"]) for h in json.loads(out)]
         assert got == scorer.score(qtext, int(k)), qtext
         assert_rank_identical(got, small_oracle.score(qtext, int(k)))
+
+    idx = str(tmp_path / "read_side")
+    ids = _read_side_index(spark, small_corpus, idx)
+    rd = IndexReader(spark, idx)
+
+    def dsl(body, *k):
+        return _cli(tmp_path, "query", "--dsl", "--index", idx, "--q", body, *k)
+
+    match = {"query": {"match": {"content": "license apache"}}}
+    want = [{"doc_id": d, "score": s} for d, s in execute_dsl(rd, match, 7)]
+    assert json.loads(dsl(json.dumps(match), "-k", "7")) == want and len(want) == 7
+    full = {**match, "size": 5, "highlight": {"fields": {"content": {}}},
+            "aggs": {"langs": {"terms": {"field": "lang"}},
+                     "len": {"stats": {"field": "doc_len"}}}}
+    (tmp_path / "body.json").write_text(json.dumps(full))
+    assert dsl(f"@{tmp_path / 'body.json'}") == json.dumps(execute_request(rd, full)) + "\n"
+    qv = [float(x) for x in spark.read.parquet(os.path.join(idx, "knn", "vectors")).first()["emb"]]
+    knn = {"knn": {"field": "embedding", "query_vector": qv, "k": 5, "num_candidates": 40}}
+    out = dsl(json.dumps(knn))
+    assert out == json.dumps(execute_request(rd, {**knn, "size": 10})) + "\n"
+    assert len(json.loads(out)["hits"]["hits"]) == 5
+    perc = {"query": {"percolate": {"field": "query", "document": {
+        "content": "apache license version 2"}}}}
+    want = [{"doc_id": d, "score": s} for d, s in execute_dsl(rd, perc, 10)]
+    assert json.loads(dsl(json.dumps(perc))) == want
+    assert want == [{"doc_id": 1, "score": 1.0}, {"doc_id": 3, "score": 1.0}]
+
+    for q, op in (("license apache", "or"), ("license apache", "and"), ("zzzzqqq", "or")):
+        out = _cli(tmp_path, "count", "--index", idx, "--q", q, "--operator", op)
+        assert json.loads(out) == {"count": count_match(rd, q, mode=op)}
+
+    asked = [ids[11], 12345, ids[4], ids[2], ids[0]]  # tombstoned, absent, upserted, live
+    want = sorted(source_view(spark, idx).filter(F.col("doc_id").isin(asked)).collect(),
+                  key=lambda r: r["doc_id"])
+    out = _cli(tmp_path, "get", "--index-dir", idx, "--ids", ",".join(map(str, asked)))
+    assert out == "".join(json.dumps(r.asDict(), default=str) + "\n" for r in want)
+    assert sorted(r["doc_id"] for r in want) == sorted(ids[i] for i in (0, 2, 4))
+    assert [r["content"].endswith(" license apache") for r in want if r["doc_id"] == ids[4]] \
+        == [True]
+    for doc in (ids[4], ids[11], 12345):
+        out = json.loads(_cli(tmp_path, "termvectors", "--index-dir", idx, "--id", str(doc)))
+        rows = source_view(spark, idx).filter(F.col("doc_id") == doc).collect()
+        assert bool(rows) == (doc == ids[4])
+        if not rows:
+            assert out == {"_id": doc, "found": False}
+            continue
+        terms: dict = {}
+        for pos, tok in enumerate(tokenize_text(rows[0]["content"])):
+            e = terms.setdefault(tok, {"term_freq": 0, "positions": []})
+            e["term_freq"] += 1
+            e["positions"].append(pos)
+        assert out == {"_id": doc, "found": True, "term_vectors": {"content": {"terms": terms}}}
+
+
+def test_every_digest_request_kind_answers_without_a_jvm(spark, tmp_path):
+    """Every reader-side answer of ``scripts/answer_digest.py`` (request
+    bodies, the in-driver scorer, bool, phrase, the term expansions, the
+    fetch phase, rescore, knn and percolate, on plain and generational
+    readers, pinned and not) runs with ``IndexReader(None, ...)`` in a
+    fresh interpreter with Java unusable, starts no JVM gateway, and
+    answers what readers opened with the session answer."""
+    from scripts import answer_digest
+
+    ix = answer_digest.build_all(spark, 120, str(tmp_path))
+    code = (
+        "import json, sys\n"
+        "from pyspark import SparkContext\n"
+        "from scripts.answer_digest import reader_answers\n"
+        "lines = reader_answers(None, json.loads(sys.stdin.read()))\n"
+        "assert SparkContext._gateway is None and SparkContext._active_spark_context is None\n"
+        "print(json.dumps(lines))\n"
+    )
+    out = subprocess.run([sys.executable, "-c", code], input=json.dumps(ix), cwd=ROOT,
+                         env=_no_jvm_env(tmp_path), capture_output=True, text=True, timeout=600)
+    assert out.returncode == 0, out.stderr[-2000:]
+    got = [tuple(x) for x in json.loads(out.stdout)]
+    assert got == answer_digest.reader_answers(spark, ix)
+    groups = {g for g, _line in got}
+    assert {"knn plain", "percolate multigen", "rescore plain", "fetch multigen"} <= groups
+    assert not [line for _g, line in got if "| error" in line]
 
 
 def test_empty_and_absent_queries(spark, small_index):

@@ -245,19 +245,30 @@ def test_dis_max_boosting_msearch_semantics(spark):
     tie_breaker=0 is the per-doc best clause score; boosting with
     negative_boost=1.0 degenerates to the positive query; msearch equals
     the per-query searches; constant_score hits are doc_id-ascending with
-    the constant score."""
+    the constant score. The compound kinds run as DSL bodies through
+    ``execute_dsl``, as their harness entries do."""
     from search_replica_spark.operators.fulltext import _index_dir_for, _OrigIdReader
-    from search_replica_spark.query.bm25 import (
-        TermAtATimeScorer,
-        boosting_topk,
-        constant_score_match,
-        dis_max_topk,
-        msearch,
-    )
+    from search_replica_spark.query.bm25 import TermAtATimeScorer, msearch
+    from search_replica_spark.query.dsl import execute_dsl
 
     idx = _index_dir_for(spark, SF_DIR)
     rd = _OrigIdReader(spark, idx)
     q1, q2 = "spark join", "window hash"
+
+    def match(text):
+        return {"match": {"content": text}}
+
+    def dis_max_topk(rd, queries, k, tie_breaker):
+        return execute_dsl(rd, {"dis_max": {
+            "queries": [match(q) for q in queries], "tie_breaker": tie_breaker}}, k)
+
+    def boosting_topk(rd, positive, negative, negative_boost, k):
+        return execute_dsl(rd, {"boosting": {
+            "positive": match(positive), "negative": match(negative),
+            "negative_boost": negative_boost}}, k)
+
+    def constant_score_match(rd, query, boost, k):
+        return execute_dsl(rd, {"constant_score": {"filter": match(query), "boost": boost}}, k)
 
     s1 = dict(TermAtATimeScorer(rd).score(q1, int(rd.n_docs)))
     s2 = dict(TermAtATimeScorer(rd).score(q2, int(rd.n_docs)))

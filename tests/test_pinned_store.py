@@ -620,14 +620,14 @@ def test_set_up_and_fetch_with_a_nested_stored_column(spark, corpus, tmp_path):
         got = sorted((d["_rid"], d["path"], d["inlined"])
                      for d in r.stored_fields(asked, ["path", "inlined"]).to_pylist())
         want = sorted((w["_rid"], w["path"], [x.asDict() for x in w["inlined"]])
-                      for w in _matched_docs_df(r, asked.tolist()).collect())
+                      for w in _matched_docs_df(spark, r, asked.tolist()).collect())
         assert len(got) == asked.size and got == want
 
 
 # --- the fetch phase read in the driver -------------------------------------
 
 
-def _matched_docs_df(reader, ids):
+def _matched_docs_df(spark, reader, ids):
     """The Spark plan the fetch phase ran before it read in the driver, kept
     as the reference: the docs-store rows of the reader's live docs among
     ``ids`` with an ``_rid`` column holding the id, each generation's rows
@@ -646,21 +646,21 @@ def _matched_docs_df(reader, ids):
     for g in reader.live_gens:
         d, off = g["dir"], reader.bases[g["gen"]]
         mine = slots[(slots >= off) & (slots < off + int(g["n_docs"]))]
-        rid = reader.spark.createDataFrame(
+        rid = spark.createDataFrame(
             list(zip((mine - off).tolist(), arr[mine].tolist())), "doc_idx long, _rid long")
-        docs = reader.spark.read.parquet(os.path.join(d, "docs"))
+        docs = spark.read.parquet(os.path.join(d, "docs"))
         if mine.size <= 1000:
             docs = docs.filter(F.col("doc_idx").isin((mine - off).tolist()))
         parts.append(docs.join(F.broadcast(rid), "doc_idx"))
     return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
 
 
-def _spark_aggs(reader, aggs, matched):
+def _spark_aggs(spark, reader, aggs, matched):
     """The request aggs as the Spark plan computed them: one Spark
     aggregation per agg over ``_matched_docs_df``."""
     from pyspark.sql import functions as F
 
-    mdf = _matched_docs_df(reader, matched)
+    mdf = _matched_docs_df(spark, reader, matched)
     out = {}
     for name, spec in aggs.items():
         akind, abody = next(iter(spec.items()))
@@ -689,13 +689,13 @@ def _spark_aggs(reader, aggs, matched):
     return out
 
 
-def _spark_sort(reader, ids, key, order, offset, size):
+def _spark_sort(spark, reader, ids, key, order, offset, size):
     """The stored-field sort page as the Spark plan computed it, as (id,
     sort value) pairs: one orderBy on (key, _rid asc) + limit."""
     from pyspark.sql import functions as F
 
     col = F.col(key).asc() if order == "asc" else F.col(key).desc()
-    rows = (_matched_docs_df(reader, ids).select("_rid", key)
+    rows = (_matched_docs_df(spark, reader, ids).select("_rid", key)
             .orderBy(col, F.col("_rid").asc()).limit(offset + size).collect())
     return [(r["_rid"], r[key]) for r in rows[offset:]]
 
@@ -770,14 +770,14 @@ def test_driver_fetch_equals_spark_reference(spark, fetch_indexes):
         for name, ids in id_sets.items():
             got, jobs = _spark_jobs(spark, lambda: r.stored_fields(ids, cols))
             assert jobs == [], (label, name)
-            want = _matched_docs_df(r, ids.tolist()).select("_rid", *cols).collect()
+            want = _matched_docs_df(spark, r, ids.tolist()).select("_rid", *cols).collect()
             assert got.column_names == ["_rid", *cols]
             assert sorted(map(tuple, (row.values() for row in got.to_pylist()))) == sorted(
                 map(tuple, want)), (label, name)
             aggs, jobs = _spark_jobs(spark, lambda: _run_aggs(r, FETCH_AGGS, ids))
             assert jobs == [], (label, name)
             assert json.dumps(aggs, sort_keys=True) == json.dumps(
-                _spark_aggs(r, FETCH_AGGS, ids.tolist()), sort_keys=True), (label, name)
+                _spark_aggs(spark, r, FETCH_AGGS, ids.tolist()), sort_keys=True), (label, name)
             if label == "multigen" and name == "all":
                 assert None in [b["key"] for b in aggs["langs"]["buckets"]]
             if label == "multigen" and name == "changed":
@@ -792,9 +792,32 @@ def test_driver_fetch_equals_spark_reference(spark, fetch_indexes):
                     resp, jobs = _spark_jobs(spark, lambda: execute_request(r, body))
                     assert jobs == [], (label, body)
                     page = [(h["_id"], h["sort"][0]) for h in resp["hits"]["hits"]]
-                    want = _spark_sort(r, live.tolist(), key, order, offset, size)
+                    want = _spark_sort(spark, r, live.tolist(), key, order, offset, size)
                     assert json.dumps(page) == json.dumps(want), (label, body)
                     if label == "multigen" and key == "lang" and size == 1200:
                         nulls = [v is None for _d, v in page]
                         assert sum(nulls) == 4
                         assert nulls == sorted(nulls, reverse=order == "asc")
+
+
+def test_mlt_by_id_skips_a_like_doc_it_cannot_fetch(fetch_indexes, small_index):
+    """more_like_this by ``_id`` on an index that stores ``_source`` skips
+    a like doc that is tombstoned or absent, as ES does: with no like item
+    left the query matches nothing, and the other like items still count.
+    An index built without ``store_source`` still refuses MLT by id."""
+    from search_replica_spark.oracle import doc_id_of
+    from search_replica_spark.query.dsl import execute_dsl
+
+    _plain, gens, corpus = fetch_indexes
+    r = MultiGenReader(None, gens)
+    text = execute_dsl(r, {"more_like_this": {"like": "license apache"}}, k=10)
+    assert text
+    for gone in (doc_id_of(corpus["repo"][11], corpus["path"][11]), 10**17):
+        for include in (False, True):
+            body = {"more_like_this": {"like": {"_id": gone}, "include": include}}
+            assert execute_dsl(r, body, k=10) == []
+        body = {"more_like_this": {"like": ["license apache", {"_id": gone}]}}
+        assert execute_dsl(r, body, k=10) == text
+    with pytest.raises(ValueError, match="store_source"):
+        execute_dsl(IndexReader(None, small_index[0]),
+                    {"more_like_this": {"like": {"_id": 10**17}}}, k=10)
