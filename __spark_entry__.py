@@ -2,8 +2,9 @@
 
 ``entry(spark)`` — flagship: build a real inverted index over the sf0.001
 ``documents`` corpus and answer a BM25 top-10 query with the engine.
-``queries()`` / ``oracle_sql()`` — one entry per operator from SURVEY.md §2
-(registry in search_replica_spark.operators), DuckDB-checked at sf0.01.
+``queries()`` / ``oracle_sql()`` — the operator registry
+(search_replica_spark.operators, 94 entries; the spark-graft harness
+samples 50 of them), each entry DuckDB-checked at sf0.01.
 """
 
 from __future__ import annotations

@@ -5,8 +5,8 @@ Headline numbers (BASELINE.md targets):
     scale matching $SPARK_GRAFT_SF_DIR
   - BM25 query p50 latency over the 50-query reference set (TATA, hot
     segment cache, then pinned; the distributed plan)
-  - representative operator queries at the sf dir (dedup, ANN, BM25-as-SQL,
-    inline denorm)
+  - representative operator queries at the sf dir (BM25-as-SQL, inline
+    denorm, last-wins dedup, df stats)
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS   (default 32),
@@ -229,9 +229,8 @@ def main():
 
     # --- 3. operator queries at the sf dir ---
     reg = all_registered()
-    for name in ("ft_bm25_sql_top10", "dedup_minhash_lsh", "ann_cosine_top10",
-                 "ann_pq_adc_top10", "p11_inline_denorm", "p16_lastwins_dedup",
-                 "ft_df_stats", "dedup_embedding_lsh", "dedup_simhash_hamming"):
+    for name in ("ft_bm25_sql_top10", "p11_inline_denorm", "p16_lastwins_dedup",
+                 "ft_df_stats"):
         fn, _ = reg[name]
         t = time.time()
         df = fn(spark, sf_dir)

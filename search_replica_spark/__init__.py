@@ -15,7 +15,8 @@ Architecture is Spark-first, not a port:
                      one (term_id, doc_idx, tf) row per posting
   - query            BM25 scoring: one in-driver NumPy scorer (/_search,
                      the CLI's query) + one distributed Spark plan
-  - operators        row→doc transform, dedup family, ANN, text stats
+  - operators        the DuckDB-checked harness entries: row→doc transform,
+                     full-text, CDC, knn
   - oracle           pure-Python reference engine (plays the role ES plays
                      for the reference's consistency test)
   - streaming        incremental / CDC-style index maintenance

@@ -112,10 +112,15 @@ def _dsl(rd, body: str, k: int) -> None:
     req = json.loads(body)
     if isinstance(req, dict) and (set(req) - {"query"}):
         # a full /_search request body (from/size/sort/highlight/
-        # min_score/...) — answer ES-shaped
+        # min_score/...) — answer ES-shaped; a key the request does not
+        # read (a bare query object's kind) is refused with its name
         if "size" not in req:
             req["size"] = k
-        print(json.dumps(execute_request(rd, req)))
+        try:
+            resp = execute_request(rd, req)
+        except ValueError as e:
+            sys.exit(f"query --dsl: {e}")
+        print(json.dumps(resp))
         return
     ih: dict = {}
     hits = execute_dsl(rd, req, k=k, inner_hits=ih)

@@ -31,16 +31,10 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 def all_registered() -> dict[str, tuple[SparkFn, str | None]]:
     # import side-effect modules once
     from search_replica_spark.operators import (  # noqa: F401
-        aggregations,
-        dedup,
         doc_transform,
         fulltext,
-        geo,
-        multimodal,
-        sampling,
         similarity,
         streaming_ops,
-        textstats,
     )
 
     return dict(REGISTRY)

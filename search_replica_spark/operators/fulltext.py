@@ -1540,9 +1540,9 @@ def percolate_matches(spark, sf_dir):
 # B5z: ES phrase suggester — whole-phrase spelling correction: per-word
 # candidates come from the index DICTIONARY within edit distance ≤ 2 (the
 # term suggester's generator), and whole-phrase candidates are ranked by
-# the corpus bigram LM (add-one smoothing, same model spec as
-# text_bigram_lm_nll) plus an edit-cost penalty. All ranking arithmetic in
-# integer micro-nats (floored before any sum) so the twin is bit-exact.
+# the corpus bigram LM (add-one smoothing over space-split tokens) plus an
+# edit-cost penalty. All ranking arithmetic in integer micro-nats (floored
+# before any sum) so the twin is bit-exact.
 # Scale shape: candidate sets are tiny (edit-distance ball around each
 # word) and BROADCAST against the LM count tables — the corpus is scanned
 # once for counts, never per candidate.

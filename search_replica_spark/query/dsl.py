@@ -36,8 +36,7 @@ percolate (reverse search over the registered-query store).
 Reference parity: the full surface demo/README.md's queries
 draw from — including the demo's own canonical request
 (bool/should/has_child/min_children/inner_hits, demo/README.md:18-42)
-verbatim — minus aggregations (those live in operators/aggregations.py
-as first-class entries).
+verbatim; the request envelope (``execute_request``) adds flat aggs.
 
 Parent/child contract (ES join-field mapping, demo/mapping.json): the
 index is a fielded build where every doc indexes its relation name as
@@ -872,15 +871,13 @@ def _run_aggs(reader, aggs: dict, matched: np.ndarray) -> dict:
     matches' agg fields (``reader.stored_fields``), never by iterating
     hits in Python.  Supported: terms, stats,
     min/max/sum/avg/value_count, cardinality, histogram — the flat
-    (non-nested) core; deep sub-agg trees belong to the first-class
-    operators in operators/aggregations.py."""
+    (non-nested) core; a sub-agg tree is refused."""
     specs = {}
     for name, spec in aggs.items():
         if "aggs" in spec or "aggregations" in spec:
             raise ValueError(
-                f"agg {name!r}: nested sub-aggregations are served by the "
-                "first-class operators (operators/aggregations.py), not the "
-                "request shim — flat aggs only here"
+                f"agg {name!r}: nested sub-aggregations are not served — "
+                "flat aggs only"
             )
         specs[name] = _single(spec, f"agg {name!r}")
     fields = dict.fromkeys(abody.get("field") for _k, abody in specs.values())
@@ -918,7 +915,14 @@ def execute_request(reader, body: dict, live=None) -> dict:
     ``reader.stored_fields`` in the driver, with no Spark job.  Returns
     ``{"hits": {"total": {...}, "hits": [{"_id", "_score", ...}]},
     "aggregations": {...}}`` — the envelope a reference user's client
-    already parses."""
+    already parses. A top-level key outside these raises ``ValueError``
+    naming it, as ES's parse error does (a bare query object such as
+    ``{"match": ...}`` is not a request body)."""
+    unknown = sorted(set(body) - {
+        "query", "knn", "from", "size", "sort", "search_after", "min_score",
+        "highlight", "explain", "aggs", "aggregations", "track_total_hits"})
+    if unknown:
+        raise ValueError(f"unknown top-level key(s) in the request body: {unknown}")
     if live is None:
         live = reader._live
     knn = body.get("knn")

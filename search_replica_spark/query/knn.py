@@ -8,8 +8,8 @@ the index (``<index_dir>/knn/``) by a Spark job (``build_knn_store``):
 and ``vectors`` PARTITIONED BY cluster label. A query (``knn_query``)
 reads them in the driver with no Spark job, and only the probed label
 directories of ``vectors`` — partition pruning IS the "approximate"
-part, exactly the inverted-file trade (Jégou et al.), and the same
-layout ``ann_ivf_persisted_top10`` verifies against its DuckDB twin.
+part, exactly the inverted-file trade (Jégou et al.); the harness entry
+``dsl_knn_search_top10`` checks it against its DuckDB twin.
 
 ``num_candidates`` maps to probes the way ES's candidate pool does:
 clusters are taken in query-cosine order until the candidate count

@@ -399,6 +399,29 @@ def test_execute_request_full_body(dsl_index):
     assert [h["_score"] for h in r["hits"]["hits"]] == [1.0] * 4
 
 
+def test_execute_request_refuses_unknown_top_level_keys(dsl_index, capsys):
+    """A top-level key the request does not read is an error naming it,
+    as ES's parse error is: a bare query object is not a request body and
+    must not answer match_all. ``query --dsl`` prints that error and exits
+    non-zero with nothing on stdout."""
+    from search_replica_spark.__main__ import main
+    from search_replica_spark.query.dsl import execute_request
+
+    rd = dsl_index
+    bare = {"match": {"content": "license"}}
+    with pytest.raises(ValueError, match="'match'"):
+        execute_request(rd, bare)
+    with pytest.raises(ValueError, match="'qurey'"):
+        execute_request(rd, {"qurey": {"match_all": {}}, "size": 3})
+    r = execute_request(rd, {"query": bare, "track_total_hits": True, "size": 2})
+    assert len(r["hits"]["hits"]) == 2
+
+    with pytest.raises(SystemExit) as e:
+        main(["query", "--dsl", "--index", rd.index_dir, "--q", json.dumps(bare)])
+    assert "'match'" in str(e.value.code)
+    assert capsys.readouterr().out == ""
+
+
 def test_execute_request_aggs_and_field_sort(spark, dsl_index):
     from search_replica_spark.query.dsl import execute_request
 

@@ -593,39 +593,6 @@ def test_prefix_seek_keeps_supplementary_plane_terms(spark, tmp_path):
         assert lte in got
 
 
-def test_connected_components_transitive_chain(spark):
-    """Near-dup is not transitive; components must be — a chain a-b-c-d
-    collapses to one cluster, disjoint pairs stay separate."""
-    from search_replica_spark.operators.dedup import connected_components
-
-    pairs = spark.createDataFrame(
-        [(2, 3), (3, 4), (4, 5), (10, 11), (20, 21), (21, 22)],
-        "doc_a long, doc_b long",
-    )
-    got = {r["doc_id"]: r["lbl"] for r in connected_components(pairs).collect()}
-    assert got == {2: 2, 3: 2, 4: 2, 5: 2, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
-
-
-def test_connected_components_contraction_paths(spark):
-    """Pin the contraction rewrite's two non-trivial paths: a component
-    whose contracted graph still needs multi-round propagation (two stars
-    bridged via their non-min members), and a clique that collapses to a
-    point in round 0 (its label must coalesce through the missing-comp
-    branch)."""
-    from search_replica_spark.operators.dedup import connected_components
-
-    pairs = spark.createDataFrame(
-        # stars {1,5,6} and {2,7,8} bridged by (6,8): round 0 gives
-        # l0 = {1:1, 5:1, 6:5, 2:2, 7:2, 8:6} — min label 1 only reaches
-        # 8 via two contracted hops; clique {30,31,32} contracts away
-        [(1, 5), (5, 6), (2, 7), (7, 8), (6, 8),
-         (30, 31), (30, 32), (31, 32)],
-        "doc_a long, doc_b long",
-    )
-    got = {r["doc_id"]: r["lbl"] for r in connected_components(pairs).collect()}
-    assert got == {1: 1, 5: 1, 6: 1, 2: 1, 7: 1, 8: 1, 30: 30, 31: 30, 32: 30}
-
-
 # ---------------------------------------------------------------------------
 # mapping options: index:false + ignore_above (demo/mapping.json:7,27)
 # ---------------------------------------------------------------------------

@@ -975,36 +975,6 @@ def test_simple_query_string_parser_never_crashes():
     check()
 
 
-def test_chunking_reconstructs_without_overlap(spark):
-    # stride == size (no overlap) must reassemble every document exactly:
-    # the invariant that proves no token is dropped or duplicated
-    from search_replica_spark.operators import REGISTRY
-    from search_replica_spark.operators import textstats as ts
-
-    sf_dir = "/root/testdata/sf0.001"
-    fn = REGISTRY["text_chunk_sliding"][0]
-    old_size, old_stride = ts.CHUNK_SIZE, ts.CHUNK_STRIDE
-    ts.CHUNK_SIZE = ts.CHUNK_STRIDE = 8
-    try:
-        chunks = fn(spark, sf_dir).collect()
-    finally:
-        ts.CHUNK_SIZE, ts.CHUNK_STRIDE = old_size, old_stride
-    import collections
-
-    by_doc = collections.defaultdict(dict)
-    for r in chunks:
-        by_doc[r.doc_id][r.chunk_id] = r.chunk_text
-    docs = {
-        r.doc_id: r.text
-        for r in spark.read.parquet(sf_dir + "/documents.parquet").collect()
-    }
-    assert set(by_doc) == set(docs)
-    for did, parts in by_doc.items():
-        assert sorted(parts) == list(range(len(parts)))  # contiguous ids
-        rebuilt = " ".join(parts[i] for i in range(len(parts)))
-        assert rebuilt == docs[did], did
-
-
 def test_intervals_match_python_reference(spark, tmp_path):
     """intervals_match (unordered all_of, max_gaps) vs an independent
     brute-force oracle: min over ONE position per term of (max-min), match
