@@ -19,10 +19,8 @@ magnitude smaller than the text (the same reduction `tokenizers` and
                     words ≪ its tokens), via mapInPandas.
 
 The engine's whitespace+code analyzer (`analysis.tokenizer`) stays the
-search tokenizer; BPE is the LLM-pipeline surface (token budgeting,
-sequence packing inputs). ``text_bpe_token_count`` (operators/textstats)
-remains the SQL-twinnable ceil(len/4) approximation; this module is the
-real thing, tested against an independent naive reference implementation
+search tokenizer; BPE is the LLM-pipeline surface (token budgeting).
+It is tested against an independent naive reference implementation
 (tests/test_bpe.py) rather than a SQL oracle — BPE's iterative merge loop
 is not SQL-expressible.
 """
